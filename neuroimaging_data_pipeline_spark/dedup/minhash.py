@@ -193,6 +193,7 @@ def jaccard_verify(
     sh: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.7,
+    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs:
     |A ∩ B| / |A ∪ B| via a shingle equi-join restricted to candidates.
@@ -203,18 +204,23 @@ def jaccard_verify(
     that is in NO candidate pair is dead weight here, yet the r13 plan
     broadcast the FULL shingle table twice (once per join side) and
     ran the size aggregate over the full table twice. Restrict the
-    shingle table to candidate doc ids first — the id set is bounded
-    by 2x the LSH candidate count, which the flood guard already caps,
-    so the broadcast is always small — then every downstream join and
-    the size aggregate run at candidate scale. Jaccard values are
-    unchanged: the restriction drops whole DOCUMENTS that cannot
-    appear in the output, never shingles of a surviving document."""
+    shingle table to candidate doc ids first, then every downstream
+    join and the size aggregate run at candidate scale. Jaccard values
+    are unchanged: the restriction drops whole DOCUMENTS that cannot
+    appear in the output, never shingles of a surviving document.
+
+    ``max_bucket_size`` is the flood guard ``pairs`` was built with.
+    Only then is the candidate id set bounded (2x the capped candidate
+    count) and broadcast; without a guard it can grow with the corpus,
+    so the join strategy is left to AQE."""
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    shc = sh.join(F.broadcast(cand_ids), id_col, "left_semi")
+    if max_bucket_size is not None:
+        cand_ids = F.broadcast(cand_ids)
+    shc = sh.join(cand_ids, id_col, "left_semi")
     sizes = shc.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     sa = shc.select(F.col(id_col).alias("id_a"), "shingle")
     sb = shc.select(F.col(id_col).alias("id_b"), "shingle")
@@ -278,7 +284,7 @@ def minhash_dedup_pairs(
         from pyspark import StorageLevel
 
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    return jaccard_verify(cand, sh, id_col, threshold)
+    return jaccard_verify(cand, sh, id_col, threshold, max_bucket_size)
 
 
 def row_minhash_sigs(

@@ -7,16 +7,18 @@ beta, t, p, df, sigma, residual (ssm_loop.py:94-102).
 
 Spark-first physical strategy (SURVEY.md §4.3):
 - X is tiny and shared -> collected once and *broadcast* to executors.
-- Y is the long fact table (subject, run, t, voxel_id, value). A naive
-  ``groupBy('voxel_id').applyInPandas`` would shuffle the full fact
-  table; that is acceptable when upstream ops (smoothing) already
-  changed partitioning, and is the general operator here. The scale
-  path is to write voxel-bucketed Parquet at ingest so this groupBy
-  becomes shuffle-free (bucketed scan); both run through the same
-  function.
-- Inside each Arrow batch we solve *all voxels of the batch at once*
-  with one pinv(X) @ Y_block matmul — the per-voxel Python loop the
-  naive implementation would do is hoisted into a single BLAS call.
+- Y is the long fact table (subject, run, t, voxel_id, value). Each
+  voxel series is packed into one row of two aligned arrays by
+  ``groupBy(keys, voxel_id).agg(collect_list(t), collect_list(value))``;
+  map-side partial aggregation packs the samples BEFORE the exchange,
+  so the one shuffle moves a row per series, not per sample (the
+  keep-the-series-dense layout of Raptor's raster pixels, PAPERS.md).
+  Voxel-bucketed Parquet at ingest would make that groupBy
+  shuffle-free (bucketed scan).
+- The packed rows go straight into ``mapInArrow``: inside each Arrow
+  batch every series of one design key is solved *at once* with one
+  pinv(X) @ Y matmul — the per-voxel Python loop the naive
+  implementation would do is hoisted into a single BLAS call.
   p-values use the Student-t survival function; scipy when present,
   else an incomplete-beta series fallback (float64).
 
@@ -30,6 +32,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -144,93 +147,86 @@ def mass_ols(
     keys: list[str] | None = None,
     t_col: str = "t",
     voxels_per_block: int = 2048,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Fit y ~ X per (keys..., voxel_id); return the long stats bundle
     (subject, voxel_id, regressor, beta, t, p, df, sigma) — D8.
 
+    Packing: each voxel series is first collected into ONE row,
+    ``groupBy(keys..., voxel_id).agg(collect_list(t), collect_list(value))``.
+    Spark's map-side partial aggregation packs the samples before the
+    exchange, so the only shuffle moves one array row per series
+    (296 samples at the reference shape) instead of one row per sample.
+
     Design shipping (VERDICT r8 #6, cohort-scale safe): a pandas
     design (the driver-generated convenience form) is keyed into
     (X, t) arrays ONCE and shipped as a Spark broadcast variable —
-    one torrent copy per executor, O(1) task payload. A Spark
-    DataFrame design takes the COGROUPED path: it is never
-    materialized on the driver at all — each (keys..., voxel_block)
-    group receives exactly its own design rows through the cogroup
-    shuffle. Values are grouped per (keys..., voxel_block) and solved
-    in vectorized batches either way.
-
-    Scale note (SURVEY.md §4.3): grouping by subject alone would pull
-    a whole subject (296 x 1.34 M floats ~ 3.2 GB) into ONE pandas
-    batch. The voxel_block key caps each Arrow batch at
-    ``voxels_per_block`` series (~5 MB at 296 TRs / 2048 voxels) and
-    multiplies parallelism by n_blocks: 1000 executors all busy on one
-    cohort. The block id is a pure projection (voxel_id / N), so with
-    voxel-bucketed Parquet the shuffle disappears entirely.
+    one torrent copy per executor, O(1) task payload — and the packed
+    rows flow straight into ``mapInArrow`` in the aggregation's stage:
+    no second exchange, no sort, memory bounded by one Arrow batch of
+    series. A Spark DataFrame design takes the COGROUPED path: it is
+    never materialized on the driver at all — each (keys...,
+    voxel_block) group of packed rows receives exactly its own design
+    rows through the cogroup shuffle (``voxels_per_block`` sizes those
+    groups; the broadcast path has no blocks). Both paths solve with
+    ``_fit_packed``.
     """
-    keys = keys or ["subject", "run"]
+    key_cols = list(keys or ["subject", "run"])
     reg_names = list(regressors)
-    key_cols = list(keys)
     schema = _stats_schema(values.schema, key_cols)
-    blocked = values.withColumn(
-        "_voxel_block", F.floor(F.col("voxel_id") / F.lit(int(voxels_per_block)))
+    # Two aggregates of one Aggregate see the same rows in the same
+    # order, so the lists stay aligned; collect_list skips nulls, so a
+    # null value becomes NaN (a missing sample) rather than vanishing.
+    # Two flat lists pack faster than one list of (t, value) structs
+    # (15 M samples at local[4]: 5.1 s vs 7.9 s).
+    packed = values.groupBy(*key_cols, "voxel_id").agg(
+        F.collect_list(t_col).alias("_t"),
+        F.collect_list(
+            F.coalesce(F.col("value").cast("double"), F.lit(float("nan")))
+        ).alias("_y"),
     )
-    if shuffle_partitions is not None:
-        # Size THIS operator's shuffle to the data instead of the
-        # session-wide spark.sql.shuffle.partitions: an explicit
-        # repartition on the group keys satisfies the grouped-map's
-        # ClusteredDistribution, so no second exchange is added — the
-        # groupBy below reuses this partitioning. At cohort scale the
-        # session default (tuned for small driver tables) makes tasks
-        # too coarse: 16 subjects x 50k voxels over 32 partitions is
-        # ~15M rows/task, and the straggler tail costs ~30% throughput
-        # (measured r3: 5.3k -> 6.9k voxels/sec at 128 partitions).
-        # AQE's initialPartitionNum cannot fix this one — the
-        # coalescing rule does not apply to the Python grouped-map
-        # exchange (verified empirically, r3).
-        blocked = blocked.repartition(
-            int(shuffle_partitions), *keys, "_voxel_block"
-        )
 
     if not isinstance(design, pd.DataFrame):
         # Spark-DataFrame design: COGROUPED path (VERDICT r8 #6) — the
         # design is never materialized on the driver and never rides a
         # task closure, so task payload stays O(1) in cohort size.
-        # Each (keys..., voxel_block) group receives exactly its own
-        # design copy through the cogroup shuffle: the design side is
-        # fanned out to the block ids that actually exist (one
-        # distinct + one key-equi-join, both tiny next to the fact
-        # shuffle — n_runs x n_blocks design copies total, ~2% of the
-        # value bytes at the reference shapes).
-        # the rename breaks attribute lineage with `blocked` so the
-        # cogroup below isn't flagged as an ambiguous self-join
-        blocks = blocked.select(
-            *key_cols, F.col("_voxel_block").alias("_dsn_block")
-        ).distinct()
+        # The design side is fanned out to the block ids that actually
+        # exist (one distinct + one key-equi-join, both tiny next to
+        # the value shuffle). The rename breaks attribute lineage with
+        # `values` so the cogroup isn't flagged as an ambiguous self-join.
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        empty = to_arrow_schema(schema).empty_table()
+        block = F.floor(F.col("voxel_id") / F.lit(int(voxels_per_block)))
+        blocks = values.select(*key_cols, block.alias("_dsn_block")).distinct()
         design_blocked = design.select(*key_cols, t_col, *reg_names).join(
             blocks, key_cols
         )
 
-        def fit_cogrouped(vals: pd.DataFrame, dsn: pd.DataFrame) -> pd.DataFrame:
-            if vals.empty:
+        def fit_cogrouped(vals: pa.Table, dsn: pa.Table) -> pa.Table:
+            if vals.num_rows == 0:
                 # design key with no values in this block: nothing to fit
-                return pd.DataFrame(columns=[f.name for f in schema.fields])
-            if dsn.empty:
-                kt = tuple(vals.iloc[0][k] for k in key_cols)
+                return empty
+            kt = tuple(vals.column(k)[0].as_py() for k in key_cols)
+            if dsn.num_rows == 0:
                 raise KeyError(f"mass_ols: no design rows for key {kt}")
-            dsn = dsn.sort_values(t_col)
-            return _fit_block(
-                vals,
-                dsn[reg_names].to_numpy(dtype=np.float64),
-                dsn[t_col].to_numpy(),
+            dsn = dsn.sort_by(t_col)
+            X_full = np.column_stack(
+                [dsn.column(r).to_numpy() for r in reg_names]
+            ).astype(np.float64)
+            return _fit_packed(
+                vals.combine_chunks().to_batches()[0],
+                X_full,
+                dsn.column(t_col).to_numpy(),
+                kt,
                 key_cols,
                 reg_names,
-                t_col,
             )
 
         return (
-            blocked.groupBy(*key_cols, "_voxel_block")
+            packed.withColumn("_voxel_block", block)
+            .groupBy(*key_cols, "_voxel_block")
             .cogroup(design_blocked.groupBy(*key_cols, "_dsn_block"))
-            .applyInPandas(fit_cogrouped, schema)
+            .applyInArrow(fit_cogrouped, schema)
         )
 
     # pandas design (generated driver-side — skips a whole Spark job; a
@@ -239,65 +235,95 @@ def mass_ols(
     # distributed once per executor instead of serialized into every
     # task closure (the closure grows linearly with cohort size;
     # broadcast keeps task payload O(1)).
-    dpdf = design.sort_values([*keys, t_col])
+    dpdf = design.sort_values([*key_cols, t_col])
     Xmap: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-    for kvals, g in dpdf.groupby(keys):
+    for kvals, g in dpdf.groupby(key_cols):
         kt = kvals if isinstance(kvals, tuple) else (kvals,)
         Xmap[kt] = (
-            g[regressors].to_numpy(dtype=np.float64),
+            g[reg_names].to_numpy(dtype=np.float64),
             g[t_col].to_numpy(),
         )
     bc_xmap = values.sparkSession.sparkContext.broadcast(Xmap)
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        kt = tuple(pdf.iloc[0][k] for k in key_cols)
-        X_full, t_axis = bc_xmap.value[kt]
-        return _fit_block(pdf, X_full, t_axis, key_cols, reg_names, t_col)
+    def fit(batches):
+        for batch in batches:
+            for kt, rows in _split_by_key(batch, key_cols):
+                if kt not in bc_xmap.value:
+                    raise KeyError(f"mass_ols: no design rows for key {kt}")
+                X_full, t_axis = bc_xmap.value[kt]
+                yield from _fit_packed(
+                    rows, X_full, t_axis, kt, key_cols, reg_names
+                ).to_batches()
 
-    return blocked.groupBy(*key_cols, "_voxel_block").applyInPandas(fit, schema)
+    return packed.mapInArrow(fit, schema)
 
 
-def _fit_block(
-    pdf: pd.DataFrame,
+def _split_by_key(batch: pa.RecordBatch, key_cols: list[str]):
+    """Yield (key tuple, rows) for each distinct key of ``batch``: one
+    stable sort of a dense key code, then contiguous slices."""
+    if batch.num_rows == 0:
+        return
+    code = np.zeros(batch.num_rows, dtype=np.int64)
+    for k in key_cols:
+        enc = batch.column(k).dictionary_encode(null_encoding="encode")
+        code = code * len(enc.dictionary) + enc.indices.to_numpy()
+        code = np.unique(code, return_inverse=True)[1]
+    if np.any(code[1:] < code[:-1]):
+        order = np.argsort(code, kind="stable")
+        batch, code = batch.take(pa.array(order)), code[order]
+    starts = np.flatnonzero(np.r_[True, code[1:] != code[:-1]])
+    ends = np.r_[starts[1:], batch.num_rows]
+    for a, b in zip(starts, ends):
+        rows = batch.slice(a, b - a)
+        yield tuple(rows.column(k)[0].as_py() for k in key_cols), rows
+
+
+def _fit_packed(
+    packed: pa.RecordBatch,
     X_full: np.ndarray,
     t_axis: np.ndarray,
+    kt: tuple,
     key_cols: list[str],
     reg_names: list[str],
-    t_col: str,
-) -> pd.DataFrame:
-    """Solve one (keys..., voxel_block) group: pivot the block's
-    voxels into a (t x voxel) matrix, align rows to the design's
-    time axis, and solve every complete voxel with ONE pinv @ Y.
-    Voxels missing timepoints (never the case on a real fMRI
-    grid, but legal input) fall to a per-voxel masked solve."""
-    # (t, voxel) pairs are unique: scatter straight into a dense
-    # (t x voxel) matrix with numpy indexing — pivot_table's
-    # groupby machinery is ~20x slower on these block sizes.
-    pos = {tv: i for i, tv in enumerate(t_axis)}
-    t_vals = pdf[t_col].to_numpy()
-    present_ts = np.unique(t_vals)
-    t_index = np.fromiter(
-        (pos[tv] for tv in present_ts), dtype=np.int64, count=len(present_ts)
-    )
-    t_rank = {tv: i for i, tv in enumerate(present_ts)}
-    rows = np.fromiter(
-        (t_rank[tv] for tv in t_vals), dtype=np.int64, count=len(t_vals)
-    )
-    vox_codes, vox_idx = pd.factorize(pdf["voxel_id"], sort=True)
-    vox = np.asarray(vox_idx)
-    X = X_full[t_index]
+) -> pa.Table:
+    """Solve the packed series of ONE design key: scatter every
+    series into a dense (t x voxel) matrix aligned to the design's
+    sorted time axis, and solve every complete voxel with ONE
+    pinv @ Y. Voxels missing timepoints or holding null values
+    (never the case on a real fMRI grid, but legal input) fall to a
+    per-voxel masked solve."""
+    t_lists, y_lists = packed.column("_t"), packed.column("_y")
+    lengths = np.diff(t_lists.offsets.to_numpy())
+    if not np.array_equal(lengths, np.diff(y_lists.offsets.to_numpy())):
+        raise ValueError(f"mass_ols: null t in a series of key {kt}")
+    t_vals = t_lists.flatten().to_numpy(zero_copy_only=False)
+    nvox = len(t_lists)
+    vox_codes = np.repeat(np.arange(nvox), lengths)
+    pos = np.searchsorted(t_axis, t_vals)
+    hit = pos < len(t_axis)
+    hit[hit] = t_axis[pos[hit]] == t_vals[hit]
+    if not hit.all():
+        raise ValueError(
+            f"mass_ols: t={t_vals[~hit][0]!r} of key {kt} is not in the "
+            "design's time axis"
+        )
+    # only design rows some series of this key samples enter the fit
+    present = np.zeros(len(t_axis), dtype=bool)
+    present[pos] = True
+    X = X_full[present]
+    rows = (np.cumsum(present) - 1)[pos]
     n, k = X.shape
-    nvox = len(vox)
-    Y = np.full((n, nvox), np.nan)
-    # The scatter keeps the LAST write on duplicate (t, voxel) pairs
-    # (the old pivot_table averaged them) — enforce the uniqueness
-    # precondition instead of silently depending on it.
-    if len(np.unique(rows * np.int64(nvox) + vox_codes)) != len(pdf):
+    cells = rows * np.int64(nvox) + vox_codes
+    # the scatter below would silently keep one of duplicate samples
+    seen = np.zeros(n * nvox, dtype=bool)
+    seen[cells] = True
+    if np.count_nonzero(seen) != len(cells):
         raise ValueError(
             "mass_ols: duplicate (t, voxel_id) rows in input; "
             "aggregate to one value per (t, voxel_id) first"
         )
-    Y[rows, vox_codes] = pdf["value"].to_numpy(dtype=np.float64)
+    Y = np.full((n, nvox), np.nan)
+    Y.ravel()[cells] = y_lists.flatten().to_numpy(zero_copy_only=False)
     B = np.empty((k, nvox))
     SE = np.empty((k, nvox))
     DOF = np.empty(nvox)
@@ -338,19 +364,22 @@ def _fit_block(
             if dv > 0
             else np.nan
         )
-    out = {k_name: np.repeat(pdf.iloc[0][k_name], k * nvox) for k_name in key_cols}
-    out.update(
+    first = np.zeros(k * nvox, dtype=np.int64)
+    vox = packed.column("voxel_id").cast(pa.int64()).to_numpy()
+    return pa.table(
         {
+            **{name: packed.column(name).take(first) for name in key_cols},
             "voxel_id": np.tile(vox, k),
-            "regressor": np.repeat(reg_names, nvox),
+            "regressor": pa.array(reg_names, pa.string()).take(
+                np.repeat(np.arange(k), nvox)
+            ),
             "beta": B.ravel(),
             "t": T.ravel(),
             "p": P.ravel(),
-            "df": np.repeat(DOF[np.newaxis, :], k, axis=0).ravel(),
-            "sigma": np.repeat(SIGMA[np.newaxis, :], k, axis=0).ravel(),
+            "df": np.tile(DOF, k),
+            "sigma": np.tile(SIGMA, k),
         }
     )
-    return pd.DataFrame(out)
 
 
 def contrast(

@@ -376,7 +376,7 @@ _N_T = 7  # lineitem linenumbers 1..7
 
 def a9_mass_ols(spark, sf_dir):
     """A9: the real distributed mass-OLS operator (operators/ols.py —
-    broadcast design + blocked applyInPandas pinv solve, the
+    broadcast design + packed-series mapInArrow pinv solve, the
     smoothed.regress() flagship, ssm_loop.py:91) on the
     lineitem-derived long fact table. One series per part
     (t = l_linenumber, y = avg quantity), design X = [1, u, u^2] with
@@ -809,11 +809,12 @@ def c_contrast_estimate(spark, sf_dir):
 
     import pandas as pd
 
-    # NOTE (measured r4, sf0.1): unlike g_group_ttest, a pre-agg
-    # repartition does NOT pay here — mass_ols re-shuffles on its own
-    # (subject, run, _voxel_block) key regardless, so the extra 600k-row
-    # shuffle is additive (0.97s) while the map-side partial agg already
-    # crushes 600k -> 140k rows before the groupBy exchange (0.74s).
+    # NOTE: unlike g_group_ttest, a pre-agg repartition does NOT pay
+    # here — mass_ols packs each series with its own
+    # (subject, run, voxel_id) exchange regardless, so an extra 600k-row
+    # shuffle is additive (measured r4, sf0.1: 0.97s vs 0.74s), while
+    # the map-side partial agg already crushes 600k -> 140k rows before
+    # the groupBy exchange.
     li = _t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_linenumber", "l_quantity"
     )

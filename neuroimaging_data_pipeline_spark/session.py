@@ -8,8 +8,9 @@ Scale notes (100 TB design targets, tested on local[N]):
   directions: too many for local tests, far too few at 100 TB. We set
   a local-friendly default and rely on AQE coalescing; a real cluster
   deployment overrides via ``extra_conf``.
-- Arrow enabled: every pandas_udf / applyInPandas boundary (mass-OLS,
-  t-CDF) moves through Arrow batches, not pickled rows.
+- Arrow enabled: every pandas_udf / applyInPandas / mapInArrow
+  boundary (mass-OLS, t-CDF) moves through Arrow batches, not pickled
+  rows.
 - Session timezone pinned to UTC so timestamp semantics are stable
   against the DuckDB oracle and across clusters.
 """
@@ -41,8 +42,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Pandas UDF batches: large enough to amortize Arrow transfer for
-    # the per-voxel OLS batches (SURVEY.md §4.3) without OOMing a task.
+    # Arrow UDF batches: large enough to amortize Arrow transfer for
+    # the packed voxel series of mass-OLS (SURVEY.md §4.3) without
+    # OOMing a task (10k series x 296 TRs ~ 47 MB).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Broadcast threshold: dims (region/nation/supplier, kernel tables,
     # offset tables) are tiny; keep the default 10 MB but make it

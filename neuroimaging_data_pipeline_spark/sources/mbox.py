@@ -202,7 +202,10 @@ def _decode_cte(body: bytes, cte: str) -> bytes:
     if cte == "base64":
         import base64
 
-        return base64.b64decode(body)
+        try:
+            return base64.b64decode(body)
+        except ValueError as exc:  # binascii.Error: bad padding or length
+            raise _NeedStdlib("undecodable base64 body") from exc
     if cte == "quoted-printable":
         import quopri
 

@@ -482,6 +482,18 @@ def test_lsh_bucket_flood_guard(spark):
     assert guarded == 0 or guarded < 20
 
 
+@pytest.mark.parametrize("cap", [10, None])
+def test_jaccard_verify_broadcasts_only_capped_candidates(spark, docs, cap):
+    """The candidate-id semi-join is broadcast only when a flood guard
+    bounds the candidate set; uncapped, the strategy is AQE's."""
+    sh = shingles(docs, k=3)
+    sigs = minhash_signatures(sh, num_hashes=16)
+    cand = lsh_candidate_pairs(sigs, num_hashes=16, bands=8)
+    out = jaccard_verify(cand, sh, threshold=0.5, max_bucket_size=cap)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("strategy=broadcast" in plan) == (cap is not None), plan
+
+
 def test_ivf_lloyd_refinement_improves_recall(spark):
     """Pathological id-seeding (first ids all in one true cluster):
     two deterministic Lloyd passes spread the centroids and lift

@@ -51,44 +51,40 @@ def test_bad_container_raises():
         parse_mbox(b"not an mbox at all")
 
 
+def _stdlib_extract(raw):
+    from email import message_from_bytes
+
+    msg = message_from_bytes(raw)
+    parts = []
+    for part in msg.walk():
+        if part.get_content_maintype() == "multipart":
+            continue
+        parts.append(
+            {
+                "content_type": part.get_content_type(),
+                "cte": (
+                    part.get("Content-Transfer-Encoding") or "7bit"
+                ).lower(),
+                "body": part.get_payload(decode=True) or b"",
+            }
+        )
+    return {
+        "subject": msg.get("Subject", ""),
+        "from": msg.get("From", ""),
+        "message_id": msg.get("Message-ID", ""),
+        "parts": parts,
+    }
+
+
 def test_fast_walker_matches_stdlib():
     """r14: the bounded MIME walker must agree with the stdlib email
     parser on the source's message family and on crafted edge shapes,
     and must DELEGATE unsupported shapes to the stdlib parser."""
-    from email import message_from_bytes
-
-    from neuroimaging_data_pipeline_spark.sources.mbox import (
-        build_message,
-        extract_parts,
-    )
-
-    def stdlib_extract(raw):
-        msg = message_from_bytes(raw)
-        parts = []
-        for part in msg.walk():
-            if part.get_content_maintype() == "multipart":
-                continue
-            parts.append(
-                {
-                    "content_type": part.get_content_type(),
-                    "cte": (
-                        part.get("Content-Transfer-Encoding") or "7bit"
-                    ).lower(),
-                    "body": part.get_payload(decode=True) or b"",
-                }
-            )
-        return {
-            "subject": msg.get("Subject", ""),
-            "from": msg.get("From", ""),
-            "message_id": msg.get("Message-ID", ""),
-            "parts": parts,
-        }
-
     for i in range(0, 60, 7):
         raw = build_message(i, f"body From line\nFrom x {i}\nünicode ⇒")
-        assert extract_parts(raw) == stdlib_extract(raw)
+        assert extract_parts(raw) == _stdlib_extract(raw)
     single = b"From: x@y\r\nSubject: hi\r\n\r\nplain body\r\n"
-    assert extract_parts(single) == stdlib_extract(single)
+    assert extract_parts(single) == _stdlib_extract(single)
     nested = (
         b"From: x\r\nContent-Type: multipart/mixed; boundary=\"outer\"\r\n"
         b"\r\n--outer\r\n"
@@ -96,6 +92,25 @@ def test_fast_walker_matches_stdlib():
         b"--inner\r\nContent-Type: text/plain\r\n\r\nA\r\n--inner--\r\n"
         b"\r\n--outer--\r\n"
     )
-    assert extract_parts(nested) == stdlib_extract(nested)
+    assert extract_parts(nested) == _stdlib_extract(nested)
     exotic = b"From: x\r\nContent-Transfer-Encoding: x-uuencode\r\n\r\nb\r\n"
-    assert extract_parts(exotic) == stdlib_extract(exotic)
+    assert extract_parts(exotic) == _stdlib_extract(exotic)
+
+
+def test_bad_base64_falls_back_to_stdlib():
+    """A badly padded base64 part is delegated to the stdlib parser,
+    which tolerates it, instead of failing the task."""
+    import base64
+    import binascii
+
+    body = b"aGVsbG8gd29ybGQ"  # "hello world" missing its "=" padding
+    with pytest.raises(binascii.Error):
+        base64.b64decode(body)
+    raw = (
+        b"From: x@y\r\nSubject: pad\r\n"
+        b"Content-Type: text/plain\r\n"
+        b"Content-Transfer-Encoding: base64\r\n\r\n" + body + b"\r\n"
+    )
+    got = extract_parts(raw)
+    assert got == _stdlib_extract(raw)
+    assert got["parts"][0]["cte"] == "base64"

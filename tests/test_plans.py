@@ -86,8 +86,8 @@ def test_smooth_kernel_broadcasts(spark, queries):
 
 
 def test_mass_ols_is_arrow_not_row_python(spark, queries):
-    """A9: per-voxel OLS runs through Arrow-batched pandas machinery,
-    never row-pickling BatchEvalPython."""
+    """A9: per-voxel OLS runs through Arrow batches of packed series
+    (mapInArrow), never row-pickling BatchEvalPython."""
     plan = explain_str(queries["a9_mass_ols"](spark, SF_DIR))
     assert python_eval_count(plan) == 0, plan
 

@@ -74,15 +74,8 @@ def main() -> None:
         )
     )
 
-    # Size the operator shuffle to the data (~4M rows/task): the
-    # session default (32, tuned for the small driver tables) makes
-    # cohort tasks too coarse and costs ~30% throughput at 16 subjects
-    # (measured r3: 5.3k v/s at 32 parts vs 6.9k at 128).
-    total_rows = n_subjects * n_voxels * N_TR
-    n_parts = max(32, total_rows // 4_000_000)
-
     t0 = time.time()
-    stats = mass_ols(values, design_all, reg, shuffle_partitions=n_parts)
+    stats = mass_ols(values, design_all, reg)
     stats.write.format("noop").mode("overwrite").save()
     elapsed = time.time() - t0
 
