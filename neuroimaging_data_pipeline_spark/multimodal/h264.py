@@ -12,12 +12,14 @@ reference decoder accepts):
   removal, with the strict followed-by-<=0x03 rule);
 - Exp-Golomb bit coding (ue(v)/se(v)), MSB-first RBSP bit I/O,
   rbsp_trailing_bits;
-- a full SPS (profile_idc 66 baseline, pic_order_cnt_type 2,
+- the codec family's shared header layer: SPS (Baseline with
+  pic_order_cnt_type 2, or Main with type 0 for B streams;
   frame_mbs_only, FRAME CROPPING for non-multiple-of-16 dims in
-  4:2:0 crop units) and PPS (CAVLC mode, no FMO) — written and
-  parsed field-for-field;
-- IDR slice headers (slice_type I, idr_pic_id, dec_ref_pic_marking)
-  and the macroblock layer for I_PCM macroblocks (mb_type 25):
+  4:2:0 crop units), PPS (CAVLC or CABAC, no FMO, weighted
+  prediction and deblocking-control flags), I/P/B slice headers
+  and the pred_weight_table — every encoder and decoder in the
+  h264_* modules writes and parses them through these functions;
+- the macroblock layer for I_PCM macroblocks (mb_type 25):
   pcm_alignment_zero_bit, 256 raw luma + 2x64 raw 4:2:0 chroma
   samples per MB, raster MB scan.
 
@@ -30,7 +32,7 @@ asserts sample-identical output — the conformance cross-check.
 
 Predicted macroblocks: Intra_16x16 prediction + CAVLC residuals are
 REAL since r6 in the sibling ``multimodal/h264_intra.py`` (which
-reuses this module's NAL/SPS/PPS/slice framing). The remaining
+reuses this module's NAL and header layer). The remaining
 honest gate (raise, never silent): I_4x4/I_8x8 prediction, CABAC,
 inter slices — pointed at ``decoder='ffmpeg'`` in ``binaryops.py``.
 
@@ -255,17 +257,43 @@ def _check_planes(
     return y, cb, cr
 
 
-def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
-    """Baseline-profile SPS RBSP for a frame-MBs-only 4:2:0 stream of
-    mbw x mbh macroblocks cropped to w x h (shared with h264_intra)."""
+# --- parameter sets and slice headers (7.3.2.1, 7.3.2.2, 7.3.3) -----------
+#
+# Every encoder and decoder of the codec family writes and parses its
+# SPS, PPS, slice headers and pred_weight_tables through the functions
+# below. They branch only on H.264 syntax conditions. The family codes
+# one slice per picture with every parameter-set id 0 and a 4-bit
+# frame_num.
+
+_POC_BITS = 6  # log2_max_pic_order_cnt_lsb under pic_order_cnt_type 0
+# slice_type values 5..9: every slice of the picture has this type
+_SLICE_TYPE = {"p": 5, "b": 6, "i": 7}
+_SLICE_KIND = {0: "p", 1: "b", 2: "i"}  # slice_type % 5 (3/4: SP/SI)
+
+
+def _sps_rbsp(
+    mbw: int, mbh: int, w: int, h: int, max_refs: int = 0,
+    poc_type: int = 2,
+) -> bytes:
+    """SPS RBSP for a frame-MBs-only 4:2:0 stream of mbw x mbh
+    macroblocks cropped to w x h. pic_order_cnt_type 2 (output order
+    is decode order) is Baseline. Type 0 carries a _POC_BITS-bit
+    pic_order_cnt_lsb in every slice so B pictures can reorder
+    output, and B slices need Main profile."""
     sps = _BitW()
-    sps.u(66, 8)  # profile_idc: baseline
-    sps.u(0xE0, 8)  # constraint_set0..2, reserved
+    if poc_type == 0:
+        sps.u(77, 8)  # profile_idc: Main
+        sps.u(0x40, 8)  # constraint_set1_flag only
+    else:
+        sps.u(66, 8)  # profile_idc: Baseline
+        sps.u(0xE0, 8)  # constraint_set0..2, reserved
     sps.u(20, 8)  # level_idc 2.0
     sps.ue(0)  # seq_parameter_set_id
     sps.ue(0)  # log2_max_frame_num_minus4
-    sps.ue(2)  # pic_order_cnt_type (no further fields)
-    sps.ue(0)  # max_num_ref_frames
+    sps.ue(poc_type)  # pic_order_cnt_type
+    if poc_type == 0:
+        sps.ue(_POC_BITS - 4)  # log2_max_pic_order_cnt_lsb_minus4
+    sps.ue(max_refs)  # max_num_ref_frames
     sps.u(0, 1)  # gaps_in_frame_num_value_allowed
     sps.ue(mbw - 1)
     sps.ue(mbh - 1)
@@ -285,40 +313,173 @@ def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
     return sps.bytes_()
 
 
-def _pps_rbsp() -> bytes:
-    """CAVLC-mode PPS RBSP (no FMO, all offsets zero)."""
+def _pps_rbsp(
+    cabac: bool = False, weighted_pred: bool = False,
+    bipred_idc: int = 0, deblock_control: bool = False,
+) -> bytes:
+    """PPS RBSP: no FMO, one default active reference per list, all
+    QP offsets zero. ``deblock_control`` lets slice headers carry
+    disable_deblocking_filter_idc; with idc 1 a stream's conformant
+    output is this family's unfiltered reconstruction."""
     pps = _BitW()
     pps.ue(0)  # pic_parameter_set_id
     pps.ue(0)  # seq_parameter_set_id
-    pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
+    pps.u(int(cabac), 1)  # entropy_coding_mode_flag
     pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
     pps.ue(0)  # num_slice_groups_minus1
     pps.ue(0)  # num_ref_idx_l0_default_active_minus1
     pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
+    pps.u(int(weighted_pred), 1)  # weighted_pred_flag
+    pps.u(bipred_idc, 2)  # weighted_bipred_idc
     pps.se(0)  # pic_init_qp_minus26
     pps.se(0)  # pic_init_qs_minus26
     pps.se(0)  # chroma_qp_index_offset
-    pps.u(0, 1)  # deblocking_filter_control_present_flag
+    pps.u(int(deblock_control), 1)  # deblocking_filter_control_present
     pps.u(0, 1)  # constrained_intra_pred_flag
     pps.u(0, 1)  # redundant_pic_cnt_present_flag
     pps.trailing()
     return pps.bytes_()
 
 
-def _slice_header(sl: _BitW, qp: int = 26) -> None:
-    """IDR I-slice header (single slice per picture, QP via
-    slice_qp_delta against pic_init_qp 26)."""
+# pred_weight_table (7.3.3.2). A table is {"luma_denom", "chroma_denom",
+# "l0": [entry per reference], "l1": [...]}; an entry holds the luma
+# pair wy/oy and the chroma pairs wc/oc (Cb) and wcr/ocr (Cr). A None
+# weight is a flag-0 entry: default weight 1 << denom, offset 0.
+_PWT_FLAG0 = {"wy": None, "oy": 0, "wc": None, "oc": 0,
+              "wcr": None, "ocr": None}
+
+
+def _norm_pwt(weights: dict, l0: list, l1: list = ()) -> dict:
+    """A table from user weights: the denominators plus one entry per
+    given dict, missing fields as flag 0."""
+    return {
+        "luma_denom": int(weights.get("luma_denom", 0)),
+        "chroma_denom": int(weights.get("chroma_denom", 0)),
+        "l0": [{**_PWT_FLAG0, **e} for e in l0],
+        "l1": [{**_PWT_FLAG0, **e} for e in l1],
+    }
+
+
+def _resolve_pwt(w: dict) -> dict:
+    """The table with every flag-0 default filled in, as prediction
+    (8.4.2.3) applies it."""
+    one_y, one_c = 1 << w["luma_denom"], 1 << w["chroma_denom"]
+
+    def entry(e: dict) -> dict:
+        e = dict(e)
+        if e["wy"] is None:
+            e["wy"], e["oy"] = one_y, 0
+        if e["wc"] is None and e["wcr"] is None:
+            e["wc"], e["oc"] = one_c, 0
+        elif e["wc"] is None:
+            # wcr-only entry: chroma_weight_flag covers both planes,
+            # so Cb takes the Cr weight
+            e["wc"] = e["wcr"]
+        if e["wcr"] is None:
+            e["wcr"] = e["wc"]
+        if e["ocr"] is None:
+            e["ocr"] = e["oc"]
+        return e
+
+    return {**w, "l0": [entry(e) for e in w["l0"]],
+            "l1": [entry(e) for e in w["l1"]]}
+
+
+def _write_pwt(sl: _BitW, w: dict, n_l0: int, n_l1: int) -> None:
+    """Write a normalised table: the flags come from the given
+    weights, the values from the resolved table the predictor uses."""
+    sl.ue(w["luma_denom"])
+    sl.ue(w["chroma_denom"])
+    res = _resolve_pwt(w)
+    for e, v in zip(w["l0"][:n_l0] + w["l1"][:n_l1],
+                    res["l0"][:n_l0] + res["l1"][:n_l1]):
+        luma = e["wy"] is not None
+        sl.u(int(luma), 1)  # luma_weight_flag
+        if luma:
+            sl.se(v["wy"])
+            sl.se(v["oy"])
+        chroma = e["wc"] is not None or e["wcr"] is not None
+        sl.u(int(chroma), 1)  # chroma_weight_flag
+        if chroma:
+            for k in ("wc", "oc", "wcr", "ocr"):
+                sl.se(v[k])
+
+
+def _parse_pwt(r: _BitR, n_l0: int, n_l1: int) -> dict:
+    """Read a pred_weight_table; returns it resolved."""
+    w = {"luma_denom": r.ue(), "chroma_denom": r.ue()}
+    if w["luma_denom"] > 7 or w["chroma_denom"] > 7:
+        raise ValueError("pred_weight_table log2 denominator above 7")
+    lists = []
+    for n in (n_l0, n_l1):
+        entries = []
+        for _ in range(n):
+            e = dict(_PWT_FLAG0)
+            if r.u(1):
+                e["wy"], e["oy"] = r.se(), r.se()
+            if r.u(1):
+                e["wc"], e["oc"] = r.se(), r.se()
+                e["wcr"], e["ocr"] = r.se(), r.se()
+            entries.append(e)
+        lists.append(entries)
+    w["l0"], w["l1"] = lists
+    return _resolve_pwt(w)
+
+
+def _slice_header(
+    sl: _BitW, qp: int = 26, kind: str = "i", idr: bool = True,
+    frame_num: int = 0, poc_lsb: int | None = None, nra: int = 1,
+    pwt: dict | None = None, spatial: bool = True, ref: bool = True,
+    cabac: bool = False, deblock_idc: int | None = None,
+    deblock_offs: tuple = (0, 0),
+) -> None:
+    """7.3.3 slice_header() of a one-slice picture: ``kind`` 'i' /
+    'p' / 'b', ``idr`` for NAL type 5, ``ref`` for nal_ref_idc != 0.
+    ``poc_lsb`` is None under pic_order_cnt_type 2. ``nra`` is
+    num_ref_idx_l0_active (the PPS default is 1; B slices keep one
+    list-1 reference). ``pwt`` is the normalised table when the PPS
+    weights this slice type. ``deblock_idc`` is None when the PPS
+    has no deblocking-control flag. CABAC slices end with
+    cabac_alignment_one_bit."""
     sl.ue(0)  # first_mb_in_slice
-    sl.ue(7)  # slice_type: I (all slices)
+    sl.ue(_SLICE_TYPE[kind])
     sl.ue(0)  # pic_parameter_set_id
-    sl.u(0, 4)  # frame_num (log2_max_frame_num = 4)
-    sl.ue(0)  # idr_pic_id
-    # dec_ref_pic_marking (IDR, nal_ref_idc != 0)
-    sl.u(0, 1)  # no_output_of_prior_pics_flag
-    sl.u(0, 1)  # long_term_reference_flag
+    sl.u(frame_num % 16, 4)  # frame_num (log2_max_frame_num = 4)
+    if idr:
+        sl.ue(0)  # idr_pic_id
+    if poc_lsb is not None:
+        sl.u(poc_lsb % (1 << _POC_BITS), _POC_BITS)
+    if kind == "b":
+        sl.u(int(spatial), 1)  # direct_spatial_mv_pred_flag
+    if kind != "i":
+        if nra != 1:
+            sl.u(1, 1)  # num_ref_idx_active_override_flag
+            sl.ue(nra - 1)
+            if kind == "b":
+                sl.ue(0)  # num_ref_idx_l1_active_minus1
+        else:
+            sl.u(0, 1)
+        sl.u(0, 1)  # ref_pic_list_modification_flag_l0
+        if kind == "b":
+            sl.u(0, 1)  # ref_pic_list_modification_flag_l1
+    if pwt is not None:
+        _write_pwt(sl, pwt, nra, 1 if kind == "b" else 0)
+    if idr:  # dec_ref_pic_marking
+        sl.u(0, 1)  # no_output_of_prior_pics_flag
+        sl.u(0, 1)  # long_term_reference_flag
+    elif ref:
+        sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
+    if cabac and kind != "i":
+        sl.ue(0)  # cabac_init_idc
     sl.se(qp - 26)  # slice_qp_delta
+    if deblock_idc is not None:
+        sl.ue(deblock_idc)  # disable_deblocking_filter_idc
+        if deblock_idc != 1:
+            sl.se(deblock_offs[0])  # slice_alpha_c0_offset_div2
+            sl.se(deblock_offs[1])  # slice_beta_offset_div2
+    if cabac:
+        while sl.n % 8:
+            sl.u(1, 1)  # cabac_alignment_one_bit
 
 
 def encode_h264_ipcm(
@@ -433,19 +594,132 @@ def _parse_sps(rbsp: bytes) -> dict:
     )
 
 
-def _parse_slice_header(r: _BitR, sps: dict) -> int:
-    """Parse an IDR I-slice header; returns the slice QP."""
+def _parse_pps(rbsp: bytes) -> dict:
+    """Parse a PPS up to the fields the slice header depends on."""
+    r = _BitR(rbsp)
+    r.ue()  # pic_parameter_set_id
+    r.ue()  # seq_parameter_set_id
+    cabac = bool(r.u(1))
+    r.u(1)  # bottom_field_pic_order_in_frame_present
+    if r.ue():
+        raise NotImplementedError("slice groups (FMO) unsupported")
+    nra = (r.ue() + 1, r.ue() + 1)
+    weighted_pred = bool(r.u(1))
+    bipred_idc = r.u(2)
+    if bipred_idc == 3:
+        raise ValueError("weighted_bipred_idc 3 is reserved")
+    init_qp = 26 + r.se()
+    r.se()  # pic_init_qs_minus26
+    r.se()  # chroma_qp_index_offset
+    return dict(
+        cabac=cabac,
+        nra=nra,
+        weighted_pred=weighted_pred,
+        bipred_idc=bipred_idc,
+        init_qp=init_qp,
+        deblock_control=bool(r.u(1)),
+    )
+
+
+def _parse_slice_header(r: _BitR, sps: dict, pps: dict, nal_hdr: int) -> dict:
+    """Parse a slice header of the NAL whose first byte is
+    ``nal_hdr``; leaves ``r`` at the first slice_data() element.
+    Returns kind ('i'/'p'/'b'), qp, frame_num, poc (0 under
+    pic_order_cnt_type 2), spatial, nra and nra_l1 (active references
+    per list), pwt (resolved table or None), cabac_init_idc, idc
+    (disable_deblocking_filter_idc; 1 when the PPS has no deblocking
+    control, so the family decodes such streams unfiltered) and offs
+    (alpha/beta offsets, div2)."""
     if r.ue() != 0:
         raise ValueError("multi-slice pictures unsupported")
     stype = r.ue()
-    if stype % 5 != 2:
-        raise ValueError("non-I slice in IDR decode")
-    r.ue()  # pps id
-    r.u(sps["log2_mfn"])  # frame_num
-    r.ue()  # idr_pic_id
-    r.u(1)
-    r.u(1)  # dec_ref_pic_marking
-    return 26 + r.se()  # pic_init_qp 26 + slice_qp_delta
+    kind = _SLICE_KIND.get(stype % 5)
+    if kind is None or stype > 9:
+        raise NotImplementedError(f"slice_type {stype} unsupported")
+    idr = nal_hdr & 0x1F == 5
+    if idr and kind != "i":
+        raise ValueError("non-I slice in an IDR picture")
+    r.ue()  # pic_parameter_set_id
+    frame_num = r.u(sps["log2_mfn"])
+    if idr:
+        r.ue()  # idr_pic_id
+    if sps["poc_type"] not in (0, 2):
+        raise NotImplementedError(
+            f"pic_order_cnt_type {sps['poc_type']} unsupported")
+    poc = r.u(sps["log2_poc"]) if sps["poc_type"] == 0 else 0
+    spatial = True
+    nra = nra_l1 = 0
+    if kind != "i":
+        nra = pps["nra"][0]
+        if kind == "b":
+            spatial = bool(r.u(1))  # direct_spatial_mv_pred_flag
+            nra_l1 = pps["nra"][1]
+        if r.u(1):  # num_ref_idx_active_override_flag
+            nra = r.ue() + 1
+            if kind == "b":
+                nra_l1 = r.ue() + 1
+        if max(nra, nra_l1) > 15:
+            raise ValueError(
+                f"num_ref_idx_active {max(nra, nra_l1)} exceeds the "
+                "4-bit frame_num sliding window"
+            )
+        if r.u(1) or (kind == "b" and r.u(1)):
+            raise NotImplementedError("ref_pic_list_modification unsupported")
+    pwt = None
+    if (kind == "p" and pps["weighted_pred"]) or (
+        kind == "b" and pps["bipred_idc"] == 1
+    ):
+        pwt = _parse_pwt(r, nra, nra_l1)
+    if idr:
+        r.u(1)  # no_output_of_prior_pics_flag
+        r.u(1)  # long_term_reference_flag
+    elif nal_hdr & 0x60 and r.u(1):
+        raise NotImplementedError("adaptive ref pic marking unsupported")
+    cabac_init_idc = 0
+    if pps["cabac"] and kind != "i":
+        cabac_init_idc = r.ue()
+        if cabac_init_idc > 2:
+            raise ValueError(f"cabac_init_idc {cabac_init_idc} out of range")
+    qp = pps["init_qp"] + r.se()
+    if not 0 <= qp <= 51:
+        raise ValueError(f"slice QP {qp} out of range")
+    idc, offs = 1, (0, 0)
+    if pps["deblock_control"]:
+        idc = r.ue()
+        if idc > 2:
+            raise ValueError(
+                f"disable_deblocking_filter_idc {idc} out of range")
+        if idc != 1:
+            offs = (r.se(), r.se())
+            if not all(-6 <= o <= 6 for o in offs):
+                raise ValueError(f"slice filter offsets {offs} out of range")
+    if pps["cabac"]:
+        r.align()  # cabac_alignment_one_bit
+    return dict(
+        kind=kind, qp=qp, frame_num=frame_num, poc=poc, spatial=spatial,
+        nra=nra, nra_l1=nra_l1, pwt=pwt, cabac_init_idc=cabac_init_idc,
+        idc=idc, offs=offs,
+    )
+
+
+def _slice_nals(payload: bytes) -> Iterator[tuple[int, bytes, dict, dict]]:
+    """Walk an Annex B stream: yields (nal_header_byte, rbsp, sps,
+    pps) for every coded slice NAL (types 1 and 5), with the
+    parameter sets in force at that NAL."""
+    sps = pps = None
+    for nal in _split_nals(bytes(payload)):
+        ntype = nal[0] & 0x1F if nal else 0
+        if ntype not in (1, 5, 7, 8):
+            continue
+        rbsp = _ep_remove(nal[1:])
+        if ntype == 7:
+            sps = _parse_sps(rbsp)
+        elif ntype == 8:
+            pps = _parse_pps(rbsp)
+        elif sps is None or pps is None:
+            raise ValueError("coded slice before its SPS and PPS")
+        else:
+            yield nal[0], rbsp, sps, pps
 
 
 def decode_h264_ipcm(
@@ -455,24 +729,13 @@ def decode_h264_ipcm(
     (Y, Cb, Cr) planes. Predicted macroblock types raise a pointer at
     the FULL decoder (h264_intra.decode_h264_frame handles
     Intra_16x16 CAVLC) and the ffmpeg gate beyond that."""
-    sps = None
     planes = None
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-        elif ntype == 8:
-            r = _BitR(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if nal_hdr & 0x1F == 5:
+            if pps["cabac"]:
                 raise ValueError("CABAC PPS unsupported (I_PCM/CAVLC only)")
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR slice before SPS")
             r = _BitR(rbsp)
-            _parse_slice_header(r, sps)
+            _parse_slice_header(r, sps, pps, nal_hdr)
             mbw, mbh = sps["mbw"], sps["mbh"]
             yp = np.zeros((mbh * 16, mbw * 16), np.uint8)
             cbp = np.zeros((mbh * 8, mbw * 8), np.uint8)

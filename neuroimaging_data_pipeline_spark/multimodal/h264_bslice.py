@@ -27,10 +27,11 @@ What is REAL here (ITU-T H.264 clause references, all from scratch):
 - frame_num tracking for non-reference pictures (a B slice repeats
   PrevRefFrameNum + 1) and a DPB keyed by POC that only reference
   pictures (nal_ref_idc > 0) enter;
-- the P frames inside a B GOP reuse h264_inter's proven encoder and
-  decoder wholesale — their slices are re-headered to insert the
-  poc-type-0 pic_order_cnt_lsb field, the same technique the P
-  module uses for the deblocking-control IDR re-header.
+- the P frames inside a B GOP reuse h264_inter's P-slice encoder
+  and decoder, and the IDR anchor the intra module's CAVLC slice
+  data; every slice header (IDR, P and B) is written and parsed by
+  h264.py's shared header layer, which adds pic_order_cnt_lsb under
+  the POC-type-0 SPS.
 
 - B_8x8 sub-macroblock partitions (second pass): all twelve coded
   Table 7-18 sub_mb_types — per-8x8 list usage l0/l1/bi with
@@ -98,18 +99,24 @@ from pyspark.sql import DataFrame
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _BitR,
     _BitW,
-    _ep_remove,
     _nal,
-    _parse_sps,
+    _norm_pwt,
+    _parse_slice_header,
     _pps_rbsp,
-    _split_nals,
+    _resolve_pwt,
+    _slice_header,
+    _slice_nals,
     _sps_rbsp,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
+    deblock_frame,
+    make_block_info,
+    make_block_info_b,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     _PARTS,
     _SUBPARTS,
     _chroma_qp,
-    _copy_bits,
     _decode_i4x4_mb,
     _decode_i16_mb,
     _decode_ipcm_mb,
@@ -121,13 +128,14 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     _mc_mb,
     _MvState,
     _pad_refs,
-    _idr_slice_qp,
-    _pps_rbsp_deblock,
-    _read_deblock_fields,
     _read_residuals,
     _recon_inter_mb,
     _residual_from_target,
     _write_residuals,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
+    _decode_intra_slice,
+    _encode_i16x16_slice,
 )
 
 # Table 7-14 (mb_type 1..21): decode as (partition mode, per-partition
@@ -166,235 +174,10 @@ _B_SUB_USES = {
 }
 _B_SUB_TYPE = {v: k for k, v in _B_SUB_USES.items()}
 
-_POC_BITS = 6  # log2_max_pic_order_cnt_lsb_minus4 = 2
-
 
 # ---------------------------------------------------------------------------
-# Framing (POC type 0)
+# Weighted prediction
 # ---------------------------------------------------------------------------
-
-
-def _sps_rbsp_poc0(mbw: int, mbh: int, w: int, h: int) -> bytes:
-    """Main-profile SPS with pic_order_cnt_type 0 and two reference
-    frames — the framing B slices require."""
-    if w % 16 or h % 16:
-        raise ValueError("B sequences require dimensions % 16 == 0")
-    sps = _BitW()
-    sps.u(77, 8)  # profile_idc: Main (B slices are not in Baseline)
-    sps.u(0x40, 8)  # constraint_set1_flag only
-    sps.u(20, 8)
-    sps.ue(0)  # seq_parameter_set_id
-    sps.ue(0)  # log2_max_frame_num_minus4 -> 4-bit frame_num
-    sps.ue(0)  # pic_order_cnt_type 0
-    sps.ue(_POC_BITS - 4)  # log2_max_pic_order_cnt_lsb_minus4
-    sps.ue(3)  # max_num_ref_frames (pyramid: anchor + Bref + P)
-    sps.u(0, 1)
-    sps.ue(mbw - 1)
-    sps.ue(mbh - 1)
-    sps.u(1, 1)  # frame_mbs_only_flag
-    sps.u(1, 1)  # direct_8x8_inference_flag
-    sps.u(0, 1)  # no cropping
-    sps.u(0, 1)  # no VUI
-    sps.trailing()
-    return sps.bytes_()
-
-
-def _idr_reheader_poc0(rbsp: bytes, idc: int = 1,
-                       offs: tuple = (0, 0)) -> bytes:
-    """Re-header the intra encoder's IDR slice for the POC-type-0
-    SPS + deblocking-control PPS: insert pic_order_cnt_lsb (= 0)
-    after idr_pic_id and append disable_deblocking_filter_idc (+ the
-    7.3.3 slice filter offsets when idc != 1)."""
-    r = _BitR(rbsp)
-    first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    w = _BitW()
-    w.ue(first_mb)
-    w.ue(stype)
-    w.ue(ppsid)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(0, _POC_BITS)  # pic_order_cnt_lsb
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    w.ue(idc)  # disable_deblocking_filter_idc
-    if idc != 1:
-        w.se(offs[0])  # slice_alpha_c0_offset_div2
-        w.se(offs[1])  # slice_beta_offset_div2
-    _copy_bits(r, w, rbsp)
-    return w.bytes_()
-
-
-def _idr_strip_poc0(rbsp: bytes):
-    """Inverse of _idr_reheader_poc0: drop the poc_lsb and the
-    deblocking idc (+ offsets) so the slice can be delegated to the
-    plain intra decoder (poc-type-2 SPS, control-flag-0 PPS).
-    Returns (rbsp, idc, (a_div2, b_div2))."""
-    r = _BitR(rbsp)
-    fields = (r.ue(), r.ue(), r.ue())
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    poc = r.u(_POC_BITS)
-    if poc != 0:
-        raise ValueError("IDR pic_order_cnt_lsb must be 0")
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    idc, offs = _read_deblock_fields(r)
-    w = _BitW()
-    for v in fields:
-        w.ue(v)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    _copy_bits(r, w, rbsp)
-    return w.bytes_(), idc, offs
-
-
-def _p_reheader_poc0(rbsp: bytes, poc_lsb: int) -> bytes:
-    """Insert pic_order_cnt_lsb into a P slice produced by
-    h264_inter._encode_p_frame (single-ref layout, no override)."""
-    r = _BitR(rbsp)
-    first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
-    fn = r.u(4)
-    if r.u(1):
-        raise ValueError("unexpected num_ref_idx override in P slice")
-    lm, am = r.u(1), r.u(1)
-    qpd = r.se()
-    idc = r.ue()
-    w = _BitW()
-    w.ue(first_mb)
-    w.ue(stype)
-    w.ue(ppsid)
-    w.u(fn, 4)
-    w.u(poc_lsb % (1 << _POC_BITS), _POC_BITS)
-    w.u(0, 1)
-    w.u(lm, 1)
-    w.u(am, 1)
-    w.se(qpd)
-    w.ue(idc)
-    _copy_bits(r, w, rbsp)
-    return w.bytes_()
-
-
-def _pps_rbsp_deblock_wp(idc: int = 1) -> bytes:
-    """CAVLC PPS like h264_inter's deblocking-control PPS but with
-    weighted_bipred_idc set: 1 = EXPLICIT (B slice headers carry a
-    pred_weight_table), 2 = IMPLICIT (weights derived from POC
-    distances, no table)."""
-    pps = _BitW()
-    pps.ue(0)
-    pps.ue(0)
-    pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
-    pps.u(0, 1)
-    pps.ue(0)
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag (P slices stay unweighted)
-    pps.u(idc, 2)  # weighted_bipred_idc
-    pps.se(0)
-    pps.se(0)
-    pps.se(0)
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)
-    pps.u(0, 1)
-    pps.trailing()
-    return pps.bytes_()
-
-
-_DEFAULT_W = {"wy": None, "oy": 0, "wc": None, "oc": 0,
-              "wcr": None, "ocr": None}
-
-
-def _norm_weights(weights):
-    """Normalize the user weights dict: luma/chroma denominators plus
-    per-list (weight, offset) for luma and one shared chroma pair.
-    None weights mean 'flag 0' (default 1 << denom, offset 0)."""
-    w = {
-        "luma_denom": int(weights.get("luma_denom", 0)),
-        "chroma_denom": int(weights.get("chroma_denom", 0)),
-    }
-    for li in ("l0", "l1"):
-        e = dict(_DEFAULT_W)
-        e.update(weights.get(li, {}))
-        w[li] = e
-    return w
-
-
-def _write_pred_weight_table(sl: _BitW, w) -> None:
-    """7.3.3.2 pred_weight_table, one active reference per list."""
-    sl.ue(w["luma_denom"])
-    sl.ue(w["chroma_denom"])
-    for li in ("l0", "l1"):
-        e = w[li]
-        if e["wy"] is not None:
-            sl.u(1, 1)
-            sl.se(e["wy"])
-            sl.se(e["oy"])
-        else:
-            sl.u(0, 1)
-        if e["wc"] is not None or e.get("wcr") is not None:
-            sl.u(1, 1)
-            wcb = e["wc"] if e["wc"] is not None else e["wcr"]
-            wcr = e.get("wcr") if e.get("wcr") is not None else wcb
-            sl.se(wcb)
-            sl.se(e["oc"])
-            sl.se(wcr)
-            sl.se(e.get("ocr") if e.get("ocr") is not None else e["oc"])
-        else:
-            sl.u(0, 1)
-
-
-def _resolve_weights(w):
-    """Fill flag-0 defaults (1 << denom, offset 0) for prediction."""
-    out = {"luma_denom": w["luma_denom"],
-           "chroma_denom": w["chroma_denom"]}
-    for li in ("l0", "l1"):
-        e = dict(w[li])
-        if e["wy"] is None:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if e["wc"] is None and e.get("wcr") is None:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-        elif e["wc"] is None:
-            # wcr-only entry: the writer emits wcb = wcr into the
-            # bitstream (chroma_weight_flag covers both planes), so the
-            # encoder-side resolver must predict Cb with wcr too.
-            e["wc"] = e["wcr"]
-        if e.get("wcr") is None:
-            e["wcr"] = e["wc"]
-        if e.get("ocr") is None:
-            e["ocr"] = e["oc"]
-        out[li] = e
-    return out
-
-
-def _parse_pred_weight_table(r: _BitR):
-    w = {"luma_denom": r.ue(), "chroma_denom": r.ue()}
-    for li in ("l0", "l1"):
-        e = {}
-        if r.u(1):
-            e["wy"] = r.se()
-            e["oy"] = r.se()
-        else:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if r.u(1):
-            e["wc"], e["oc"] = r.se(), r.se()
-            e["wcr"], e["ocr"] = r.se(), r.se()
-        else:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-            e["wcr"] = e["wc"]
-            e["ocr"] = 0
-        w[li] = e
-    return w
 
 
 def _implicit_weights(tb: int, td: int) -> dict:
@@ -419,11 +202,13 @@ def _implicit_weights(tb: int, td: int) -> dict:
             "l0": None, "l1": None}
 
 
-def _wp_uni(planes, e, w):
-    """8.4.2.3.2 explicit uni-directional weighting, per plane
-    (implicit mode leaves uni-predicted partitions unweighted)."""
+def _wp_uni(planes, li, w):
+    """8.4.2.3.2 explicit uni-directional weighting from list ``li``,
+    per plane (implicit mode leaves uni-predicted partitions
+    unweighted)."""
     if w.get("implicit"):
         return planes
+    e = w[li][0]
     ldy, ldc = w["luma_denom"], w["chroma_denom"]
     out = []
     for pi, p in enumerate(planes):
@@ -451,7 +236,7 @@ def _wp_bi(p0, p1, w):
     out = []
     for pi, (a, b) in enumerate(zip(p0, p1)):
         ld = ldy if pi == 0 else ldc
-        e0, e1 = w["l0"], w["l1"]
+        e0, e1 = w["l0"][0], w["l1"][0]
         w0 = (e0["wy"], e0["wc"], e0.get("wcr", e0["wc"]))[pi]
         w1 = (e1["wy"], e1["wc"], e1.get("wcr", e1["wc"]))[pi]
         o0 = (e0["oy"], e0["oc"], e0.get("ocr", e0["oc"]))[pi]
@@ -461,81 +246,6 @@ def _wp_bi(p0, p1, w):
         )
         out.append(np.clip(v, 0, 255))
     return tuple(out)
-
-
-def _b_slice_header(sl: _BitW, qp: int, frame_num: int,
-                    poc_lsb: int, weights=None,
-                    spatial: bool = True, deblock_idc: int = 1,
-                    deblock_offs: tuple = (0, 0),
-                    is_ref: bool = False) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(6)  # slice_type: B (all slices)
-    sl.ue(0)  # pic_parameter_set_id
-    sl.u(frame_num % 16, 4)
-    sl.u(poc_lsb % (1 << _POC_BITS), _POC_BITS)
-    sl.u(1 if spatial else 0, 1)  # direct_spatial_mv_pred_flag
-    sl.u(0, 1)  # num_ref_idx_active_override (1 per list, PPS default)
-    sl.u(0, 1)  # ref_pic_list_modification_flag_l0
-    sl.u(0, 1)  # ref_pic_list_modification_flag_l1
-    if weights is not None:  # explicit weighted bipred PPS
-        _write_pred_weight_table(sl, weights)
-    if is_ref:  # reference B (pyramid): dec_ref_pic_marking present
-        sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
-    sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(deblock_idc)  # disable_deblocking_filter_idc
-    if deblock_idc != 1:  # 7.3.3: offsets present when idc != 1
-        sl.se(deblock_offs[0])  # slice_alpha_c0_offset_div2
-        sl.se(deblock_offs[1])  # slice_beta_offset_div2
-
-
-def _parse_inter_header(
-    r: _BitR, bipred_idc: int = 0, is_ref: bool = False
-) -> tuple[str, int, int, dict | None]:
-    """Parse a non-IDR slice header under the POC-type-0 SPS.
-    Returns (kind 'p'|'b', slice_qp, poc_lsb, weights-or-None,
-    direct_spatial_flag, idc, (a_div2, b_div2)); the reader is left
-    at the first macroblock element."""
-    weights = None
-    r.ue()  # first_mb
-    stype = r.ue() % 5
-    if stype == 0:
-        kind = "p"
-    elif stype == 1:
-        kind = "b"
-    else:
-        raise NotImplementedError(
-            f"slice_type family {stype} — only P and B slices decode"
-        )
-    r.ue()  # pps id
-    r.u(4)  # frame_num
-    poc = r.u(_POC_BITS)
-    spatial = True
-    if kind == "b":
-        spatial = bool(r.u(1))
-        if r.u(1):
-            raise NotImplementedError(
-                "num_ref_idx override — one active reference per "
-                "list is implemented for B slices"
-            )
-        if r.u(1):
-            raise NotImplementedError("ref_pic_list_modification (l0)")
-        if r.u(1):
-            raise NotImplementedError("ref_pic_list_modification (l1)")
-        if bipred_idc == 1:
-            weights = _parse_pred_weight_table(r)
-        if is_ref and r.u(1):  # dec_ref_pic_marking (reference B)
-            raise NotImplementedError(
-                "adaptive ref marking in a B slice")
-    else:
-        if r.u(1):
-            raise NotImplementedError("num_ref_idx override in P slice")
-        if r.u(1):
-            raise NotImplementedError("ref_pic_list_modification")
-        if r.u(1):
-            raise NotImplementedError("adaptive ref marking")
-    qp = 26 + r.se()
-    idc, offs = _read_deblock_fields(r)
-    return kind, qp, poc, weights, spatial, idc, offs
 
 
 # ---------------------------------------------------------------------------
@@ -674,11 +384,11 @@ def _direct_mb(mvs0, mvs1, mx, my, col, padded0, padded1, weights,
         elif ref0 >= 0:
             pp = _mc_mb(padded0, mx, my, [geom + (m0, 0)])
             if weights is not None:
-                pp = _wp_uni(pp, weights["l0"], weights)
+                pp = _wp_uni(pp, "l0", weights)
         else:
             pp = _mc_mb(padded1, mx, my, [geom + (m1, 0)])
             if weights is not None:
-                pp = _wp_uni(pp, weights["l1"], weights)
+                pp = _wp_uni(pp, "l1", weights)
         ys = np.s_[oy4 * 4 : oy4 * 4 + 8, ox4 * 4 : ox4 * 4 + 8]
         cs = np.s_[oy4 * 2 : oy4 * 2 + 4, ox4 * 2 : ox4 * 2 + 4]
         py[ys] = pp[0][ys]
@@ -726,7 +436,7 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
     mvs1 = _MvState(mbw, mbh)
 
     if wtab is not None:
-        weights = _resolve_weights(wtab)
+        weights = _resolve_pwt(wtab)
     elif implicit:
         weights = _implicit_weights(*tbtd)
     else:
@@ -734,10 +444,10 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
     if col is None:
         col = _intra_motion(mbw, mbh)
     sl = _BitW()
-    _b_slice_header(sl, qp, frame_num, poc_lsb, wtab,
-                    spatial=direct_mode == "spatial",
-                    deblock_idc=deblock_idc,
-                    deblock_offs=deblock_offs, is_ref=is_ref)
+    _slice_header(sl, qp, "b", idr=False, frame_num=frame_num,
+                  poc_lsb=poc_lsb, pwt=wtab,
+                  spatial=direct_mode == "spatial", ref=is_ref,
+                  deblock_idc=deblock_idc, deblock_offs=deblock_offs)
     skip_run = 0
 
     for my in range(mbh):
@@ -900,12 +610,12 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
                             pp = _mc_mb(padded0, mx, my,
                                         [geom + (mv0[si], 0)])
                             if weights is not None:
-                                pp = _wp_uni(pp, weights["l0"], weights)
+                                pp = _wp_uni(pp, "l0", weights)
                         elif use == "l1":
                             pp = _mc_mb(padded1, mx, my,
                                         [geom + (mv1[si], 0)])
                             if weights is not None:
-                                pp = _wp_uni(pp, weights["l1"], weights)
+                                pp = _wp_uni(pp, "l1", weights)
                         else:
                             p0_ = _mc_mb(padded0, mx, my,
                                          [geom + (mv0[si], 0)])
@@ -968,11 +678,11 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
                 if use == "l0":
                     pp = _mc_mb(padded0, mx, my, [geom + (m0, 0)])
                     if weights is not None:
-                        pp = _wp_uni(pp, weights["l0"], weights)
+                        pp = _wp_uni(pp, "l0", weights)
                 elif use == "l1":
                     pp = _mc_mb(padded1, mx, my, [geom + (m1, 0)])
                     if weights is not None:
-                        pp = _wp_uni(pp, weights["l1"], weights)
+                        pp = _wp_uni(pp, "l1", weights)
                 else:
                     p0_ = _mc_mb(padded0, mx, my, [geom + (m0, 0)])
                     p1_ = _mc_mb(padded1, mx, my, [geom + (m1, 0)])
@@ -1186,12 +896,12 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                             pp = _mc_mb(padded0, mx, my,
                                         [geom + (mv0[si], 0)])
                             if weights is not None:
-                                pp = _wp_uni(pp, weights["l0"], weights)
+                                pp = _wp_uni(pp, "l0", weights)
                         elif use == "l1":
                             pp = _mc_mb(padded1, mx, my,
                                         [geom + (mv1[si], 0)])
                             if weights is not None:
-                                pp = _wp_uni(pp, weights["l1"], weights)
+                                pp = _wp_uni(pp, "l1", weights)
                         else:
                             p0_ = _mc_mb(padded0, mx, my,
                                          [geom + (mv0[si], 0)])
@@ -1279,11 +989,11 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                 if use == "l0":
                     pp = _mc_mb(padded0, mx, my, [geom + (m0, 0)])
                     if weights is not None:
-                        pp = _wp_uni(pp, weights["l0"], weights)
+                        pp = _wp_uni(pp, "l0", weights)
                 elif use == "l1":
                     pp = _mc_mb(padded1, mx, my, [geom + (m1, 0)])
                     if weights is not None:
-                        pp = _wp_uni(pp, weights["l1"], weights)
+                        pp = _wp_uni(pp, "l1", weights)
                 else:
                     p0_ = _mc_mb(padded0, mx, my, [geom + (m0, 0)])
                     p1_ = _mc_mb(padded1, mx, my, [geom + (m1, 0)])
@@ -1325,6 +1035,32 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
                            direct_mode: str = "spatial",
                            deblock: bool = False,
                            deblock_offsets: tuple = (0, 0)):
+    """Encode a decode-order sequence with B frames under a POC-type-0
+    SPS. ``entries``:
+
+      ("idr", planes)                 — Intra_16x16 anchor, POC 0;
+      ("p", planes, mb_specs, poc)    — single-ref CAVLC P frame
+        (reference = most recent reference picture); mb_specs in
+        encode_h264_p_gop's single-ref language;
+      ("b", planes, mb_specs, poc)    — non-reference CAVLC B frame;
+        each mb_spec is ("skip",), ("direct",), ("i16",), ("i4"[,
+        mode]), ("ipcm",), (mode, [part, ...]) with mode in
+        {"16x16", "16x8", "8x16"} and part ("l0", mv) / ("l1", mv) /
+        ("bi", mv0, mv1), or ("8x8", [four sub specs]). list0 =
+        nearest PAST reference by POC, list1 = nearest FUTURE
+        reference by POC (both must exist);
+      ("bref", planes, mb_specs, poc) — a B frame that is itself a
+        reference picture (B pyramid).
+
+    ``weights`` is None, "implicit" (weighted_bipred_idc 2) or an
+    explicit table {"luma_denom", "chroma_denom", "l0": {...},
+    "l1": {...}} (weighted_bipred_idc 1). ``direct_mode`` is
+    "spatial" or "temporal"; ``deblock`` / ``deblock_offsets`` as in
+    encode_h264_p_gop. Every slice header, the IDR and P ones
+    included, carries pic_order_cnt_lsb and the deblocking control.
+
+    Returns (annex_b_bytes, [recon planes in decode order],
+    [poc per frame])."""
     implicit = weights == "implicit"
     if implicit:
         weights = None
@@ -1334,29 +1070,8 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
     def _filt(recon, cur_qp, info=None):
         if not deblock:
             return recon
-        from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-            deblock_frame,
-        )
-
         return deblock_frame(*recon, cur_qp, info,
                              alpha_off=aoff, beta_off=boff)
-    """Encode a decode-order sequence with B frames. ``entries``:
-
-      ("idr", planes)                 — Intra_16x16 anchor, POC 0;
-      ("p", planes, mb_specs, poc)    — single-ref CAVLC P frame
-        (reference = most recent reference picture); mb_specs in
-        encode_h264_p_gop's single-ref language;
-      ("b", planes, mb_specs, poc)    — non-reference CAVLC B frame;
-        each mb_spec is ("i16",) or (mode, [part, ...]) with mode in
-        {"16x16", "16x8", "8x16"} and part ("l0", mv) / ("l1", mv) /
-        ("bi", mv0, mv1). list0 = nearest PAST reference by POC,
-        list1 = nearest FUTURE reference by POC (both must exist).
-
-    Returns (annex_b_bytes, [recon planes in decode order],
-    [poc per frame])."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        encode_h264_i16x16,
-    )
 
     if not entries or entries[0][0] != "idr":
         raise ValueError("sequence must start with an IDR entry")
@@ -1365,16 +1080,16 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
     if h % 16 or w % 16:
         raise ValueError("B sequences require dimensions % 16 == 0")
     mbw, mbh = w // 16, h // 16
-    wtab = _norm_weights(weights) if weights is not None else None
-    if wtab is not None:
-        pps = _pps_rbsp_deblock_wp(1)
-    elif implicit:
-        pps = _pps_rbsp_deblock_wp(2)
-    else:
-        pps = _pps_rbsp_deblock()
+    wtab = None
+    if weights is not None:
+        wtab = _norm_pwt(weights, [weights.get("l0", {})],
+                         [weights.get("l1", {})])
+    bipred_idc = 1 if wtab is not None else (2 if implicit else 0)
     stream = (
-        _nal(3, 7, _sps_rbsp_poc0(mbw, mbh, w, h))
-        + _nal(3, 8, pps)
+        # max_num_ref_frames 3: the pyramid holds anchor + Bref + P
+        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h, max_refs=3, poc_type=0))
+        + _nal(3, 8, _pps_rbsp(bipred_idc=bipred_idc,
+                               deblock_control=True))
     )
     recons: list = []
     pocs: list = []
@@ -1386,17 +1101,13 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
             if ei != 0:
                 raise ValueError("IDR only as the first entry")
             planes = entry[1]
-            intra_stream, r0y, r0cb, r0cr = encode_h264_i16x16(
-                planes[0], planes[1], planes[2], qp=qp
-            )
-            idr_rbsp = next(
-                _ep_remove(n[1:])
-                for n in _split_nals(intra_stream)
-                if (n[0] & 0x1F) == 5
-            )
-            stream += _nal(3, 5, _idr_reheader_poc0(
-                idr_rbsp, idc=d_idc, offs=deblock_offsets))
-            recon = _filt((r0y, r0cb, r0cr), qp)  # all-intra info
+            sl = _BitW()
+            _slice_header(sl, qp, poc_lsb=0, deblock_idc=d_idc,
+                          deblock_offs=deblock_offsets)
+            recon = _encode_i16x16_slice(sl, planes[0], planes[1],
+                                         planes[2], qp)
+            stream += _nal(3, 5, sl.bytes_())
+            recon = _filt(recon, qp)  # all-intra info
             recons.append(recon)
             pocs.append(0)
             ref_dpb = [(0, recon, _intra_motion(mbw, mbh))]
@@ -1408,13 +1119,10 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
             rbsp, recon, motion = _encode_p_frame(
                 planes, [ref_dpb[0][1]], mb_specs, qp, fn, 1,
                 deblock_idc=d_idc, deblock_offs=deblock_offsets,
+                poc_lsb=poc,
             )
-            stream += _nal(2, 1, _p_reheader_poc0(rbsp, poc))
+            stream += _nal(2, 1, rbsp)
             if deblock:
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    make_block_info,
-                )
-
                 recon = _filt(recon, qp, make_block_info(
                     mbw, mbh, inter=motion["inter"],
                     nnz=motion["nnz"], mv=motion["mv"],
@@ -1445,10 +1153,6 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
             # with its single-list colocated view; plain B: idc 0
             stream += _nal(2 if kind == "bref" else 0, 1, rbsp)
             if deblock:
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    make_block_info_b,
-                )
-
                 recon = _filt(recon, qp, make_block_info_b(
                     mbw, mbh, inter=bmotion["inter"],
                     nnz=bmotion["nnz"], mv0=bmotion["mv0"],
@@ -1469,144 +1173,107 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
 def decode_h264_b_stream(payload: bytes):
     """Decode a POC-type-0 IDR + P + B stream. Returns
     (frames in DECODE order, poc per frame) — sort by POC for display
-    order. P slices are delegated to h264_inter._decode_p_frame; B
+    order. The IDR decodes through the intra decoder's CAVLC
+    slice-data step, P slices through h264_inter._decode_p_frame; B
     slices decode here against the POC-ordered reference lists."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        decode_h264_frame,
-    )
-
-    sps = None
-    bipred_idc = 0
     frames: list = []
     pocs: list = []
     ref_dpb: list = []  # (poc, planes), newest decoded first
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-            if sps.get("poc_type") != 0:
-                raise ValueError("B streams require pic_order_cnt_type 0")
-        elif ntype == 8:
-            r = _BitR(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
-                raise NotImplementedError("CABAC B slices — gated")
-            r.u(1)  # bottom_field_pic_order_in_frame_present
-            r.ue()  # num_slice_groups_minus1
-            r.ue()  # num_ref_idx_l0_default_active_minus1
-            r.ue()  # num_ref_idx_l1_default_active_minus1
-            if r.u(1):
-                raise NotImplementedError(
-                    "weighted_pred_flag (weighted P slices) — gated"
-                )
-            bipred_idc = r.u(2)
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR before SPS")
-            idr_rbsp, d_idc, d_offs = _idr_strip_poc0(rbsp)
-            sub = (
-                _nal(3, 7, _sps_rbsp(sps["mbw"], sps["mbh"],
-                                     sps["mbw"] * 16, sps["mbh"] * 16))
-                + _nal(3, 8, _pps_rbsp())
-                + _nal(3, 5, idr_rbsp)
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if sps["poc_type"] != 0:
+            raise ValueError("B streams require pic_order_cnt_type 0")
+        if pps["cabac"]:
+            raise NotImplementedError("CABAC B slices — gated")
+        if pps["weighted_pred"]:
+            raise NotImplementedError(
+                "weighted_pred_flag (weighted P slices) — gated"
             )
-            frame = decode_h264_frame(sub)
-            if d_idc != 1:
-                # idc 2 == idc 0 for single-slice frames (no
-                # slice-boundary internal edges to exclude)
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                )
-
-                frame = deblock_frame(
-                    *frame, _idr_slice_qp(idr_rbsp),
-                    alpha_off=2 * d_offs[0], beta_off=2 * d_offs[1],
-                )
+        idr = nal_hdr & 0x1F == 5
+        if not idr and not ref_dpb:
+            raise ValueError("coded slice before references exist")
+        r = _BitR(rbsp)
+        hdr = _parse_slice_header(r, sps, pps, nal_hdr)
+        qp, poc, kind = hdr["qp"], hdr["poc"], hdr["kind"]
+        # idc 2 == idc 0 for single-slice frames (no slice-boundary
+        # internal edges to exclude)
+        filt = dict(alpha_off=2 * hdr["offs"][0],
+                    beta_off=2 * hdr["offs"][1])
+        if idr:
+            if poc != 0:
+                raise ValueError("IDR pic_order_cnt_lsb must be 0")
+            frame = _decode_intra_slice(r, sps, qp)
+            if hdr["idc"] != 1:
+                frame = deblock_frame(*frame, qp, **filt)
             frames.append(frame)
             pocs.append(0)
-            ref_dpb = [(0, frame, _intra_motion(sps["mbw"],
-                                                sps["mbh"]))]
-        elif ntype == 1:
-            if sps is None or not ref_dpb:
-                raise ValueError("coded slice before references exist")
-            r = _BitR(rbsp)
-            is_ref = bool((nal[0] >> 5) & 3)
-            kind, qp, poc, wts, spatial, d_idc, d_offs = (
-                _parse_inter_header(r, bipred_idc, is_ref=is_ref)
+            ref_dpb = [(0, frame, _intra_motion(sps["mbw"], sps["mbh"]))]
+            continue
+        if kind == "i":
+            raise NotImplementedError(
+                "I slice in a non-IDR NAL — only P and B slices decode"
             )
-            motion = None
-            if kind == "p":
-                frame, motion = _decode_p_frame(
-                    r, sps, qp, [ref_dpb[0][1]], 1,
-                    return_motion=True,
+        if hdr["nra"] != 1 or hdr["nra_l1"] > 1:
+            raise NotImplementedError(
+                "num_ref_idx override — one active reference per list "
+                "is implemented in B streams"
+            )
+        is_ref = bool(nal_hdr & 0x60)
+        motion = None
+        if kind == "p":
+            frame, motion = _decode_p_frame(
+                r, sps, qp, [ref_dpb[0][1]], 1, return_motion=True,
+            )
+            if hdr["idc"] != 1:
+                frame = deblock_frame(
+                    *frame, qp, make_block_info(
+                        sps["mbw"], sps["mbh"], inter=motion["inter"],
+                        nnz=motion["nnz"], mv=motion["mv"],
+                        ref=motion["ref"],
+                    ),
+                    **filt,
                 )
-                if d_idc != 1:
-                    from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                        deblock_frame,
-                        make_block_info,
-                    )
-
-                    frame = deblock_frame(
-                        *frame, qp, make_block_info(
-                            sps["mbw"], sps["mbh"],
-                            inter=motion["inter"],
-                            nnz=motion["nnz"], mv=motion["mv"],
-                            ref=motion["ref"],
-                        ),
-                        alpha_off=2 * d_offs[0],
-                        beta_off=2 * d_offs[1],
-                    )
-            else:
-                past = [e for e in ref_dpb if e[0] < poc]
-                future = [e for e in ref_dpb if e[0] > poc]
-                if not past or not future:
-                    raise ValueError(
-                        "B slice without a past and a future reference"
-                    )
-                l0e = max(past, key=lambda e: e[0])
-                l1e = min(future, key=lambda e: e[0])
-                if l1e[2] is None:
-                    # A reference B picture carries no exported motion
-                    # field; silently treating it as all-intra would
-                    # corrupt temporal/spatial direct derivation.
-                    raise ValueError(
-                        "colocated picture (poc %d) is a reference B "
-                        "frame without an exported motion field; "
-                        "reference-B colocation is a declared gate"
-                        % l1e[0])
-                frame, bmotion = _decode_b_frame(
-                    r, sps, qp, l0e[1], l1e[1], wts,
-                    col=l1e[2], spatial=spatial,
-                    tbtd=(poc - l0e[0], l1e[0] - l0e[0]),
-                    implicit=bipred_idc == 2,
+        else:
+            past = [e for e in ref_dpb if e[0] < poc]
+            future = [e for e in ref_dpb if e[0] > poc]
+            if not past or not future:
+                raise ValueError(
+                    "B slice without a past and a future reference"
                 )
-                if is_ref:  # reference B: its motion enters the DPB
-                    motion = _col_view(bmotion)
-                if d_idc != 1:
-                    from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                        deblock_frame,
-                        make_block_info_b,
-                    )
-
-                    frame = deblock_frame(
-                        *frame, qp, make_block_info_b(
-                            sps["mbw"], sps["mbh"],
-                            inter=bmotion["inter"],
-                            nnz=bmotion["nnz"],
-                            mv0=bmotion["mv0"], mv1=bmotion["mv1"],
-                            pf0=bmotion["pf0"], pf1=bmotion["pf1"],
-                            pic0=l0e[0], pic1=l1e[0],
-                        ),
-                        alpha_off=2 * d_offs[0],
-                        beta_off=2 * d_offs[1],
-                    )
-            frames.append(frame)
-            pocs.append(poc)
-            if (nal[0] >> 5) & 3:  # reference picture
-                ref_dpb.insert(0, (poc, frame, motion))
-                del ref_dpb[max(1, sps.get("max_refs") or 1):]
+            l0e = max(past, key=lambda e: e[0])
+            l1e = min(future, key=lambda e: e[0])
+            if l1e[2] is None:
+                # A reference B picture carries no exported motion
+                # field; silently treating it as all-intra would
+                # corrupt temporal/spatial direct derivation.
+                raise ValueError(
+                    "colocated picture (poc %d) is a reference B "
+                    "frame without an exported motion field; "
+                    "reference-B colocation is a declared gate"
+                    % l1e[0])
+            frame, bmotion = _decode_b_frame(
+                r, sps, qp, l0e[1], l1e[1], hdr["pwt"],
+                col=l1e[2], spatial=hdr["spatial"],
+                tbtd=(poc - l0e[0], l1e[0] - l0e[0]),
+                implicit=pps["bipred_idc"] == 2,
+            )
+            if is_ref:  # reference B: its motion enters the DPB
+                motion = _col_view(bmotion)
+            if hdr["idc"] != 1:
+                frame = deblock_frame(
+                    *frame, qp, make_block_info_b(
+                        sps["mbw"], sps["mbh"], inter=bmotion["inter"],
+                        nnz=bmotion["nnz"],
+                        mv0=bmotion["mv0"], mv1=bmotion["mv1"],
+                        pf0=bmotion["pf0"], pf1=bmotion["pf1"],
+                        pic0=l0e[0], pic1=l1e[0],
+                    ),
+                    **filt,
+                )
+        frames.append(frame)
+        pocs.append(poc)
+        if is_ref:  # reference picture
+            ref_dpb.insert(0, (poc, frame, motion))
+            del ref_dpb[max(1, sps.get("max_refs") or 1):]
     if not frames:
         raise ValueError("no coded frames found")
     return frames, pocs

@@ -54,10 +54,11 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _BitR,
     _BitW,
     _check_planes,
-    _ep_remove,
     _nal,
-    _parse_sps,
-    _split_nals,
+    _parse_slice_header,
+    _pps_rbsp,
+    _slice_header,
+    _slice_nals,
     _sps_rbsp,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
@@ -729,46 +730,6 @@ def _dec_mb_qp_delta(dec: _Dec, ctxs: _Ctx, st: _MbState) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _pps_rbsp_cabac() -> bytes:
-    """CABAC-mode PPS. Unlike the CAVLC twin this one sets
-    deblocking_filter_control_present_flag so the slice can disable
-    the loop filter — making the stream's nominal conformant output
-    equal this codec family's (unfiltered) reconstruction."""
-    pps = _BitW()
-    pps.ue(0)  # pic_parameter_set_id
-    pps.ue(0)  # seq_parameter_set_id
-    pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
-    pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
-    pps.ue(0)  # num_slice_groups_minus1
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
-    pps.se(0)  # pic_init_qp_minus26
-    pps.se(0)  # pic_init_qs_minus26
-    pps.se(0)  # chroma_qp_index_offset
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)  # constrained_intra_pred_flag
-    pps.u(0, 1)  # redundant_pic_cnt_present_flag
-    pps.trailing()
-    return pps.bytes_()
-
-
-def _slice_header_cabac(sl: _BitW, qp: int) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(7)  # slice_type: I (all slices)
-    sl.ue(0)  # pic_parameter_set_id
-    sl.u(0, 4)  # frame_num
-    sl.ue(0)  # idr_pic_id
-    sl.u(0, 1)  # no_output_of_prior_pics_flag
-    sl.u(0, 1)  # long_term_reference_flag
-    sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(1)  # disable_deblocking_filter_idc: off
-    # cabac_alignment_one_bit
-    while sl.n % 8:
-        sl.u(1, 1)
-
-
 def _enc_mb_type_i(enc: _Enc, ctxs: _Ctx, st: _MbState, mx: int, my: int,
                    i4x4: bool, cbpl15: bool, cbpc: int, pm: int) -> None:
     inc = st.mb_type_inc(mx, my)
@@ -823,10 +784,27 @@ def encode_h264_cabac_intra(
     (annex_b_bytes, recon_y, recon_cb, recon_cr); the recon planes
     are the decoder-mirrored bit-exact contract, same as the CAVLC
     encoders."""
-    if not 0 <= qp <= 51:
-        raise ValueError("QP must be in 0..51")
     if i4x4_mode not in _MODE_NEEDS:
         raise ValueError("luma 4x4 mode must be 0..8")
+    sl = _BitW()
+    _slice_header(sl, qp, cabac=True, deblock_idc=1)
+    ry, rcb, rcr = _encode_idr_cabac(sl, y, cb, cr, qp, i4x4_mode)
+    h, w = ry.shape
+    stream = (
+        _nal(3, 7, _sps_rbsp(-(-w // 16), -(-h // 16), w, h))
+        + _nal(3, 8, _pps_rbsp(cabac=True, deblock_control=True))
+        + _nal(3, 5, sl.bytes_())
+    )
+    return stream, ry, rcb, rcr
+
+
+def _encode_idr_cabac(sl: _BitW, y, cb, cr, qp: int, i4x4_mode: int = 2):
+    """Write the CABAC slice_data() of the mixed Intra_16x16 / I_4x4
+    IDR picture after the slice header already in ``sl`` and close
+    the RBSP. Returns the decoder-mirrored recon planes, cropped to
+    the input size."""
+    if not 0 <= qp <= 51:
+        raise ValueError("QP must be in 0..51")
     y, cb, cr = _check_planes(y, cb, cr)
     h, w = y.shape
     ch, cw = h // 2, w // 2
@@ -843,8 +821,6 @@ def encode_h264_cabac_intra(
     before = _decoded_before_factory(mbw)
     st = _MbState(mbw, mbh)
 
-    sl = _BitW()
-    _slice_header_cabac(sl, qp)
     ctxs = _Ctx(qp)
     enc = _Enc(sl)
 
@@ -1036,13 +1012,7 @@ def encode_h264_cabac_intra(
             last_mb = my == mbh - 1 and mx == mbw - 1
             enc.terminate(1 if last_mb else 0)
     sl.align_zero()
-    stream = (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp_cabac())
-        + _nal(3, 5, sl.bytes_())
-    )
     return (
-        stream,
         ry[:h, :w].astype(np.uint8),
         rcb[:ch, :cw].astype(np.uint8),
         rcr[:ch, :cw].astype(np.uint8),
@@ -1054,54 +1024,21 @@ def encode_h264_cabac_intra(
 # ---------------------------------------------------------------------------
 
 
-def _parse_slice_header_cabac(r: _BitR) -> int:
-    """IDR I-slice header for the CABAC PPS above; returns SliceQPy.
-    Mirrors h264.py's _parse_slice_header plus the deblocking idc."""
-    r.ue()  # first_mb_in_slice
-    stype = r.ue()
-    if stype % 5 != 2:
-        raise NotImplementedError(
-            f"slice_type {stype} — this entry point decodes I "
-            "slices; CABAC P slices live in h264_cabac_inter.py "
-            "(machinery complete; the 9.3.1.1 P-column init data is "
-            "the remaining gate)"
-        )
-    r.ue()  # pps id
-    r.u(4)  # frame_num
-    r.ue()  # idr_pic_id
-    r.u(1)
-    r.u(1)
-    qp = 26 + r.se()
-    r.ue()  # disable_deblocking_filter_idc
-    r.align()
-    return qp
-
-
 def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode an Annex B CABAC intra stream (Intra_16x16 + I_4x4,
     4:2:0, frame-coded) to (y, cb, cr) planes."""
-    sps = None
     planes = None
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-        elif ntype == 8:
-            r = _BitR(rbsp)
-            r.ue()
-            r.ue()
-            if not r.u(1):
-                raise ValueError(
-                    "CAVLC PPS given to the CABAC decoder — use "
-                    "h264_intra.decode_h264_frame, which dispatches"
-                )
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR slice before SPS")
-            r = _BitR(rbsp)
-            qp = _parse_slice_header_cabac(r)
-            planes = _decode_idr_cabac(rbsp, r.pos, sps, qp)
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if nal_hdr & 0x1F != 5:
+            continue
+        if not pps["cabac"]:
+            raise ValueError(
+                "CAVLC PPS given to the CABAC decoder — use "
+                "h264_intra.decode_h264_frame, which dispatches"
+            )
+        r = _BitR(rbsp)
+        qp = _parse_slice_header(r, sps, pps, nal_hdr)["qp"]
+        planes = _decode_idr_cabac(rbsp, r.pos, sps, qp)
     if planes is None:
         raise ValueError("no IDR slice found")
     return planes

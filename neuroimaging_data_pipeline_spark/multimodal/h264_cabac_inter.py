@@ -50,9 +50,11 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _BitR,
     _BitW,
     _nal,
-    _parse_sps,
-    _split_nals,
-    _ep_remove,
+    _parse_slice_header,
+    _pps_rbsp,
+    _slice_header,
+    _slice_nals,
+    _sps_rbsp,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
     _Ctx,
@@ -369,51 +371,6 @@ def _dec_cbp(dec: _Dec, ctxs: _Ctx, st: _MbStateP, mx: int,
 # ---------------------------------------------------------------------------
 
 
-def _p_slice_header_cabac(sl: _BitW, qp: int, frame_num: int,
-                          nra: int) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(5)  # slice_type P (all slices)
-    sl.ue(0)  # pps id
-    sl.u(frame_num % 16, 4)
-    if nra != 1:
-        sl.u(1, 1)
-        sl.ue(nra - 1)
-    else:
-        sl.u(0, 1)
-    sl.u(0, 1)  # ref_pic_list_modification_flag_l0
-    sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
-    sl.ue(0)  # cabac_init_idc
-    sl.se(qp - 26)
-    sl.ue(1)  # disable_deblocking_filter_idc
-    while sl.n % 8:
-        sl.u(1, 1)  # cabac_alignment_one_bit
-
-
-def _parse_p_slice_header_cabac(r: _BitR) -> tuple[int, int]:
-    r.ue()
-    stype = r.ue()
-    if stype % 5 != 0:
-        raise NotImplementedError("only P slices in the CABAC-P path")
-    r.ue()
-    r.u(4)
-    nra = 1
-    if r.u(1):
-        nra = r.ue() + 1
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification")
-    if r.u(1):
-        raise NotImplementedError("adaptive ref marking")
-    idc = r.ue()  # cabac_init_idc
-    if idc != 0:
-        raise NotImplementedError(
-            f"cabac_init_idc {idc}: only column 0 is wired"
-        )
-    qp = 26 + r.se()
-    r.ue()  # disable_deblocking_filter_idc
-    r.align()
-    return qp, nra
-
-
 def encode_h264_cabac_p_gop(
     frames: list,
     specs_per_p: list,
@@ -423,12 +380,12 @@ def encode_h264_cabac_p_gop(
 ) -> tuple[bytes, list]:
     """CABAC twin of h264_inter.encode_h264_p_gop for the inter
     macroblock classes (skip / 16x16 / 16x8 / 8x16 / P_8x8 with
-    per-8x8 ref_idx): a CABAC IDR anchor (the proven I-slice
-    encoder) followed by CABAC P slices. ``init_table`` drives the
+    per-8x8 ref_idx): a CABAC IDR anchor (the I-slice encoder's
+    slice data) followed by CABAC P slices. ``init_table`` drives the
     P context initialization — REQUIRED until the spec P/B columns
     are transcribed (see module docstring)."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
-        encode_h264_cabac_intra,
+        _encode_idr_cabac,
     )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         _PARTS,
@@ -438,7 +395,6 @@ def encode_h264_cabac_p_gop(
         _pad_refs,
         _recon_inter_mb,
         _residual_from_target,
-        _sps_rbsp_ref1,
         _MvState,
     )
 
@@ -451,19 +407,18 @@ def encode_h264_cabac_p_gop(
         raise ValueError("anchor + one spec list per P frame")
     y0, cb0, cr0 = frames[0]
     h, w = y0.shape
+    if h % 16 or w % 16:
+        raise ValueError("inter sequences require dimensions % 16 == 0")
     mbw, mbh = w // 16, h // 16
     qpc = _chroma_qp(qp)
 
-    intra_stream, r0y, r0cb, r0cr = encode_h264_cabac_intra(
-        y0, cb0, cr0, qp=qp
-    )
-    idr_nal = next(
-        n for n in _split_nals(intra_stream) if (n[0] & 0x1F) == 5
-    )
+    sl = _BitW()
+    _slice_header(sl, qp, cabac=True, deblock_idc=1)
+    r0y, r0cb, r0cr = _encode_idr_cabac(sl, y0, cb0, cr0, qp)
     stream = (
-        _nal(3, 7, _sps_rbsp_ref1(mbw, mbh, w, h, num_refs))
-        + _nal(3, 8, _pps_cabac_inter())
-        + b"\x00\x00\x00\x01" + idr_nal
+        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h, max_refs=num_refs))
+        + _nal(3, 8, _pps_rbsp(cabac=True, deblock_control=True))
+        + _nal(3, 5, sl.bytes_())
     )
     recons = [(r0y, r0cb, r0cr)]
     refs = [(r0y, r0cb, r0cr)]
@@ -479,7 +434,8 @@ def encode_h264_cabac_p_gop(
         mvs = _MvState(mbw, mbh)
         st = _MbStateP(mbw, mbh)
         sl = _BitW()
-        _p_slice_header_cabac(sl, qp, fi, nra)
+        _slice_header(sl, qp, "p", idr=False, frame_num=fi, nra=nra,
+                      cabac=True, deblock_idc=1)
         ctxs = make_p_ctx(qp, init_table)
         enc = _Enc(sl)
         for my in range(mbh):
@@ -866,40 +822,16 @@ def _code_inter_residuals_enc(enc, ctxs, st, mx, my, cbp_luma, cbpc,
                           mx * 2 : mx * 2 + 2] = 0
 
 
-def _pps_cabac_inter() -> bytes:
-    """PPS: entropy_coding_mode 1, deblocking_filter_control_present
-    set (slice headers carry disable_deblocking_filter_idc=1, so the
-    field must be legal per 7.3.3; ADVICE r10)."""
-    pps = _BitW()
-    pps.ue(0)  # pps id
-    pps.ue(0)  # sps id
-    pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
-    pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
-    pps.ue(0)  # num_slice_groups_minus1
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
-    pps.se(0)  # pic_init_qp_minus26
-    pps.se(0)  # pic_init_qs_minus26
-    pps.se(0)  # chroma_qp_index_offset
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)  # constrained_intra_pred_flag
-    pps.u(0, 1)  # redundant_pic_cnt_present_flag
-    pps.trailing()
-    return pps.bytes_()
-
-
 def decode_h264_cabac_p(
     payload: bytes, init_table: dict | None = None
 ) -> list:
     """Decode a CABAC IDR + P stream produced by
-    encode_h264_cabac_p_gop. The IDR delegates to the proven CABAC
-    intra decoder; P slices decode here with ``init_table`` (the
-    9.3.1.1 P columns remain the transcription gate)."""
+    encode_h264_cabac_p_gop. The IDR decodes through the CABAC intra
+    decoder's slice-data step; P slices decode here with
+    ``init_table`` (the 9.3.1.1 P columns remain the transcription
+    gate)."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
-        _pps_rbsp_cabac,
-        decode_h264_cabac,
+        _decode_idr_cabac,
     )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         _PARTS,
@@ -915,28 +847,37 @@ def decode_h264_cabac_p(
             "CABAC P slices need the 9.3.1.1 P-column init data "
             "(not transcribed) or an explicit init_table"
         )
-    sps = None
-    sps_rbsp = None
     frames: list = []
     refs: list = []
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-            sps_rbsp = rbsp
-        elif ntype == 5:
-            sub = (
-                _nal(3, 7, sps_rbsp)
-                + _nal(3, 8, _pps_rbsp_cabac())
-                + b"\x00\x00\x00\x01" + nal
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if not pps["cabac"]:
+            raise ValueError(
+                "CAVLC PPS given to the CABAC decoder — use "
+                "h264_inter.decode_h264_sequence"
             )
-            frame = decode_h264_cabac(sub)
-            frames.append(frame)
-            refs = [frame]
-        elif ntype == 1:
-            r = _BitR(rbsp)
-            qp, nra = _parse_p_slice_header_cabac(r)
+        idr = nal_hdr & 0x1F == 5
+        if not idr and not refs:
+            raise ValueError("P slice before any reference frame")
+        r = _BitR(rbsp)
+        hdr = _parse_slice_header(r, sps, pps, nal_hdr)
+        qp, nra = hdr["qp"], hdr["nra"]
+        if idr:
+            frames.append(_decode_idr_cabac(rbsp, r.pos, sps, qp))
+            refs = [frames[-1]]
+        else:
+            if hdr["kind"] != "p":
+                raise NotImplementedError(
+                    "only P slices in the CABAC-P path")
+            if hdr["cabac_init_idc"] != 0:
+                raise NotImplementedError(
+                    f"cabac_init_idc {hdr['cabac_init_idc']}: only "
+                    "column 0 is wired"
+                )
+            if nra > len(refs):
+                raise ValueError(
+                    f"{nra} active references but only {len(refs)} "
+                    "decoded"
+                )
             qpc = _chroma_qp(qp)
             mbw, mbh = sps["mbw"], sps["mbh"]
             h, w = mbh * 16, mbw * 16

@@ -31,12 +31,13 @@ missing #2). CAVLC P slices on top of the proven intra stack:
   ref_idx_l0 coded te(v), sliding-window DPB eviction, and the
   refIdx-aware predictor rules (the exactly-one-matching-neighbor
   shortcut and the refIdx-conditioned 16x8/8x16 directional rules);
-- sequence framing: SPS with max_num_ref_frames in 1..15, a PPS
-  with deblocking control so every slice header disables the loop
-  filter (the stream's nominal conformant output IS this codec
-  family's reconstruction), an IDR Intra_16x16 anchor re-headered
-  from the proven CAVLC encoder, and non-IDR (NAL type 1) P slices
-  referencing the decoded-frame DPB.
+- sequence framing through h264.py's shared header layer: SPS with
+  max_num_ref_frames in 1..15, a PPS with deblocking control so
+  every slice header can disable the loop filter (the stream's
+  nominal conformant output IS this codec family's
+  reconstruction), an IDR Intra_16x16 anchor (the intra module's
+  CAVLC slice data under this stream's own IDR header), and non-IDR
+  (NAL type 1) P slices referencing the decoded-frame DPB.
 
 I_4x4 macroblocks inside P slices landed in a later pass (shared
 _encode_i4x4_mb/_decode_i4x4_mb helpers, neighbor modes from
@@ -91,10 +92,18 @@ from pyspark.sql import DataFrame
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _BitR,
     _BitW,
-    _ep_remove,
     _nal,
-    _parse_sps,
-    _split_nals,
+    _norm_pwt,
+    _parse_slice_header,
+    _pps_rbsp,
+    _resolve_pwt,
+    _slice_header,
+    _slice_nals,
+    _sps_rbsp,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
+    deblock_frame,
+    make_block_info,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _CBP_INTRA,
@@ -109,9 +118,11 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _ZIGA,
     _ZIGA1,
     _chroma_qp,
+    _decode_intra_slice,
     _decoded_before_factory,
     _dequant_ac,
     _dequant_dc2,
+    _encode_i16x16_slice,
     _fwd4x4,
     _inv4x4,
     _nc_for,
@@ -458,258 +469,6 @@ _SUB_TYPE = {"8x8": 0, "8x4": 1, "4x8": 2, "4x4": 3}
 _SUB_TYPE_INV = {v: k for k, v in _SUB_TYPE.items()}
 
 
-# ---------------------------------------------------------------------------
-# Sequence framing
-# ---------------------------------------------------------------------------
-
-
-def _sps_rbsp_ref1(
-    mbw: int, mbh: int, w: int, h: int, num_refs: int = 1
-) -> bytes:
-    """SPS for IDR + P sequences: identical to the shared intra SPS
-    except max_num_ref_frames (1..15 decoded references)."""
-    if w % 16 or h % 16:
-        raise ValueError("inter sequences require dimensions % 16 == 0")
-    sps = _BitW()
-    sps.u(66, 8)  # profile_idc: baseline
-    sps.u(0xE0, 8)
-    sps.u(20, 8)
-    sps.ue(0)  # seq_parameter_set_id
-    sps.ue(0)  # log2_max_frame_num_minus4 -> 4-bit frame_num
-    sps.ue(2)  # pic_order_cnt_type
-    sps.ue(num_refs)  # max_num_ref_frames
-    sps.u(0, 1)
-    sps.ue(mbw - 1)
-    sps.ue(mbh - 1)
-    sps.u(1, 1)  # frame_mbs_only_flag
-    sps.u(1, 1)  # direct_8x8_inference_flag
-    sps.u(0, 1)  # no cropping (dims % 16 enforced)
-    sps.u(0, 1)  # no VUI
-    sps.trailing()
-    return sps.bytes_()
-
-
-def _pps_rbsp_deblock(weighted_pred: bool = False) -> bytes:
-    """CAVLC PPS with deblocking_filter_control_present_flag set so
-    slice headers can disable the loop filter (stream output ==
-    unfiltered reconstruction, same choice as the CABAC module).
-    ``weighted_pred`` sets weighted_pred_flag: P slice headers then
-    carry a list-0 pred_weight_table."""
-    pps = _BitW()
-    pps.ue(0)
-    pps.ue(0)
-    pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
-    pps.u(0, 1)
-    pps.ue(0)
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1 = 0 (one ref)
-    pps.ue(0)
-    pps.u(1 if weighted_pred else 0, 1)  # weighted_pred_flag
-    pps.u(0, 2)
-    pps.se(0)
-    pps.se(0)
-    pps.se(0)
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)
-    pps.u(0, 1)
-    pps.trailing()
-    return pps.bytes_()
-
-
-def _copy_bits(r: _BitR, w: _BitW, rbsp: bytes) -> None:
-    """Copy the remaining payload bits of an RBSP (everything after
-    r.pos up to but excluding the rbsp_stop_one_bit), then close with
-    a fresh trailing pattern."""
-    total = len(rbsp) * 8
-    last_one = None
-    for i in range(total - 1, -1, -1):
-        if (rbsp[i >> 3] >> (7 - (i & 7))) & 1:
-            last_one = i
-            break
-    if last_one is None:
-        raise ValueError("RBSP with no stop bit")
-    # bulk copy: move up to 32 bits per call instead of one
-    while r.pos < last_one:
-        n = min(32, last_one - r.pos)
-        w.u(r.u(n), n)
-    w.trailing()
-
-
-def _idr_slice_qp(rbsp: bytes) -> int:
-    """Slice QP of a (control-PPS-stripped) IDR slice: 26 +
-    pic_init_qp_minus26 (0 in this family) + slice_qp_delta."""
-    r = _BitR(rbsp)
-    r.ue(), r.ue(), r.ue()
-    r.u(4)
-    r.ue()
-    r.u(1), r.u(1)
-    return 26 + r.se()
-
-
-def _idr_slice_add_idc(
-    rbsp: bytes, qp: int, idc: int = 1, offs: tuple = (0, 0)
-) -> bytes:
-    """Re-header the proven intra encoder's IDR slice for the
-    deblocking-control PPS: same fields + disable_deblocking idc
-    (1 = filter off; 0 = in-loop deblocking enabled, h264_deblock;
-    2 = enabled, slice-boundary edges excluded — identical to 0 for
-    the single-slice frames this codec writes). Per 7.3.3, when idc
-    != 1 the slice_alpha_c0_offset_div2 / slice_beta_offset_div2
-    fields follow (``offs``, div2 values)."""
-    r = _BitR(rbsp)
-    first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    w = _BitW()
-    w.ue(first_mb)
-    w.ue(stype)
-    w.ue(ppsid)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    w.ue(idc)  # disable_deblocking_filter_idc
-    if idc != 1:
-        w.se(offs[0])  # slice_alpha_c0_offset_div2
-        w.se(offs[1])  # slice_beta_offset_div2
-    _copy_bits(r, w, rbsp)
-    return w.bytes_()
-
-
-def _read_deblock_fields(r: "_BitR") -> tuple[int, tuple]:
-    """Parse disable_deblocking_filter_idc and, when != 1, the two
-    slice filter offsets (7.3.3). Returns (idc, (a_div2, b_div2))."""
-    idc = r.ue()
-    if idc > 2:
-        raise ValueError(
-            f"disable_deblocking_filter_idc {idc} out of range")
-    offs = (0, 0)
-    if idc != 1:
-        a = r.se()
-        b = r.se()
-        if not (-6 <= a <= 6 and -6 <= b <= 6):
-            raise ValueError(
-                f"slice filter offsets ({a}, {b}) out of range")
-        offs = (a, b)
-    return idc, offs
-
-
-def _idr_slice_strip_idc(rbsp: bytes) -> tuple[bytes, int, tuple]:
-    """Inverse of _idr_slice_add_idc: drop the idc (+ offsets) so
-    the slice can be delegated to h264_intra.decode_h264_frame
-    (whose PPS has no deblocking control field). Returns
-    (rbsp, idc, (a_div2, b_div2))."""
-    r = _BitR(rbsp)
-    fields = (r.ue(), r.ue(), r.ue())
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    idc, offs = _read_deblock_fields(r)
-    w = _BitW()
-    for v in fields:
-        w.ue(v)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    _copy_bits(r, w, rbsp)
-    return w.bytes_(), idc, offs
-
-
-def _norm_p_weights(weights: dict, num_refs: int) -> dict:
-    """Normalize user P weights: luma/chroma log2 denominators plus
-    one (wy, oy, wc, oc) entry per reference index; None weight =
-    flag 0 = default (1 << denom, offset 0)."""
-    out = {
-        "luma_denom": int(weights.get("luma_denom", 0)),
-        "chroma_denom": int(weights.get("chroma_denom", 0)),
-        "refs": [],
-    }
-    user = weights.get("refs", [])
-    for ri in range(num_refs):
-        e = {"wy": None, "oy": 0, "wc": None, "oc": 0,
-             "wcr": None, "ocr": None}
-        if ri < len(user):
-            e.update(user[ri])
-        out["refs"].append(e)
-    return out
-
-
-def _resolve_p_weights(w: dict) -> dict:
-    out = {"luma_denom": w["luma_denom"],
-           "chroma_denom": w["chroma_denom"], "refs": []}
-    for e in w["refs"]:
-        e = dict(e)
-        if e["wy"] is None:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if e["wc"] is None and e.get("wcr") is None:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-        elif e["wc"] is None:
-            # wcr-only entry: the writer emits wcb = wcr into the
-            # bitstream (chroma_weight_flag covers both planes), so the
-            # encoder-side resolver must predict Cb with wcr too.
-            e["wc"] = e["wcr"]
-        if e.get("wcr") is None:
-            e["wcr"] = e["wc"]
-        if e.get("ocr") is None:
-            e["ocr"] = e["oc"]
-        out["refs"].append(e)
-    return out
-
-
-def _write_pwt_p(sl: _BitW, w: dict, nra: int) -> None:
-    """7.3.3.2 pred_weight_table, list 0 only (P slices)."""
-    sl.ue(w["luma_denom"])
-    sl.ue(w["chroma_denom"])
-    for ri in range(nra):
-        e = w["refs"][ri]
-        if e["wy"] is not None:
-            sl.u(1, 1)
-            sl.se(e["wy"])
-            sl.se(e["oy"])
-        else:
-            sl.u(0, 1)
-        if e["wc"] is not None or e.get("wcr") is not None:
-            sl.u(1, 1)
-            wcb = e["wc"] if e["wc"] is not None else e["wcr"]
-            wcr = e.get("wcr") if e.get("wcr") is not None else wcb
-            ocr = e.get("ocr") if e.get("ocr") is not None else e["oc"]
-            sl.se(wcb)
-            sl.se(e["oc"])
-            sl.se(wcr)
-            sl.se(ocr)
-        else:
-            sl.u(0, 1)
-
-
-def _parse_pwt_p(r: _BitR, nra: int) -> dict:
-    w = {"luma_denom": r.ue(), "chroma_denom": r.ue(), "refs": []}
-    for _ in range(nra):
-        e = {}
-        if r.u(1):
-            e["wy"] = r.se()
-            e["oy"] = r.se()
-        else:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if r.u(1):
-            e["wc"], e["oc"] = r.se(), r.se()
-            e["wcr"], e["ocr"] = r.se(), r.se()
-        else:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-            e["wcr"] = e["wc"]
-            e["ocr"] = 0
-        w["refs"].append(e)
-    return w
-
-
 def _write_te_ref(sl: _BitW, v: int, nra: int) -> None:
     """ref_idx_l0 as te(v) (9.1): range 1 -> one inverted bit,
     range > 1 -> ue(v), range 0 -> absent."""
@@ -725,63 +484,6 @@ def _read_te_ref(r: _BitR, nra: int) -> int:
     if nra > 2:
         return r.ue()
     return 0
-
-
-def _p_slice_header(
-    sl: _BitW, qp: int, frame_num: int = 1, num_refs_active: int = 1,
-    wtab: dict | None = None, deblock_idc: int = 1,
-    deblock_offs: tuple = (0, 0),
-) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(5)  # slice_type: P (all slices)
-    sl.ue(0)  # pic_parameter_set_id
-    sl.u(frame_num % 16, 4)  # frame_num
-    if num_refs_active != 1:
-        sl.u(1, 1)  # num_ref_idx_active_override_flag
-        sl.ue(num_refs_active - 1)
-    else:
-        sl.u(0, 1)  # no override (PPS default: 1 active)
-    sl.u(0, 1)  # ref_pic_list_modification_flag_l0
-    if wtab is not None:  # PPS weighted_pred_flag: pred_weight_table
-        _write_pwt_p(sl, wtab, num_refs_active)
-    sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
-    sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(deblock_idc)  # disable_deblocking_filter_idc
-    if deblock_idc != 1:  # 7.3.3: offsets present when idc != 1
-        sl.se(deblock_offs[0])  # slice_alpha_c0_offset_div2
-        sl.se(deblock_offs[1])  # slice_beta_offset_div2
-
-
-def _parse_p_slice_header(
-    r: _BitR, weighted_pred: bool = False
-) -> tuple[int, int, dict | None, int, tuple]:
-    """Returns (slice_qp, num_ref_idx_l0_active, weights-or-None,
-    disable_deblocking_filter_idc, (a_div2, b_div2))."""
-    r.ue()  # first_mb
-    stype = r.ue()
-    if stype % 5 != 0:
-        raise NotImplementedError(
-            f"slice_type {stype} in non-IDR NAL — only P slices are "
-            "implemented (B slices stay gated)"
-        )
-    r.ue()  # pps id
-    r.u(4)  # frame_num
-    nra = 1  # PPS num_ref_idx_l0_default_active_minus1 is written 0
-    if r.u(1):
-        nra = r.ue() + 1
-        if nra > 15:
-            raise ValueError(
-                f"num_ref_idx_l0_active {nra} exceeds the 4-bit "
-                "frame_num sliding window"
-            )
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification unsupported")
-    weights = _parse_pwt_p(r, nra) if weighted_pred else None
-    if r.u(1):
-        raise NotImplementedError("adaptive ref marking unsupported")
-    qp = 26 + r.se()
-    idc, offs = _read_deblock_fields(r)
-    return qp, nra, weights, idc, offs
 
 
 # ---------------------------------------------------------------------------
@@ -834,7 +536,7 @@ def _mc_mb(padded: list, mx: int, my: int, placed: list,
            weights: dict | None = None):
     """Motion-compensate one MB from (ox4, oy4, w4, h4, mv, ref)
     placements (4x4-unit offsets within the MB; ref indexes
-    ``padded``). With ``weights`` (a resolved P pred_weight_table),
+    ``padded``). With ``weights`` (a resolved pred_weight_table),
     each partition is explicitly weighted by ITS reference's
     weight/offset per 8.4.2.3.2 uni-prediction. Returns
     (pred_y16, pred_cb8, pred_cr8)."""
@@ -858,7 +560,7 @@ def _mc_mb(padded: list, mx: int, my: int, placed: list,
             h4 * 2, w4 * 2, int(mv[0]), int(mv[1]),
         )
         if weights is not None:
-            e = weights["refs"][ref]
+            e = weights["l0"][ref]
             ldy = weights["luma_denom"]
             ldc = weights["chroma_denom"]
             if ldy >= 1:
@@ -1483,11 +1185,13 @@ def _encode_p_frame(
     wtab: dict | None = None,
     deblock_idc: int = 1,
     deblock_offs: tuple = (0, 0),
+    poc_lsb: int | None = None,
 ) -> tuple[bytes, tuple, dict]:
     """Encode one CAVLC P slice against the decoded reference list
-    (most recent first). Returns (slice_rbsp, recon_planes,
-    motion_field) — the motion field feeds spatial-direct colocated
-    lookups in the B-slice module."""
+    (most recent first). ``poc_lsb`` is the slice's
+    pic_order_cnt_lsb under a POC-type-0 SPS. Returns (slice_rbsp,
+    recon_planes, motion_field) — the motion field feeds
+    spatial-direct colocated lookups in the B-slice module."""
     y1, cb1, cr1 = target
     h, w = y1.shape
     mbw, mbh = w // 16, h // 16
@@ -1502,11 +1206,12 @@ def _encode_p_frame(
             1: np.zeros((mbh * 2, mbw * 2), np.int64)}
     modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
     mvs = _MvState(mbw, mbh)
-    pweights = _resolve_p_weights(wtab) if wtab is not None else None
+    pweights = _resolve_pwt(wtab) if wtab is not None else None
 
     sl = _BitW()
-    _p_slice_header(sl, qp, frame_num, nra, wtab, deblock_idc,
-                    deblock_offs)
+    _slice_header(sl, qp, "p", idr=False, frame_num=frame_num,
+                  poc_lsb=poc_lsb, nra=nra, pwt=wtab,
+                  deblock_idc=deblock_idc, deblock_offs=deblock_offs)
     skip_run = 0
 
     for my in range(mbh):
@@ -1670,9 +1375,10 @@ def encode_h264_p_gop(
     deblock: bool = False,
     deblock_offsets: tuple = (0, 0),
 ) -> tuple[bytes, list]:
-    """Encode a GOP: frames[0] becomes an Intra_16x16 IDR anchor (the
-    proven CAVLC encoder, re-headered for the deblocking-control
-    PPS); every later frame becomes a CAVLC P frame predicting from
+    """Encode a GOP: frames[0] becomes an Intra_16x16 IDR anchor
+    (the intra encoder's CAVLC slice data under this stream's
+    deblocking-control slice header); every later frame becomes a
+    CAVLC P frame predicting from
     up to ``num_refs`` previously DECODED frames (list0 most recent
     first, per 8.2.4.2.1; ref_idx_l0 coded te(v) when two are
     active; sliding-window DPB eviction beyond ``num_refs``).
@@ -1692,10 +1398,6 @@ def encode_h264_p_gop(
 
     Returns (annex_b_bytes, [recon planes per frame]) where every
     recon triple is the decoder-mirrored bit-exact contract."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        encode_h264_i16x16,
-    )
-
     if len(frames) < 2:
         raise ValueError("a GOP needs an anchor + at least one P frame")
     if len(specs_per_p) != len(frames) - 1:
@@ -1709,34 +1411,28 @@ def encode_h264_p_gop(
     if h % 16 or w % 16:
         raise ValueError("inter sequences require dimensions % 16 == 0")
     mbw, mbh = w // 16, h // 16
-    intra_stream, r0y, r0cb, r0cr = encode_h264_i16x16(y0, cb0, cr0, qp=qp)
-    nals = _split_nals(intra_stream)
-    idr_rbsp = next(
-        _ep_remove(n[1:]) for n in nals if (n[0] & 0x1F) == 5
-    )
     # deblock False -> idc 1 (off); True -> idc 0; 2 -> idc 2
     # (filtering on, slice-boundary edges excluded — identical to 0
     # for the single-slice frames this encoder writes)
     d_idc = 1 if not deblock else (2 if deblock == 2 else 0)
-    idr2 = _idr_slice_add_idc(
-        idr_rbsp, qp, idc=d_idc, offs=deblock_offsets,
-    )
-    wtab = (
-        _norm_p_weights(weights, num_refs) if weights is not None
-        else None
-    )
+    wtab = None
+    if weights is not None:
+        user = weights.get("refs", [])
+        wtab = _norm_pwt(weights, [
+            user[ri] if ri < len(user) else {} for ri in range(num_refs)
+        ])
+    sl = _BitW()
+    _slice_header(sl, qp, deblock_idc=d_idc, deblock_offs=deblock_offsets)
+    r0y, r0cb, r0cr = _encode_i16x16_slice(sl, y0, cb0, cr0, qp)
     stream = (
-        _nal(3, 7, _sps_rbsp_ref1(mbw, mbh, w, h, num_refs))
-        + _nal(3, 8, _pps_rbsp_deblock(weighted_pred=wtab is not None))
-        + _nal(3, 5, idr2)
+        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h, max_refs=num_refs))
+        + _nal(3, 8, _pps_rbsp(weighted_pred=wtab is not None,
+                               deblock_control=True))
+        + _nal(3, 5, sl.bytes_())
     )
     anchor = (r0y, r0cb, r0cr)
     if deblock:
         # in-loop: the FILTERED reconstruction is the reference
-        from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-            deblock_frame,
-        )
-
         anchor = deblock_frame(  # all-intra info
             r0y, r0cb, r0cr, qp,
             alpha_off=2 * deblock_offsets[0],
@@ -1754,11 +1450,6 @@ def encode_h264_p_gop(
             deblock_offs=deblock_offsets,
         )
         if deblock:
-            from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                deblock_frame,
-                make_block_info,
-            )
-
             info = make_block_info(
                 mbw, mbh, inter=motion["inter"], nnz=motion["nnz"],
                 mv=motion["mv"], ref=motion["ref"],
@@ -1800,115 +1491,57 @@ def decode_h264_sequence(
     payload: bytes,
 ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Decode an IDR + P CAVLC sequence; returns the decoded frames
-    in order. The IDR anchor is delegated to the proven intra decoder
-    (its slice re-headered back to the control-flag-0 PPS layout);
-    P slices decode here against a sliding-window DPB of previously
-    decoded frames (list0 most recent first), with P_8x8
-    sub-partitions, Intra_16x16 macroblocks and te(v) ref_idx_l0
-    handled per 7.3.5 / 8.4.1.3."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-        _pps_rbsp as _pps_plain,
-    )
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        decode_h264_frame,
-    )
-
-    sps = None
-    sps_rbsp = None
-    deblock_present = False
-    weighted_pred = False
+    in order. The IDR anchor decodes through the intra decoder's
+    CAVLC slice-data step; P slices decode here against a
+    sliding-window DPB of previously decoded frames (list0 most
+    recent first), with P_8x8 sub-partitions, Intra_16x16
+    macroblocks and te(v) ref_idx_l0 handled per 7.3.5 / 8.4.1.3."""
     frames: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     refs: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-            sps_rbsp = rbsp
-        elif ntype == 8:
-            r = _BitR(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
-                raise NotImplementedError(
-                    "CABAC P slices — inter is CAVLC-only so far"
-                )
-            r.u(1)
-            r.ue()
-            r.ue()
-            r.ue()
-            weighted_pred = bool(r.u(1))
-            r.u(2)
-            r.se()
-            r.se()
-            r.se()
-            deblock_present = bool(r.u(1))
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR before SPS")
-            idc = 1
-            offs = (0, 0)
-            idr_rbsp = rbsp
-            if deblock_present:
-                idr_rbsp, idc, offs = _idr_slice_strip_idc(rbsp)
-            sub = (
-                _nal(3, 7, sps_rbsp)
-                + _nal(3, 8, _pps_plain())
-                + _nal(3, 5, idr_rbsp)
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if pps["cabac"]:
+            raise NotImplementedError(
+                "CABAC P slices — use h264_cabac_inter.decode_h264_cabac_p"
             )
-            frame = decode_h264_frame(sub)
-            if idc != 1:
-                # idc 2 == idc 0 for single-slice frames (there are
-                # no slice-boundary internal edges to exclude)
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                )
-
-                frame = deblock_frame(
-                    *frame, _idr_slice_qp(idr_rbsp),
-                    alpha_off=2 * offs[0], beta_off=2 * offs[1],
-                )
+        idr = nal_hdr & 0x1F == 5
+        if not idr and not refs:
+            raise ValueError("P slice before any reference frame")
+        r = _BitR(rbsp)
+        hdr = _parse_slice_header(r, sps, pps, nal_hdr)
+        qp, nra = hdr["qp"], hdr["nra"]
+        # idc 2 == idc 0 for single-slice frames (there are no
+        # slice-boundary internal edges to exclude)
+        filt = dict(alpha_off=2 * hdr["offs"][0],
+                    beta_off=2 * hdr["offs"][1])
+        if idr:
+            frame = _decode_intra_slice(r, sps, qp)
+            if hdr["idc"] != 1:
+                frame = deblock_frame(*frame, qp, **filt)
             frames.append(frame)
             refs = [frame]  # IDR resets the DPB
-        elif ntype == 1:
-            if not refs:
-                raise ValueError("P slice before any reference frame")
-            r = _BitR(rbsp)
-            qp, nra, pw, idc, offs = _parse_p_slice_header(
-                r, weighted_pred
+            continue
+        if hdr["kind"] != "p":
+            raise NotImplementedError(
+                f"{hdr['kind'].upper()} slice in a non-IDR NAL — only P "
+                "slices decode here (B streams: h264_bslice)"
             )
-            if nra > len(refs):
-                raise ValueError(
-                    f"{nra} active references but only {len(refs)} "
-                    "decoded"
-                )
-            if idc != 1:
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                    make_block_info,
-                )
-
-                frame, motion = _decode_p_frame(
-                    r, sps, qp, refs, nra, weights=pw,
-                    return_motion=True,
-                )
-                info = make_block_info(
-                    sps["mbw"], sps["mbh"], inter=motion["inter"],
-                    nnz=motion["nnz"], mv=motion["mv"],
-                    ref=motion["ref"],
-                )
-                frame = deblock_frame(
-                    *frame, qp, info,
-                    alpha_off=2 * offs[0], beta_off=2 * offs[1],
-                )
-            else:
-                frame = _decode_p_frame(
-                    r, sps, qp, refs, nra, weights=pw
-                )
-            frames.append(frame)
-            if (nal[0] >> 5) & 3:  # nal_ref_idc: reference picture
-                refs.insert(0, frame)
-                del refs[max(1, sps.get("max_refs", 1)):]
+        if nra > len(refs):
+            raise ValueError(
+                f"{nra} active references but only {len(refs)} decoded"
+            )
+        frame, motion = _decode_p_frame(
+            r, sps, qp, refs, nra, weights=hdr["pwt"], return_motion=True,
+        )
+        if hdr["idc"] != 1:
+            info = make_block_info(
+                sps["mbw"], sps["mbh"], inter=motion["inter"],
+                nnz=motion["nnz"], mv=motion["mv"], ref=motion["ref"],
+            )
+            frame = deblock_frame(*frame, qp, info, **filt)
+        frames.append(frame)
+        if nal_hdr & 0x60:  # nal_ref_idc: reference picture
+            refs.insert(0, frame)
+            del refs[max(1, sps.get("max_refs", 1)):]
     if not frames:
         raise ValueError("no coded frames found")
     return frames

@@ -73,13 +73,11 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _BitR,
     _BitW,
     _check_planes,
-    _ep_remove,
     _nal,
     _parse_slice_header,
-    _parse_sps,
     _pps_rbsp,
     _slice_header,
-    _split_nals,
+    _slice_nals,
     _sps_rbsp,
 )
 
@@ -1144,6 +1142,33 @@ def encode_h264_i16x16(
         raise ValueError("Intra_16x16 pred_mode must be 0..3")
     if chroma_mode not in (0, 1, 2, 3):
         raise ValueError("chroma_mode must be 0..3")
+    sl = _BitW()
+    _slice_header(sl, qp)
+    ry, rcb, rcr = _encode_i16x16_slice(
+        sl, y, cb, cr, qp, pred_mode, chroma_mode
+    )
+    h, w = ry.shape
+    stream = (
+        _nal(3, 7, _sps_rbsp(-(-w // 16), -(-h // 16), w, h))
+        + _nal(3, 8, _pps_rbsp())
+        + _nal(3, 5, sl.bytes_())
+    )
+    return stream, ry, rcb, rcr
+
+
+def _encode_i16x16_slice(
+    sl: _BitW,
+    y: np.ndarray,
+    cb: np.ndarray | None,
+    cr: np.ndarray | None,
+    qp: int,
+    pred_mode: int = 2,
+    chroma_mode: int = 0,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Write the CAVLC slice_data() of an Intra_16x16 IDR picture
+    after the slice header already in ``sl`` and close the RBSP.
+    Returns the decoder-mirrored recon planes, cropped to the input
+    size."""
     if not 0 <= qp <= 51:
         raise ValueError("QP must be in 0..51")
     y, cb, cr = _check_planes(y, cb, cr)
@@ -1162,8 +1187,6 @@ def encode_h264_i16x16(
     cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
             1: np.zeros((mbh * 2, mbw * 2), np.int64)}
 
-    sl = _BitW()
-    _slice_header(sl, qp)
     _PM_NEEDS = {0: (True, False), 1: (False, True), 2: (False, False),
                  3: (True, True)}
     _CM_NEEDS = {0: (False, False), 1: (False, True), 2: (True, False),
@@ -1261,13 +1284,7 @@ def encode_h264_i16x16(
             rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cb8
             rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
     sl.trailing()
-    stream = (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp())
-        + _nal(3, 5, sl.bytes_())
-    )
     return (
-        stream,
         ry[:h, :w].astype(np.uint8),
         rcb[:ch, :cw].astype(np.uint8),
         rcr[:ch, :cw].astype(np.uint8),
@@ -1481,254 +1498,250 @@ def decode_h264_frame(
     """Full-decoder entry for this codec family: Annex B streams of
     I_PCM (mb_type 25), Intra_16x16 CAVLC macroblocks (mb_type 1..24,
     all four luma prediction modes, chroma DC) AND I_4x4 CAVLC
-    macroblocks (mb_type 0, all nine 4x4 prediction modes). I_8x8,
-    CABAC streams and inter slices raise the declared ffmpeg gate."""
-    sps = None
+    macroblocks (mb_type 0, all nine 4x4 prediction modes). CABAC
+    streams dispatch to h264_cabac.decode_h264_cabac; I_8x8 raises
+    the declared ffmpeg gate and non-IDR slices are skipped."""
     planes = None
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-        elif ntype == 8:
-            r = _BitR(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
-                # CABAC entropy coding (r9, closes the r8 gate):
-                # delegate the whole stream to the CABAC intra
-                # decoder — shared prediction/transform layer,
-                # separate entropy layer.
-                from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (  # noqa: E501
-                    decode_h264_cabac,
-                )
-
-                return decode_h264_cabac(bytes(payload))
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR slice before SPS")
-            r = _BitR(rbsp)
-            qp = _parse_slice_header(r, sps)
-            qpc = _chroma_qp(qp)
-            mbw, mbh = sps["mbw"], sps["mbh"]
-            ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-            rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-            rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-            luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-            cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-                    1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-            modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
-            before = _decoded_before_factory(mbw)
-            for my in range(mbh):
-                for mx in range(mbw):
-                    mb_type = r.ue()
-                    if mb_type == 25:  # I_PCM
-                        r.align()
-                        for yy in range(16):
-                            for xx in range(16):
-                                ry[my * 16 + yy, mx * 16 + xx] = r.u(8)
-                        for plane in (rcb, rcr):
-                            for yy in range(8):
-                                for xx in range(8):
-                                    plane[my * 8 + yy, mx * 8 + xx] = r.u(8)
-                        # PCM neighbors count as 16 coeffs (9.2.1)
-                        luma_nnz[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 16
-                        for pi in (0, 1):
-                            cnnz[pi][my * 2 : my * 2 + 2,
-                                     mx * 2 : mx * 2 + 2] = 16
-                        continue
-                    if mb_type > 25:
-                        raise NotImplementedError(
-                            f"mb_type {mb_type} (invalid in I slices) — "
-                            "use decoder='ffmpeg' in "
-                            "binaryops.decode_features"
-                        )
-                    if mb_type == 0:  # I_4x4
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            ma = modes4[gy, gx - 1] if gx > 0 else -1
-                            mb_ = modes4[gy - 1, gx] if gy > 0 else -1
-                            pm4 = min(
-                                2 if ma < 0 else int(ma),
-                                2 if mb_ < 0 else int(mb_),
-                            )
-                            if r.u(1):
-                                modes4[gy, gx] = pm4
-                            else:
-                                rem = r.u(3)
-                                modes4[gy, gx] = (
-                                    rem if rem < pm4 else rem + 1
-                                )
-                        if r.ue() != 0:
-                            raise NotImplementedError(
-                                "chroma prediction mode != DC — use "
-                                "decoder='ffmpeg'"
-                            )
-                        cbp_code = r.ue()
-                        if cbp_code >= len(_CBP_INTRA):
-                            raise ValueError(
-                                f"corrupt coded_block_pattern code "
-                                f"{cbp_code} (max {len(_CBP_INTRA) - 1})"
-                            )
-                        cbp = _CBP_INTRA[cbp_code]
-                        cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
-                        if cbp:
-                            qp = (qp + r.se() + 52) % 52
-                            qpc = _chroma_qp(qp)
-                        coefs4 = {}
-                        for g in range(4):
-                            for k in range(4):
-                                bx, by = _ZBLK[g * 4 + k]
-                                gx, gy = mx * 4 + bx, my * 4 + by
-                                if not cbp_luma & (1 << g):
-                                    coefs4[(bx, by)] = np.zeros(
-                                        (4, 4), np.int64
-                                    )
-                                    luma_nnz[gy, gx] = 0
-                                    continue
-                                nc = _nc_for(luma_nnz, gx, gy)
-                                cf, tot = decode_residual_block(r, nc, 16)
-                                z = np.zeros(16, np.int64)
-                                z[_ZIGA] = cf
-                                coefs4[(bx, by)] = z.reshape(4, 4)
-                                luma_nnz[gy, gx] = tot
-                        cdcz = {0: np.zeros((2, 2), np.int64),
-                                1: np.zeros((2, 2), np.int64)}
-                        cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-                                1: np.zeros((2, 2, 4, 4), np.int64)}
-                        if cbp_chroma > 0:
-                            for pi in (0, 1):
-                                cf, _ = decode_residual_block(r, -1, 4)
-                                cdcz[pi] = np.array(
-                                    [[cf[0], cf[1]], [cf[2], cf[3]]],
-                                    np.int64,
-                                )
-                        if cbp_chroma > 1:
-                            for pi in (0, 1):
-                                for by in range(2):
-                                    for bx in range(2):
-                                        gx = mx * 2 + bx
-                                        gy = my * 2 + by
-                                        nc = _nc_for(cnnz[pi], gx, gy)
-                                        cf, tot = decode_residual_block(
-                                            r, nc, 15
-                                        )
-                                        z = np.zeros(16, np.int64)
-                                        z[_ZIGA1] = cf
-                                        cacz[pi][by, bx] = z.reshape(4, 4)
-                                        cnnz[pi][gy, gx] = tot
-                        else:
-                            for pi in (0, 1):
-                                cnnz[pi][my * 2 : my * 2 + 2,
-                                         mx * 2 : mx * 2 + 2] = 0
-                        # --- luma recon, z-order, prediction chained
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            pred = _pred4(
-                                ry, gx, gy, int(modes4[gy, gx]), mbw * 4,
-                                lambda a, b, _gx=gx, _gy=gy: before(
-                                    a, b, _gx, _gy
-                                ),
-                            )
-                            blk = (
-                                _inv4x4(_dequant_ac(coefs4[(bx, by)], qp))
-                                + 32
-                            ) >> 6
-                            ry[
-                                gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4
-                            ] = np.clip(pred + blk, 0, 255)
-                        for pi, reconp in ((0, rcb), (1, rcr)):
-                            cp = _pred8_chroma_dc(reconp, my, mx)
-                            reconp[my * 8 : my * 8 + 8,
-                                   mx * 8 : mx * 8 + 8] = _recon_chroma8(
-                                cp, cacz[pi], cdcz[pi], qpc
-                            )
-                        continue
-                    t = mb_type - 1
-                    cbpl = 15 if t >= 12 else 0
-                    t %= 12
-                    cbpc, pm = t // 4, t % 4
-                    chroma_mode = r.ue()
-                    if chroma_mode > 3:
-                        raise ValueError(
-                            f"chroma prediction mode {chroma_mode} "
-                            "out of range"
-                        )
-                    qp = (qp + r.se() + 52) % 52  # mb_qp_delta
-                    qpc = _chroma_qp(qp)
-                    nc = _nc_for(luma_nnz, mx * 4, my * 4)
-                    dccf, _ = decode_residual_block(r, nc, 16)
-                    zdc = np.zeros(16, np.int64)
-                    zdc[_ZIGA] = dccf
-                    zdc = zdc.reshape(4, 4)
-                    acz = np.zeros((4, 4, 4, 4), np.int64)
-                    if cbpl:
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            nc = _nc_for(luma_nnz, gx, gy)
-                            cf, tot = decode_residual_block(r, nc, 15)
-                            z = np.zeros(16, np.int64)
-                            z[_ZIGA1] = cf
-                            acz[by, bx] = z.reshape(4, 4)
-                            luma_nnz[gy, gx] = tot
-                    else:
-                        luma_nnz[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 0
-                    cdcz = {0: np.zeros((2, 2), np.int64),
-                            1: np.zeros((2, 2), np.int64)}
-                    cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-                            1: np.zeros((2, 2, 4, 4), np.int64)}
-                    if cbpc > 0:
-                        for pi in (0, 1):
-                            cf, _ = decode_residual_block(r, -1, 4)
-                            cdcz[pi] = np.array(
-                                [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
-                            )
-                    if cbpc > 1:
-                        for pi in (0, 1):
-                            for by in range(2):
-                                for bx in range(2):
-                                    gx = mx * 2 + bx
-                                    gy = my * 2 + by
-                                    nc = _nc_for(cnnz[pi], gx, gy)
-                                    cf, tot = decode_residual_block(
-                                        r, nc, 15
-                                    )
-                                    z = np.zeros(16, np.int64)
-                                    z[_ZIGA1] = cf
-                                    cacz[pi][by, bx] = z.reshape(4, 4)
-                                    cnnz[pi][gy, gx] = tot
-                    else:
-                        for pi in (0, 1):
-                            cnnz[pi][my * 2 : my * 2 + 2,
-                                     mx * 2 : mx * 2 + 2] = 0
-                    # --- reconstruction (one fused pass) ---
-                    pred = _pred16(ry, my, mx, pm)
-                    cpb = _pred8_chroma(rcb, my, mx, chroma_mode)
-                    cpr = _pred8_chroma(rcr, my, mx, chroma_mode)
-                    y16, cb8, cr8 = _recon_i16_planes(
-                        pred, cpb, cpr, acz, zdc,
-                        cacz[0], cacz[1], cdcz[0], cdcz[1],
-                        qp, qpc,
-                    )
-                    ry[my * 16 : my * 16 + 16,
-                       mx * 16 : mx * 16 + 16] = y16
-                    rcb[my * 8 : my * 8 + 8,
-                        mx * 8 : mx * 8 + 8] = cb8
-                    rcr[my * 8 : my * 8 + 8,
-                        mx * 8 : mx * 8 + 8] = cr8
-            x0, y0, w, h = sps["x0"], sps["y0"], sps["w"], sps["h"]
-            planes = (
-                ry[y0 : y0 + h, x0 : x0 + w].astype(np.uint8),
-                rcb[y0 // 2 : (y0 + h) // 2,
-                    x0 // 2 : (x0 + w) // 2].astype(np.uint8),
-                rcr[y0 // 2 : (y0 + h) // 2,
-                    x0 // 2 : (x0 + w) // 2].astype(np.uint8),
+    for nal_hdr, rbsp, sps, pps in _slice_nals(payload):
+        if nal_hdr & 0x1F != 5:
+            continue
+        if pps["cabac"]:
+            # CABAC entropy coding: the CABAC intra decoder shares
+            # the prediction/transform layer, not the entropy layer
+            from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (  # noqa: E501
+                decode_h264_cabac,
             )
+
+            return decode_h264_cabac(bytes(payload))
+        r = _BitR(rbsp)
+        qp = _parse_slice_header(r, sps, pps, nal_hdr)["qp"]
+        planes = _decode_intra_slice(r, sps, qp)
     if planes is None:
         raise ValueError("no IDR slice found")
     return planes
+
+
+def _decode_intra_slice(r: _BitR, sps: dict, qp: int):
+    """Decode the CAVLC slice_data() of an I slice (I_PCM,
+    Intra_16x16 and I_4x4 macroblocks) from ``r``, positioned after
+    the slice header. Returns the cropped (Y, Cb, Cr) planes."""
+    qpc = _chroma_qp(qp)
+    mbw, mbh = sps["mbw"], sps["mbh"]
+    ry = np.zeros((mbh * 16, mbw * 16), np.int64)
+    rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
+    rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
+    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
+    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
+            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
+    modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+    before = _decoded_before_factory(mbw)
+    for my in range(mbh):
+        for mx in range(mbw):
+            mb_type = r.ue()
+            if mb_type == 25:  # I_PCM
+                r.align()
+                for yy in range(16):
+                    for xx in range(16):
+                        ry[my * 16 + yy, mx * 16 + xx] = r.u(8)
+                for plane in (rcb, rcr):
+                    for yy in range(8):
+                        for xx in range(8):
+                            plane[my * 8 + yy, mx * 8 + xx] = r.u(8)
+                # PCM neighbors count as 16 coeffs (9.2.1)
+                luma_nnz[my * 4 : my * 4 + 4,
+                         mx * 4 : mx * 4 + 4] = 16
+                for pi in (0, 1):
+                    cnnz[pi][my * 2 : my * 2 + 2,
+                             mx * 2 : mx * 2 + 2] = 16
+                continue
+            if mb_type > 25:
+                raise NotImplementedError(
+                    f"mb_type {mb_type} (invalid in I slices) — "
+                    "use decoder='ffmpeg' in "
+                    "binaryops.decode_features"
+                )
+            if mb_type == 0:  # I_4x4
+                for bx, by in _ZBLK:
+                    gx, gy = mx * 4 + bx, my * 4 + by
+                    ma = modes4[gy, gx - 1] if gx > 0 else -1
+                    mb_ = modes4[gy - 1, gx] if gy > 0 else -1
+                    pm4 = min(
+                        2 if ma < 0 else int(ma),
+                        2 if mb_ < 0 else int(mb_),
+                    )
+                    if r.u(1):
+                        modes4[gy, gx] = pm4
+                    else:
+                        rem = r.u(3)
+                        modes4[gy, gx] = (
+                            rem if rem < pm4 else rem + 1
+                        )
+                if r.ue() != 0:
+                    raise NotImplementedError(
+                        "chroma prediction mode != DC — use "
+                        "decoder='ffmpeg'"
+                    )
+                cbp_code = r.ue()
+                if cbp_code >= len(_CBP_INTRA):
+                    raise ValueError(
+                        f"corrupt coded_block_pattern code "
+                        f"{cbp_code} (max {len(_CBP_INTRA) - 1})"
+                    )
+                cbp = _CBP_INTRA[cbp_code]
+                cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
+                if cbp:
+                    qp = (qp + r.se() + 52) % 52
+                    qpc = _chroma_qp(qp)
+                coefs4 = {}
+                for g in range(4):
+                    for k in range(4):
+                        bx, by = _ZBLK[g * 4 + k]
+                        gx, gy = mx * 4 + bx, my * 4 + by
+                        if not cbp_luma & (1 << g):
+                            coefs4[(bx, by)] = np.zeros(
+                                (4, 4), np.int64
+                            )
+                            luma_nnz[gy, gx] = 0
+                            continue
+                        nc = _nc_for(luma_nnz, gx, gy)
+                        cf, tot = decode_residual_block(r, nc, 16)
+                        z = np.zeros(16, np.int64)
+                        z[_ZIGA] = cf
+                        coefs4[(bx, by)] = z.reshape(4, 4)
+                        luma_nnz[gy, gx] = tot
+                cdcz = {0: np.zeros((2, 2), np.int64),
+                        1: np.zeros((2, 2), np.int64)}
+                cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
+                        1: np.zeros((2, 2, 4, 4), np.int64)}
+                if cbp_chroma > 0:
+                    for pi in (0, 1):
+                        cf, _ = decode_residual_block(r, -1, 4)
+                        cdcz[pi] = np.array(
+                            [[cf[0], cf[1]], [cf[2], cf[3]]],
+                            np.int64,
+                        )
+                if cbp_chroma > 1:
+                    for pi in (0, 1):
+                        for by in range(2):
+                            for bx in range(2):
+                                gx = mx * 2 + bx
+                                gy = my * 2 + by
+                                nc = _nc_for(cnnz[pi], gx, gy)
+                                cf, tot = decode_residual_block(
+                                    r, nc, 15
+                                )
+                                z = np.zeros(16, np.int64)
+                                z[_ZIGA1] = cf
+                                cacz[pi][by, bx] = z.reshape(4, 4)
+                                cnnz[pi][gy, gx] = tot
+                else:
+                    for pi in (0, 1):
+                        cnnz[pi][my * 2 : my * 2 + 2,
+                                 mx * 2 : mx * 2 + 2] = 0
+                # --- luma recon, z-order, prediction chained
+                for bx, by in _ZBLK:
+                    gx, gy = mx * 4 + bx, my * 4 + by
+                    pred = _pred4(
+                        ry, gx, gy, int(modes4[gy, gx]), mbw * 4,
+                        lambda a, b, _gx=gx, _gy=gy: before(
+                            a, b, _gx, _gy
+                        ),
+                    )
+                    blk = (
+                        _inv4x4(_dequant_ac(coefs4[(bx, by)], qp))
+                        + 32
+                    ) >> 6
+                    ry[
+                        gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4
+                    ] = np.clip(pred + blk, 0, 255)
+                for pi, reconp in ((0, rcb), (1, rcr)):
+                    cp = _pred8_chroma_dc(reconp, my, mx)
+                    reconp[my * 8 : my * 8 + 8,
+                           mx * 8 : mx * 8 + 8] = _recon_chroma8(
+                        cp, cacz[pi], cdcz[pi], qpc
+                    )
+                continue
+            t = mb_type - 1
+            cbpl = 15 if t >= 12 else 0
+            t %= 12
+            cbpc, pm = t // 4, t % 4
+            chroma_mode = r.ue()
+            if chroma_mode > 3:
+                raise ValueError(
+                    f"chroma prediction mode {chroma_mode} "
+                    "out of range"
+                )
+            qp = (qp + r.se() + 52) % 52  # mb_qp_delta
+            qpc = _chroma_qp(qp)
+            nc = _nc_for(luma_nnz, mx * 4, my * 4)
+            dccf, _ = decode_residual_block(r, nc, 16)
+            zdc = np.zeros(16, np.int64)
+            zdc[_ZIGA] = dccf
+            zdc = zdc.reshape(4, 4)
+            acz = np.zeros((4, 4, 4, 4), np.int64)
+            if cbpl:
+                for bx, by in _ZBLK:
+                    gx, gy = mx * 4 + bx, my * 4 + by
+                    nc = _nc_for(luma_nnz, gx, gy)
+                    cf, tot = decode_residual_block(r, nc, 15)
+                    z = np.zeros(16, np.int64)
+                    z[_ZIGA1] = cf
+                    acz[by, bx] = z.reshape(4, 4)
+                    luma_nnz[gy, gx] = tot
+            else:
+                luma_nnz[my * 4 : my * 4 + 4,
+                         mx * 4 : mx * 4 + 4] = 0
+            cdcz = {0: np.zeros((2, 2), np.int64),
+                    1: np.zeros((2, 2), np.int64)}
+            cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
+                    1: np.zeros((2, 2, 4, 4), np.int64)}
+            if cbpc > 0:
+                for pi in (0, 1):
+                    cf, _ = decode_residual_block(r, -1, 4)
+                    cdcz[pi] = np.array(
+                        [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
+                    )
+            if cbpc > 1:
+                for pi in (0, 1):
+                    for by in range(2):
+                        for bx in range(2):
+                            gx = mx * 2 + bx
+                            gy = my * 2 + by
+                            nc = _nc_for(cnnz[pi], gx, gy)
+                            cf, tot = decode_residual_block(
+                                r, nc, 15
+                            )
+                            z = np.zeros(16, np.int64)
+                            z[_ZIGA1] = cf
+                            cacz[pi][by, bx] = z.reshape(4, 4)
+                            cnnz[pi][gy, gx] = tot
+            else:
+                for pi in (0, 1):
+                    cnnz[pi][my * 2 : my * 2 + 2,
+                             mx * 2 : mx * 2 + 2] = 0
+            # --- reconstruction (one fused pass) ---
+            pred = _pred16(ry, my, mx, pm)
+            cpb = _pred8_chroma(rcb, my, mx, chroma_mode)
+            cpr = _pred8_chroma(rcr, my, mx, chroma_mode)
+            y16, cb8, cr8 = _recon_i16_planes(
+                pred, cpb, cpr, acz, zdc,
+                cacz[0], cacz[1], cdcz[0], cdcz[1],
+                qp, qpc,
+            )
+            ry[my * 16 : my * 16 + 16,
+               mx * 16 : mx * 16 + 16] = y16
+            rcb[my * 8 : my * 8 + 8,
+                mx * 8 : mx * 8 + 8] = cb8
+            rcr[my * 8 : my * 8 + 8,
+                mx * 8 : mx * 8 + 8] = cr8
+    x0, y0, w, h = sps["x0"], sps["y0"], sps["w"], sps["h"]
+    return (
+        ry[y0 : y0 + h, x0 : x0 + w].astype(np.uint8),
+        rcb[y0 // 2 : (y0 + h) // 2,
+            x0 // 2 : (x0 + w) // 2].astype(np.uint8),
+        rcr[y0 // 2 : (y0 + h) // 2,
+            x0 // 2 : (x0 + w) // 2].astype(np.uint8),
+    )
 
 
 # --- Spark surface -------------------------------------------------------------

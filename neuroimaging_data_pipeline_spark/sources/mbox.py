@@ -135,10 +135,8 @@ def _parse_headers(head: bytes) -> list[tuple[str, str]]:
         if not ln:
             continue
         if ln[:1] in (b" ", b"\t"):
-            if out:  # folded continuation
-                out[-1] = (out[-1][0], out[-1][1] + " "
-                           + ln.strip().decode("ascii", "surrogateescape"))
-            continue
+            # folded header: stdlib keeps the fold bytes in the value
+            raise _NeedStdlib("folded header")
         name, _, val = ln.partition(b":")
         out.append(
             (

@@ -187,3 +187,51 @@ def test_intra_in_p_ctx_coverage():
         encode_h264_cabac_p_gop(
             frames, [[("i16",)] * 4], qp=20, init_table=table
         )
+
+
+def _drop(stream, ntypes):
+    from neuroimaging_data_pipeline_spark.multimodal.h264 import _split_nals
+
+    return b"".join(b"\x00\x00\x00\x01" + n for n in _split_nals(stream)
+                    if n[0] & 0x1F not in ntypes)
+
+
+@pytest.mark.parametrize("dropped", [(5,), (5, 7)],
+                         ids=["idr", "idr_and_sps"])
+def test_dropped_nal_streams_fail_like_cavlc(dropped):
+    """A CABAC-P stream missing its IDR (and SPS) raises the same
+    controlled ValueError as the CAVLC P decoder does for the same
+    cut, never an IndexError or TypeError from the slice loop."""
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+        decode_h264_sequence,
+        encode_h264_p_gop,
+    )
+
+    frames = [_planes(32, 32, 50 + k) for k in range(3)]
+    specs = [[("16x16", [(1, 1)])] * 4, [("16x16", [((0, 1), 1)])] * 4]
+    table = synthetic_p_init(1)
+    cabac, _ = encode_h264_cabac_p_gop(frames, specs, qp=20, num_refs=2,
+                                       init_table=table)
+    cavlc, _ = encode_h264_p_gop(frames, specs, qp=20, num_refs=2)
+    with pytest.raises(ValueError) as cabac_err:
+        decode_h264_cabac_p(_drop(cabac, dropped), init_table=table)
+    with pytest.raises(ValueError) as cavlc_err:
+        decode_h264_sequence(_drop(cavlc, dropped))
+    assert str(cabac_err.value) == str(cavlc_err.value)
+
+
+def test_more_active_refs_than_decoded_raises():
+    """With the first P slice cut, the second one's two active
+    references exceed the one decoded frame."""
+    from neuroimaging_data_pipeline_spark.multimodal.h264 import _split_nals
+
+    frames = [_planes(32, 32, 60 + k) for k in range(3)]
+    specs = [[("16x16", [(1, 1)])] * 4, [("16x16", [((0, 1), 1)])] * 4]
+    table = synthetic_p_init(2)
+    stream, _ = encode_h264_cabac_p_gop(frames, specs, qp=20, num_refs=2,
+                                        init_table=table)
+    nals = _split_nals(stream)
+    cut = b"".join(b"\x00\x00\x00\x01" + n for i, n in enumerate(nals)
+                   if i != 3)  # SPS, PPS, IDR, [P1], P2
+    with pytest.raises(ValueError, match="2 active references but only 1"):
+        decode_h264_cabac_p(cut, init_table=table)

@@ -95,6 +95,16 @@ def test_fast_walker_matches_stdlib():
     assert extract_parts(nested) == _stdlib_extract(nested)
     exotic = b"From: x\r\nContent-Transfer-Encoding: x-uuencode\r\n\r\nb\r\n"
     assert extract_parts(exotic) == _stdlib_extract(exotic)
+    folded_subject = b"From: x\r\nSubject: hello\r\n\tworld\r\n\r\nb\r\n"
+    assert extract_parts(folded_subject) == _stdlib_extract(folded_subject)
+    folded_part_type = (
+        b"From: x\r\nContent-Type: multipart/mixed; boundary=\"b\"\r\n"
+        b"\r\n--b\r\nContent-Type: text/plain;\r\n charset=utf-8\r\n"
+        b"\r\nA\r\n--b--\r\n"
+    )
+    assert extract_parts(folded_part_type) == _stdlib_extract(
+        folded_part_type
+    )
 
 
 def test_bad_base64_falls_back_to_stdlib():
