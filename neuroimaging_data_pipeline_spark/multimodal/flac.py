@@ -16,7 +16,9 @@ What is REAL here, both directions:
   coded blocksize/sample-rate/channel/sample-size fields, the
   UTF-8-style coded frame number, CRC-8 over the header and CRC-16
   over the whole frame (polynomials 0x07 and 0x8005, both verified
-  on decode) — a flipped bit anywhere fails loudly;
+  on decode) — a flipped bit anywhere fails loudly; subframes are
+  bit-packed with the codecs' shared ``bitio.BitWriter``/``BitReader``
+  (Rice quotients as unary runs), the field range check in ``_put``;
 - ALL FOUR subframe types, all lossless: CONSTANT (flat block, one
   sample), VERBATIM (raw samples), FIXED — the four fixed predictors
   (orders 0-4) — and LPC (RFC 9639 section 9.2.3): covariance-method
@@ -60,6 +62,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 
 _MAGIC = b"fLaC"
 _SAMPLE_RATE = 44100
@@ -122,6 +129,8 @@ def _read_utf8_number(buf: bytes, at: int) -> tuple[int, int]:
     while c & mask:
         n_more += 1
         mask >>= 1
+    if at + n_more >= len(buf):
+        raise ValueError("truncated UTF-8-coded frame number")
     v = c & (mask - 1)
     for k in range(1, n_more + 1):
         nb = buf[at + k]
@@ -163,94 +172,12 @@ def _vorbis_comment(fields: dict[str, str]) -> bytes:
     return out
 
 
-class _Bits:
-    """MSB-first bit writer for subframe payloads (FLAC frames are
-    bit-packed and padded back to byte alignment before the CRC-16)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, width: int) -> None:
-        if width and not 0 <= value < 1 << width:
-            raise ValueError("bit value out of range")
-        self.acc = (self.acc << width) | value
-        self.n += width
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def unary(self, q: int) -> None:  # q zeros then a one (libFLAC order)
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def extend(self, other: "_Bits") -> None:
-        """Append another writer's bitstream (no byte alignment
-        assumed on either side)."""
-        for b in other.out:
-            self.write(b, 8)
-        if other.n:
-            self.write(other.acc, other.n)
-
-    def bit_length(self) -> int:
-        return len(self.out) * 8 + self.n
-
-    def done(self) -> bytes:
-        if self.n:
-            self.out.append((self.acc << (8 - self.n)) & 0xFF)
-        return bytes(self.out)
-
-
-class _BitsIn:
-    def __init__(self, buf: bytes, at: int) -> None:
-        self.buf = buf
-        self.pos = at
-        self.acc = 0
-        self.n = 0
-
-    def read(self, width: int) -> int:
-        while self.n < width:
-            if self.pos >= len(self.buf):
-                raise ValueError("FLAC frame truncated mid-subframe")
-            self.acc = (self.acc << 8) | self.buf[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= width
-        v = (self.acc >> self.n) & ((1 << width) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
-
-    def unary(self) -> int:
-        # r13: consume whole zero chunks from the accumulator with
-        # bit_length instead of a read(1) call per bit; refill a byte
-        # at a time exactly as read() does, so truncation raises the
-        # same error at the same point.
-        q = 0
-        while True:
-            if self.n:
-                if self.acc:
-                    lead = self.n - self.acc.bit_length()
-                    q += lead
-                    self.n -= lead + 1  # drop zeros + the marker bit
-                    self.acc &= (1 << self.n) - 1
-                    return q
-                q += self.n
-                self.n = 0
-            if self.pos >= len(self.buf):
-                raise ValueError("FLAC frame truncated mid-subframe")
-            self.acc = self.buf[self.pos]
-            self.pos += 1
-            self.n = 8
-
-    def align(self) -> int:
-        """Drop the sub-byte remainder; -> byte position."""
-        self.n = 0
-        self.acc = 0
-        return self.pos
+def _put(bits: BitWriter, value: int, width: int) -> None:
+    """Write one field; a value wider than its field (a bad
+    caller-supplied plan, say) is an input error, not a wrap."""
+    if width and not 0 <= value < 1 << width:
+        raise ValueError("bit value out of range")
+    bits.u(value, width)
 
 
 # fixed-predictor coefficient rows, order 0..4 (FLAC section 9.2.2)
@@ -412,7 +339,7 @@ def _best_rice(residuals: list[int]) -> tuple[int, int]:
     return best_r, best_bits
 
 
-def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
+def _write_subframe(bits: BitWriter, samples: list[int], depth: int) -> None:
     """One subframe at ``depth`` bits per sample (a SIDE channel is
     depth 17, RFC 9639 9.2.1): cheapest of CONSTANT / FIXED 0-4 /
     LPC 2-4 / VERBATIM by exact rice-coded size. LPC candidates use
@@ -421,17 +348,17 @@ def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
     mask = (1 << depth) - 1
 
     def write_rice(res: list[int], r: int) -> None:
-        bits.write(0, 2)   # residual method 0: 4-bit rice
-        bits.write(0, 4)   # partition order 0: one partition
-        bits.write(r, 4)
+        _put(bits, 0, 2)   # residual method 0: 4-bit rice
+        _put(bits, 0, 4)   # partition order 0: one partition
+        _put(bits, r, 4)
         for e in res:
-            u = _zigzag(e)
-            bits.unary(u >> r)
-            bits.write(u & ((1 << r) - 1), r)
+            u = _zigzag(e)  # unary quotient, then r low bits
+            bits.u(1, (u >> r) + 1)
+            bits.u(u & ((1 << r) - 1), r)
 
     if len(set(samples)) == 1:  # CONSTANT subframe
-        bits.write(0b000000 << 1, 8)  # pad 0 + type + wasted 0
-        bits.write(int(samples[0]) & mask, depth)
+        _put(bits, 0b000000 << 1, 8)  # pad 0 + type + wasted 0
+        _put(bits, int(samples[0]) & mask, depth)
         return
     best = None  # (bits, kind, order, r, residuals, qcoef, shift)
     for order in range(5):
@@ -467,29 +394,29 @@ def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
     if best[0] < depth * len(samples):  # prediction wins over VERBATIM
         _, kind, order, r, res, qcoef, shift = best
         if kind == "fixed":
-            bits.write((0b001000 | order) << 1, 8)
+            _put(bits, (0b001000 | order) << 1, 8)
         else:
-            bits.write((0b100000 | (order - 1)) << 1, 8)
+            _put(bits, (0b100000 | (order - 1)) << 1, 8)
         for s in samples[:order]:  # warm-up at the channel depth
-            bits.write(int(s) & mask, depth)
+            _put(bits, int(s) & mask, depth)
         if kind == "lpc":
-            bits.write(_LPC_PRECISION - 1, 4)
-            bits.write(shift, 5)
+            _put(bits, _LPC_PRECISION - 1, 4)
+            _put(bits, shift, 5)
             for c in qcoef:
-                bits.write(c & ((1 << _LPC_PRECISION) - 1),
+                _put(bits, c & ((1 << _LPC_PRECISION) - 1),
                            _LPC_PRECISION)
         write_rice(res, r)
     else:  # VERBATIM subframe
-        bits.write(0b000001 << 1, 8)
+        _put(bits, 0b000001 << 1, 8)
         for s in samples:
-            bits.write(int(s) & mask, depth)
+            _put(bits, int(s) & mask, depth)
 
 
-def _coded_subframe(samples: list[int], depth: int) -> _Bits:
+def _coded_subframe(samples: list[int], depth: int) -> BitWriter:
     """Encode once, reuse everywhere: the returned writer IS both the
-    exact cost (bit_length) and the bits the frame emits — candidate
+    exact cost (nbits) and the bits the frame emits — candidate
     channels are never encoded twice."""
-    b = _Bits()
+    b = BitWriter()
     _write_subframe(b, samples, depth)
     return b
 
@@ -650,7 +577,7 @@ def _plan_blocks(rows, depth: int):
     """(plans, costs) for (nb, _BLOCK) sample rows, decisions
     identical to _write_subframe; costs[b] is the exact subframe size
     in bits (header byte included) that _emit_subframe will write —
-    equal to the scalar encoding's bit_length(). Plans are
+    equal to the scalar encoding's nbits(). Plans are
     ('const',) | ('verbatim',) | ('fixed', order, r, res)
     | ('lpc', order, r, res, qcoef, shift)."""
     import numpy as np
@@ -737,22 +664,22 @@ def _plan_blocks(rows, depth: int):
 
 
 def _emit_subframe(
-    bits: _Bits, samples: list[int], depth: int, plan: tuple
+    bits: BitWriter, samples: list[int], depth: int, plan: tuple
 ) -> None:
     """Emit one planned subframe — the exact bit sequence
     _write_subframe produces, folded into a single writer call."""
     mask = (1 << depth) - 1
     k = plan[0]
     if k == "const":
-        bits.write(0, 8)
-        bits.write(int(samples[0]) & mask, depth)
+        _put(bits, 0, 8)
+        _put(bits, int(samples[0]) & mask, depth)
         return
     if k == "verbatim":
         acc, n = 0b000001 << 1, 8
         for s in samples:
             acc = (acc << depth) | (int(s) & mask)
             n += depth
-        bits.write(acc, n)
+        _put(bits, acc, n)
         return
     if k == "fixed":
         _, order, r, res = plan
@@ -781,7 +708,7 @@ def _emit_subframe(
         acc = (acc << (q + 1)) | 1
         acc = (acc << r) | (u & rmask)
         n += q + 1 + r
-    bits.write(acc, n)
+    _put(bits, acc, n)
 
 
 
@@ -808,12 +735,12 @@ def _frame(idx: int, samples: list[int], plan: tuple | None = None) -> bytes:
     if len(samples) != _BLOCK:
         raise ValueError("fixed blocksize: every frame is _BLOCK samples")
     hdr = _frame_header(idx, _CH_MONO)
-    bits = _Bits()
+    bits = BitWriter()
     if plan is None:
         _write_subframe(bits, samples, 16)
     else:
         _emit_subframe(bits, samples, 16, plan)
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -828,7 +755,7 @@ def _frame_stereo(
     decision. Side channels code at 17 bits (RFC 9639 9.2.1).
     ``planned`` carries ((plan, cost) per candidate channel) from the
     batched planner; plan costs equal the scalar encodings'
-    bit_length(), so the assignment choice (min, first-of-equals) is
+    nbits(), so the assignment choice (min, first-of-equals) is
     identical — but only the two WINNING subframes are emitted."""
     if len(left) != _BLOCK or len(right) != _BLOCK:
         raise ValueError("fixed blocksize: every frame is _BLOCK samples")
@@ -849,11 +776,11 @@ def _frame_stereo(
             (_CH_MID_SIDE, c_mid, c_side),
         ]
         best = min(
-            cands, key=lambda c: c[1].bit_length() + c[2].bit_length()
+            cands, key=lambda c: c[1].nbits() + c[2].nbits()
         )
         nib, b1, b2 = best
         hdr = _frame_header(idx, nib)
-        bits = _Bits()
+        bits = BitWriter()
         bits.extend(b1)
         bits.extend(b2)
     else:
@@ -866,10 +793,10 @@ def _frame_stereo(
         ]
         nib, _, ch1, ch2 = min(cands2, key=lambda c: c[1])
         hdr = _frame_header(idx, nib)
-        bits = _Bits()
+        bits = BitWriter()
         for samples_, depth_, plan_ in (ch1, ch2):
             _emit_subframe(bits, samples_, depth_, plan_)
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -917,13 +844,13 @@ def _frame_multi(
     channel picks its own subframe type by exact coded size."""
     nib = len(chans_block) - 1
     hdr = _frame_header(idx, nib)
-    bits = _Bits()
+    bits = BitWriter()
     for ci, ch in enumerate(chans_block):
         if plans is None:
             bits.extend(_coded_subframe(ch, 16))
         else:
             _emit_subframe(bits, ch, 16, plans[ci])
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -1010,21 +937,21 @@ def _signed(v: int, depth: int) -> int:
     return v - (1 << depth) if v & (1 << (depth - 1)) else v
 
 
-def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
+def _read_subframe(br: BitReader, blocksize: int, depth: int) -> list[int]:
     """One subframe at ``depth`` bits per sample, header byte
     included — everything through the bit reader, because a stereo
     frame's second subframe is not byte-aligned."""
-    sub = br.read(8)
+    sub = br.u(8)
     if sub & 0x81:
         raise ValueError("bad subframe header padding/wasted bits")
     stype = (sub >> 1) & 0x3F
     if stype == 0:  # CONSTANT
-        return [_signed(br.read(depth), depth)] * blocksize
+        return [_signed(br.u(depth), depth)] * blocksize
     if stype == 1:  # VERBATIM
-        return [_signed(br.read(depth), depth) for _ in range(blocksize)]
+        return [_signed(br.u(depth), depth) for _ in range(blocksize)]
     if 0b001000 <= stype <= 0b001100:  # FIXED, order 0..4
         order = stype & 0x07
-        warm = [_signed(br.read(depth), depth) for _ in range(order)]
+        warm = [_signed(br.u(depth), depth) for _ in range(order)]
         res = _read_residuals(br, blocksize, order)
         coef = _FIXED_COEF[order]
         out = list(warm)
@@ -1034,12 +961,12 @@ def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
         return out
     if stype & 0b100000:  # LPC, order 1..32 (RFC 9639 9.2.3)
         order = (stype & 0x1F) + 1
-        warm = [_signed(br.read(depth), depth) for _ in range(order)]
-        prec = br.read(4) + 1
+        warm = [_signed(br.u(depth), depth) for _ in range(order)]
+        prec = br.u(4) + 1
         if prec == 16:
             raise ValueError("invalid LPC coefficient precision 0b1111")
-        shift = br.read(5)  # unsigned per RFC 9639 (never negative)
-        qcoef = [_signed(br.read(prec), prec) for _ in range(order)]
+        shift = br.u(5)  # unsigned per RFC 9639 (never negative)
+        qcoef = [_signed(br.u(prec), prec) for _ in range(order)]
         res = _read_residuals(br, blocksize, order)
         out = list(warm)
         for e in res:
@@ -1052,34 +979,34 @@ def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
     raise NotImplementedError(f"reserved subframe type {stype}")
 
 
-def _read_residuals(br: _BitsIn, blocksize: int, order: int) -> list[int]:
+def _read_residuals(br: BitReader, blocksize: int, order: int) -> list[int]:
     """Shared coded-residual section (RFC 9639 9.2.7): rice method
     0/1, 2^k partitions, escape-to-raw-width — used verbatim by both
     FIXED and LPC subframes."""
-    method = br.read(2)
+    method = br.u(2)
     if method > 1:
         raise ValueError(f"reserved residual method {method}")
     pbits = 5 if method else 4
     escape = (1 << pbits) - 1
-    part_order = br.read(4)
+    part_order = br.u(4)
     n_parts = 1 << part_order
     if blocksize % n_parts or (blocksize >> part_order) <= order:
         raise ValueError("partition order does not divide the block")
     res: list[int] = []
     for p in range(n_parts):
         count = (blocksize >> part_order) - (order if p == 0 else 0)
-        param = br.read(pbits)
+        param = br.u(pbits)
         if param == escape:  # raw fixed-width signed residuals
-            width = br.read(5)
+            width = br.u(5)
             for _ in range(count):
-                v = br.read(width) if width else 0
+                v = br.u(width) if width else 0
                 if width and v & (1 << (width - 1)):
                     v -= 1 << width
                 res.append(v)
         else:
             for _ in range(count):
                 q = br.unary()
-                u = (q << param) | (br.read(param) if param else 0)
+                u = (q << param) | (br.u(param) if param else 0)
                 res.append(_unzigzag(u))
     return res
 
@@ -1092,6 +1019,8 @@ def decode_flac(buf: bytes) -> dict:
     streaminfo = None
     comments: dict[str, str] = {}
     while True:
+        if pos + 4 > len(buf):
+            raise ValueError("metadata block header truncated")
         hdr = buf[pos]
         btype, last = hdr & 0x7F, bool(hdr & 0x80)
         blen = int.from_bytes(buf[pos + 1 : pos + 4], "big")
@@ -1113,16 +1042,19 @@ def decode_flac(buf: bytes) -> dict:
                 "md5": body[18:34],
             }
         elif btype == 4:
-            vlen = struct.unpack_from("<I", body, 0)[0]
-            at = 4 + vlen
-            (count,) = struct.unpack_from("<I", body, at)
-            at += 4
-            for _ in range(count):
-                (flen,) = struct.unpack_from("<I", body, at)
+            try:
+                vlen = struct.unpack_from("<I", body, 0)[0]
+                at = 4 + vlen
+                (count,) = struct.unpack_from("<I", body, at)
                 at += 4
-                k, _, v = body[at : at + flen].decode().partition("=")
-                comments[k.upper()] = v
-                at += flen
+                for _ in range(count):
+                    (flen,) = struct.unpack_from("<I", body, at)
+                    at += 4
+                    k, _, v = body[at : at + flen].decode().partition("=")
+                    comments[k.upper()] = v
+                    at += flen
+            except struct.error:
+                raise ValueError("VORBIS_COMMENT block truncated") from None
         elif btype not in (1, 2, 3, 5, 6):
             raise ValueError(f"reserved metadata block type {btype}")
         pos += 4 + blen
@@ -1137,6 +1069,8 @@ def decode_flac(buf: bytes) -> dict:
     channels = streaminfo["channels"]
     while pos < len(buf):
         start = pos
+        if pos + 5 > len(buf):
+            raise ValueError(f"frame header truncated at {pos}")
         if buf[pos] != 0xFF or buf[pos + 1] & 0xFE != 0xF8:
             raise ValueError(f"lost frame sync at {pos}")
         if buf[pos + 2] != 0x69:
@@ -1148,12 +1082,14 @@ def decode_flac(buf: bytes) -> dict:
         idx, at = _read_utf8_number(buf, pos + 4)
         if idx != n_frames:
             raise ValueError("frame number out of sequence")
+        if at + 2 > len(buf):
+            raise ValueError(f"frame header truncated at {pos}")
         blocksize = buf[at] + 1
         at += 1
         if crc8(buf[start:at]) != buf[at]:
             raise ValueError(f"frame header CRC-8 mismatch at {start}")
         at += 1
-        br = _BitsIn(buf, at)
+        br = BitReader(buf, at * 8)
         if nib <= 0b0111:  # 1-8 independently coded channels
             if nib + 1 != channels:
                 raise ValueError(
@@ -1194,7 +1130,8 @@ def decode_flac(buf: bytes) -> dict:
             frame_samples = [
                 v for pair in zip(left, right) for v in pair
             ]
-        at = br.align()
+        br.align()
+        at = br.pos >> 3
         if crc16(buf[start:at]) != int.from_bytes(buf[at : at + 2], "big"):
             raise ValueError(f"frame CRC-16 mismatch at {start}")
         at += 2

@@ -10,8 +10,9 @@ reference decoder accepts):
 - Annex B NAL framing: start codes, forbidden_zero_bit / nal_ref_idc
   / nal_unit_type, and EMULATION PREVENTION (0x000003 insertion and
   removal, with the strict followed-by-<=0x03 rule);
-- Exp-Golomb bit coding (ue(v)/se(v)), MSB-first RBSP bit I/O,
-  rbsp_trailing_bits;
+- Exp-Golomb bit coding (ue(v)/se(v)) and rbsp_trailing_bits, through
+  the codecs' shared MSB-first ``bitio.BitWriter``/``BitReader``
+  (emulation prevention stays here, on whole RBSP byte strings);
 - the codec family's shared header layer: SPS (Baseline with
   pic_order_cnt_type 2, or Main with type 0 for B streams;
   frame_mbs_only, FRAME CROPPING for non-multiple-of-16 dims in
@@ -47,129 +48,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-# --- RBSP bit I/O -----------------------------------------------------------
-
-
-class _BitW:
-    """r14: ``u`` no longer splits bytes per call — pending bits pile
-    up in the integer accumulator and are flushed to the bytearray in
-    one ``to_bytes`` per ~16 bytes (the per-call byte loop was ~10%
-    of CAVLC encode CPU across the H.264 queries; a 128-bit flush
-    threshold measured fastest — larger ones make every call shift a
-    big accumulator). ``n`` counts ALL
-    pending bits, so external ``n % 8`` alignment checks keep their
-    meaning; the byte stream is unchanged."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def u(self, v: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (v & ((1 << bits) - 1))
-        n = self.n + bits
-        if n >= 128:
-            rem = n & 7
-            self.out += (self.acc >> rem).to_bytes((n - rem) >> 3, "big")
-            self.acc &= (1 << rem) - 1
-            n = rem
-        self.n = n
-
-    def ue(self, v: int) -> None:
-        # Exp-Golomb codeword = (nbits-1) zeros then the nbits-bit
-        # code — exactly `code` written in a 2*nbits-1 bit field.
-        code = v + 1
-        self.u(code, 2 * code.bit_length() - 1)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def _flush(self) -> None:
-        if self.n >= 8:
-            rem = self.n & 7
-            self.out += (
-                (self.acc >> rem).to_bytes((self.n - rem) >> 3, "big")
-            )
-            self.acc &= (1 << rem) - 1
-            self.n = rem
-
-    def align_zero(self) -> None:
-        pad = (-self.n) % 8
-        if pad:
-            self.acc <<= pad
-            self.n += pad
-        self._flush()
-
-    def trailing(self) -> None:
-        self.u(1, 1)
-        self.align_zero()
-
-    def bytes_(self) -> bytes:
-        self._flush()
-        assert self.n == 0, "unaligned RBSP"
-        return bytes(self.out)
-
-
-class _BitR:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
-
-    def u(self, bits: int) -> int:
-        # Batched extraction: pull the spanned bytes in one slice and
-        # shift — O(bytes spanned), not O(bits). The hot loops (CAVLC
-        # levels, VLC tables, slice headers) funnel through here.
-        pos = self.pos
-        end = pos + bits
-        if bits == 1:  # single-flag reads dominate; skip the slice
-            try:
-                byte = self.data[pos >> 3]
-            except IndexError:
-                raise ValueError(
-                    "bitstream exhausted mid-element"
-                ) from None
-            self.pos = end
-            return (byte >> (7 - (pos & 7))) & 1
-        last = (end + 7) >> 3
-        if last > len(self.data):
-            # truncated/corrupt stream: the reader ran dry — loud
-            # ValueError, zero cost on the happy path
-            raise ValueError("bitstream exhausted mid-element")
-        self.pos = end
-        chunk = int.from_bytes(self.data[pos >> 3 : last], "big")
-        return (chunk >> ((last << 3) - end)) & ((1 << bits) - 1)
-
-    def ue(self) -> int:
-        # r13: one 48-bit window + bit_length replaces the per-bit
-        # zero-prefix scan (the prefix is capped at 32, so six bytes
-        # always cover it when the stream has the bits; a shorter
-        # window means the stream tail).
-        data = self.data
-        pos = self.pos
-        n = len(data) << 3
-        if pos >= n:
-            raise ValueError("bitstream exhausted mid-element")
-        byte_i = pos >> 3
-        win = int.from_bytes(data[byte_i : byte_i + 6], "big")
-        m = ((min(byte_i + 6, len(data)) - byte_i) << 3) - (pos & 7)
-        val = win & ((1 << m) - 1)  # the next m real bits
-        if val == 0:
-            if m > 32:
-                raise ValueError("bad Exp-Golomb code")
-            raise ValueError("bitstream exhausted mid-element")
-        zeros = m - val.bit_length()
-        if zeros > 32:
-            raise ValueError("bad Exp-Golomb code")
-        self.pos = pos + zeros + 1
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 
 # --- NAL encapsulation ------------------------------------------------------
 
@@ -280,7 +162,7 @@ def _sps_rbsp(
     is decode order) is Baseline. Type 0 carries a _POC_BITS-bit
     pic_order_cnt_lsb in every slice so B pictures can reorder
     output, and B slices need Main profile."""
-    sps = _BitW()
+    sps = BitWriter()
     if poc_type == 0:
         sps.u(77, 8)  # profile_idc: Main
         sps.u(0x40, 8)  # constraint_set1_flag only
@@ -321,7 +203,7 @@ def _pps_rbsp(
     QP offsets zero. ``deblock_control`` lets slice headers carry
     disable_deblocking_filter_idc; with idc 1 a stream's conformant
     output is this family's unfiltered reconstruction."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)  # pic_parameter_set_id
     pps.ue(0)  # seq_parameter_set_id
     pps.u(int(cabac), 1)  # entropy_coding_mode_flag
@@ -385,7 +267,7 @@ def _resolve_pwt(w: dict) -> dict:
             "l1": [entry(e) for e in w["l1"]]}
 
 
-def _write_pwt(sl: _BitW, w: dict, n_l0: int, n_l1: int) -> None:
+def _write_pwt(sl: BitWriter, w: dict, n_l0: int, n_l1: int) -> None:
     """Write a normalised table: the flags come from the given
     weights, the values from the resolved table the predictor uses."""
     sl.ue(w["luma_denom"])
@@ -405,7 +287,7 @@ def _write_pwt(sl: _BitW, w: dict, n_l0: int, n_l1: int) -> None:
                 sl.se(v[k])
 
 
-def _parse_pwt(r: _BitR, n_l0: int, n_l1: int) -> dict:
+def _parse_pwt(r: BitReader, n_l0: int, n_l1: int) -> dict:
     """Read a pred_weight_table; returns it resolved."""
     w = {"luma_denom": r.ue(), "chroma_denom": r.ue()}
     if w["luma_denom"] > 7 or w["chroma_denom"] > 7:
@@ -427,7 +309,7 @@ def _parse_pwt(r: _BitR, n_l0: int, n_l1: int) -> dict:
 
 
 def _slice_header(
-    sl: _BitW, qp: int = 26, kind: str = "i", idr: bool = True,
+    sl: BitWriter, qp: int = 26, kind: str = "i", idr: bool = True,
     frame_num: int = 0, poc_lsb: int | None = None, nra: int = 1,
     pwt: dict | None = None, spatial: bool = True, ref: bool = True,
     cabac: bool = False, deblock_idc: int | None = None,
@@ -500,7 +382,7 @@ def encode_h264_ipcm(
     cbp = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
     crp = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl)
     for my in range(mbh):
         for mx in range(mbw):
@@ -550,7 +432,7 @@ def _split_nals(data: bytes) -> list[bytes]:
 def _parse_sps(rbsp: bytes) -> dict:
     """Parse the SPS fields this codec family needs (shared with
     h264_intra). Raises on high-profile / interlaced streams."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     profile = r.u(8)
     r.u(8)  # constraint flags
     r.u(8)  # level
@@ -596,7 +478,7 @@ def _parse_sps(rbsp: bytes) -> dict:
 
 def _parse_pps(rbsp: bytes) -> dict:
     """Parse a PPS up to the fields the slice header depends on."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     r.ue()  # pic_parameter_set_id
     r.ue()  # seq_parameter_set_id
     cabac = bool(r.u(1))
@@ -621,7 +503,7 @@ def _parse_pps(rbsp: bytes) -> dict:
     )
 
 
-def _parse_slice_header(r: _BitR, sps: dict, pps: dict, nal_hdr: int) -> dict:
+def _parse_slice_header(r: BitReader, sps: dict, pps: dict, nal_hdr: int) -> dict:
     """Parse a slice header of the NAL whose first byte is
     ``nal_hdr``; leaves ``r`` at the first slice_data() element.
     Returns kind ('i'/'p'/'b'), qp, frame_num, poc (0 under
@@ -734,7 +616,7 @@ def decode_h264_ipcm(
         if nal_hdr & 0x1F == 5:
             if pps["cabac"]:
                 raise ValueError("CABAC PPS unsupported (I_PCM/CAVLC only)")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             _parse_slice_header(r, sps, pps, nal_hdr)
             mbw, mbh = sps["mbw"], sps["mbh"]
             yp = np.zeros((mbh * 16, mbw * 16), np.uint8)

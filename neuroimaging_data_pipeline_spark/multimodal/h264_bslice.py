@@ -96,9 +96,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _nal,
     _norm_pwt,
     _parse_slice_header,
@@ -443,7 +445,7 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
         weights = None
     if col is None:
         col = _intra_motion(mbw, mbh)
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp, "b", idr=False, frame_num=frame_num,
                   poc_lsb=poc_lsb, pwt=wtab,
                   spatial=direct_mode == "spatial", ref=is_ref,
@@ -1101,7 +1103,7 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
             if ei != 0:
                 raise ValueError("IDR only as the first entry")
             planes = entry[1]
-            sl = _BitW()
+            sl = BitWriter()
             _slice_header(sl, qp, poc_lsb=0, deblock_idc=d_idc,
                           deblock_offs=deblock_offsets)
             recon = _encode_i16x16_slice(sl, planes[0], planes[1],
@@ -1191,7 +1193,7 @@ def decode_h264_b_stream(payload: bytes):
         idr = nal_hdr & 0x1F == 5
         if not idr and not ref_dpb:
             raise ValueError("coded slice before references exist")
-        r = _BitR(rbsp)
+        r = BitReader(rbsp)
         hdr = _parse_slice_header(r, sps, pps, nal_hdr)
         qp, poc, kind = hdr["qp"], hdr["poc"], hdr["kind"]
         # idc 2 == idc 0 for single-slice frames (no slice-boundary

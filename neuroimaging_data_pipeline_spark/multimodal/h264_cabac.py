@@ -50,9 +50,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _check_planes,
     _nal,
     _parse_slice_header,
@@ -235,12 +237,12 @@ class _Ctx:
 
 
 class _Enc:
-    """Arithmetic encoder (9.3.4): writes into a _BitW that must be
+    """Arithmetic encoder (9.3.4): writes into a BitWriter that must be
     byte-aligned (cabac_alignment_one_bit already written).
 
     r14: the hot paths (``decision``, ``bypass``) inline the
     renormalization loop and fold emitted bits into a local integer
-    accumulator that is flushed to the _BitW in chunks — one writer
+    accumulator that is flushed to the BitWriter in chunks — one writer
     call per ~KB instead of per bit (the r13 profile charged ~40% of
     m33's encode CPU to the per-bit _put/_renorm/u call chain). The
     put/outstanding semantics — including the swallowed FIRST bit and
@@ -257,7 +259,7 @@ class _Enc:
     _LIM = 512
     _KEEP = 64
 
-    def __init__(self, w: _BitW) -> None:
+    def __init__(self, w: BitWriter) -> None:
         self.w = w
         self.low = 0
         self.range = 510
@@ -786,7 +788,7 @@ def encode_h264_cabac_intra(
     encoders."""
     if i4x4_mode not in _MODE_NEEDS:
         raise ValueError("luma 4x4 mode must be 0..8")
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp, cabac=True, deblock_idc=1)
     ry, rcb, rcr = _encode_idr_cabac(sl, y, cb, cr, qp, i4x4_mode)
     h, w = ry.shape
@@ -798,7 +800,7 @@ def encode_h264_cabac_intra(
     return stream, ry, rcb, rcr
 
 
-def _encode_idr_cabac(sl: _BitW, y, cb, cr, qp: int, i4x4_mode: int = 2):
+def _encode_idr_cabac(sl: BitWriter, y, cb, cr, qp: int, i4x4_mode: int = 2):
     """Write the CABAC slice_data() of the mixed Intra_16x16 / I_4x4
     IDR picture after the slice header already in ``sl`` and close
     the RBSP. Returns the decoder-mirrored recon planes, cropped to
@@ -1036,7 +1038,7 @@ def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarra
                 "CAVLC PPS given to the CABAC decoder — use "
                 "h264_intra.decode_h264_frame, which dispatches"
             )
-        r = _BitR(rbsp)
+        r = BitReader(rbsp)
         qp = _parse_slice_header(r, sps, pps, nal_hdr)["qp"]
         planes = _decode_idr_cabac(rbsp, r.pos, sps, qp)
     if planes is None:

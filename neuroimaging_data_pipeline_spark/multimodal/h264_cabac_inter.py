@@ -46,9 +46,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _nal,
     _parse_slice_header,
     _pps_rbsp,
@@ -412,7 +414,7 @@ def encode_h264_cabac_p_gop(
     mbw, mbh = w // 16, h // 16
     qpc = _chroma_qp(qp)
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp, cabac=True, deblock_idc=1)
     r0y, r0cb, r0cr = _encode_idr_cabac(sl, y0, cb0, cr0, qp)
     stream = (
@@ -433,7 +435,7 @@ def encode_h264_cabac_p_gop(
         recon = (ry, rcb, rcr)
         mvs = _MvState(mbw, mbh)
         st = _MbStateP(mbw, mbh)
-        sl = _BitW()
+        sl = BitWriter()
         _slice_header(sl, qp, "p", idr=False, frame_num=fi, nra=nra,
                       cabac=True, deblock_idc=1)
         ctxs = make_p_ctx(qp, init_table)
@@ -858,7 +860,7 @@ def decode_h264_cabac_p(
         idr = nal_hdr & 0x1F == 5
         if not idr and not refs:
             raise ValueError("P slice before any reference frame")
-        r = _BitR(rbsp)
+        r = BitReader(rbsp)
         hdr = _parse_slice_header(r, sps, pps, nal_hdr)
         qp, nra = hdr["qp"], hdr["nra"]
         if idr:

@@ -89,9 +89,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _nal,
     _norm_pwt,
     _parse_slice_header,
@@ -469,7 +471,7 @@ _SUB_TYPE = {"8x8": 0, "8x4": 1, "4x8": 2, "4x4": 3}
 _SUB_TYPE_INV = {v: k for k, v in _SUB_TYPE.items()}
 
 
-def _write_te_ref(sl: _BitW, v: int, nra: int) -> None:
+def _write_te_ref(sl: BitWriter, v: int, nra: int) -> None:
     """ref_idx_l0 as te(v) (9.1): range 1 -> one inverted bit,
     range > 1 -> ue(v), range 0 -> absent."""
     if nra == 2:
@@ -478,7 +480,7 @@ def _write_te_ref(sl: _BitW, v: int, nra: int) -> None:
         sl.ue(v)
 
 
-def _read_te_ref(r: _BitR, nra: int) -> int:
+def _read_te_ref(r: BitReader, nra: int) -> int:
     if nra == 2:
         return 1 - r.u(1)
     if nra > 2:
@@ -1208,7 +1210,7 @@ def _encode_p_frame(
     mvs = _MvState(mbw, mbh)
     pweights = _resolve_pwt(wtab) if wtab is not None else None
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp, "p", idr=False, frame_num=frame_num,
                   poc_lsb=poc_lsb, nra=nra, pwt=wtab,
                   deblock_idc=deblock_idc, deblock_offs=deblock_offs)
@@ -1421,7 +1423,7 @@ def encode_h264_p_gop(
         wtab = _norm_pwt(weights, [
             user[ri] if ri < len(user) else {} for ri in range(num_refs)
         ])
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp, deblock_idc=d_idc, deblock_offs=deblock_offsets)
     r0y, r0cb, r0cr = _encode_i16x16_slice(sl, y0, cb0, cr0, qp)
     stream = (
@@ -1506,7 +1508,7 @@ def decode_h264_sequence(
         idr = nal_hdr & 0x1F == 5
         if not idr and not refs:
             raise ValueError("P slice before any reference frame")
-        r = _BitR(rbsp)
+        r = BitReader(rbsp)
         hdr = _parse_slice_header(r, sps, pps, nal_hdr)
         qp, nra = hdr["qp"], hdr["nra"]
         # idc 2 == idc 0 for single-slice frames (there are no
@@ -1548,7 +1550,7 @@ def decode_h264_sequence(
 
 
 def _decode_p_frame(
-    r: _BitR, sps: dict, qp: int, refs: list, nra: int,
+    r: BitReader, sps: dict, qp: int, refs: list, nra: int,
     return_motion: bool = False,
     weights: dict | None = None,
 ):

@@ -69,9 +69,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+    prefix_table,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _check_planes,
     _nal,
     _parse_slice_header,
@@ -384,42 +387,14 @@ def _ct_table(nc: int) -> dict | None:
     return None  # FLC
 
 
-def _invert(table: dict | list) -> dict:
-    """Decode map keyed by (codeword length, codeword value) — the
+def _dec_pair(table: dict | list) -> tuple[dict, list]:
+    """Decode table keyed by (codeword length, codeword value) — the
     int pair a bit-walk accumulates, so lookups never build strings.
     Prefix-freedom makes the pair unique."""
     items = table.items() if isinstance(table, dict) else enumerate(table)
-    return {(len(bits), int(bits, 2)): key for key, bits in items}
-
-
-def _lut8(dec: dict) -> list:
-    """256-entry first-level decode LUT over the next 8 bits.
-
-    NOTE (ADVICE r13): this 8-bit first-level LUT builder has siblings
-    in mp3l3.py (_lut8, (len, code)-keyed) and jpeg.py (_dec_tab,
-    (code, length)-keyed) — a fix or extension to the scheme must be
-    propagated to all three; the key orders differ by module on
-    purpose (each mirrors its table's native form).
-    (r13, guide §4.2 per-task work): entry = (decoded value, code
-    length) for codes of <= 8 bits, None for longer codes. Built once
-    at import; prefix-freedom means the shortest dict hit on any
-    8-bit window IS the transmitted code, so the hot _read_vlc path
-    collapses to one int.from_bytes + one list index. Codes longer
-    than 8 bits (the cold tail of every CAVLC table) fall back to the
-    original bit walk."""
-    lut: list = [None] * 256
-    for p8 in range(256):
-        for ln in range(1, 9):
-            hit = dec.get((ln, p8 >> (8 - ln)))
-            if hit is not None:
-                lut[p8] = (hit, ln)
-                break
-    return lut
-
-
-def _dec_pair(table: dict | list) -> tuple[dict, list]:
-    dec = _invert(table)
-    return dec, _lut8(dec)
+    return prefix_table(
+        {(len(bits), int(bits, 2)): key for key, bits in items}
+    )
 
 
 def _to_int_table(table: dict | list) -> dict:
@@ -440,59 +415,15 @@ _TZC_ENC = {tc: _to_int_table(v) for tc, v in _TZC.items()}
 _RUN_ENC = {zl: _to_int_table(v) for zl, v in _RUN.items()}
 
 
-def _write_bits(w: _BitW, bits: str) -> None:
+def _write_bits(w: BitWriter, bits: str) -> None:
     # one batched write: the string is the MSB-first field value
     w.u(int(bits, 2), len(bits))
-
-
-def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
-    # r13 fast path: one 16-bit window + one 256-entry LUT probe
-    # resolves every code of <= 8 bits (the hot majority of all four
-    # CAVLC tables); longer codes fall back to the original
-    # bit-at-a-time walk, resumed from the already-accumulated 8-bit
-    # prefix. Near the stream tail the window is zero-padded, which
-    # is safe: prefix-freedom means a padded LUT hit is either the
-    # true (short) in-bounds code or fails the pos+len bound below.
-    dec, lut = dtab
-    data, pos = r.data, r.pos
-    n = len(data) << 3
-    if pos >= n:
-        raise ValueError("bitstream exhausted mid-element")
-    byte_i = pos >> 3
-    win = int.from_bytes(data[byte_i : byte_i + 2], "big")
-    pad = byte_i + 2 - len(data)
-    if pad > 0:
-        win <<= pad << 3
-    p8 = (win >> (8 - (pos & 7))) & 0xFF
-    hit = lut[p8]
-    if hit is not None:
-        val, ln = hit
-        pos += ln
-        if pos > n:
-            raise ValueError("bitstream exhausted mid-element")
-        r.pos = pos
-        return val
-    # cold tail: code longer than 8 bits (LUT miss implies no valid
-    # code of <= 8 bits prefixes this window, so 8 real bits exist
-    # unless the stream is truncated — caught by the bound below)
-    v = p8
-    pos += 8
-    for ln in range(9, 21):
-        if pos >= n:
-            raise ValueError("bitstream exhausted mid-element")
-        v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
-        pos += 1
-        hit = dec.get((ln, v))
-        if hit is not None:
-            r.pos = pos
-            return hit
-    raise ValueError(f"invalid {what} VLC code")
 
 
 # --- CAVLC residual block codec (clause 9.2) ----------------------------------
 
 
-def _encode_level(w: _BitW, level: int, suffix_len: int) -> None:
+def _encode_level(w: BitWriter, level: int, suffix_len: int) -> None:
     # a zero-prefix-then-one unary codeword of p zeros is the value 1
     # in a (p+1)-bit field — one batched write per element
     code = 2 * level - 2 if level > 0 else -2 * level - 1
@@ -523,31 +454,10 @@ def _encode_level(w: _BitW, level: int, suffix_len: int) -> None:
     w.u(code, size)
 
 
-def _decode_level(r: _BitR, suffix_len: int) -> int:
-    # r13: the zero-prefix scan is one 56-bit window + bit_length —
-    # a single int.from_bytes replaces the per-bit loop (level_prefix
-    # is capped at 41, so a 7-byte window always covers it when the
-    # stream has the bits; a shorter window means the stream tail).
-    data, pos = r.data, r.pos
-    n = len(data) << 3
-    if pos >= n:
-        raise ValueError("bitstream exhausted mid-element")
-    byte_i = pos >> 3
-    win = int.from_bytes(data[byte_i : byte_i + 7], "big")
-    m = ((min(byte_i + 7, len(data)) - byte_i) << 3) - (pos & 7)
-    val = win & ((1 << m) - 1)  # the next m real bits
-    if val == 0:
-        # no marker bit in the window: >=41 zero bits means the
-        # prefix exceeds the cap (the pre-r13 scan raised on the 41st
-        # zero regardless of what followed); fewer means the stream
-        # ran dry mid-prefix
-        if m >= 41:
-            raise ValueError("bad level_prefix")
-        raise ValueError("bitstream exhausted mid-element")
-    prefix = m - val.bit_length()
+def _decode_level(r: BitReader, suffix_len: int) -> int:
+    prefix = r.unary()
     if prefix > 40:
         raise ValueError("bad level_prefix")
-    r.pos = pos + prefix + 1
     if prefix == 14 and suffix_len == 0:
         code = 14 + r.u(4)
     elif prefix >= 15:
@@ -569,7 +479,7 @@ def _level_bits(level: int, suffix_len: int) -> tuple[int, int]:
     """The (field value, field width) pair for one level codeword —
     _encode_level's ladder with the 1-2 writes pre-merged so callers
     can fold a whole block's codewords into one batched bit write
-    (r13: the per-element _BitW.u calls were ~13% of encode CPU)."""
+    (r13: the per-element BitWriter.u calls were ~13% of encode CPU)."""
     code = 2 * level - 2 if level > 0 else -2 * level - 1
     if suffix_len == 0:
         if code < 14:
@@ -595,13 +505,13 @@ def _level_bits(level: int, suffix_len: int) -> tuple[int, int]:
 
 
 def encode_residual_block(
-    w: _BitW, coeffs: list[int], nc: int, max_coeff: int
+    w: BitWriter, coeffs: list[int], nc: int, max_coeff: int
 ) -> int:
     """CAVLC-encode one residual block (coeffs in zigzag scan order,
     length max_coeff). Returns TotalCoeff for nnz tracking. The
     block's codewords (coeff_token, signs, levels, total_zeros,
     run_before) are accumulated into one integer and emitted with a
-    SINGLE _BitW.u call (r13) — bit-identical output, ~10x fewer
+    SINGLE BitWriter.u call (r13) — bit-identical output, ~10x fewer
     writer calls on dense blocks."""
     nz = [i for i, c in enumerate(coeffs) if c]
     total = len(nz)
@@ -662,7 +572,7 @@ def encode_residual_block(
 
 
 def decode_residual_block(
-    r: _BitR, nc: int, max_coeff: int
+    r: BitReader, nc: int, max_coeff: int
 ) -> tuple[list[int], int]:
     """Decode one CAVLC residual block; returns (zigzag coeffs,
     TotalCoeff)."""
@@ -671,7 +581,7 @@ def decode_residual_block(
         v = r.u(6)
         t1s, total = (0, 0) if v == 3 else (v & 3, (v >> 2) + 1)
     else:
-        t1s, total = _read_vlc(r, _CT_DEC[id(table)], "coeff_token")
+        t1s, total = r.prefix(_CT_DEC[id(table)])
     coeffs = [0] * max_coeff
     if total == 0:
         return coeffs, 0
@@ -690,7 +600,7 @@ def decode_residual_block(
             suffix_len += 1
     if total < max_coeff:
         tz_dec = _TZC_DEC if max_coeff == 4 else _TZ4_DEC
-        total_zeros = _read_vlc(r, tz_dec[total], "total_zeros")
+        total_zeros = r.prefix(tz_dec[total])
     else:
         total_zeros = 0
     zeros_left = total_zeros
@@ -711,7 +621,7 @@ def decode_residual_block(
         if k == total - 1:
             break
         run = (
-            _read_vlc(r, _RUN_DEC[min(zeros_left, 7)], "run_before")
+            r.prefix(_RUN_DEC[min(zeros_left, 7)])
             if zeros_left > 0
             else 0
         )
@@ -1142,7 +1052,7 @@ def encode_h264_i16x16(
         raise ValueError("Intra_16x16 pred_mode must be 0..3")
     if chroma_mode not in (0, 1, 2, 3):
         raise ValueError("chroma_mode must be 0..3")
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp)
     ry, rcb, rcr = _encode_i16x16_slice(
         sl, y, cb, cr, qp, pred_mode, chroma_mode
@@ -1157,7 +1067,7 @@ def encode_h264_i16x16(
 
 
 def _encode_i16x16_slice(
-    sl: _BitW,
+    sl: BitWriter,
     y: np.ndarray,
     cb: np.ndarray | None,
     cr: np.ndarray | None,
@@ -1347,7 +1257,7 @@ def encode_h264_i4x4(
     modes = np.full((mbh * 4, mbw * 4), -1, np.int64)
     before = _decoded_before_factory(mbw)
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp)
     for my in range(mbh):
         for mx in range(mbw):
@@ -1513,7 +1423,7 @@ def decode_h264_frame(
             )
 
             return decode_h264_cabac(bytes(payload))
-        r = _BitR(rbsp)
+        r = BitReader(rbsp)
         qp = _parse_slice_header(r, sps, pps, nal_hdr)["qp"]
         planes = _decode_intra_slice(r, sps, qp)
     if planes is None:
@@ -1521,7 +1431,7 @@ def decode_h264_frame(
     return planes
 
 
-def _decode_intra_slice(r: _BitR, sps: dict, qp: int):
+def _decode_intra_slice(r: BitReader, sps: dict, qp: int):
     """Decode the CAVLC slice_data() of an I slice (I_PCM,
     Intra_16x16 and I_4x4 macroblocks) from ``r``, positioned after
     the slice header. Returns the cropped (Y, Cb, Cr) planes."""

@@ -21,13 +21,16 @@ Real ITU-T T.81 coverage (grown r4 round by round):
   same-subsampling baseline once all scans arrive, pinned by
   bit-equality tests;
 - encoder: level shift, 8x8 forward DCT (matrix form), quantization,
-  zigzag, differential-DC + run-length-AC Huffman entropy coding with
-  byte stuffing, standard JFIF marker stream;
+  zigzag, differential-DC + run-length-AC Huffman entropy coding into
+  the codecs' shared ``bitio.BitWriter``, then byte stuffing and RSTm
+  markers as one byte pass over each finished scan (``_scan_bytes``),
+  standard JFIF marker stream;
 - decoder: marker walk, DQT/DHT/SOF/SOS parsing, canonical Huffman
   table reconstruction FROM THE BITSTREAM's DHT segments (no
-  hardcoded-table shortcut — any spec-valid table decodes), stuffed-
-  byte-aware bit reader, DC prediction, dequantize, de-zigzag,
-  inverse DCT, level shift, clamp, edge-padding crop.
+  hardcoded-table shortcut — any spec-valid table decodes), each scan
+  split at its markers and unstuffed (``_split_scan``) before the
+  shared ``bitio.BitReader`` decodes it, DC prediction, dequantize,
+  de-zigzag, inverse DCT, level shift, clamp, edge-padding crop.
 
 - 12-BIT EXTENDED SEQUENTIAL (SOF1, r6): grayscale 12-bit samples
   with 16-bit (Pq=1) quantization tables and optimal two-pass
@@ -72,6 +75,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+    canonical_codes,
+    prefix_table,
+)
 
 # --- 8x8 DCT-II basis (orthonormal): FDCT = C @ b @ C.T ---------------------
 
@@ -125,56 +135,29 @@ _AC_VALS = [
 ]
 
 
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) per the JPEG canonical construction."""
-    codes: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
+def _restart(bw: BitWriter, rst: list[int]) -> None:
+    """End a restart interval: pad with 1-bits to a byte boundary (the
+    pad width masks 0xFF) and note the offset where ``_scan_bytes``
+    puts the RSTm marker."""
+    bw.u(0xFF, -bw.n % 8)
+    rst.append(bw.nbits() >> 3)
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-        # drop consumed high bits — an unmasked acc grows into an
-        # unbounded bigint whose full-width shifts make the encoder
-        # O(n^2) in scan size
-        self.acc &= (1 << self.nbits) - 1
-
-    def align(self) -> None:
-        """Pad with 1s to a byte boundary (per spec) without ending
-        the scan — used before emitting a restart marker."""
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.put((1 << pad) - 1, pad)
-
-    def put_marker(self, marker: int) -> None:
-        """Emit a raw two-byte marker into the scan (NOT byte-stuffed
-        — markers are the one place a bare 0xFF belongs)."""
-        self.align()
-        self.out += bytes([0xFF, marker & 0xFF])
-
-    def flush(self) -> bytes:
-        self.align()
-        return bytes(self.out)
+def _scan_bytes(bw: BitWriter, rst: list[int] = ()) -> bytes:
+    """Finish an entropy-coded scan: pad with 1-bits, byte-stuff each
+    restart interval (0xFF -> 0xFF 0x00) and put RST(k mod 8) at the
+    k-th offset of ``rst``. Markers are the one place a bare 0xFF
+    belongs, so they are never stuffed."""
+    bw.u(0xFF, -bw.n % 8)
+    data = bw.bytes_()
+    out = bytearray()
+    start = 0
+    for k, end in enumerate(rst):
+        out += data[start:end].replace(b"\xff", b"\xff\x00")
+        out += bytes((0xFF, 0xD0 + k % 8))
+        start = end
+    out += data[start:].replace(b"\xff", b"\xff\x00")
+    return bytes(out)
 
 
 def _category(v: int) -> int:
@@ -182,7 +165,7 @@ def _category(v: int) -> int:
 
 
 def _encode_block(
-    bw: _BitWriter,
+    bw: BitWriter,
     block: np.ndarray,
     qflat: np.ndarray,
     dc_codes: dict,
@@ -196,9 +179,9 @@ def _encode_block(
     diff = int(zz[0]) - prev_dc
     prev_dc = int(zz[0])
     s = _category(diff)
-    bw.put(*dc_codes[s])
+    bw.u(*dc_codes[s])
     if s:
-        bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        bw.u(diff if diff > 0 else diff + (1 << s) - 1, s)
     run = 0
     for i in range(1, 64):
         v = int(zz[i])
@@ -206,14 +189,14 @@ def _encode_block(
             run += 1
             continue
         while run > 15:
-            bw.put(*ac_codes[0xF0])
+            bw.u(*ac_codes[0xF0])
             run -= 16
         s = _category(v)
-        bw.put(*ac_codes[(run << 4) | s])
-        bw.put(v if v > 0 else v + (1 << s) - 1, s)
+        bw.u(*ac_codes[(run << 4) | s])
+        bw.u(v if v > 0 else v + (1 << s) - 1, s)
         run = 0
     if run:
-        bw.put(*ac_codes[0x00])  # EOB
+        bw.u(*ac_codes[0x00])  # EOB
     return prev_dc
 
 
@@ -247,9 +230,10 @@ def encode_jpeg_gray(
     )
     px = _pad8(pixels).astype(np.float64) - 128.0
 
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
-    bw = _BitWriter()
+    dc_codes = canonical_codes(_DC_BITS, _DC_VALS)
+    ac_codes = canonical_codes(_AC_BITS, _AC_VALS)
+    bw = BitWriter()
+    rst: list[int] = []
     prev_dc = 0
     qflat = q.reshape(-1)[_ZIGZAG]
     n_mcus_x = px.shape[1] // 8
@@ -257,7 +241,7 @@ def encode_jpeg_gray(
     for by in range(px.shape[0] // 8):
         for bx in range(n_mcus_x):
             if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.put_marker(0xD0 + (mcu // restart_interval - 1) % 8)
+                _restart(bw, rst)
                 prev_dc = 0
             prev_dc = _encode_block(
                 bw,
@@ -268,7 +252,7 @@ def encode_jpeg_gray(
                 prev_dc,
             )
             mcu += 1
-    scan = bw.flush()
+    scan = _scan_bytes(bw, rst)
 
     out = bytearray()
     out += b"\xff\xd8"  # SOI
@@ -401,16 +385,17 @@ def encode_jpeg_color(
             np.pad(plane, ((0, th - ph), (0, tw - pw)), mode="edge") - 128.0
         )
 
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
-    bw = _BitWriter()
+    dc_codes = canonical_codes(_DC_BITS, _DC_VALS)
+    ac_codes = canonical_codes(_AC_BITS, _AC_VALS)
+    bw = BitWriter()
+    rst: list[int] = []
     prev_dc = [0, 0, 0]
     qflat = q.reshape(-1)[_ZIGZAG]
     mcu = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.put_marker(0xD0 + (mcu // restart_interval - 1) % 8)
+                _restart(bw, rst)
                 prev_dc = [0, 0, 0]
             mcu += 1
             for c, (fh, fv) in enumerate(factors):
@@ -427,7 +412,7 @@ def encode_jpeg_color(
                             ac_codes,
                             prev_dc[c],
                         )
-    scan = bw.flush()
+    scan = _scan_bytes(bw, rst)
 
     qbytes = q.reshape(-1)[_ZIGZAG].astype(np.uint8).tobytes()
     sof_comps = b"".join(
@@ -571,7 +556,8 @@ def _dc_unit_order(
 
 
 def _encode_dc_scan(
-    bw: _BitWriter,
+    bw: BitWriter,
+    rst: list[int],
     comps: list[np.ndarray],
     comp_idx: list[int],
     ah: int,
@@ -585,11 +571,9 @@ def _encode_dc_scan(
 ) -> None:
     units = _dc_unit_order(comp_idx, factors, mcus_y, mcus_x, true_grid)
     prev_dc = {c: 0 for c in comp_idx}
-    rst_m = 0
     for ui, unit in enumerate(units):
         if restart_interval and ui and ui % restart_interval == 0:
-            bw.put_marker(0xD0 + rst_m)
-            rst_m = (rst_m + 1) % 8
+            _restart(bw, rst)
             prev_dc = {c: 0 for c in comp_idx}  # predictors reset
         for c, by, bx in unit:
             if ah == 0:
@@ -597,16 +581,17 @@ def _encode_dc_scan(
                 diff = v - prev_dc[c]
                 prev_dc[c] = v
                 s = _category(diff)
-                bw.put(*dc_codes[s])
+                bw.u(*dc_codes[s])
                 if s:
-                    bw.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+                    bw.u(diff if diff > 0 else diff + (1 << s) - 1, s)
             else:
                 # refinement: one raw bit per block per component
-                bw.put((int(comps[c][by, bx, 0]) >> al) & 1, 1)
+                bw.u((int(comps[c][by, bx, 0]) >> al) & 1, 1)
 
 
 def _encode_ac_first_scan(
-    bw: _BitWriter,
+    bw: BitWriter,
+    rst: list[int],
     blocks: np.ndarray,
     ss: int,
     se: int,
@@ -618,15 +603,14 @@ def _encode_ac_first_scan(
     bh, bw_ = grid if grid is not None else blocks.shape[:2]
     eobrun = 0
     units = 0
-    rst_m = 0
 
     def flush_eobrun() -> None:
         nonlocal eobrun
         if eobrun:
             n = eobrun.bit_length() - 1
-            bw.put(*ac_codes[n << 4])
+            bw.u(*ac_codes[n << 4])
             if n:
-                bw.put(eobrun - (1 << n), n)
+                bw.u(eobrun - (1 << n), n)
             eobrun = 0
 
     for by in range(bh):
@@ -634,8 +618,7 @@ def _encode_ac_first_scan(
             if restart_interval and units and units % restart_interval == 0:
                 # an EOB run shall not cross a restart boundary
                 flush_eobrun()
-                bw.put_marker(0xD0 + rst_m)
-                rst_m = (rst_m + 1) % 8
+                _restart(bw, rst)
             units += 1
             band = [
                 _point_transform(int(blocks[by, bx, k]), al)
@@ -655,11 +638,11 @@ def _encode_ac_first_scan(
                     run += 1
                     continue
                 while run > 15:
-                    bw.put(*ac_codes[0xF0])
+                    bw.u(*ac_codes[0xF0])
                     run -= 16
                 s = _category(v)
-                bw.put(*ac_codes[(run << 4) | s])
-                bw.put(v if v > 0 else v + (1 << s) - 1, s)
+                bw.u(*ac_codes[(run << 4) | s])
+                bw.u(v if v > 0 else v + (1 << s) - 1, s)
                 run = 0
             if nz[-1] < se - ss:
                 eobrun += 1
@@ -667,7 +650,8 @@ def _encode_ac_first_scan(
 
 
 def _encode_ac_refine_scan(
-    bw: _BitWriter,
+    bw: BitWriter,
+    rst: list[int],
     blocks: np.ndarray,
     ss: int,
     se: int,
@@ -688,18 +672,17 @@ def _encode_ac_refine_scan(
     eobrun = 0
     pending_bits: list[int] = []  # correction bits owed with next EOBn
     units = 0
-    rst_m = 0
 
     def flush_eobrun() -> None:
         nonlocal eobrun
         if eobrun or pending_bits:
             n = eobrun.bit_length() - 1 if eobrun else 0
             if eobrun:
-                bw.put(*ac_codes[n << 4])
+                bw.u(*ac_codes[n << 4])
                 if n:
-                    bw.put(eobrun - (1 << n), n)
+                    bw.u(eobrun - (1 << n), n)
             for b in pending_bits:
-                bw.put(b, 1)
+                bw.u(b, 1)
             pending_bits.clear()
             eobrun = 0
 
@@ -707,8 +690,7 @@ def _encode_ac_refine_scan(
         for bx in range(bw_):
             if restart_interval and units and units % restart_interval == 0:
                 flush_eobrun()
-                bw.put_marker(0xD0 + rst_m)
-                rst_m = (rst_m + 1) % 8
+                _restart(bw, rst)
             units += 1
             absvals = []
             eob_idx = -1  # last index whose magnitude becomes exactly 1
@@ -730,9 +712,9 @@ def _encode_ac_refine_scan(
                 # beyond eob_idx the zeros fold into the EOB run
                 while run > 15 and i <= eob_idx:
                     flush_eobrun()
-                    bw.put(*ac_codes[0xF0])
+                    bw.u(*ac_codes[0xF0])
                     for b in block_bits:
-                        bw.put(b, 1)
+                        bw.u(b, 1)
                     block_bits.clear()
                     run -= 16
                 if t > 1:  # already significant: buffer correction bit
@@ -740,10 +722,10 @@ def _encode_ac_refine_scan(
                     continue
                 # newly significant (t == 1)
                 flush_eobrun()
-                bw.put(*ac_codes[(run << 4) | 1])
-                bw.put(0 if int(blocks[by, bx, k]) < 0 else 1, 1)
+                bw.u(*ac_codes[(run << 4) | 1])
+                bw.u(0 if int(blocks[by, bx, k]) < 0 else 1, 1)
                 for b in block_bits:
-                    bw.put(b, 1)
+                    bw.u(b, 1)
                 block_bits.clear()
                 run = 0
             if run > 0 or block_bits:
@@ -836,27 +818,28 @@ def encode_jpeg_progressive(
         # length 8; Kraft sums < 1, legal incomplete codes)
         dc_bits, dc_vals = _DC12_BITS, _DC12_VALS
         ac_bits, ac_vals = _PROG_AC12_BITS, _PROG_AC12_VALS
-    dc_codes = _canonical_codes(dc_bits, dc_vals)
-    ac_codes = _canonical_codes(ac_bits, ac_vals)
+    dc_codes = canonical_codes(dc_bits, dc_vals)
+    ac_codes = canonical_codes(ac_bits, ac_vals)
 
     scans = []
     for comp_idx, ss, se, ah, al in script:
-        bw = _BitWriter()
+        bw = BitWriter()
+        rst: list[int] = []
         if ss == 0:
             _encode_dc_scan(
-                bw, comps, comp_idx, ah, al, dc_codes,
+                bw, rst, comps, comp_idx, ah, al, dc_codes,
                 factors, mcus_y, mcus_x, true_grid,
                 restart_interval=restart_interval,
             )
         elif ah == 0:
             _encode_ac_first_scan(
-                bw, comps[comp_idx[0]], ss, se, al, ac_codes,
+                bw, rst, comps[comp_idx[0]], ss, se, al, ac_codes,
                 grid=true_grid[comp_idx[0]],
                 restart_interval=restart_interval,
             )
         else:
             _encode_ac_refine_scan(
-                bw, comps[comp_idx[0]], ss, se, al, ac_codes,
+                bw, rst, comps[comp_idx[0]], ss, se, al, ac_codes,
                 grid=true_grid[comp_idx[0]],
                 restart_interval=restart_interval,
             )
@@ -865,7 +848,7 @@ def encode_jpeg_progressive(
             + b"".join(bytes([c + 1, 0x00]) for c in comp_idx)
             + bytes([ss, se, (ah << 4) | al])
         )
-        scans.append((header, bw.flush()))
+        scans.append((header, _scan_bytes(bw, rst)))
 
     out = bytearray()
     out += b"\xff\xd8"
@@ -899,107 +882,57 @@ def encode_jpeg_progressive(
     return bytes(out)
 
 
-def _dec_tab(dec: dict) -> tuple[dict, list]:
-    """Decode-table shape consumed by _BitReader.huff (r13): the
-    (code, length)-keyed map plus a 256-entry first-level LUT over
-    the next 8 bits — (symbol, length) for codes of <= 8 bits, None
-    for the longer tail. Prefix-freedom makes the shortest map hit
-    on any 8-bit window the transmitted code. Siblings: h264_intra._lut8 and
-    mp3l3._lut8 (ADVICE r13) — propagate fixes across all three.
-    """
-    lut: list = [None] * 256
-    for p8 in range(256):
-        for ln in range(1, 9):
-            sym = dec.get((p8 >> (8 - ln), ln))
-            if sym is not None:
-                lut[p8] = (sym, ln)
-                break
-    return dec, lut
+def _split_scan(
+    data: bytes, pos: int
+) -> tuple[bytes, Iterator[tuple[int, bytes]], int]:
+    """Entropy-coded data from ``pos`` up to the first marker that is
+    not RSTm, unstuffed (0xFF 0x00 -> 0xFF) and split at its restart
+    markers. Returns (first interval, iterator of (m, interval) for
+    each later RSTm-led interval, offset of the closing marker)."""
+    intervals: list[bytes] = []
+    rsts: list[int] = []
+    seg = bytearray()
+    start = i = pos
+    end = len(data)  # no closing marker: the scan runs to the end
+    while True:
+        j = data.find(b"\xff", i)
+        if j < 0:
+            seg += data[start:]
+            break
+        if j + 1 >= len(data):
+            raise ValueError("JPEG scan data ends in a lone 0xFF")
+        nxt = data[j + 1]
+        if nxt == 0x00:  # stuffed data byte
+            seg += data[start : j + 1]
+        elif 0xD0 <= nxt <= 0xD7:
+            seg += data[start:j]
+            intervals.append(bytes(seg))
+            rsts.append(nxt - 0xD0)
+            seg = bytearray()
+        else:
+            seg += data[start:j]
+            end = j
+            break
+        start = i = j + 2
+    intervals.append(bytes(seg))
+    return intervals[0], zip(rsts, intervals[1:]), end
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("JPEG scan data truncated")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos] if self.pos < len(self.data) else None
-            if nxt == 0x00:
-                self.pos += 1  # stuffed byte
-            else:
-                raise ValueError(f"unexpected marker 0xFF{nxt:02X} in scan")
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
-
-    def bits(self, n: int) -> int:
-        while self.nbits < n:
-            self._fill()
-        self.nbits -= n
-        v = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1  # same O(n^2) guard as the writer
-        return v
-
-    def _huff_walk(self, table: dict[tuple[int, int], int]) -> int:
-        code, length = 0, 0
-        while length < 16:
-            code = (code << 1) | self.bits(1)
-            length += 1
-            if (code, length) in table:
-                return table[(code, length)]
-        raise ValueError("invalid Huffman code in JPEG scan")
-
-    def huff(self, dtab: tuple[dict, list]) -> int:
-        """Decode one Huffman symbol. r13 fast path: buffer 8 bits and
-        probe a 256-entry first-level LUT (resolves every code of <= 8
-        bits); longer codes and the scan tail (where refilling to 8
-        bits would cross the trailing marker) fall back to the
-        original bit walk. The refill is snapshot-rolled-back on
-        failure because _fill advances pos before raising on a marker
-        byte, and the walk must then consume the true remaining
-        bits."""
-        table, lut = dtab
-        if self.nbits < 8:
-            pos0, acc0, nb0 = self.pos, self.acc, self.nbits
-            try:
-                while self.nbits < 8:
-                    self._fill()
-            except ValueError:
-                self.pos, self.acc, self.nbits = pos0, acc0, nb0
-                return self._huff_walk(table)
-        hit = lut[(self.acc >> (self.nbits - 8)) & 0xFF]
-        if hit is not None:
-            sym, ln = hit
-            self.nbits -= ln
-            self.acc &= (1 << self.nbits) - 1
-            return sym
-        return self._huff_walk(table)
-
-    def restart(self, expected_m: int) -> None:
-        """Consume an RSTm marker at a restart boundary: discard the
-        pad bits to the byte boundary, then require 0xFFD0+m with the
-        right modulo-8 counter (a wrong counter means lost sync)."""
-        self.acc = 0
-        self.nbits = 0
-        if self.pos + 2 > len(self.data):
-            raise ValueError("JPEG truncated at restart boundary")
-        b0, b1 = self.data[self.pos], self.data[self.pos + 1]
-        if b0 != 0xFF or not (0xD0 <= b1 <= 0xD7):
-            raise ValueError(
-                f"expected restart marker, got 0x{b0:02X}{b1:02X}"
-            )
-        if b1 - 0xD0 != expected_m:
-            raise ValueError(
-                f"restart marker out of sequence: RST{b1 - 0xD0}, "
-                f"expected RST{expected_m}"
-            )
-        self.pos += 2
+def _next_interval(
+    rest: Iterator[tuple[int, bytes]], expected_m: int
+) -> BitReader:
+    """Cross a restart boundary: the next interval must follow
+    RST``expected_m`` (a wrong modulo-8 counter means lost sync). The
+    old interval's pad bits are dropped with its reader."""
+    m, seg = next(rest, (None, b""))
+    if m is None:
+        raise ValueError("expected restart marker, found end of scan")
+    if m != expected_m:
+        raise ValueError(
+            f"restart marker out of sequence: RST{m}, "
+            f"expected RST{expected_m}"
+        )
+    return BitReader(seg)
 
 
 def _extend(v: int, s: int) -> int:
@@ -1021,7 +954,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         raise ValueError(f"not a JPEG payload: {data[:2]!r}")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], tuple[dict, list]] = {}
     h = w = None
     comp_q: dict[int, int] = {}  # component id -> quant table id
     comp_samp: dict[int, tuple[int, int]] = {}  # cid -> (H, V) factors
@@ -1066,10 +999,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(seg[s + 1 : s + 17])
                 n = sum(bits)
                 vals = list(seg[s + 17 : s + 17 + n])
-                huff[(cls, tid)] = _dec_tab({
-                    (code, length): sym
-                    for sym, (code, length) in _canonical_codes(bits, vals).items()
-                })
+                codes = canonical_codes(bits, vals)
+                huff[(cls, tid)] = prefix_table(
+                    {(ln, code): sym for sym, (code, ln) in codes.items()}
+                )
                 s += 17 + n
         elif marker in (0xFFC0, 0xFFC1, 0xFFC2):
             progressive = marker == 0xFFC2
@@ -1130,7 +1063,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             scan_tsel = {seg[1 + 2 * c]: seg[2 + 2 * c] for c in range(ns)}
             ss, se, a = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
             ah, al = a >> 4, a & 0xF
-            br = _BitReader(data[pos:])
+            first, rest, end = _split_scan(data, pos)
+            br = BitReader(first)
             ri = restart_interval  # restart UNITS (MCUs / blocks)
 
             def scan_unit_order():
@@ -1166,12 +1100,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 rst_m = 0
                 for ui, unit in enumerate(scan_unit_order()):
                     if ri and ui and ui % ri == 0:
-                        br.restart(rst_m)
+                        br = _next_interval(rest, rst_m)
                         rst_m = (rst_m + 1) % 8
                         prev_dc = {cid: 0 for cid in scan_cids}
                     for cid, by, bx in unit:
-                        s = br.huff(dc_tbls[cid])
-                        diff = _extend(br.bits(s), s) if s else 0
+                        s = br.prefix(dc_tbls[cid])
+                        diff = _extend(br.u(s), s) if s else 0
                         prev_dc[cid] += diff
                         coef_store[cid][by, bx, 0] = prev_dc[cid] << al
             elif ss == 0:
@@ -1180,10 +1114,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 rst_m = 0
                 for ui, unit in enumerate(scan_unit_order()):
                     if ri and ui and ui % ri == 0:
-                        br.restart(rst_m)
+                        br = _next_interval(rest, rst_m)
                         rst_m = (rst_m + 1) % 8
                     for cid, by, bx in unit:
-                        if br.bits(1):
+                        if br.u(1):
                             coef_store[cid][by, bx, 0] |= 1 << al
             elif ah == 0:
                 # AC first scan: single component, EOBn run-length
@@ -1203,7 +1137,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                 raise ValueError(
                                     "EOB run crosses a restart boundary"
                                 )
-                            br.restart(rst_m)
+                            br = _next_interval(rest, rst_m)
                             rst_m = (rst_m + 1) % 8
                         units += 1
                         if eobrun:
@@ -1211,7 +1145,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                             continue
                         k = ss
                         while k <= se:
-                            sym = br.huff(ac_tbl)
+                            sym = br.prefix(ac_tbl)
                             run, size = sym >> 4, sym & 0xF
                             if size == 0:
                                 if run == 15:
@@ -1220,13 +1154,13 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                 # EOBn: run of 2^run + extra all-zero bands
                                 eobrun = (1 << run) - 1
                                 if run:
-                                    eobrun += br.bits(run)
+                                    eobrun += br.u(run)
                                 break
                             k += run
                             if k > se:
                                 raise ValueError("AC run overflows band")
                             coef_store[cid][by, bx, k] = (
-                                _extend(br.bits(size), size) << al
+                                _extend(br.u(size), size) << al
                             )
                             k += 1
                 if eobrun:
@@ -1250,7 +1184,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 rst_m = 0
 
                 def correct(blk: np.ndarray, k: int) -> None:
-                    if br.bits(1) and not (abs(int(blk[k])) & p1):
+                    if br.u(1) and not (abs(int(blk[k])) & p1):
                         blk[k] += p1 if blk[k] >= 0 else -p1
 
                 for by in range(tb_h):
@@ -1260,7 +1194,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                 raise ValueError(
                                     "EOB run crosses a restart boundary"
                                 )
-                            br.restart(rst_m)
+                            br = _next_interval(rest, rst_m)
                             rst_m = (rst_m + 1) % 8
                         units += 1
                         blk = store[by, bx]
@@ -1272,7 +1206,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                             continue
                         k = ss
                         while k <= se:
-                            sym = br.huff(ac_tbl)
+                            sym = br.prefix(ac_tbl)
                             run, size = sym >> 4, sym & 0xF
                             newval = 0
                             if size:
@@ -1280,13 +1214,13 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                     raise ValueError(
                                         "refinement scan size must be 1"
                                     )
-                                newval = p1 if br.bits(1) else -p1
+                                newval = p1 if br.u(1) else -p1
                             elif run != 15:
                                 # EOBn: corrections for the rest of
                                 # this band, then eobrun-1 full bands
                                 eobrun = (1 << run) - 1
                                 if run:
-                                    eobrun += br.bits(run)
+                                    eobrun += br.u(run)
                                 while k <= se:
                                     if blk[k]:
                                         correct(blk, k)
@@ -1309,7 +1243,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                     )
                                 blk[k] = newval
                             k += 1
-            pos += br.pos  # entropy data consumed; next marker follows
+            pos = end  # the marker that closed the scan
         elif marker == 0xFFDA:
             if h is None:
                 raise ValueError("SOS before SOF")
@@ -1322,7 +1256,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 cid = seg[1 + 2 * c]
                 tbyte = seg[2 + 2 * c]
                 scan_tbls[cid] = (huff[(0, tbyte >> 4)], huff[(1, tbyte & 0xF)])
-            br = _BitReader(data[pos:])
+            first, rest, end = _split_scan(data, pos)
+            br = BitReader(first)
             hmax = max(f[0] for f in comp_samp.values())
             vmax = max(f[1] for f in comp_samp.values())
             mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
@@ -1347,7 +1282,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         and mcu
                         and mcu % restart_interval == 0
                     ):
-                        br.restart((mcu // restart_interval - 1) % 8)
+                        br = _next_interval(
+                            rest, (mcu // restart_interval - 1) % 8
+                        )
                         prev_dc = {cid: 0 for cid in comp_order}
                     mcu += 1
                     for cid in comp_order:  # interleaved MCU
@@ -1357,13 +1294,13 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         for iv in range(fv):  # raster order within MCU
                             for ih in range(fh):
                                 zz = np.zeros(64, dtype=np.float64)
-                                s = br.huff(dc_tbl)
-                                diff = _extend(br.bits(s), s) if s else 0
+                                s = br.prefix(dc_tbl)
+                                diff = _extend(br.u(s), s) if s else 0
                                 prev_dc[cid] += diff
                                 zz[0] = prev_dc[cid]
                                 i = 1
                                 while i < 64:
-                                    sym = br.huff(ac_tbl)
+                                    sym = br.prefix(ac_tbl)
                                     if sym == 0x00:  # EOB
                                         break
                                     run, size = sym >> 4, sym & 0xF
@@ -1377,7 +1314,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                     i += run
                                     if i >= 64:
                                         raise ValueError("AC run overflows block")
-                                    zz[i] = _extend(br.bits(size), size)
+                                    zz[i] = _extend(br.u(size), size)
                                     i += 1
                                 coef = np.zeros(64, dtype=np.float64)
                                 coef[_ZIGZAG] = zz * qflat

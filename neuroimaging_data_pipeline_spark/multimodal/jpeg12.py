@@ -47,13 +47,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .bitio import BitWriter, canonical_codes
 from .jpeg import (
     _C,
     _ZIGZAG,
-    _BitWriter,
-    _canonical_codes,
     _category,
     _pad8,
+    _scan_bytes,
     _seg,
 )
 
@@ -207,21 +207,21 @@ def encode_jpeg_gray12(
     if not ac_freq:
         ac_freq[0x00] = 1
     ac_bits, ac_vals = build_huffman_table(ac_freq)
-    dc_codes = _canonical_codes(dc_bits, dc_vals)
-    ac_codes = _canonical_codes(ac_bits, ac_vals)
+    dc_codes = canonical_codes(dc_bits, dc_vals)
+    ac_codes = canonical_codes(ac_bits, ac_vals)
 
-    bw = _BitWriter()
+    bw = BitWriter()
     prev_dc = 0
     for zz in blocks:
         s, dc_extra, acs, prev_dc = _block_symbols(zz, prev_dc)
-        bw.put(*dc_codes[s])
+        bw.u(*dc_codes[s])
         if s:
-            bw.put(dc_extra, s)
+            bw.u(dc_extra, s)
         for sym, extra, elen in acs:
-            bw.put(*ac_codes[sym])
+            bw.u(*ac_codes[sym])
             if elen:
-                bw.put(extra, elen)
-    scan = bw.flush()
+                bw.u(extra, elen)
+    scan = _scan_bytes(bw)
 
     out = bytearray()
     out += b"\xff\xd8"

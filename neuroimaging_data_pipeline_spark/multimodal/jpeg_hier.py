@@ -54,20 +54,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+    canonical_codes,
+    prefix_table,
+)
 from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
     _AC_BITS,
     _AC_VALS,
-    _BitReader,
-    _BitWriter,
     _C,
     _DC_BITS,
     _DC_VALS,
     _ZIGZAG,
-    _canonical_codes,
-    _dec_tab,
     _encode_block,
     _extend,
+    _scan_bytes,
     _seg,
+    _split_scan,
 )
 
 # Extended-range tables for differential frames: DC categories 0..15
@@ -113,7 +117,7 @@ def _encode_frame_scan(plane: np.ndarray, qflat, dc_codes, ac_codes):
     for differential ones). Returns (scan_bytes, recon_plane) where
     recon mirrors the decoder (round(IDCT(dequant)) per block)."""
     h, w = plane.shape
-    bw = _BitWriter()
+    bw = BitWriter()
     prev_dc = 0
     recon = np.zeros((h, w), np.int64)
     for by in range(h // 8):
@@ -129,7 +133,7 @@ def _encode_frame_scan(plane: np.ndarray, qflat, dc_codes, ac_codes):
             recon[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.round(
                 _C.T @ deq.reshape(8, 8) @ _C
             ).astype(np.int64)
-    return bw.flush(), recon
+    return _scan_bytes(bw), recon
 
 
 def encode_jpeg_hierarchical(
@@ -172,8 +176,8 @@ def encode_jpeg_hierarchical(
     for li, lv in enumerate(levels):
         h, w = lv.shape
         if li == 0:
-            dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-            ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
+            dc_codes = canonical_codes(_DC_BITS, _DC_VALS)
+            ac_codes = canonical_codes(_AC_BITS, _AC_VALS)
             out += _seg(0xFFC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
             out += _seg(0xFFC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
             out += _seg(
@@ -188,8 +192,8 @@ def encode_jpeg_hierarchical(
         else:
             expanded = expand_reference(ref, 1, 1)
             diff = lv.astype(np.int64) - expanded
-            dc_codes = _canonical_codes(_DIFF_DC_BITS, _DIFF_DC_VALS)
-            ac_codes = _canonical_codes(_DIFF_AC_BITS, _DIFF_AC_VALS)
+            dc_codes = canonical_codes(_DIFF_DC_BITS, _DIFF_DC_VALS)
+            ac_codes = canonical_codes(_DIFF_AC_BITS, _DIFF_AC_VALS)
             out += _seg(0xFFDF, bytes([0x11]))  # EXP: Eh=1, Ev=1
             out += _seg(
                 0xFFC4,
@@ -263,12 +267,10 @@ def decode_jpeg_hierarchical(payload: bytes) -> list:
                 bits = list(seg[p + 1 : p + 17])
                 n = sum(bits)
                 vals = list(seg[p + 17 : p + 17 + n])
-                # decode map: bitstring prefix -> symbol
-                codes = _canonical_codes(bits, vals)
-                dec = {}
-                for sym, (code, ln_) in codes.items():
-                    dec[(code, ln_)] = sym
-                huff[(tc, th)] = _dec_tab(dec)
+                codes = canonical_codes(bits, vals)
+                huff[(tc, th)] = prefix_table(
+                    {(ln, code): sym for sym, (code, ln) in codes.items()}
+                )
                 p += 17 + n
         elif marker == 0xDE:  # DHP
             _prec, fh, fw, _nc = struct.unpack(">BHHB", seg[:6])
@@ -295,28 +297,22 @@ def decode_jpeg_hierarchical(payload: bytes) -> list:
             dc_map = huff[(0, td)]
             ac_map = huff[(1, ta)]
             qflat = qtables[0]
-            # entropy-coded data follows until the next marker
-            end = pos
-            while True:
-                end = buf.index(b"\xff", end)
-                if buf[end + 1] in (0x00,) or 0xD0 <= buf[end + 1] <= 0xD7:
-                    end += 2
-                    continue
-                break
-            br = _BitReader(buf[pos:end])
-            pos = end
+            # entropy-coded data runs to the next marker (hierarchical
+            # frames here carry no restart intervals)
+            first, _, pos = _split_scan(buf, pos)
+            br = BitReader(first)
             plane = np.zeros((h, w), np.int64)
             prev_dc = 0
             for by in range(h // 8):
                 for bx in range(w // 8):
-                    s = br.huff(dc_map)
-                    diffv = _extend(br.bits(s), s) if s else 0
+                    s = br.prefix(dc_map)
+                    diffv = _extend(br.u(s), s) if s else 0
                     prev_dc += diffv
                     zz = np.zeros(64, np.int64)
                     zz[0] = prev_dc
                     k = 1
                     while k < 64:
-                        rs = br.huff(ac_map)
+                        rs = br.prefix(ac_map)
                         if rs == 0x00:
                             break
                         if rs == 0xF0:
@@ -326,7 +322,7 @@ def decode_jpeg_hierarchical(payload: bytes) -> list:
                         k += run
                         if k > 63:
                             raise ValueError("AC run overflow")
-                        zz[k] = _extend(br.bits(size), size)
+                        zz[k] = _extend(br.u(size), size)
                         k += 1
                     deq = np.zeros(64)
                     deq[_ZIGZAG] = zz * qflat

@@ -65,6 +65,8 @@ def parse_id3v2(buf: bytes) -> tuple[dict[str, str], int]:
     """Returns ({frame_id: text}, total tag length incl. header)."""
     if buf[:3] != b"ID3":
         raise ValueError("no ID3v2 tag")
+    if len(buf) < 10:
+        raise ValueError("ID3v2 header truncated")
     if buf[3] != 3:
         raise NotImplementedError(f"ID3v2.{buf[3]} unsupported (v2.3 only)")
     size = _read_syncsafe(buf[6:10])

@@ -17,8 +17,9 @@ What is REAL here, both directions:
   ONLY through the StripOffsets/StripByteCounts arrays (the layout
   that lets a reader fetch one strip of a huge raster — the same
   random-access posture as the ZIP and SQLite sources here);
-- TIFF-variant LZW (spec section 13): MSB-first bit packing, 256
-  Clear / 257 EOI, 9→12-bit codes with the notorious EARLY-CHANGE
+- TIFF-variant LZW (spec section 13): MSB-first bit packing through
+  the codecs' shared ``bitio`` writer and reader, 256 Clear / 257
+  EOI, 9→12-bit codes with the notorious EARLY-CHANGE
   rule — the encoder widens when the next free code reaches
   2^w - 1 (511/1023/2047) and the one-entry-behind decoder mirrors
   it at 2^w - 2 (510/1022/2046); the table resets via ClearCode at
@@ -44,6 +45,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    BitWriter,
+)
 from neuroimaging_data_pipeline_spark.multimodal.exif import (
     _ifd_bytes,
     _read_ifd,
@@ -67,83 +72,41 @@ _MAX_CODE = 4094  # table resets via ClearCode when the next free code gets here
 # --- TIFF-variant LZW ------------------------------------------------------------
 
 
-class _BitWriter:
-    """MSB-first code packing (GIF's is LSB-first — different codec)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.acc = (self.acc << width) | code
-        self.n += width
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def done(self) -> bytes:
-        if self.n:
-            self.out.append((self.acc << (8 - self.n)) & 0xFF)
-        return bytes(self.out)
-
-
-class _BitReader:
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.acc = 0
-        self.n = 0
-        self.pos = 0
-
-    def read(self, width: int) -> int:
-        while self.n < width:
-            if self.pos >= len(self.buf):
-                raise ValueError("LZW stream ran out before EOI")
-            self.acc = (self.acc << 8) | self.buf[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= width
-        code = (self.acc >> self.n) & ((1 << width) - 1)
-        self.acc &= (1 << self.n) - 1
-        return code
-
-
 def lzw_encode(data: bytes) -> bytes:
     """TIFF 6.0 LZW: the encoder widens EARLY — as soon as the next
     free code equals 2^w - 1 (libtiff's maxcode = 2^w - 2 bound) —
     and emits ClearCode when the next free code reaches 4094."""
-    w = _BitWriter()
+    w = BitWriter()
     table = {bytes([i]): i for i in range(256)}
     next_code, width = _FIRST, 9
-    w.write(_CLEAR, width)
+    w.u(_CLEAR, width)
     cur = b""
     for b in bytes(data):
         cand = cur + bytes([b])
         if cand in table:
             cur = cand
             continue
-        w.write(table[cur], width)
+        w.u(table[cur], width)
         table[cand] = next_code
         next_code += 1
         if next_code == (1 << width) - 1 and width < 12:
             width += 1
         if next_code == _MAX_CODE:
-            w.write(_CLEAR, width)
+            w.u(_CLEAR, width)
             table = {bytes([i]): i for i in range(256)}
             next_code, width = _FIRST, 9
         cur = bytes([b])
     if cur:
-        w.write(table[cur], width)
-    w.write(_EOI, width)
-    return w.done()
+        w.u(table[cur], width)
+    w.u(_EOI, width)
+    return w.bytes_()
 
 
 def lzw_decode(buf: bytes) -> bytes:
     """Mirror decoder: one table entry BEHIND the encoder at every
     read, so the early-change thresholds shift down one — widen when
     the next free code equals 2^w - 2 (510/1022/2046)."""
-    r = _BitReader(bytes(buf))
+    r = BitReader(bytes(buf))
     out = bytearray()
     table: list[bytes] = []
     next_code = width = 0
@@ -156,7 +119,7 @@ def lzw_decode(buf: bytes) -> bytes:
 
     reset()
     while True:
-        code = r.read(width)
+        code = r.u(width)
         if code == _EOI:
             return bytes(out)
         if code == _CLEAR:

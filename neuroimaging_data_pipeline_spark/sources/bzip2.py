@@ -8,7 +8,8 @@ The whole pipeline is implemented against the public format
 (documented in the bzip2 manual and the format's many public
 descriptions):
 
-- a BIG-ENDIAN bitstream (bzip2 blocks are not byte-aligned): 'BZh'
+- a BIG-ENDIAN bitstream (bzip2 blocks are not byte-aligned), read
+  with the codecs' shared ``multimodal/bitio.BitReader``: 'BZh'
   magic + level digit (block size = level x 100k), per block the
   48-bit pi magic 0x314159265359, the block CRC, the deprecated
   "randomized" flag (rejected loudly), and the 24-bit BWT origin
@@ -18,7 +19,8 @@ descriptions):
 - 2-6 Huffman TABLES with 15-bit selectors choosing a table per
   50-symbol chunk, the selector list itself MTF-coded in unary;
   each table transmitted as a 5-bit start length plus +1/-1 delta
-  bits per symbol, decoded into canonical limit/base/perm arrays;
+  bits per symbol, decoded into canonical prefix-code tables
+  (``bitio.canonical_codes``/``prefix_table``);
 - the MTF + RLE2 symbol stream: RUNA/RUNB zero-run lengths in
   bijective base 2, MTF inverse over the used-values list, EOB;
 - the inverse BURROWS-WHEELER transform via one counting pass and
@@ -44,6 +46,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+    BitReader,
+    canonical_codes,
+    prefix_table,
+)
+
 # --- bzip2's CRC-32 (unreflected 0x04C11DB7, MSB-first, inverted io) -------------------
 
 _CRC_TABLE = []
@@ -61,80 +69,31 @@ def bz2_crc(data: bytes, crc: int = 0) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-class _BitsBE:
-    """MSB-first bit reader (bzip2 blocks are not byte-aligned)."""
-
-    __slots__ = ("buf", "pos", "n")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-        self.n = len(buf) * 8
-
-    def read(self, k: int) -> int:
-        if self.pos + k > self.n:
-            raise ValueError("bzip2 bitstream truncated")
-        v = 0
-        pos = self.pos
-        buf = self.buf
-        for _ in range(k):
-            v = (v << 1) | ((buf[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
-
-
 def _read_huffman_tables(
-    bits: _BitsBE, n_syms: int, n_groups: int
-) -> list[tuple[list[int], list[int], list[int], int]]:
-    """Per group: (limit, base, perm, min_len) canonical decoding
-    arrays from the 5-bit start + delta-coded lengths."""
+    bits: BitReader, n_syms: int, n_groups: int
+) -> list[tuple[dict, list]]:
+    """Per group: the prefix_table pair of the canonical code whose
+    lengths arrive as a 5-bit start plus delta bits per symbol."""
     tables = []
     for _ in range(n_groups):
-        length = bits.read(5)
+        length = bits.u(5)
         lens = []
         for _ in range(n_syms):
             while True:
                 if not 1 <= length <= 20:
                     raise ValueError("bzip2 code length out of range")
-                if not bits.read(1):
+                if not bits.u(1):
                     break
-                length += -1 if bits.read(1) else 1
+                length += -1 if bits.u(1) else 1
             lens.append(length)
-        min_len, max_len = min(lens), max(lens)
         # canonical code assignment in (length, transmission order)
-        perm = []
-        for ln in range(min_len, max_len + 1):
-            for s, l2 in enumerate(lens):
-                if l2 == ln:
-                    perm.append(s)
-        limit = [0] * (max_len + 2)
-        base = [0] * (max_len + 2)
-        count = [0] * (max_len + 1)
-        for l2 in lens:
-            count[l2] += 1
-        code = 0
-        total = 0
-        for ln in range(min_len, max_len + 1):
-            code += count[ln]
-            total += count[ln]
-            limit[ln] = code - 1  # largest code of this length
-            code <<= 1
-            base[ln + 1] = code - total
-        tables.append((limit, base, perm, min_len, max_len))
+        counts = [lens.count(ln) for ln in range(1, max(lens) + 1)]
+        order = sorted(range(n_syms), key=lambda s: lens[s])
+        codes = canonical_codes(counts, order)
+        tables.append(
+            prefix_table({(ln, c): s for s, (c, ln) in codes.items()})
+        )
     return tables
-
-
-def _decode_symbol(bits: _BitsBE, table) -> int:
-    limit, base, perm, min_len, max_len = table
-    code = bits.read(min_len)
-    ln = min_len
-    while code > limit[ln]:
-        if ln >= max_len:
-            raise ValueError("bzip2 Huffman code over max length")
-        code = (code << 1) | bits.read(1)
-        ln += 1
-    return perm[code - base[ln]]
 
 
 def _inverse_bwt(last_col: np.ndarray, orig_ptr: int) -> np.ndarray:
@@ -193,11 +152,12 @@ def parse_bzip2(buf: bytes) -> dict:
     while pos < len(buf):
         if buf[pos : pos + 3] != b"BZh":
             raise ValueError(f"bad bzip2 magic at byte {pos}")
+        if pos + 4 > len(buf):
+            raise ValueError("bzip2 stream header truncated")
         level = buf[pos + 3] - 0x30
         if not 1 <= level <= 9:
             raise ValueError(f"bad bzip2 level digit {buf[pos + 3]:#x}")
-        bits = _BitsBE(buf)
-        bits.pos = (pos + 4) * 8
+        bits = BitReader(buf, (pos + 4) * 8)
         nb, combined_parts = _parse_stream(bits, level * 100_000)
         parts += combined_parts
         n_blocks += nb
@@ -214,39 +174,39 @@ def parse_bzip2(buf: bytes) -> dict:
     }
 
 
-def _parse_stream(bits: _BitsBE, max_block: int) -> tuple[int, list[bytes]]:
+def _parse_stream(bits: BitReader, max_block: int) -> tuple[int, list[bytes]]:
     parts: list[bytes] = []
     combined = 0
     n_blocks = 0
     while True:
-        magic = bits.read(48)
+        magic = bits.u(48)
         if magic == 0x177245385090:  # stream footer (sqrt pi)
-            stored = bits.read(32)
+            stored = bits.u(32)
             if stored != combined:
                 raise ValueError("bzip2 combined stream CRC mismatch")
             break
         if magic != 0x314159265359:  # block magic (pi)
             raise ValueError(f"bad bzip2 block magic {magic:#x}")
-        block_crc = bits.read(32)
-        if bits.read(1):
+        block_crc = bits.u(32)
+        if bits.u(1):
             raise ValueError("deprecated bzip2 randomized blocks")
-        orig_ptr = bits.read(24)
+        orig_ptr = bits.u(24)
         # sparse symbol map
-        group_map = bits.read(16)
+        group_map = bits.u(16)
         used = []
         for g in range(16):
             if group_map & (0x8000 >> g):
-                m = bits.read(16)
+                m = bits.u(16)
                 for j in range(16):
                     if m & (0x8000 >> j):
                         used.append(16 * g + j)
         if not used:
             raise ValueError("bzip2 block uses no byte values")
         n_syms = len(used) + 2  # RUNA, RUNB, MTF values 1.., EOB
-        n_groups = bits.read(3)
+        n_groups = bits.u(3)
         if not 2 <= n_groups <= 6:
             raise ValueError(f"bzip2 group count {n_groups} out of range")
-        n_sel = bits.read(15)
+        n_sel = bits.u(15)
         if n_sel == 0:
             raise ValueError("bzip2 block with zero selectors")
         # selectors, MTF-coded in unary
@@ -254,7 +214,7 @@ def _parse_stream(bits: _BitsBE, max_block: int) -> tuple[int, list[bytes]]:
         selectors = []
         for _ in range(n_sel):
             j = 0
-            while bits.read(1):
+            while bits.u(1):
                 j += 1
                 if j >= n_groups:
                     raise ValueError("bzip2 selector MTF overflow")
@@ -279,7 +239,7 @@ def _parse_stream(bits: _BitsBE, max_block: int) -> tuple[int, list[bytes]]:
                 sel_at += 1
                 chunk = 50
             chunk -= 1
-            sym = _decode_symbol(bits, table)
+            sym = bits.prefix(table)
             if sym <= 1:  # RUNA / RUNB: zero-run in bijective base 2
                 run += (sym + 1) << run_bit
                 run_bit += 1

@@ -183,9 +183,7 @@ def test_mp3_truncation_and_bitflips_controlled():
     for cut in (0, 2, 10, len(good) // 2, len(good) - 1):
         try:
             decode_mp3_l3(good[:cut])
-        except (ValueError, NotImplementedError, IndexError):
-            # IndexError here is the bit-reader running dry — loud,
-            # bounded (no hang), acceptable for a truncated stream
+        except _CTRL:
             pass
     rng = np.random.default_rng(9)
     for _ in range(20):
@@ -194,5 +192,116 @@ def test_mp3_truncation_and_bitflips_controlled():
         data[i] ^= 1 << int(rng.integers(0, 8))
         try:
             decode_mp3_l3(bytes(data))
-        except (ValueError, NotImplementedError, IndexError, KeyError):
+        except _CTRL:
             pass
+
+
+# ------------------------------------- MP3 / FLAC / TIFF-LZW / bzip2
+
+
+def _hostile_mp3() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
+        _fixture_granule,
+        decode_mp3_l3,
+        encode_mp3_l3,
+    )
+
+    good = encode_mp3_l3([_fixture_granule(5, k) for k in range(8)], nch=2)
+    return good, decode_mp3_l3
+
+
+def _hostile_flac() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.flac import (
+        decode_flac,
+        encode_flac_stereo,
+    )
+
+    r = np.random.default_rng(4)
+    left = [int(v) for v in r.integers(-3000, 3000, 16 * 6)]
+    right = [v + int(d) for v, d in zip(left, r.integers(-40, 40, 16 * 6))]
+    return encode_flac_stereo(left, right, {"TITLE": "x"}), decode_flac
+
+
+def _hostile_lzw() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.tiff import (
+        lzw_decode,
+        lzw_encode,
+    )
+
+    data = bytes(np.random.default_rng(6).integers(0, 9, 1500,
+                                                   dtype=np.uint8))
+    return lzw_encode(data), lzw_decode
+
+
+def _hostile_bzip2() -> tuple[bytes, object]:
+    import bz2
+
+    from neuroimaging_data_pipeline_spark.sources.bzip2 import parse_bzip2
+
+    body = b"voxel spark cohort " * 20 + bytes(range(60))
+    return bz2.compress(body, 1) + bz2.compress(b"S9", 9), parse_bzip2
+
+
+@pytest.mark.parametrize(
+    "make", [_hostile_mp3, _hostile_flac, _hostile_lzw, _hostile_bzip2],
+    ids=["mp3", "flac", "tiff_lzw", "bzip2"],
+)
+def test_codec_every_prefix_and_bitflips_controlled(make):
+    """Every proper prefix of a valid stream, and seeded 1-2 bit
+    flips of it, either decode or raise ValueError /
+    NotImplementedError — never IndexError, KeyError, TypeError or
+    struct.error from inside a parser."""
+    good, decode = make()
+    decode(good)  # sanity
+    for cut in range(len(good)):
+        try:
+            decode(good[:cut])
+        except _CTRL:
+            pass
+    rng = np.random.default_rng(len(good))
+    for _ in range(150):
+        data = bytearray(good)
+        for _ in range(int(rng.integers(1, 3))):
+            i = int(rng.integers(0, len(data)))
+            data[i] ^= 1 << int(rng.integers(0, 8))
+        try:
+            decode(bytes(data))
+        except _CTRL:
+            pass
+
+
+# ------------------------------------------------------------- JPEG
+
+
+def test_jpeg_scan_ending_in_lone_ff_raises_valueerror():
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
+        decode_jpeg,
+        encode_jpeg_gray,
+    )
+
+    img = np.random.default_rng(2).integers(0, 256, (16, 16), np.uint8)
+    blob = encode_jpeg_gray(img)
+    sos = blob.index(b"\xff\xda")
+    scan_at = sos + 2 + int.from_bytes(blob[sos + 2 : sos + 4], "big")
+    for cut in range(scan_at + 1, len(blob) - 2):
+        with pytest.raises(ValueError):
+            decode_jpeg(blob[:cut] + b"\xff")
+
+
+def test_jpeg_short_dht_raises_valueerror():
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
+        decode_jpeg,
+        encode_jpeg_gray,
+    )
+
+    blob = encode_jpeg_gray(np.zeros((8, 8), np.uint8))
+    at = blob.index(b"\xff\xc4")
+    seglen = int.from_bytes(blob[at + 2 : at + 4], "big")
+    for keep in (3, 10, 17, 18, seglen - 3):
+        # the DHT segment keeps its first `keep` body bytes
+        short = (
+            blob[:at + 2] + (keep + 2).to_bytes(2, "big")
+            + blob[at + 4 : at + 4 + keep] + blob[at + 2 + seglen :]
+        )
+        with pytest.raises(ValueError):
+            decode_jpeg(short)

@@ -108,6 +108,10 @@ def test_error_paths_and_predicted_mb_gate():
     # slice RBSP bit-level: easier to craft by re-encoding with a
     # patched writer — monkeypatch the constant instead.
     from neuroimaging_data_pipeline_spark.multimodal import h264 as mod
+    from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+        BitReader,
+        BitWriter,
+    )
 
     payload = encode_h264_ipcm(np.zeros((16, 16), np.uint8))
     # locate the IDR NAL and surgically rewrite its first mb_type:
@@ -115,11 +119,11 @@ def test_error_paths_and_predicted_mb_gate():
     # bit surgery, decode with a patched reader asserting the raise
     idx = payload.rfind(b"\x00\x00\x00\x01")
     nal = bytearray(mod._ep_remove(payload[idx + 5 :]))
-    r = mod._BitR(bytes(nal))
+    r = BitReader(bytes(nal))
     r.ue(); r.ue(); r.ue(); r.u(4); r.ue(); r.u(1); r.u(1); r.se()
     # overwrite the 9 bits of ue(25) with ue(24)+pad: simpler — write
     # a fresh slice whose first mb_type is 0 via the bit writer
-    w = mod._BitW()
+    w = BitWriter()
     w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0); w.u(0, 1); w.u(0, 1)
     w.se(0)
     w.ue(0)  # mb_type I_4x4 -> gate

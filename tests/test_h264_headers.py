@@ -8,9 +8,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from neuroimaging_data_pipeline_spark.multimodal.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _nal,
     _norm_pwt,
     _parse_pps,
@@ -71,14 +70,14 @@ def test_slice_header_round_trip(case):
         bipred_idc=1 if case["kind"] == "b" and pwt is not None else 0,
         deblock_control="deblock_idc" in case,
     ))
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, 31, **case)
     sl.u(0b1011, 4)  # first slice_data() bits
     sl.trailing()
     rbsp = sl.bytes_()
     idr = case.get("idr", True)
     nal_hdr = (0x40 if case.get("ref", True) else 0) | (5 if idr else 1)
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     hdr = _parse_slice_header(r, sps, pps, nal_hdr)
     assert r.u(4) == 0b1011
     kind = case["kind"]
@@ -110,7 +109,7 @@ def _planes(h, w, seed):
 def _with_slice(stream: bytes, **hdr) -> bytes:
     """``stream`` plus one slice NAL carrying only a header with the
     given fields: the decoder must reject it before slice_data()."""
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, 26, **hdr)
     sl.trailing()
     idr = hdr.get("idr", True)

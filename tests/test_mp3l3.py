@@ -430,8 +430,11 @@ def test_esc_linbits_mechanism():
     through an EXPLICIT synthetic 16x16 table. The table is NOT a
     spec table (16/24 remain transcription gates) — this pins the
     mechanism so landing the table data is pure data entry."""
+    from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+        BitReader as _BR, BitWriter as _BW, prefix_table,
+    )
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
-        _BR, _BW, _esc_dec_pair, _esc_enc_pair, _invert_table, _lut8,
+        _esc_dec_pair, _esc_enc_pair, _invert_table,
     )
 
     # synthetic complete 16x16 prefix code: canonical code over
@@ -446,7 +449,7 @@ def test_esc_linbits_mechanism():
         prev = ln
     assert sum(2.0 ** -l for l in lens) == 1.0
     raw = _invert_table(lens, cods)
-    dmap = (raw, _lut8(raw))  # r13 decode-table shape: (map, 8-bit LUT)
+    dmap = prefix_table(raw)  # decode-table shape: (map, 8-bit LUT)
     for linbits in (1, 4, 13):
         vals = [(0, 0), (15, -15), (14 + (1 << linbits), -3),
                 (-(15 + (1 << linbits) - 1), 15), (7, -14)]
@@ -465,8 +468,11 @@ def test_esc_linbits_mechanism():
 def test_esc_spec_tables_still_gated():
     """Selecting table 16/24 raises the narrowed per-table gate (code
     table data, not mechanism)."""
+    from neuroimaging_data_pipeline_spark.multimodal.bitio import (
+        BitWriter as _BW,
+    )
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
-        _BW, _huff_enc_pair,
+        _huff_enc_pair,
     )
 
     for t in (16, 24, 23, 31):
