@@ -18,9 +18,10 @@ format that packs its fields most-significant bit first:
   symbol}`` map plus a 256-entry first-level LUT over the next 8
   bits; codes of up to 8 bits decode with one window read and one
   list index, longer ones probe the map once per length.
-- ``canonical_codes``: the canonical code construction (codes
-  assigned in order of length, then list order) that JPEG DHT
-  segments and bzip2 tables transmit.
+- ``canonical_codes``/``canonical_table``: the canonical code
+  construction (codes assigned in order of length, then list order)
+  that JPEG DHT segments and bzip2 tables transmit, as an encode map
+  or as a decode pair.
 
 Format hooks stay with their formats: H.264 emulation prevention
 (``h264._ep_insert``/``_ep_remove``) and JPEG byte stuffing and
@@ -270,3 +271,10 @@ def canonical_codes(bits: list[int], vals: list) -> dict:
             raise ValueError("over-subscribed prefix code")
         code <<= 1
     return codes
+
+
+def canonical_table(bits: list[int], vals: list) -> tuple[dict, list]:
+    """The ``prefix_table`` decode pair of ``canonical_codes(bits,
+    vals)``."""
+    codes = canonical_codes(bits, vals)
+    return prefix_table({(ln, c): s for s, (c, ln) in codes.items()})

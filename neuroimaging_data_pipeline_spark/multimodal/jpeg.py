@@ -80,7 +80,7 @@ from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
     canonical_codes,
-    prefix_table,
+    canonical_table,
 )
 
 # --- 8x8 DCT-II basis (orthonormal): FDCT = C @ b @ C.T ---------------------
@@ -999,10 +999,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(seg[s + 1 : s + 17])
                 n = sum(bits)
                 vals = list(seg[s + 17 : s + 17 + n])
-                codes = canonical_codes(bits, vals)
-                huff[(cls, tid)] = prefix_table(
-                    {(ln, code): sym for sym, (code, ln) in codes.items()}
-                )
+                huff[(cls, tid)] = canonical_table(bits, vals)
                 s += 17 + n
         elif marker in (0xFFC0, 0xFFC1, 0xFFC2):
             progressive = marker == 0xFFC2
@@ -1256,7 +1253,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 cid = seg[1 + 2 * c]
                 tbyte = seg[2 + 2 * c]
                 scan_tbls[cid] = (huff[(0, tbyte >> 4)], huff[(1, tbyte & 0xF)])
-            first, rest, end = _split_scan(data, pos)
+            first, rest, _ = _split_scan(data, pos)
             br = BitReader(first)
             hmax = max(f[0] for f in comp_samp.values())
             vmax = max(f[1] for f in comp_samp.values())

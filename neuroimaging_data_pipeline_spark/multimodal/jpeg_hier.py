@@ -58,7 +58,7 @@ from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
     canonical_codes,
-    prefix_table,
+    canonical_table,
 )
 from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
     _AC_BITS,
@@ -267,10 +267,7 @@ def decode_jpeg_hierarchical(payload: bytes) -> list:
                 bits = list(seg[p + 1 : p + 17])
                 n = sum(bits)
                 vals = list(seg[p + 17 : p + 17 + n])
-                codes = canonical_codes(bits, vals)
-                huff[(tc, th)] = prefix_table(
-                    {(ln, code): sym for sym, (code, ln) in codes.items()}
-                )
+                huff[(tc, th)] = canonical_table(bits, vals)
                 p += 17 + n
         elif marker == 0xDE:  # DHP
             _prec, fh, fw, _nc = struct.unpack(">BHHB", seg[:6])

@@ -22,7 +22,8 @@ path down to spec-exact frequency lines, the way FLAC pinned PCM —
 - HUFFMAN decode of the big_values and count1 regions (2.4.2.7 /
   Annex B Table B.7), LUT-first through the codecs' shared
   ``bitio.BitReader.prefix`` (main data and side info are written
-  and read with the shared ``bitio`` writer and reader). Shipped tables: 0, 1, 2, 3, 5, 6 and both
+  and read with the shared ``bitio`` writer and reader). Shipped
+  tables: 0, 1, 2, 3, 5, 6 and both
   count1 tables A/B — every table the fixture encoder emits, each
   verified bit-exactly by the encoder<->decoder round-trip AND
   structurally (each is a complete prefix code; Kraft sum pinned in

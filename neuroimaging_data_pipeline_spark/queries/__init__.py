@@ -78,259 +78,11 @@ from neuroimaging_data_pipeline_spark.queries import (
     textops,
 )
 
-# Registration order is driver-visible (bounded correctness window —
-# the driver checks the first 50 registered). Ordering is COMPUTED,
-# not hand-sorted (rotation policy since r6 / VERDICT r5 #2): every
-# query is ranked by the last round a driver CORRECTNESS artifact
-# checked it (frozen below from CORRECTNESS_r01–r11), never-checked
-# first. Entering r12: rank 0 = _ADDED_R12 newcomers (never
-# driver-checked); rank 1 = any other never-checked query; rank 2 =
-# _RECHECK_R12 (operators whose implementation changed this round);
-# remaining window slots fall to the queries with the OLDEST driver
-# rows (r1/r3 first), so coverage keeps rotating.
+# Registration order is driver-visible (the driver checks a bounded
+# window of the first registered queries). Every registered query is
+# oracle-checked, so any window is a valid one: the registry keeps
+# module order, then each module's own order.
 _MODULES = [media, eventsops, sqlsurface, retrieval, textops, simsearch, ingest, neuro, spatial, relational, misc]
-
-# name -> last driver round with a CORRECTNESS row (union of
-# CORRECTNESS_r01..r10; absent = never driver-checked).
-_LAST_DRIVER_ROUND = {}
-for _r, _names in {
-    1: ["w8b_gaussian_smooth_sep"],
-    3: [
-        "j2_interval_grid", "a2_global_signal", "a9_ols_normal_eq",
-        "st_tumbling_window", "st_session_window", "j4_stencil_mode",
-        "w8_gaussian_smooth", "j5_nearest_resample", "a3_mean_image",
-        "s1_tsv_scan", "s2_dir_listing", "s4_sidecar_lookup",
-        "e3_motion_outlier_hist", "t_token_count", "t_quality_signals",
-        "t_lang_id", "t_fingerprint", "t_entropy", "d_exact_dedup",
-        "d_ngram_jaccard", "s_cosine_topk", "s_ivf_topk",
-        "d_embedding_neardup", "s_lsh_topk", "d_minhash_lsh",
-        "d_simhash", "st_watermark_late_discard",
-        "w8b_gaussian_smooth_cube", "sv_time_travel", "t_winnow",
-        "sd_stream_dedup", "st_enrich_join",
-    ],
-    4: [
-        "a_approx_sketches", "p1_projection_filter", "p6_like_predicate",
-        "p7_isin_label", "p8_binarize", "p9_null_fill",
-        "j1_aligned_concat", "j3_semi_join", "j3b_anti_join",
-        "j_broadcast_3way", "j6_first_match_rules", "a1_pricing_summary",
-        "a4_count_distinct", "a5_histogram", "a7_correlation", "a8_mode",
-        "a_rollup", "w1_zscore", "w2_lag_diff", "w4_fir_convolve",
-        "w5_dct_basis", "w6_poly_trend", "o2_topk", "u1_union",
-        "u2_intersect", "f2_string_funcs", "f3_date_trunc",
-        "f5_json_extract", "f6_array_ops", "g_group_ttest",
-        "c_contrast_estimate", "a10_vif", "w3_motion_expansion",
-        "w7_spike_regressors", "s3_catalog_entities", "s10_json_update",
-        "f1_math", "f4_conditional", "a9_mass_ols", "m1_binary_digest",
-        "w7b_find_spikes", "m2_wav_rms", "m3_ppm_stats", "a_mad_outliers",
-        "t_profile", "a_key_skew", "u4_intersect_all", "w12_range_frame",
-        "m4_png_stats", "m5_jpeg_stats",
-    ],
-    5: [
-        "m8_mp4_meta", "m16_mjpeg_frames", "m17_gif_frames",
-        "m13_tar_samples", "m14_jsonl_shards", "m15_bmp_stats",
-        "m10_audio_frames", "m12_png_interlaced", "e4_multimodal_pipeline",
-        "m8b_mp4_frames", "m9_jpeg_420", "m11_jpeg_progressive",
-        "ev_funnel", "j12_salted_join", "sv_incremental_agg",
-        "w13_event_dedup", "ev_ohlc", "w11_ewma", "j8_interval_overlap",
-        "ev_retention", "j7_asof_join", "w10_sessionize",
-        "w9_locf_resample", "a_cube", "a_grouping_sets",
-        "j9_correlated_scalar", "j10_having_join", "a_percentiles",
-        "o4_window_ranks", "p11_pivot", "p12_unpivot", "u3_except_all",
-        "t_nb_lang", "e7_classifier_filter", "s_bm25_topk",
-        "e5_shard_pipeline", "t_chunk", "t_pack_blocks", "s_knn_graph",
-        "d_semdedup", "t_mix_sample", "t_bpe_train", "t_bpe_tokens",
-        "t_ks_drift", "t_auc_drift", "t_source_cap", "t_weighted_sample",
-        "s_quantize_int8", "a_logreg_gd", "d_incremental_dedup",
-    ],
-    # frozen from CORRECTNESS_r06.json (all 50 green) — VERDICT r6 #1:
-    # m21/m22/m23 got driver rows in r6, so they must stop occupying
-    # rank-1 slots the 19 never-checked late queries need.
-    6: [
-        "a_cms_heavy_hitters", "a_equidepth_hist", "a_equidepth_sketch",
-        "a_hll_distinct", "d_bloom_probe", "d_cdc_chunks",
-        "d_contamination", "d_dup_clusters", "d_dup_spans",
-        "d_fuzzy_pairs", "d_passage_dedup", "d_url_dedup",
-        "e2_corpus_pipeline", "e6_decontam_split", "e8_entity_resolution",
-        "e9_web_pipeline", "g_pagerank3", "g_triangles", "j11_zorder_key",
-        "m18_jpeg12_stats", "m19_jpeg_arith", "m20_h264_ipcm",
-        "m21_h264_intra", "m22_pdf_text", "m23_mulaw_audio",
-        "m6_gzip_text", "m7_jpeg_color", "q_ansi_sql_surface",
-        "s11_remote_fetch", "s12_parquet_meta", "s13_avro_scan",
-        "s14_tarshard_source", "s15_rowgroup_prune", "s16_orc_roundtrip",
-        "s17_xml_source", "s5_nifti_stats", "s_ivfpq_topk",
-        "s_mmr_rerank", "s_pq_codes", "st_sliding_window", "sv_merge",
-        "sv_vacuum", "sv_version_diff", "t_bigram_xent", "t_html_extract",
-        "t_inverted_index", "t_pii_signals", "t_repetition", "t_sample",
-        "t_tfidf",
-    ],
-    # frozen from CORRECTNESS_r07.json (all 50 green) — VERDICT r7 #2:
-    # 19 r6-late + 12 r7 newcomers + 19 r3-era re-checks. With this
-    # fold the union r1–r7 covers every registered query; the r8
-    # window rotates to the oldest remaining coverage (13 r3-era rows
-    # not re-checked in r7, then r4's 50).
-    7: [
-        "d_embedding_neardup", "d_exact_dedup", "d_minhash_lsh",
-        "d_ngram_jaccard", "d_simhash", "e10_release_pipeline",
-        "e3_motion_outlier_hist", "j13_cidr_join", "m24_jpeg_exif",
-        "m25_h264_i4x4", "m26_mp3_meta", "m27_tiff_stats",
-        "m28_flac_audio", "m29_gzip_inflate", "m30_flac_stereo",
-        "m31_lzma_alone", "s18_warc_ingest", "s19_mbox_ingest",
-        "s1_tsv_scan", "s20_avro_shards", "s21_arrow_ipc",
-        "s22_zip_shards", "s23_sqlite_shards", "s24_cbor_shards",
-        "s25_zstd_meta", "s26_lz4_shards", "s27_snappy_shards",
-        "s28_tfrecord_shards", "s29_ogg_stream", "s2_dir_listing",
-        "s30_xz_shards", "s4_sidecar_lookup", "s_cosine_topk",
-        "s_ivf_topk", "s_lsh_topk", "sv_time_travel",
-        "t_c4_line_filters", "t_encoding_repair", "t_entropy",
-        "t_epoch_shuffle", "t_fingerprint", "t_gopher_repetition",
-        "t_idn_hosts", "t_kn_bigram", "t_lang_id", "t_pii_redact",
-        "t_quality_signals", "t_robots_filter", "t_token_count",
-        "t_winnow",
-    ],
-    # frozen from CORRECTNESS_r08.json (49 green + the by-design
-    # no-oracle sketch row) — VERDICT r8 #1: 8 r8 newcomers + 42
-    # oldest-r3/r4 re-checks. With this fold the r9 window leads with
-    # r9 newcomers, then rotates to the now-oldest driver coverage
-    # (the r4-era f/m/t rows not re-checked in r8, then r5's 50).
-    8: [
-        "a1_pricing_summary", "a2_global_signal", "a3_mean_image",
-        "a4_count_distinct", "a5_histogram", "a7_correlation", "a8_mode",
-        "a9_ols_normal_eq", "a_approx_sketches", "a_key_skew",
-        "a_mad_outliers", "a_rollup", "d_image_neardup",
-        "e11_zstd_corpus_pipeline", "f5_json_extract", "j1_aligned_concat",
-        "j2_interval_grid", "j3_semi_join", "j3b_anti_join",
-        "j4_stencil_mode", "j5_nearest_resample", "j6_first_match_rules",
-        "j_broadcast_3way", "m32_flac_surround", "o2_topk",
-        "p1_projection_filter", "p6_like_predicate", "p7_isin_label",
-        "p8_binarize", "p9_null_fill", "s25b_zstd_decode",
-        "s31_xz_filters", "s32_bzip2_shards", "sd_stream_dedup",
-        "st_enrich_join", "st_session_window", "st_tumbling_window",
-        "st_watermark_late_discard", "t_profile", "t_unigram_tokens",
-        "t_unigram_train", "u4_intersect_all", "w12_range_frame",
-        "w1_zscore", "w2_lag_diff", "w4_fir_convolve", "w5_dct_basis",
-        "w6_poly_trend", "w8_gaussian_smooth", "w8b_gaussian_smooth_cube",
-    ],
-    9: [
-        "a10_vif", "a9_mass_ols", "a_approx_sketches", "c_contrast_estimate",
-        "e12_mixed_corpus_pipeline", "e13_video_shard_pipeline",
-        "e4_multimodal_pipeline", "ev_funnel", "f1_math", "f2_string_funcs",
-        "f3_date_trunc", "f4_conditional", "f6_array_ops", "g_group_ttest",
-        "g_triangles_cap", "j12_salted_join", "m10_audio_frames",
-        "m11_jpeg_progressive", "m12_png_interlaced", "m13_tar_samples",
-        "m14_jsonl_shards", "m15_bmp_stats", "m16_mjpeg_frames",
-        "m17_gif_frames", "m18_jpeg12_stats", "m1_binary_digest",
-        "m2_wav_rms", "m33_h264_cabac", "m34_mp3_samples", "m35_h264_inter",
-        "m36_h264_gop", "m37_h264_bslice", "m38_jpeg_hierarchical",
-        "m39_mp3_subband", "m3_ppm_stats", "m4_png_stats", "m5_jpeg_stats",
-        "m8_mp4_meta", "m8b_mp4_frames", "m9_jpeg_420", "s10_json_update",
-        "s25b_zstd_decode", "s26_lz4_shards", "s3_catalog_entities",
-        "sv_incremental_agg", "u1_union", "u2_intersect",
-        "w3_motion_expansion", "w7_spike_regressors", "w7b_find_spikes",
-    ],
-    10: [
-        "a_cube", "a_grouping_sets", "a_logreg_gd", "a_percentiles",
-        "d_incremental_dedup", "d_semdedup", "e14_audio_shard_pipeline",
-        "e5_shard_pipeline", "e7_classifier_filter", "ev_ohlc",
-        "ev_retention", "j10_having_join", "j7_asof_join",
-        "j8_interval_overlap", "j9_correlated_scalar", "m19_jpeg_arith",
-        "m20_h264_ipcm", "m21_h264_intra", "m22_pdf_text",
-        "m23_mulaw_audio", "m25_h264_i4x4", "m33_h264_cabac",
-        "m35_h264_inter", "m36_h264_gop", "m37_h264_bslice",
-        "m40_h264_mp4", "m41_mp3_intensity", "m42_h264_deblock",
-        "o4_window_ranks", "p11_pivot", "p12_unpivot", "s_bm25_topk",
-        "s_knn_graph", "s_quantize_int8", "t_auc_drift", "t_bpe_tokens",
-        "t_bpe_train", "t_chunk", "t_html_extract", "t_ks_drift",
-        "t_mix_sample", "t_nb_lang", "t_pack_blocks", "t_source_cap",
-        "t_weighted_sample", "u3_except_all", "w10_sessionize",
-        "w11_ewma", "w13_event_dedup", "w9_locf_resample",
-    ],
-    # frozen from CORRECTNESS_r11.json (50/50 green): the 5 r11
-    # newcomers + the 4 r11 recheck rows + 41 rotation re-checks.
-    11: [
-        "a_cms_heavy_hitters", "a_equidepth_hist", "a_equidepth_sketch",
-        "a_hll_distinct", "d_bloom_probe", "d_cdc_chunks",
-        "d_contamination", "d_dup_clusters", "d_dup_spans",
-        "d_fuzzy_pairs", "d_passage_dedup", "d_url_dedup",
-        "e15_mp4_shard_pipeline", "e2_corpus_pipeline",
-        "e6_decontam_split", "e8_entity_resolution", "e9_web_pipeline",
-        "g_pagerank3", "g_triangles", "j11_zorder_key", "m34_mp3_samples",
-        "m37_h264_bslice", "m41_mp3_intensity", "m42_h264_deblock",
-        "m43_h264_bdeblock", "m44_h264_longgop", "m45_h264_bpyramid",
-        "m46_pdf_xrefstream", "m6_gzip_text", "q_ansi_sql_surface",
-        "s11_remote_fetch", "s12_parquet_meta", "s13_avro_scan",
-        "s14_tarshard_source", "s15_rowgroup_prune", "s16_orc_roundtrip",
-        "s17_xml_source", "s_ivfpq_topk", "s_mmr_rerank", "s_pq_codes",
-        "st_sliding_window", "sv_merge", "sv_vacuum", "sv_version_diff",
-        "t_bigram_xent", "t_inverted_index", "t_pii_signals",
-        "t_repetition", "t_sample", "t_tfidf",
-    ],
-    # frozen from CORRECTNESS_r12.json (50/50 green): the 3 r12
-    # newcomers + the 9 r12 recheck rows + 38 rotation re-checks.
-    12: [
-        "d_embedding_neardup", "d_exact_dedup", "d_minhash_lsh",
-        "d_ngram_jaccard", "d_simhash", "e10_release_pipeline",
-        "e16_mp4_ffmpeg_pipeline", "e3_motion_outlier_hist",
-        "j13_cidr_join", "m22_pdf_text", "m24_jpeg_exif", "m26_mp3_meta",
-        "m27_tiff_stats", "m28_flac_audio", "m29_gzip_inflate",
-        "m30_flac_stereo", "m31_lzma_alone", "m33_h264_cabac",
-        "m34_mp3_samples", "m35_h264_inter", "m36_h264_gop",
-        "m41_mp3_intensity", "m44_h264_longgop", "m45_h264_bpyramid",
-        "m46_pdf_xrefstream", "m7_jpeg_color", "s1_tsv_scan",
-        "s2_dir_listing", "s4_sidecar_lookup", "s5_nifti_stats",
-        "s_cosine_topk", "s_ivf_topk", "s_lsh_topk", "sd_stream_neardup",
-        "sv_compaction", "sv_time_travel", "t_c4_line_filters",
-        "t_encoding_repair", "t_entropy", "t_epoch_shuffle",
-        "t_fingerprint", "t_gopher_repetition", "t_idn_hosts",
-        "t_kn_bigram", "t_lang_id", "t_pii_redact", "t_quality_signals",
-        "t_robots_filter", "t_token_count", "t_winnow",
-    ],
-}.items():
-    for _n in _names:
-        _LAST_DRIVER_ROUND[_n] = _r
-
-# r13-modified operators + standing perf-watch queries: re-check right
-# after the never-checked blocks.
-_RECHECK_R13 = [
-    # r13 ADVICE fixes: sv_compaction's output schema CHANGED
-    # (files_within_target verdict replaced the pinned n_files), and
-    # the streaming near-dup claimant pick + id typing changed.
-    "sv_compaction",
-    "sd_stream_neardup",
-    # r13: PDF /Columns default-1 (ADVICE r12) touches the xref-stream
-    # decode path both PDF queries ride.
-    "m46_pdf_xrefstream",
-    "m22_pdf_text",
-    # standing perf-watch rows from VERDICT r12 (driver-bench
-    # outliers pinned this round): re-check alongside.
-    "t_bigram_xent",
-    "t_profile",
-]
-
-_RECHECK_R12_FOLDED = [
-    # kept for provenance: the r12 recheck list (H.264 vectorization,
-    # PDF hardening, MP3/CABAC gates) all went green in
-    # CORRECTNESS_r12.json and is folded into _LAST_DRIVER_ROUND.
-    "m35_h264_inter", "m36_h264_gop", "m44_h264_longgop",
-    "m45_h264_bpyramid", "m46_pdf_xrefstream", "m22_pdf_text",
-    "m41_mp3_intensity", "m34_mp3_samples", "m33_h264_cabac",
-]
-
-# Queries added in round 13, AFTER CORRECTNESS_r12 froze the backlog.
-# Never-driver-checked, so they lead the window (rank 0). VERDICT r7
-# #3 lesson: list EVERY newcomer here, not a subset, so the ordering
-# invariant holds if the window ever overflows.
-_ADDED_R13 = [
-    "e17_flagship_betas",
-]
-
-
-def _window_rank(name: str) -> int:
-    if name not in _LAST_DRIVER_ROUND:
-        # never driver-checked: r13 additions lead the window.
-        return 0 if name in _ADDED_R13 else 1
-    if name in _RECHECK_R13:
-        return 2
-    return 2 + _LAST_DRIVER_ROUND[name]
 
 
 def all_queries():
@@ -340,16 +92,11 @@ def all_queries():
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(m.QUERIES)
-    reg_idx = {n: i for i, n in enumerate(out)}
-    names = sorted(out, key=lambda n: (_window_rank(n), reg_idx[n]))
-    return {n: out[n] for n in names}
+    return out
 
 
 def all_oracles():
     out = {}
     for m in _MODULES:
         out.update(m.ORACLE)
-    ranks = {n: i for i, n in enumerate(all_queries())}
-    return dict(
-        sorted(out.items(), key=lambda kv: ranks.get(kv[0], len(ranks)))
-    )
+    return out

@@ -20,7 +20,7 @@ descriptions):
   50-symbol chunk, the selector list itself MTF-coded in unary;
   each table transmitted as a 5-bit start length plus +1/-1 delta
   bits per symbol, decoded into canonical prefix-code tables
-  (``bitio.canonical_codes``/``prefix_table``);
+  (``bitio.canonical_table``);
 - the MTF + RLE2 symbol stream: RUNA/RUNB zero-run lengths in
   bijective base 2, MTF inverse over the used-values list, EOB;
 - the inverse BURROWS-WHEELER transform via one counting pass and
@@ -48,8 +48,7 @@ from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
-    canonical_codes,
-    prefix_table,
+    canonical_table,
 )
 
 # --- bzip2's CRC-32 (unreflected 0x04C11DB7, MSB-first, inverted io) -------------------
@@ -72,8 +71,8 @@ def bz2_crc(data: bytes, crc: int = 0) -> int:
 def _read_huffman_tables(
     bits: BitReader, n_syms: int, n_groups: int
 ) -> list[tuple[dict, list]]:
-    """Per group: the prefix_table pair of the canonical code whose
-    lengths arrive as a 5-bit start plus delta bits per symbol."""
+    """Per group: the decode table of the canonical code whose lengths
+    arrive as a 5-bit start plus delta bits per symbol."""
     tables = []
     for _ in range(n_groups):
         length = bits.u(5)
@@ -89,10 +88,7 @@ def _read_huffman_tables(
         # canonical code assignment in (length, transmission order)
         counts = [lens.count(ln) for ln in range(1, max(lens) + 1)]
         order = sorted(range(n_syms), key=lambda s: lens[s])
-        codes = canonical_codes(counts, order)
-        tables.append(
-            prefix_table({(ln, c): s for s, (c, ln) in codes.items()})
-        )
+        tables.append(canonical_table(counts, order))
     return tables
 
 

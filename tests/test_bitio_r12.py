@@ -21,6 +21,7 @@ from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
     canonical_codes,
+    canonical_table,
     prefix_table,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
@@ -330,9 +331,7 @@ def _codec_tables() -> dict[str, dict]:
         ("dc12", jpeg._DC12_BITS, jpeg._DC12_VALS),
         ("ac12", jpeg._PROG_AC12_BITS, jpeg._PROG_AC12_VALS),
     ):
-        tables[f"jpeg_{name}"] = {
-            (ln, c): s for s, (c, ln) in canonical_codes(bits, vals).items()
-        }
+        tables[f"jpeg_{name}"] = canonical_table(bits, vals)[0]
     return tables
 
 
