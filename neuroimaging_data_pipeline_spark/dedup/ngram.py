@@ -32,30 +32,35 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    df_cap: int | None = 64,
+    df_cap: int = 64,
     threshold: float = 0.2,
     block_col: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for all pairs with capped-Jaccard >=
     ``threshold``; ``block_col`` restricts pairs to equal blocks (e.g.
-    source), bounding the pair space the way LSH banding would."""
+    source), bounding the pair space the way LSH banding would.
+
+    ``df_cap`` is required: it bounds every shingle's posting list, and
+    so the pair rows one shingle can emit. ``None`` raises ValueError
+    rather than collecting an O(n) list and O(n²) pairs in one row."""
     from neuroimaging_data_pipeline_spark.dedup.minhash import shingles
 
+    if df_cap is None:
+        raise ValueError("df_cap must be an int: uncapped lists are unbounded")
     sh = (
         shingles(docs, id_col, text_col, k=k)
         .select(id_col, F.xxhash64("shingle").alias("shingle"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if df_cap is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    hot = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > df_cap)
+        .select("shingle")
+    )
+    sh = sh.join(F.broadcast(hot), "shingle", "left_anti").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
 
     # r14 (guide §2.4 "remove shuffles outright"): the r13 shape

@@ -14,7 +14,7 @@ join on (chunk index, chunk value), so two codes within Hamming
 distance 3 share at least one chunk by pigeonhole. Bucketed equi-join,
 NOT all-pairs: at 100 TB the join is shuffle-bounded by bucket sizes
 (flood guard inherited from ``simhash_candidate_pairs``), and the
-pHash computation itself is a narrow Arrow ``mapInPandas`` over the
+pHash computation itself is a narrow Arrow ``map_rows`` over the
 image bytes, one task per shard, zero shuffle.
 
 Fixture design (oracle-exactness): each doc's image places unit
@@ -31,16 +31,15 @@ impossible in practice (verified empirically in pytest at both SFs).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neuroimaging_data_pipeline_spark.dedup.simhash import (
     simhash_candidate_pairs,
 )
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.binaryops import (
     decode_png,
     encode_png,
@@ -138,22 +137,11 @@ def synthesize_phash_images(
     starts from an actual image container, not raw arrays."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            # the PNG writer is 8-bit RGB: replicate gray into 3 planes
-            blobs = [
-                encode_png(np.repeat(_doc_image(i)[:, :, None], 3, axis=2))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        # the PNG writer is 8-bit RGB: replicate gray into 3 planes
+        yield i, encode_png(np.repeat(_doc_image(i)[:, :, None], 3, axis=2))
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def phash_codes(
@@ -166,21 +154,10 @@ def phash_codes(
     candidate-pair machinery applies unchanged."""
     out_schema = f"{id_col} long, simhash long"
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            codes = [
-                phash64(decode_png(bytes(c))[:, :, 0])
-                for c in pdf[content_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "simhash": pd.Series(codes, dtype="int64"),
-                }
-            )
+    def feat(i, content):
+        yield i, phash64(decode_png(content)[:, :, 0])
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def phash_near_dup_pairs(

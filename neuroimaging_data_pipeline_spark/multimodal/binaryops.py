@@ -4,9 +4,9 @@ engine addition).
 Design: media are opaque ``binary`` columns + typed metadata, exactly
 how a 100 TB training corpus stores them (parquet binary pages,
 metadata pushdown-filterable). Decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` — one Python worker
-per partition, batches sized by spark.sql.execution.arrow.
-maxRecordsPerBatch, no per-row overhead.
+frame-sample run per row through ``functions.rowmap.map_rows`` — one
+``mapInArrow`` Python worker per partition, batches sized by
+spark.sql.execution.arrow.maxRecordsPerBatch.
 
 Codec status: AUDIO, RAW IMAGE AND COMPRESSED IMAGE ARE REAL — WAV
 (RIFF/PCM16) encode + decode via the stdlib ``wave`` module
@@ -50,13 +50,15 @@ identical and tested either way.
 
 from __future__ import annotations
 
+import gzip
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+
 
 MEDIA_SCHEMA = (
     "media_id long, modality string, content binary, "
@@ -121,7 +123,7 @@ def decode_features(
     (capability-gated, like the scipy t-CDF and protobuf state
     gates). ``decoder='pil'`` stays an honest NotImplementedError.
 
-    Real plan shape: narrow mapInPandas over the scan — at scale the
+    Real plan shape: narrow map_rows over the scan — at scale the
     parquet reader streams binary pages straight into Arrow batches;
     nothing shuffles.
     """
@@ -144,21 +146,12 @@ def decode_features(
 
     out_schema = "media_id long, modality string, features array<double>"
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_one(payload, feature_dim).tolist()
-                for payload in pdf["content"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": pdf["modality"],
-                    "features": feats,
-                }
-            )
+    def decode(mid, modality, payload):
+        yield mid, modality, decode_one(payload, feature_dim).tolist()
 
-    return media.mapInPandas(decode_batches, out_schema)
+    return map_rows(
+        media.select("media_id", "modality", "content"), decode, out_schema
+    )
 
 
 def encode_wav_pcm16(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
@@ -199,24 +192,16 @@ def synthesize_wav_clips(
     math, so an oracle can recompute the decoded features without any
     codec — while the clip itself is a genuine RIFF container the real
     decoder must parse. (media_id, content binary)."""
-    import hashlib as _hl
-
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                hexd = _hl.md5((text or "").encode("utf-8")).hexdigest()
-                samples = np.array(
-                    [int(c, 16) * 4096 - 32768 for c in hexd], dtype=np.int16
-                )
-                payloads.append(encode_wav_pcm16(samples, sample_rate))
-            yield pd.DataFrame(
-                {"media_id": pdf[id_col], "content": payloads}
-            )
+    def encode(i, text):
+        hexd = hashlib.md5((text or "").encode("utf-8")).hexdigest()
+        samples = np.array(
+            [int(c, 16) * 4096 - 32768 for c in hexd], dtype=np.int16
+        )
+        yield i, encode_wav_pcm16(samples, sample_rate)
 
-    return docs.select(id_col, text_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col, text_col), encode, out_schema)
 
 
 def wav_features(
@@ -226,31 +211,19 @@ def wav_features(
 ) -> DataFrame:
     """Decode WAV binary columns with the REAL stdlib codec and emit
     per-clip audio features: (media_id, sample_rate, n_samples, rms).
-    Same Arrow-batched mapInPandas boundary as decode_features — narrow
+    Same Arrow-batched map_rows boundary as decode_features — narrow
     over the scan, nothing shuffles."""
     out_schema = (
         f"{id_col} long, sample_rate int, n_samples int, rms double"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            srs, ns, rms = [], [], []
-            for payload in pdf[content_col]:
-                sr, samples = decode_wav(bytes(payload))
-                srs.append(sr)
-                ns.append(len(samples))
-                x = samples.astype(np.float64)
-                rms.append(float(np.sqrt(np.mean(x * x))) if len(x) else 0.0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": srs,
-                    "n_samples": ns,
-                    "rms": rms,
-                }
-            )
+    def feat(mid, payload):
+        sr, samples = decode_wav(payload)
+        x = samples.astype(np.float64)
+        rms = float(np.sqrt(np.mean(x * x))) if len(x) else 0.0
+        yield mid, sr, len(samples), rms
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def wav_frame_features(
@@ -266,39 +239,28 @@ def wav_frame_features(
     consecutive samples WITHIN the frame; zero counts as
     non-negative). The windowed-feature shape every audio pipeline
     (VAD, silence trim, loudness normalization) starts from. Narrow
-    Arrow mapInPandas; the explode happens Python-side per batch, so
+    Arrow map_rows; the explode happens Python-side per clip, so
     still no shuffle."""
     out_schema = (
         f"{id_col} long, frame_idx int, n_in_frame int, "
         "rms double, n_zero_cross int"
     )
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                _, samples = decode_wav(bytes(payload))
-                x = samples.astype(np.float64)
-                for f in range(0, len(x), frame_len):
-                    fr = x[f : f + frame_len]
-                    nonneg = fr >= 0
-                    rows.append(
-                        (
-                            mid,
-                            f // frame_len,
-                            len(fr),
-                            float(np.sqrt(np.mean(fr * fr))),
-                            int(np.sum(nonneg[1:] != nonneg[:-1])),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_idx", "n_in_frame", "rms", "n_zero_cross",
-                ],
+    def frames(mid, payload):
+        _, samples = decode_wav(payload)
+        x = samples.astype(np.float64)
+        for f in range(0, len(x), frame_len):
+            fr = x[f : f + frame_len]
+            nonneg = fr >= 0
+            yield (
+                mid,
+                f // frame_len,
+                len(fr),
+                float(np.sqrt(np.mean(fr * fr))),
+                int(np.sum(nonneg[1:] != nonneg[:-1])),
             )
 
-    return media.mapInPandas(frame_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), frames, out_schema)
 
 
 def encode_ppm(pixels: np.ndarray) -> bytes:
@@ -307,6 +269,18 @@ def encode_ppm(pixels: np.ndarray) -> bytes:
     ``pixels`` is (H, W, 3) uint8."""
     h, w, _ = pixels.shape
     return f"P6\n{w} {h}\n255\n".encode() + pixels.astype(np.uint8).tobytes()
+
+
+def rgb_features(key, arr: np.ndarray) -> tuple:
+    """(key, width, height, mean_r, mean_g, mean_b, sum_px) of an
+    (H, W, 3) image — the feature row every RGB image codec emits."""
+    h, w, _ = arr.shape
+    flat = arr.reshape(-1, 3).astype(np.float64)
+    means = flat.mean(axis=0)
+    return (
+        key, w, h, float(means[0]), float(means[1]), float(means[2]),
+        int(flat.sum()),
+    )
 
 
 def decode_ppm(payload: bytes) -> np.ndarray:
@@ -337,15 +311,10 @@ def synthesize_ppm_images(
     cs = np.arange(3)[None, None, :]
     base = ys * 131 + xs * 17 + cs * 59
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_ppm(((int(i) * 7 + base) % 256).astype(np.uint8))
-                for i in pdf[id_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        yield i, encode_ppm(((i * 7 + base) % 256).astype(np.uint8))
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def ppm_features(
@@ -355,37 +324,17 @@ def ppm_features(
 ) -> DataFrame:
     """Decode PPM binaries with the REAL stdlib-only codec and emit
     per-image features: (media_id, width, height, mean_r, mean_g,
-    mean_b). Same narrow Arrow-batched mapInPandas boundary as
+    mean_b). Same narrow Arrow-batched map_rows boundary as
     wav_features."""
     out_schema = (
         f"{id_col} long, width int, height int, "
         "mean_r double, mean_g double, mean_b double"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mr, mg, mb = [], [], [], [], []
-            for payload in pdf[content_col]:
-                arr = decode_ppm(payload)
-                h, w, _ = arr.shape
-                ws.append(w)
-                hs.append(h)
-                means = arr.reshape(-1, 3).astype(np.float64).mean(axis=0)
-                mr.append(float(means[0]))
-                mg.append(float(means[1]))
-                mb.append(float(means[2]))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                }
-            )
+    def feat(mid, payload):
+        yield rgb_features(mid, decode_ppm(payload))[:6]
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -610,15 +559,10 @@ def synthesize_png_images(
     cs = np.arange(3)[None, None, :]
     base = ys * 37 + xs * 23 + cs * 71
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(((int(i) * 11 + base) % 256).astype(np.uint8))
-                for i in pdf[id_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        yield i, encode_png(((i * 11 + base) % 256).astype(np.uint8))
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def synthesize_png_interlaced(
@@ -638,18 +582,11 @@ def synthesize_png_interlaced(
     cs = np.arange(3)[None, None, :]
     base = ys * 41 + xs * 13 + cs * 67
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    ((int(i) * 29 + base) % 256).astype(np.uint8),
-                    interlace=True,
-                )
-                for i in pdf[id_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        px = ((i * 29 + base) % 256).astype(np.uint8)
+        yield i, encode_png(px, interlace=True)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def png_features(
@@ -661,39 +598,22 @@ def png_features(
     per-image features: (media_id, width, height, mean_r, mean_g,
     mean_b, sum_px). sum_px (total of all pixel bytes) makes the
     oracle sensitive to every single pixel, not only channel means.
-    Same narrow Arrow-batched mapInPandas boundary as ppm_features."""
+    Same narrow Arrow-batched map_rows boundary as ppm_features."""
     out_schema = (
         f"{id_col} long, width int, height int, "
         "mean_r double, mean_g double, mean_b double, sum_px long"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mr, mg, mb, sp = [], [], [], [], [], []
-            for payload in pdf[content_col]:
-                arr = decode_png(payload)
-                h, w, _ = arr.shape
-                ws.append(w)
-                hs.append(h)
-                flat = arr.reshape(-1, 3).astype(np.float64)
-                means = flat.mean(axis=0)
-                mr.append(float(means[0]))
-                mg.append(float(means[1]))
-                mb.append(float(means[2]))
-                sp.append(int(flat.sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                    "sum_px": sp,
-                }
-            )
+    def feat(mid, payload):
+        yield rgb_features(mid, decode_png(payload))
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
+
+
+def _gzip_text(key, text):
+    """(key, one RFC 1952 member of ``text``); mtime 0 keeps bytes stable."""
+    body = (text or "").encode("utf-8")
+    yield key, gzip.compress(body, compresslevel=6, mtime=0)
 
 
 def synthesize_gzip_docs(
@@ -705,19 +625,9 @@ def synthesize_gzip_docs(
     format most training corpora actually arrive in (.jsonl.gz /
     .txt.gz). One genuine RFC 1952 member per document, carried as an
     opaque binary column. (media_id, content binary)."""
-    import gzip as _gz
-
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _gz.compress((t or "").encode("utf-8"), compresslevel=6, mtime=0)
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
-
-    return docs.select(id_col, text_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col, text_col), _gzip_text, out_schema)
 
 
 def gzip_text_features(
@@ -731,24 +641,14 @@ def gzip_text_features(
     in the output — gzip output bytes depend on the compressor
     level/implementation, so an oracle cannot recompute them; the
     decompressed-content digest is what seals the round trip. Same
-    narrow Arrow mapInPandas boundary as the other codecs."""
-    import gzip as _gz
-    import hashlib as _hl
-
+    narrow Arrow map_rows boundary as the other codecs."""
     out_schema = f"{id_col} long, n_chars int, digest string"
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, digs = [], []
-            for payload in pdf[content_col]:
-                text = _gz.decompress(bytes(payload)).decode("utf-8")
-                ns.append(len(text))
-                digs.append(_hl.md5(text.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_chars": ns, "digest": digs}
-            )
+    def feat(mid, payload):
+        text = gzip.decompress(payload).decode("utf-8")
+        yield mid, len(text), hashlib.md5(text.encode("utf-8")).hexdigest()
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def synthesize_jsonl_shards(
@@ -760,21 +660,9 @@ def synthesize_jsonl_shards(
     payload string per shard (JSON serialization stays JVM-side via
     to_json; only the byte compression runs here). One genuine
     RFC 1952 member per shard. (media_id, content binary)."""
-    import gzip as _gz
-
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _gz.compress((t or "").encode("utf-8"), compresslevel=6, mtime=0)
-                for t in pdf[line_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[shard_col], "content": payloads})
-
-    return lines.select(shard_col, line_col).mapInPandas(
-        encode_batches, out_schema
-    )
+    return map_rows(lines.select(shard_col, line_col), _gzip_text, out_schema)
 
 
 def gunzip_text(
@@ -787,19 +675,12 @@ def gunzip_text(
     gzip_text_features this emits the raw recovered payload so the
     downstream parse (JSON lines, TSV, ...) stays in JVM expressions
     (from_json / split), keeping Python to the byte codec only."""
-    import gzip as _gz
-
     out_schema = f"{id_col} long, {out_col} string"
 
-    def inflate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [
-                _gz.decompress(bytes(p)).decode("utf-8")
-                for p in pdf[content_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: texts})
+    def inflate(mid, payload):
+        yield mid, gzip.decompress(payload).decode("utf-8")
 
-    return media.mapInPandas(inflate_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), inflate, out_schema)
 
 
 def resize_plan(
@@ -824,7 +705,7 @@ def frame_sample_plan(
 ) -> DataFrame:
     """Video frame sampling plumbing: explode sampled frame indices
     (media_id, frame_idx) — the decode of each sampled frame is the
-    same mapInPandas boundary as decode_features."""
+    same map_rows boundary as decode_features."""
     idx = F.sequence(
         F.lit(0),
         F.greatest(F.col("n_frames") - 1, F.lit(0)),

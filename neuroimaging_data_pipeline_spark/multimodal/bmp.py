@@ -9,17 +9,17 @@ The fixture alternates orders per id so the decoder's row flip is
 oracle-sealed, not just exercised.
 
 Same posture as the sibling codecs (PPM/PNG/JPEG): encode/decode run
-inside Arrow-batched mapInPandas over an opaque binary column, zero
+inside Arrow-batched map_rows over an opaque binary column, zero
 shuffle, embarrassingly parallel.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 BMP_W, BMP_H = 10, 7
 
@@ -108,19 +108,14 @@ def synthesize_bmp_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     layout so both row orders cross the decoder."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                px = [
-                    [_pixel(i, x, y) for x in range(BMP_W)]
-                    for y in range(BMP_H)
-                ]
-                payloads.append(encode_bmp(px, top_down=bool(i % 2)))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        px = [
+            [_pixel(i, x, y) for x in range(BMP_W)]
+            for y in range(BMP_H)
+        ]
+        yield i, encode_bmp(px, top_down=bool(i % 2))
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def bmp_features(
@@ -134,30 +129,23 @@ def bmp_features(
         "mean_r double, mean_g double, mean_b double"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                px = decode_bmp(bytes(payload))
-                n = len(px) * len(px[0])
-                sums = [0, 0, 0]
-                for row in px:
-                    for p in row:
-                        for c in range(3):
-                            sums[c] += p[c]
-                rows.append(
-                    (
-                        mid,
-                        len(px[0]),
-                        len(px),
-                        sums[0] / n,
-                        sums[1] / n,
-                        sums[2] / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
+    def feat(mid, payload):
+        px = decode_bmp(payload)
+        n = len(px) * len(px[0])
+        sums = [0, 0, 0]
+        for row in px:
+            for p in row:
+                for c in range(3):
+                    sums[c] += p[c]
+        yield (
+            mid,
+            len(px[0]),
+            len(px),
+            sums[0] / n,
+            sums[1] / n,
+            sums[2] / n,
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )

@@ -23,16 +23,16 @@ The m24 oracle recomputes every field from the fixture formulas, so
 an endianness, inline/offset, IFD-chain or type-decode bug breaks
 the hash match.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # BYTE ASCII SHORT LONG RATIONAL
 TAG_MAKE = 0x010F
@@ -228,29 +228,22 @@ def synthesize_exif_jpegs(
 
     out_schema = "media_id long, content binary"
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                img = np.full((16, 16), (i * 37) % 256, np.uint8)
-                app1 = build_exif_app1(
-                    make="CamCo",
-                    model=f"M{i % 10}",
-                    orientation=1 + i % 8,
-                    datetime=f"2026:01:01 00:00:{i % 60:02d}",
-                    iso=100 * (1 + i % 32),
-                    exposure=(1, 1 + i % 1000),
-                    pixel_x=16,
-                    pixel_y=16,
-                    little_endian=(i % 2 == 0),
-                )
-                payloads.append(insert_exif(encode_jpeg_gray(img), app1))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        img = np.full((16, 16), (i * 37) % 256, np.uint8)
+        app1 = build_exif_app1(
+            make="CamCo",
+            model=f"M{i % 10}",
+            orientation=1 + i % 8,
+            datetime=f"2026:01:01 00:00:{i % 60:02d}",
+            iso=100 * (1 + i % 32),
+            exposure=(1, 1 + i % 1000),
+            pixel_x=16,
+            pixel_y=16,
+            little_endian=(i % 2 == 0),
+        )
+        yield i, insert_exif(encode_jpeg_gray(img), app1)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def exif_features(
@@ -264,31 +257,19 @@ def exif_features(
         "exposure_den int, pixel_x int, pixel_y int"
     )
 
-    def feat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                f = parse_exif(payload)
-                rows.append(
-                    {
-                        id_col: int(mid),
-                        "byte_order": f["_byte_order"],
-                        "make": f[TAG_MAKE],
-                        "model": f[TAG_MODEL],
-                        "orientation": f[TAG_ORIENTATION],
-                        "datetime": f[TAG_DATETIME],
-                        "iso": f[TAG_ISO],
-                        "exposure_den": f[TAG_EXPOSURE][1],
-                        "pixel_x": f[TAG_PIXEL_X],
-                        "pixel_y": f[TAG_PIXEL_Y],
-                    }
-                )
-            out = pd.DataFrame(rows)
-            for c in ("orientation", "iso", "exposure_den",
-                      "pixel_x", "pixel_y"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def feat(mid, payload):
+        f = parse_exif(payload)
+        yield (
+            mid,
+            f["_byte_order"],
+            f[TAG_MAKE],
+            f[TAG_MODEL],
+            f[TAG_ORIENTATION],
+            f[TAG_DATETIME],
+            f[TAG_ISO],
+            f[TAG_EXPOSURE][1],
+            f[TAG_PIXEL_X],
+            f[TAG_PIXEL_Y],
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

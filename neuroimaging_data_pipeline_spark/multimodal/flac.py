@@ -51,7 +51,7 @@ sample sum from the pure integer sample formula; m30 does the same
 per channel for stereo; the PCM MD5 check (STREAMINFO hash == hash
 of decoded samples) rides as an oracle-visible boolean on both.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
@@ -63,6 +63,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -711,8 +712,6 @@ def _emit_subframe(
     _put(bits, acc, n)
 
 
-
-
 # frame-header channel-assignment nibbles (RFC 9639 9.1.3)
 _CH_MONO = 0b0000
 _CH_STEREO = 0b0001       # independent L/R
@@ -1302,30 +1301,20 @@ def flac_stereo_features(
         " sum_left long, sum_right long, pcm_md5_ok boolean"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_flac(bytes(content))
-                inter = d["samples"]
-                rows.append(
-                    (
-                        int(i),
-                        d["streaminfo"]["channels"],
-                        d["n_frames"],
-                        len(inter) // 2,
-                        sum(inter[0::2]),
-                        sum(inter[1::2]),
-                        d["md5_ok"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_channels", "n_frames", "n_samples",
-                         "sum_left", "sum_right", "pcm_md5_ok"],
-            )
+    def feat(i, content):
+        d = decode_flac(content)
+        inter = d["samples"]
+        yield (
+            i,
+            d["streaminfo"]["channels"],
+            d["n_frames"],
+            len(inter) // 2,
+            sum(inter[0::2]),
+            sum(inter[1::2]),
+            d["md5_ok"],
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def _doc_multichannel(doc_id: int) -> list[list[int]]:
@@ -1402,31 +1391,21 @@ def flac_surround_features(
         " sum_all long, sum_ch0 long, pcm_md5_ok boolean"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_flac(bytes(content))
-                inter = d["samples"]
-                n_ch = d["streaminfo"]["channels"]
-                rows.append(
-                    (
-                        int(i),
-                        n_ch,
-                        d["n_frames"],
-                        len(inter) // n_ch,
-                        sum(inter),
-                        sum(inter[0::n_ch]),
-                        d["md5_ok"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_channels", "n_frames", "n_samples",
-                         "sum_all", "sum_ch0", "pcm_md5_ok"],
-            )
+    def feat(i, content):
+        d = decode_flac(content)
+        inter = d["samples"]
+        n_ch = d["streaminfo"]["channels"]
+        yield (
+            i,
+            n_ch,
+            d["n_frames"],
+            len(inter) // n_ch,
+            sum(inter),
+            sum(inter[0::n_ch]),
+            d["md5_ok"],
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def synthesize_flac_clips(
@@ -1467,26 +1446,16 @@ def flac_features(
         " n_samples long, sum_samples long, pcm_md5_ok boolean"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_flac(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["comments"].get("TITLE", ""),
-                        d["streaminfo"]["sample_rate"],
-                        d["n_frames"],
-                        len(d["samples"]),
-                        sum(d["samples"]),
-                        d["md5_ok"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "title", "sample_rate", "n_frames",
-                         "n_samples", "sum_samples", "pcm_md5_ok"],
-            )
+    def feat(i, content):
+        d = decode_flac(content)
+        yield (
+            i,
+            d["comments"].get("TITLE", ""),
+            d["streaminfo"]["sample_rate"],
+            d["n_frames"],
+            len(d["samples"]),
+            sum(d["samples"]),
+            d["md5_ok"],
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

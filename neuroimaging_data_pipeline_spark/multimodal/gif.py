@@ -13,17 +13,17 @@ round-trip exactly and a SQL oracle can recompute every emitted pixel
 stat from the fixture formulas.
 
 Spark boundary: identical to the sibling codecs — opaque binary
-columns, Arrow-batched mapInPandas, narrow zero-shuffle plans.
+columns, Arrow-batched map_rows, narrow zero-shuffle plans.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # ------------------------------------------------------------------ LZW
 
@@ -340,12 +340,10 @@ def encode_gif_fixture(doc_id: int) -> bytes:
 def synthesize_gifs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     out_schema = "media_id long, content binary"
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_gif_fixture(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def enc(i):
+        yield i, encode_gif_fixture(i)
 
-    return docs.select(id_col).mapInPandas(enc, out_schema)
+    return map_rows(docs.select(id_col), enc, out_schema)
 
 
 def gif_frame_stats(
@@ -361,33 +359,21 @@ def gif_frame_stats(
         "height int, idx_sum long, r_sum long"
     )
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                g = decode_gif(bytes(payload))
-                for i, (delay, px) in enumerate(g["frames"]):
-                    pal_r = np.array(
-                        [p[0] for p in g["frame_palettes"][i]],
-                        dtype=np.int64,
-                    )
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            delay,
-                            px.shape[1],
-                            px.shape[0],
-                            int(px.astype(np.int64).sum()),
-                            int(pal_r[px].sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_idx", "delay_cs", "width", "height",
-                    "idx_sum", "r_sum",
-                ],
+    def dec(mid, payload):
+        g = decode_gif(payload)
+        for i, (delay, px) in enumerate(g["frames"]):
+            pal_r = np.array(
+                [p[0] for p in g["frame_palettes"][i]],
+                dtype=np.int64,
+            )
+            yield (
+                mid,
+                i,
+                delay,
+                px.shape[1],
+                px.shape[0],
+                int(px.astype(np.int64).sum()),
+                int(pal_r[px].sum()),
             )
 
-    return media.mapInPandas(dec, out_schema)
+    return map_rows(media.select(id_col, content_col), dec, out_schema)

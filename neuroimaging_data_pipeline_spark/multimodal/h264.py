@@ -37,7 +37,7 @@ reuses this module's NAL and header layer). The remaining
 honest gate (raise, never silent): I_4x4/I_8x8 prediction, CABAC,
 inter slices — pointed at ``decoder='ffmpeg'`` in ``binaryops.py``.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
@@ -45,9 +45,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -670,18 +670,13 @@ def synthesize_h264_frames(
     yy, xx = np.mgrid[0:height, 0:width]
     rr, cc = np.mgrid[0 : height // 2, 0 : width // 2]
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                y = ((i * 7 + yy * 13 + xx * 17) % 256).astype(np.uint8)
-                cb = ((i * 3 + rr * 5 + cc * 11) % 256).astype(np.uint8)
-                cr = ((i * 5 + rr * 7 + cc * 3) % 256).astype(np.uint8)
-                payloads.append(encode_h264_ipcm(y, cb, cr))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        y = ((i * 7 + yy * 13 + xx * 17) % 256).astype(np.uint8)
+        cb = ((i * 3 + rr * 5 + cc * 11) % 256).astype(np.uint8)
+        cr = ((i * 5 + rr * 7 + cc * 3) % 256).astype(np.uint8)
+        yield i, encode_h264_ipcm(y, cb, cr)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def h264_frame_features(
@@ -695,28 +690,18 @@ def h264_frame_features(
         "mean_y double, sum_y long, sum_cb long, sum_cr long"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, my, sy, scb, scr = [], [], [], [], [], []
-            for payload in pdf[content_col]:
-                y, cb, cr = decode_h264_ipcm(payload)
-                ih, iw = y.shape
-                ws.append(iw)
-                hs.append(ih)
-                my.append(float(y.astype(np.float64).mean()))
-                sy.append(int(y.astype(np.int64).sum()))
-                scb.append(int(cb.astype(np.int64).sum()))
-                scr.append(int(cr.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_y": my,
-                    "sum_y": sy,
-                    "sum_cb": scb,
-                    "sum_cr": scr,
-                }
-            )
+    def feat(key, payload):
+        yield yuv_features(key, *decode_h264_ipcm(payload))
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
+
+
+def yuv_features(key, y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> tuple:
+    """(key, width, height, mean_y, sum_y, sum_cb, sum_cr) of one decoded
+    frame — the feature row of every single-frame H.264 codec."""
+    ih, iw = y.shape
+    return (
+        key, iw, ih, float(y.astype(np.float64).mean()),
+        int(y.astype(np.int64).sum()), int(cb.astype(np.int64).sum()),
+        int(cr.astype(np.int64).sum()),
+    )

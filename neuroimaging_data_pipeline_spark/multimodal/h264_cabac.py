@@ -44,12 +44,11 @@ H.264 corpora (SURVEY.md multimodal lane).
 
 from __future__ import annotations
 
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -62,6 +61,7 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _slice_header,
     _slice_nals,
     _sps_rbsp,
+    yuv_features,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _CF,
@@ -1268,45 +1268,34 @@ def synthesize_h264_cabac_frames(
     tests/test_h264_cabac.py."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                h, w = mb_rows * 16, mb_cols * 16
-                gy, gx = np.mgrid[0 : h // 4, 0 : w // 4]
-                y = ((i * 13 + gy * 41 + gx * 59) % 256).repeat(4, 0).repeat(4, 1)
-                cy_, cx_ = np.mgrid[0 : h // 8, 0 : w // 8]
-                cb = ((i * 23 + cy_ * 31 + cx_ * 41) % 256).repeat(
-                    4, 0
-                ).repeat(4, 1).astype(np.uint8)
-                cr = ((i * 29 + cy_ * 37 + cx_ * 43) % 256).repeat(
-                    4, 0
-                ).repeat(4, 1).astype(np.uint8)
-                stream, ryp, rcbp, rcrp = encode_h264_cabac_intra(
-                    y.astype(np.uint8), cb, cr, qp=0, i4x4_mode=i % 3,
-                )
-                # QP-0 exactness contract: the fixture formulas ARE
-                # the decoded output (loud here, recomputed by the
-                # oracle there)
-                if not (
-                    np.array_equal(ryp, y) and np.array_equal(rcbp, cb)
-                    and np.array_equal(rcrp, cr)
-                ):
-                    raise AssertionError(
-                        f"doc {i}: QP-0 per-4x4-constant encode not "
-                        "exact — fixture contract broken"
-                    )
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+    def build(i):
+        h, w = mb_rows * 16, mb_cols * 16
+        gy, gx = np.mgrid[0 : h // 4, 0 : w // 4]
+        y = ((i * 13 + gy * 41 + gx * 59) % 256).repeat(4, 0).repeat(4, 1)
+        cy_, cx_ = np.mgrid[0 : h // 8, 0 : w // 8]
+        cb = ((i * 23 + cy_ * 31 + cx_ * 41) % 256).repeat(
+            4, 0
+        ).repeat(4, 1).astype(np.uint8)
+        cr = ((i * 29 + cy_ * 37 + cx_ * 43) % 256).repeat(
+            4, 0
+        ).repeat(4, 1).astype(np.uint8)
+        stream, ryp, rcbp, rcrp = encode_h264_cabac_intra(
+            y.astype(np.uint8), cb, cr, qp=0, i4x4_mode=i % 3,
+        )
+        # QP-0 exactness contract: the fixture formulas ARE
+        # the decoded output (loud here, recomputed by the
+        # oracle there)
+        if not (
+            np.array_equal(ryp, y) and np.array_equal(rcbp, cb)
+            and np.array_equal(rcrp, cr)
+        ):
+            raise AssertionError(
+                f"doc {i}: QP-0 per-4x4-constant encode not "
+                "exact — fixture contract broken"
             )
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_cabac_frame_features(
@@ -1321,26 +1310,7 @@ def h264_cabac_frame_features(
         " sum_y long, sum_cb long, sum_cr long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                y, cb, cr = decode_h264_cabac(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        int(y.shape[1]),
-                        int(y.shape[0]),
-                        float(y.mean()),
-                        int(y.sum()),
-                        int(cb.sum()),
-                        int(cr.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "mean_y",
-                         "sum_y", "sum_cb", "sum_cr"],
-            )
+    def feat(i, content):
+        yield yuv_features(i, *decode_h264_cabac(content))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

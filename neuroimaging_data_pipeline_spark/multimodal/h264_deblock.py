@@ -53,6 +53,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+
 # Table 8-16: alpha / beta thresholds, indexA/indexB 0..51
 _ALPHA = (
     0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
@@ -607,10 +609,6 @@ def synthesize_h264_deblock_clips(docs, id_col: str = "doc_id"):
     semantics: the reference is the deblocked frame; every P edge
     derives bS 0, so frame 2 must equal the filtered anchor
     bit-for-bit)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         encode_h264_p_gop,
     )
@@ -620,47 +618,36 @@ def synthesize_h264_deblock_clips(docs, id_col: str = "doc_id"):
 
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                v, cbv, crv = _m42_values(i)
-                y = np.zeros((64, 16), np.uint8)
-                cb = np.zeros((32, 8), np.uint8)
-                cr = np.zeros((32, 8), np.uint8)
-                for m in range(4):
-                    y[m * 16 : m * 16 + 16] = v[m]
-                    cb[m * 8 : m * 8 + 8] = cbv[m]
-                    cr[m * 8 : m * 8 + 8] = crv[m]
-                _, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=28)
-                if not (np.array_equal(ry, y)
-                        and np.array_equal(rcb, cb)
-                        and np.array_equal(rcr, cr)):
-                    raise AssertionError(
-                        f"doc {i}: QP-28 plateau lattice not exact"
-                    )
-                target2 = deblock_frame(ry, rcb, rcr, 28)
-                specs = [("16x16", [(0, 0)])] * 4
-                stream, recons = encode_h264_p_gop(
-                    [(y, cb, cr), target2], [specs], qp=28,
-                    deblock=True,
-                )
-                for a, b in zip(recons[1], target2):
-                    if not np.array_equal(a, b):
-                        raise AssertionError(
-                            f"doc {i}: P frame != filtered anchor"
-                        )
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+    def build(i):
+        v, cbv, crv = _m42_values(i)
+        y = np.zeros((64, 16), np.uint8)
+        cb = np.zeros((32, 8), np.uint8)
+        cr = np.zeros((32, 8), np.uint8)
+        for m in range(4):
+            y[m * 16 : m * 16 + 16] = v[m]
+            cb[m * 8 : m * 8 + 8] = cbv[m]
+            cr[m * 8 : m * 8 + 8] = crv[m]
+        _, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=28)
+        if not (np.array_equal(ry, y)
+                and np.array_equal(rcb, cb)
+                and np.array_equal(rcr, cr)):
+            raise AssertionError(
+                f"doc {i}: QP-28 plateau lattice not exact"
             )
+        target2 = deblock_frame(ry, rcb, rcr, 28)
+        specs = [("16x16", [(0, 0)])] * 4
+        stream, recons = encode_h264_p_gop(
+            [(y, cb, cr), target2], [specs], qp=28,
+            deblock=True,
+        )
+        for a, b in zip(recons[1], target2):
+            if not np.array_equal(a, b):
+                raise AssertionError(
+                    f"doc {i}: P frame != filtered anchor"
+                )
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_deblock_features(
@@ -670,10 +657,6 @@ def h264_deblock_features(
 ):
     """Decode the deblocked sequences and emit plane sums of the
     FILTERED anchor plus the P==filtered-anchor in-loop invariant."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         decode_h264_sequence,
     )
@@ -684,29 +667,18 @@ def h264_deblock_features(
         " p_equals_filtered_idr boolean"
     )
 
-    def feat(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames = decode_h264_sequence(bytes(content))
-                y, cb, cr = frames[0]
-                same = all(
-                    np.array_equal(a, b)
-                    for a, b in zip(frames[0], frames[1])
-                )
-                rows.append(
-                    (int(i), len(frames), int(y.shape[1]),
-                     int(y.shape[0]), int(y.sum()), int(cb.sum()),
-                     int(cr.sum()), bool(same))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "width", "height",
-                         "sum_y", "sum_cb", "sum_cr",
-                         "p_equals_filtered_idr"],
-            )
+    def feat(i, content):
+        frames = decode_h264_sequence(content)
+        y, cb, cr = frames[0]
+        same = all(
+            np.array_equal(a, b)
+            for a, b in zip(frames[0], frames[1])
+        )
+        yield (i, len(frames), int(y.shape[1]),
+               int(y.shape[0]), int(y.sum()), int(cb.sum()),
+               int(cr.sum()), bool(same))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -791,10 +763,6 @@ def synthesize_h264_bdeblock_clips(docs, id_col: str = "doc_id"):
     usage — l0 / bi / l1 / l0-shifted — so the 8.7.2.1 B
     boundary-strength rules fire on real edges (see section
     comment). The builder asserts the closed forms."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
         encode_h264_b_sequence,
     )
@@ -804,72 +772,61 @@ def synthesize_h264_bdeblock_clips(docs, id_col: str = "doc_id"):
 
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                p = _m43_values(i)
-                y = np.zeros((64, 16), np.uint8)
-                cb = np.zeros((32, 8), np.uint8)
-                cr = np.zeros((32, 8), np.uint8)
-                for m in range(4):
-                    y[m * 16 : m * 16 + 16] = p["v"][m]
-                    cb[m * 8 : m * 8 + 8] = p["cb"][m]
-                    cr[m * 8 : m * 8 + 8] = p["cr"][m]
-                _, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=28)
-                if not (np.array_equal(ry, y)
-                        and np.array_equal(rcb, cb)
-                        and np.array_equal(rcr, cr)):
-                    raise AssertionError(
-                        f"doc {i}: QP-28 plateau lattice not exact")
-                # B target: the reordered plateaus (zero residual)
-                yb = np.zeros((64, 16), np.uint8)
-                cbb = np.zeros((32, 8), np.uint8)
-                crb = np.zeros((32, 8), np.uint8)
-                order = (0, 2, 3, 1)
-                for m, src in enumerate(order):
-                    yb[m * 16 : m * 16 + 16] = p["v"][src]
-                    cbb[m * 8 : m * 8 + 8] = p["cb"][src]
-                    crb[m * 8 : m * 8 + 8] = p["cr"][src]
-                specs_b = [
-                    ("16x16", [("l0", (0, 0))]),
-                    ("16x16", [("bi", (0, 64), (0, 64))]),
-                    ("16x16", [("l1", (0, 64))]),
-                    ("16x16", [("l0", (0, -128))]),
-                ]
-                stream, recons, pocs = encode_h264_b_sequence(
-                    [
-                        ("idr", (y, cb, cr)),
-                        ("p", (y, cb, cr), [("skip",)] * 4, 8),
-                        ("b", (yb, cbb, crb), specs_b, 4),
-                    ],
-                    qp=28, deblock=True,
-                )
-                # in-loop invariants the oracle rides on
-                for a, b in zip(recons[0], (y, cb, cr)):
-                    if not np.array_equal(a, b):
-                        raise AssertionError(
-                            f"doc {i}: anchor not plateau-exact")
-                for a, b in zip(recons[1], recons[0]):
-                    if not np.array_equal(a, b):
-                        raise AssertionError(
-                            f"doc {i}: P frame != filtered anchor")
-                sadj, _ = _m43_luma_adj(i)
-                want_sum = 256 * sum(p["v"]) + 16 * sadj
-                if int(recons[2][0].sum()) != want_sum:
-                    raise AssertionError(
-                        f"doc {i}: B luma closed form mismatch")
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        p = _m43_values(i)
+        y = np.zeros((64, 16), np.uint8)
+        cb = np.zeros((32, 8), np.uint8)
+        cr = np.zeros((32, 8), np.uint8)
+        for m in range(4):
+            y[m * 16 : m * 16 + 16] = p["v"][m]
+            cb[m * 8 : m * 8 + 8] = p["cb"][m]
+            cr[m * 8 : m * 8 + 8] = p["cr"][m]
+        _, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=28)
+        if not (np.array_equal(ry, y)
+                and np.array_equal(rcb, cb)
+                and np.array_equal(rcr, cr)):
+            raise AssertionError(
+                f"doc {i}: QP-28 plateau lattice not exact")
+        # B target: the reordered plateaus (zero residual)
+        yb = np.zeros((64, 16), np.uint8)
+        cbb = np.zeros((32, 8), np.uint8)
+        crb = np.zeros((32, 8), np.uint8)
+        order = (0, 2, 3, 1)
+        for m, src in enumerate(order):
+            yb[m * 16 : m * 16 + 16] = p["v"][src]
+            cbb[m * 8 : m * 8 + 8] = p["cb"][src]
+            crb[m * 8 : m * 8 + 8] = p["cr"][src]
+        specs_b = [
+            ("16x16", [("l0", (0, 0))]),
+            ("16x16", [("bi", (0, 64), (0, 64))]),
+            ("16x16", [("l1", (0, 64))]),
+            ("16x16", [("l0", (0, -128))]),
+        ]
+        stream, recons, pocs = encode_h264_b_sequence(
+            [
+                ("idr", (y, cb, cr)),
+                ("p", (y, cb, cr), [("skip",)] * 4, 8),
+                ("b", (yb, cbb, crb), specs_b, 4),
+            ],
+            qp=28, deblock=True,
+        )
+        # in-loop invariants the oracle rides on
+        for a, b in zip(recons[0], (y, cb, cr)):
+            if not np.array_equal(a, b):
+                raise AssertionError(
+                    f"doc {i}: anchor not plateau-exact")
+        for a, b in zip(recons[1], recons[0]):
+            if not np.array_equal(a, b):
+                raise AssertionError(
+                    f"doc {i}: P frame != filtered anchor")
+        sadj, _ = _m43_luma_adj(i)
+        want_sum = 256 * sum(p["v"]) + 16 * sadj
+        if int(recons[2][0].sum()) != want_sum:
+            raise AssertionError(
+                f"doc {i}: B luma closed form mismatch")
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_bdeblock_features(
@@ -881,10 +838,6 @@ def h264_bdeblock_features(
     sum + position-weighted checksums (weight = row index + 1, so a
     mis-derived bS that moves or drops an edge adjustment shifts the
     value), plus the P == filtered-anchor in-loop invariant."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
         decode_h264_b_stream,
     )
@@ -895,31 +848,20 @@ def h264_bdeblock_features(
         " p_equals_idr boolean"
     )
 
-    def feat(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames, pocs = decode_h264_b_stream(bytes(content))
-                yb, cbb, crb = frames[2]
-                rw = np.arange(1, yb.shape[0] + 1, dtype=np.int64)
-                cw = np.arange(1, cbb.shape[0] + 1, dtype=np.int64)
-                same = all(
-                    np.array_equal(a, b)
-                    for a, b in zip(frames[0], frames[1])
-                )
-                rows.append(
-                    (int(i), len(frames), int(yb.shape[1]),
-                     int(yb.shape[0]), int(yb.sum()),
-                     int((rw @ yb.astype(np.int64)).sum()),
-                     int((cw @ cbb.astype(np.int64)).sum()),
-                     int((cw @ crb.astype(np.int64)).sum()),
-                     bool(same))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "width", "height",
-                         "sum_y_b", "wsum_y_b", "wsum_cb_b",
-                         "wsum_cr_b", "p_equals_idr"],
-            )
+    def feat(i, content):
+        frames, pocs = decode_h264_b_stream(content)
+        yb, cbb, crb = frames[2]
+        rw = np.arange(1, yb.shape[0] + 1, dtype=np.int64)
+        cw = np.arange(1, cbb.shape[0] + 1, dtype=np.int64)
+        same = all(
+            np.array_equal(a, b)
+            for a, b in zip(frames[0], frames[1])
+        )
+        yield (i, len(frames), int(yb.shape[1]),
+               int(yb.shape[0]), int(yb.sum()),
+               int((rw @ yb.astype(np.int64)).sum()),
+               int((cw @ cbb.astype(np.int64)).sum()),
+               int((cw @ crb.astype(np.int64)).sum()),
+               bool(same))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -10,12 +10,12 @@ drive the pack/decode pair directly.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     decode_h264_sequence,
 )
@@ -50,28 +50,18 @@ def decode_shard_features(
         " docs_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, blob in zip(pdf["shard_id"], pdf["tar"]):
-                parts = []
-                total = 0
-                for name, data in parse_tar(bytes(blob)):
-                    doc_id = int(name.split(".")[0])
-                    frames = decode_h264_sequence(bytes(data))
-                    s = int(frames[-1][0].sum())
-                    total += s
-                    parts.append(f"{doc_id}:{s}")
-                digest = hashlib.md5(
-                    "|".join(parts).encode()
-                ).hexdigest()
-                rows.append(
-                    (int(shard_id), len(parts), total, digest)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "n_docs", "sum_y_p2_total",
-                         "docs_md5"],
-            )
+    def feat(shard_id, blob):
+        parts = []
+        total = 0
+        for name, data in parse_tar(blob):
+            doc_id = int(name.split(".")[0])
+            frames = decode_h264_sequence(bytes(data))
+            s = int(frames[-1][0].sum())
+            total += s
+            parts.append(f"{doc_id}:{s}")
+        digest = hashlib.md5(
+            "|".join(parts).encode()
+        ).hexdigest()
+        yield (shard_id, len(parts), total, digest)
 
-    return shards.mapInPandas(feat, out_schema)
+    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)

@@ -83,12 +83,11 @@ real H.264 corpus.
 
 from __future__ import annotations
 
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -1716,84 +1715,73 @@ def synthesize_h264_inter_frames(
     random-plane bit-exact round-trips in tests."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                gy, gx = np.mgrid[0:8, 0:8]
-                y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224).repeat(
-                    4, 0
-                ).repeat(4, 1)
-                cgy, cgx = np.mgrid[0:4, 0:4]
-                cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41) % 200).repeat(
-                    4, 0
-                ).repeat(4, 1)
-                cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43) % 200).repeat(
-                    4, 0
-                ).repeat(4, 1)
-                # frame1 = clamped full-pel shift of y0 + 4x4 delta
-                py, px = np.mgrid[0:32, 0:32]
-                mxg, myg = px // 16, py // 16
-                dxp = 4 * ((i + mxg + 2 * myg) % 3 - 1)
-                dyp = 4 * ((i * 2 + 3 * mxg + myg) % 3 - 1)
-                sy = np.clip(py + dyp, 0, 31)
-                sx = np.clip(px + dxp, 0, 31)
-                delta = (i + (py // 4) * 7 + (px // 4) * 11) % 9 - 4
-                y1 = y0[sy, sx] + delta
-                assert y1.min() >= 0 and y1.max() <= 255
-                # chroma: same motion at half displacement + delta
-                cy_, cx_ = np.mgrid[0:16, 0:16]
-                cmx, cmy = cx_ // 8, cy_ // 8
-                cdx = 2 * ((i + cmx + 2 * cmy) % 3 - 1)
-                cdy = 2 * ((i * 2 + 3 * cmx + cmy) % 3 - 1)
-                scy = np.clip(cy_ + cdy, 0, 15)
-                scx = np.clip(cx_ + cdx, 0, 15)
-                dcb = (i + (cy_ // 4) * 5 + (cx_ // 4) * 7) % 9 - 4
-                dcr = (i * 3 + (cy_ // 4) * 3 + (cx_ // 4) * 5) % 9 - 4
-                cb1 = cb0[scy, scx] + dcb
-                cr1 = cr0[scy, scx] + dcr
-                assert cb1.min() >= 0 and cb1.max() <= 255
-                assert cr1.min() >= 0 and cr1.max() <= 255
-                modes = ("16x16", "16x8", "8x16")
-                specs = []
-                for my_ in range(2):
-                    for mx_ in range(2):
-                        mode = modes[(i + mx_ + my_) % 3]
-                        # full-pel shift in px * 4 = quarter-pel units
-                        mv_q = (
-                            16 * ((i + mx_ + 2 * my_) % 3 - 1),
-                            16 * ((i * 2 + 3 * mx_ + my_) % 3 - 1),
-                        )
-                        nparts = 1 if mode == "16x16" else 2
-                        specs.append((mode, [mv_q] * nparts))
-                stream, rec0, rec1 = encode_h264_p_sequence(
-                    (y0.astype(np.uint8), cb0.astype(np.uint8),
-                     cr0.astype(np.uint8)),
-                    (y1.astype(np.uint8), cb1.astype(np.uint8),
-                     cr1.astype(np.uint8)),
-                    specs,
-                    qp=0,
+    def build(i):
+        gy, gx = np.mgrid[0:8, 0:8]
+        y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224).repeat(
+            4, 0
+        ).repeat(4, 1)
+        cgy, cgx = np.mgrid[0:4, 0:4]
+        cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41) % 200).repeat(
+            4, 0
+        ).repeat(4, 1)
+        cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43) % 200).repeat(
+            4, 0
+        ).repeat(4, 1)
+        # frame1 = clamped full-pel shift of y0 + 4x4 delta
+        py, px = np.mgrid[0:32, 0:32]
+        mxg, myg = px // 16, py // 16
+        dxp = 4 * ((i + mxg + 2 * myg) % 3 - 1)
+        dyp = 4 * ((i * 2 + 3 * mxg + myg) % 3 - 1)
+        sy = np.clip(py + dyp, 0, 31)
+        sx = np.clip(px + dxp, 0, 31)
+        delta = (i + (py // 4) * 7 + (px // 4) * 11) % 9 - 4
+        y1 = y0[sy, sx] + delta
+        assert y1.min() >= 0 and y1.max() <= 255
+        # chroma: same motion at half displacement + delta
+        cy_, cx_ = np.mgrid[0:16, 0:16]
+        cmx, cmy = cx_ // 8, cy_ // 8
+        cdx = 2 * ((i + cmx + 2 * cmy) % 3 - 1)
+        cdy = 2 * ((i * 2 + 3 * cmx + cmy) % 3 - 1)
+        scy = np.clip(cy_ + cdy, 0, 15)
+        scx = np.clip(cx_ + cdx, 0, 15)
+        dcb = (i + (cy_ // 4) * 5 + (cx_ // 4) * 7) % 9 - 4
+        dcr = (i * 3 + (cy_ // 4) * 3 + (cx_ // 4) * 5) % 9 - 4
+        cb1 = cb0[scy, scx] + dcb
+        cr1 = cr0[scy, scx] + dcr
+        assert cb1.min() >= 0 and cb1.max() <= 255
+        assert cr1.min() >= 0 and cr1.max() <= 255
+        modes = ("16x16", "16x8", "8x16")
+        specs = []
+        for my_ in range(2):
+            for mx_ in range(2):
+                mode = modes[(i + mx_ + my_) % 3]
+                # full-pel shift in px * 4 = quarter-pel units
+                mv_q = (
+                    16 * ((i + mx_ + 2 * my_) % 3 - 1),
+                    16 * ((i * 2 + 3 * mx_ + my_) % 3 - 1),
                 )
-                if not (
-                    np.array_equal(rec0[0], y0)
-                    and np.array_equal(rec1[0], y1)
-                    and np.array_equal(rec1[1], cb1)
-                    and np.array_equal(rec1[2], cr1)
-                ):
-                    raise AssertionError(
-                        f"doc {i}: QP-0 inter fixture not exact"
-                    )
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+                nparts = 1 if mode == "16x16" else 2
+                specs.append((mode, [mv_q] * nparts))
+        stream, rec0, rec1 = encode_h264_p_sequence(
+            (y0.astype(np.uint8), cb0.astype(np.uint8),
+             cr0.astype(np.uint8)),
+            (y1.astype(np.uint8), cb1.astype(np.uint8),
+             cr1.astype(np.uint8)),
+            specs,
+            qp=0,
+        )
+        if not (
+            np.array_equal(rec0[0], y0)
+            and np.array_equal(rec1[0], y1)
+            and np.array_equal(rec1[1], cb1)
+            and np.array_equal(rec1[2], cr1)
+        ):
+            raise AssertionError(
+                f"doc {i}: QP-0 inter fixture not exact"
             )
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_inter_frame_features(
@@ -1808,32 +1796,22 @@ def h264_inter_frame_features(
         " sum_y_idr long, sum_y_p long, sum_cb_p long, sum_cr_p long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames = decode_h264_sequence(bytes(content))
-                y_i, _, _ = frames[0]
-                y_p, cb_p, cr_p = frames[-1]
-                rows.append(
-                    (
-                        int(i),
-                        len(frames),
-                        int(y_p.shape[1]),
-                        int(y_p.shape[0]),
-                        int(y_i.sum()),
-                        int(y_p.sum()),
-                        int(cb_p.sum()),
-                        int(cr_p.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "width", "height",
-                         "sum_y_idr", "sum_y_p", "sum_cb_p", "sum_cr_p"],
-            )
+    def feat(i, content):
+        frames = decode_h264_sequence(content)
+        y_i, _, _ = frames[0]
+        y_p, cb_p, cr_p = frames[-1]
+        yield (
+            i,
+            len(frames),
+            int(y_p.shape[1]),
+            int(y_p.shape[0]),
+            int(y_i.sum()),
+            int(y_p.sum()),
+            int(cb_p.sum()),
+            int(cr_p.sum()),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 def synthesize_h264_gop_frames(
     docs: DataFrame,
@@ -1866,170 +1844,159 @@ def synthesize_h264_gop_frames(
     requant/MC scale is oracle-pinned instead of held at 128."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                gy, gx = np.mgrid[0:8, 0:8]
-                y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224).repeat(
-                    4, 0
-                ).repeat(4, 1)
-                cgy, cgx = np.mgrid[0:4, 0:4]
-                cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41)
-                       % 200).repeat(4, 0).repeat(4, 1)
-                cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43)
-                       % 200).repeat(4, 0).repeat(4, 1)
-                py, px = np.mgrid[0:32, 0:32]
-                mxg, myg = px // 16, py // 16
-                # --- P1: same motion/residual family as m35 ---
-                dx1 = 4 * ((i + mxg + 2 * myg) % 3 - 1)
-                dy1 = 4 * ((i * 2 + 3 * mxg + myg) % 3 - 1)
-                d1 = (i + (py // 4) * 7 + (px // 4) * 11) % 9 - 4
-                y1 = y0[np.clip(py + dy1, 0, 31),
-                        np.clip(px + dx1, 0, 31)] + d1
-                # P1 chroma: same motion at half displacement + delta
-                cy_, cx_ = np.mgrid[0:16, 0:16]
-                cmx, cmy = cx_ // 8, cy_ // 8
-                cdx1 = 2 * ((i + cmx + 2 * cmy) % 3 - 1)
-                cdy1 = 2 * ((i * 2 + 3 * cmx + cmy) % 3 - 1)
-                dcb1 = (i + (cy_ // 4) * 5 + (cx_ // 4) * 7) % 9 - 4
-                dcr1 = (i * 3 + (cy_ // 4) * 3 + (cx_ // 4) * 5) % 9 - 4
-                cb1 = cb0[np.clip(cy_ + cdy1, 0, 15),
-                          np.clip(cx_ + cdx1, 0, 15)] + dcb1
-                cr1 = cr0[np.clip(cy_ + cdy1, 0, 15),
-                          np.clip(cx_ + cdx1, 0, 15)] + dcr1
-                specs1 = []
-                for my_ in range(2):
-                    for mx_ in range(2):
-                        specs1.append(
-                            ("16x16",
-                             [(16 * ((i + mx_ + 2 * my_) % 3 - 1),
-                               16 * ((i * 2 + 3 * mx_ + my_) % 3 - 1))])
-                        )
-                # --- P2: intra / ref1 / P_8x8 / zero-MV regions ---
-                y2 = np.zeros((32, 32), np.int64)
-                # (0,0) intra
-                y2[0:16, 0:16] = (
-                    16 + (i * 17 + (py[0:16, 0:16] // 4) * 43
-                          + (px[0:16, 0:16] // 4) * 61) % 224
+    def build(i):
+        gy, gx = np.mgrid[0:8, 0:8]
+        y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224).repeat(
+            4, 0
+        ).repeat(4, 1)
+        cgy, cgx = np.mgrid[0:4, 0:4]
+        cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41)
+               % 200).repeat(4, 0).repeat(4, 1)
+        cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43)
+               % 200).repeat(4, 0).repeat(4, 1)
+        py, px = np.mgrid[0:32, 0:32]
+        mxg, myg = px // 16, py // 16
+        # --- P1: same motion/residual family as m35 ---
+        dx1 = 4 * ((i + mxg + 2 * myg) % 3 - 1)
+        dy1 = 4 * ((i * 2 + 3 * mxg + myg) % 3 - 1)
+        d1 = (i + (py // 4) * 7 + (px // 4) * 11) % 9 - 4
+        y1 = y0[np.clip(py + dy1, 0, 31),
+                np.clip(px + dx1, 0, 31)] + d1
+        # P1 chroma: same motion at half displacement + delta
+        cy_, cx_ = np.mgrid[0:16, 0:16]
+        cmx, cmy = cx_ // 8, cy_ // 8
+        cdx1 = 2 * ((i + cmx + 2 * cmy) % 3 - 1)
+        cdy1 = 2 * ((i * 2 + 3 * cmx + cmy) % 3 - 1)
+        dcb1 = (i + (cy_ // 4) * 5 + (cx_ // 4) * 7) % 9 - 4
+        dcr1 = (i * 3 + (cy_ // 4) * 3 + (cx_ // 4) * 5) % 9 - 4
+        cb1 = cb0[np.clip(cy_ + cdy1, 0, 15),
+                  np.clip(cx_ + cdx1, 0, 15)] + dcb1
+        cr1 = cr0[np.clip(cy_ + cdy1, 0, 15),
+                  np.clip(cx_ + cdx1, 0, 15)] + dcr1
+        specs1 = []
+        for my_ in range(2):
+            for mx_ in range(2):
+                specs1.append(
+                    ("16x16",
+                     [(16 * ((i + mx_ + 2 * my_) % 3 - 1),
+                       16 * ((i * 2 + 3 * mx_ + my_) % 3 - 1))])
                 )
-                # (1,0) ref_idx 1 -> anchor
-                dxa = 4 * (i % 3 - 1)
-                dya = 4 * (i // 3 % 3 - 1)
-                reg = np.s_[0:16, 16:32]
-                d2a = (i * 3 + (py[reg] // 4) * 5
-                       + (px[reg] // 4) * 13) % 9 - 4
-                y2[reg] = y0[np.clip(py[reg] + dya, 0, 31),
-                             np.clip(px[reg] + dxa, 0, 31)] + d2a
-                # (0,1) P_8x8 from P1, per-8x8 motion
-                reg = np.s_[16:32, 0:16]
-                k8 = (px[reg] % 16) // 8 + 2 * ((py[reg] % 16) // 8)
-                dxk = 4 * ((i + k8) % 3 - 1)
-                dyk = 4 * ((i * 2 + k8) % 3 - 1)
-                d2b = (i + (py[reg] // 4) * 3
-                       + (px[reg] // 4) * 7) % 9 - 4
-                y2[reg] = y1[np.clip(py[reg] + dyk, 0, 31),
-                             np.clip(px[reg] + dxk, 0, 31)] + d2b
-                # (1,1) zero-MV residual from P1
-                reg = np.s_[16:32, 16:32]
-                d2c = (i * 5 + (py[reg] // 4) * 11
-                       + (px[reg] // 4) * 3) % 9 - 4
-                y2[reg] = y1[reg] + d2c
-                assert y2.min() >= 0 and y2.max() <= 255
-                # --- P2 chroma, same four regions at chroma scale ---
-                cb2 = np.zeros((16, 16), np.int64)
-                cr2 = np.zeros((16, 16), np.int64)
-                # (0,0) intra-in-P chroma
-                r = np.s_[0:8, 0:8]
-                cb2[r] = 16 + (i * 31 + (cy_[r] // 4) * 29
-                               + (cx_[r] // 4) * 47) % 200
-                cr2[r] = 16 + (i * 37 + (cy_[r] // 4) * 23
-                               + (cx_[r] // 4) * 41) % 200
-                # (1,0) ref_idx 1 -> anchor chroma
-                r = np.s_[0:8, 8:16]
-                cdxa, cdya = 2 * (i % 3 - 1), 2 * (i // 3 % 3 - 1)
-                dcb2a = (i * 3 + (cy_[r] // 4) * 5
-                         + (cx_[r] // 4) * 13) % 9 - 4
-                dcr2a = (i * 7 + (cy_[r] // 4) * 7
-                         + (cx_[r] // 4) * 11) % 9 - 4
-                sy_ = np.clip(cy_[r] + cdya, 0, 15)
-                sx_ = np.clip(cx_[r] + cdxa, 0, 15)
-                cb2[r] = cb0[sy_, sx_] + dcb2a
-                cr2[r] = cr0[sy_, sx_] + dcr2a
-                # (0,1) P_8x8 from P1, per-sub-block chroma motion
-                r = np.s_[8:16, 0:8]
-                ck8 = (cx_[r] % 8) // 4 + 2 * ((cy_[r] % 8) // 4)
-                cdxk = 2 * ((i + ck8) % 3 - 1)
-                cdyk = 2 * ((i * 2 + ck8) % 3 - 1)
-                dcb2b = (i + (cy_[r] // 4) * 3
-                         + (cx_[r] // 4) * 7) % 9 - 4
-                dcr2b = (i * 5 + (cy_[r] // 4) * 9
-                         + (cx_[r] // 4) * 3) % 9 - 4
-                sy_ = np.clip(cy_[r] + cdyk, 0, 15)
-                sx_ = np.clip(cx_[r] + cdxk, 0, 15)
-                cb2[r] = cb1[sy_, sx_] + dcb2b
-                cr2[r] = cr1[sy_, sx_] + dcr2b
-                # (1,1) zero-MV chroma residual from P1
-                r = np.s_[8:16, 8:16]
-                dcb2c = (i * 5 + (cy_[r] // 4) * 11
-                         + (cx_[r] // 4) * 3) % 9 - 4
-                dcr2c = (i * 9 + (cy_[r] // 4) * 13
-                         + (cx_[r] // 4) * 5) % 9 - 4
-                cb2[r] = cb1[r] + dcb2c
-                cr2[r] = cr1[r] + dcr2c
-                for pl in (cb1, cr1, cb2, cr2):
-                    assert pl.min() >= 0 and pl.max() <= 255
-                submodes = ("8x8", "8x4", "4x8", "4x4")
-                nsub = {"8x8": 1, "8x4": 2, "4x8": 2, "4x4": 4}
-                subs = []
-                for k in range(4):
-                    sm = submodes[(i + k) % 4]
-                    mvk = (16 * ((i + k) % 3 - 1),
-                           16 * ((i * 2 + k) % 3 - 1))
-                    subs.append((sm, [mvk] * nsub[sm], 0))
-                specs2 = [
-                    ("i16",),
-                    ("16x16", [((16 * (i % 3 - 1),
-                                 16 * (i // 3 % 3 - 1)), 1)]),
-                    ("8x8", subs),
-                    ("16x16", [((0, 0), 0)]),
-                ]
-                stream, recons = encode_h264_p_gop(
-                    [
-                        (y0.astype(np.uint8), cb0.astype(np.uint8),
-                         cr0.astype(np.uint8)),
-                        (y1.astype(np.uint8), cb1.astype(np.uint8),
-                         cr1.astype(np.uint8)),
-                        (y2.astype(np.uint8), cb2.astype(np.uint8),
-                         cr2.astype(np.uint8)),
-                    ],
-                    [specs1, specs2],
-                    qp=0,
-                    num_refs=2,
-                )
-                if not (
-                    np.array_equal(recons[0][0], y0)
-                    and np.array_equal(recons[1][0], y1)
-                    and np.array_equal(recons[2][0], y2)
-                    and np.array_equal(recons[2][1], cb2)
-                    and np.array_equal(recons[2][2], cr2)
-                    and np.array_equal(recons[1][1], cb1)
-                    and np.array_equal(recons[1][2], cr1)
-                ):
-                    raise AssertionError(
-                        f"doc {i}: QP-0 GOP fixture not exact"
-                    )
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+        # --- P2: intra / ref1 / P_8x8 / zero-MV regions ---
+        y2 = np.zeros((32, 32), np.int64)
+        # (0,0) intra
+        y2[0:16, 0:16] = (
+            16 + (i * 17 + (py[0:16, 0:16] // 4) * 43
+                  + (px[0:16, 0:16] // 4) * 61) % 224
+        )
+        # (1,0) ref_idx 1 -> anchor
+        dxa = 4 * (i % 3 - 1)
+        dya = 4 * (i // 3 % 3 - 1)
+        reg = np.s_[0:16, 16:32]
+        d2a = (i * 3 + (py[reg] // 4) * 5
+               + (px[reg] // 4) * 13) % 9 - 4
+        y2[reg] = y0[np.clip(py[reg] + dya, 0, 31),
+                     np.clip(px[reg] + dxa, 0, 31)] + d2a
+        # (0,1) P_8x8 from P1, per-8x8 motion
+        reg = np.s_[16:32, 0:16]
+        k8 = (px[reg] % 16) // 8 + 2 * ((py[reg] % 16) // 8)
+        dxk = 4 * ((i + k8) % 3 - 1)
+        dyk = 4 * ((i * 2 + k8) % 3 - 1)
+        d2b = (i + (py[reg] // 4) * 3
+               + (px[reg] // 4) * 7) % 9 - 4
+        y2[reg] = y1[np.clip(py[reg] + dyk, 0, 31),
+                     np.clip(px[reg] + dxk, 0, 31)] + d2b
+        # (1,1) zero-MV residual from P1
+        reg = np.s_[16:32, 16:32]
+        d2c = (i * 5 + (py[reg] // 4) * 11
+               + (px[reg] // 4) * 3) % 9 - 4
+        y2[reg] = y1[reg] + d2c
+        assert y2.min() >= 0 and y2.max() <= 255
+        # --- P2 chroma, same four regions at chroma scale ---
+        cb2 = np.zeros((16, 16), np.int64)
+        cr2 = np.zeros((16, 16), np.int64)
+        # (0,0) intra-in-P chroma
+        r = np.s_[0:8, 0:8]
+        cb2[r] = 16 + (i * 31 + (cy_[r] // 4) * 29
+                       + (cx_[r] // 4) * 47) % 200
+        cr2[r] = 16 + (i * 37 + (cy_[r] // 4) * 23
+                       + (cx_[r] // 4) * 41) % 200
+        # (1,0) ref_idx 1 -> anchor chroma
+        r = np.s_[0:8, 8:16]
+        cdxa, cdya = 2 * (i % 3 - 1), 2 * (i // 3 % 3 - 1)
+        dcb2a = (i * 3 + (cy_[r] // 4) * 5
+                 + (cx_[r] // 4) * 13) % 9 - 4
+        dcr2a = (i * 7 + (cy_[r] // 4) * 7
+                 + (cx_[r] // 4) * 11) % 9 - 4
+        sy_ = np.clip(cy_[r] + cdya, 0, 15)
+        sx_ = np.clip(cx_[r] + cdxa, 0, 15)
+        cb2[r] = cb0[sy_, sx_] + dcb2a
+        cr2[r] = cr0[sy_, sx_] + dcr2a
+        # (0,1) P_8x8 from P1, per-sub-block chroma motion
+        r = np.s_[8:16, 0:8]
+        ck8 = (cx_[r] % 8) // 4 + 2 * ((cy_[r] % 8) // 4)
+        cdxk = 2 * ((i + ck8) % 3 - 1)
+        cdyk = 2 * ((i * 2 + ck8) % 3 - 1)
+        dcb2b = (i + (cy_[r] // 4) * 3
+                 + (cx_[r] // 4) * 7) % 9 - 4
+        dcr2b = (i * 5 + (cy_[r] // 4) * 9
+                 + (cx_[r] // 4) * 3) % 9 - 4
+        sy_ = np.clip(cy_[r] + cdyk, 0, 15)
+        sx_ = np.clip(cx_[r] + cdxk, 0, 15)
+        cb2[r] = cb1[sy_, sx_] + dcb2b
+        cr2[r] = cr1[sy_, sx_] + dcr2b
+        # (1,1) zero-MV chroma residual from P1
+        r = np.s_[8:16, 8:16]
+        dcb2c = (i * 5 + (cy_[r] // 4) * 11
+                 + (cx_[r] // 4) * 3) % 9 - 4
+        dcr2c = (i * 9 + (cy_[r] // 4) * 13
+                 + (cx_[r] // 4) * 5) % 9 - 4
+        cb2[r] = cb1[r] + dcb2c
+        cr2[r] = cr1[r] + dcr2c
+        for pl in (cb1, cr1, cb2, cr2):
+            assert pl.min() >= 0 and pl.max() <= 255
+        submodes = ("8x8", "8x4", "4x8", "4x4")
+        nsub = {"8x8": 1, "8x4": 2, "4x8": 2, "4x4": 4}
+        subs = []
+        for k in range(4):
+            sm = submodes[(i + k) % 4]
+            mvk = (16 * ((i + k) % 3 - 1),
+                   16 * ((i * 2 + k) % 3 - 1))
+            subs.append((sm, [mvk] * nsub[sm], 0))
+        specs2 = [
+            ("i16",),
+            ("16x16", [((16 * (i % 3 - 1),
+                         16 * (i // 3 % 3 - 1)), 1)]),
+            ("8x8", subs),
+            ("16x16", [((0, 0), 0)]),
+        ]
+        stream, recons = encode_h264_p_gop(
+            [
+                (y0.astype(np.uint8), cb0.astype(np.uint8),
+                 cr0.astype(np.uint8)),
+                (y1.astype(np.uint8), cb1.astype(np.uint8),
+                 cr1.astype(np.uint8)),
+                (y2.astype(np.uint8), cb2.astype(np.uint8),
+                 cr2.astype(np.uint8)),
+            ],
+            [specs1, specs2],
+            qp=0,
+            num_refs=2,
+        )
+        if not (
+            np.array_equal(recons[0][0], y0)
+            and np.array_equal(recons[1][0], y1)
+            and np.array_equal(recons[2][0], y2)
+            and np.array_equal(recons[2][1], cb2)
+            and np.array_equal(recons[2][2], cr2)
+            and np.array_equal(recons[1][1], cb1)
+            and np.array_equal(recons[1][2], cr1)
+        ):
+            raise AssertionError(
+                f"doc {i}: QP-0 GOP fixture not exact"
             )
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_gop_frame_features(
@@ -2045,35 +2012,24 @@ def h264_gop_frame_features(
         " sum_cb_p2 long, sum_cr_p2 long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames = decode_h264_sequence(bytes(content))
-                y_i = frames[0][0]
-                y_p1 = frames[1][0]
-                y_p2, cb_p2, cr_p2 = frames[2]
-                rows.append(
-                    (
-                        int(i),
-                        len(frames),
-                        int(y_p2.shape[1]),
-                        int(y_p2.shape[0]),
-                        int(y_i.sum()),
-                        int(y_p1.sum()),
-                        int(y_p2.sum()),
-                        int(cb_p2.sum()),
-                        int(cr_p2.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "width", "height",
-                         "sum_y_idr", "sum_y_p1", "sum_y_p2",
-                         "sum_cb_p2", "sum_cr_p2"],
-            )
+    def feat(i, content):
+        frames = decode_h264_sequence(content)
+        y_i = frames[0][0]
+        y_p1 = frames[1][0]
+        y_p2, cb_p2, cr_p2 = frames[2]
+        yield (
+            i,
+            len(frames),
+            int(y_p2.shape[1]),
+            int(y_p2.shape[0]),
+            int(y_i.sum()),
+            int(y_p1.sum()),
+            int(y_p2.sum()),
+            int(cb_p2.sum()),
+            int(cr_p2.sum()),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2110,81 +2066,66 @@ def synthesize_h264_longgop_frames(docs, id_col: str = "doc_id"):
     per-4x4 formula residuals. Base values sit in 16..239 and the
     four deltas are +-4 each, so no clipping fires anywhere and
     every decoded pixel is closed-form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                gy, gx = np.mgrid[0:8, 0:8]
-                y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224
-                      ).repeat(4, 0).repeat(4, 1)
-                cgy, cgx = np.mgrid[0:4, 0:4]
-                cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41) % 200
-                       ).repeat(4, 0).repeat(4, 1)
-                cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43) % 200
-                       ).repeat(4, 0).repeat(4, 1)
-                ys = [y0]
-                cbs = [cb0]
-                crs = [cr0]
-                specs_per_p = []
-                by, bx = np.mgrid[0:8, 0:8]
-                cby, cbx = np.mgrid[0:4, 0:4]
-                for k in range(1, 5):
-                    yk = np.zeros((32, 32), np.int64)
-                    cbk = np.zeros((16, 16), np.int64)
-                    crk = np.zeros((16, 16), np.int64)
-                    specs = []
-                    for m in range(4):
-                        mx_, my_ = m % 2, m // 2
-                        rf = _m44_ref(i, k, m)
-                        base = len(ys) - 1 - rf
-                        sly = np.s_[my_ * 16 : my_ * 16 + 16,
-                                    mx_ * 16 : mx_ * 16 + 16]
-                        slc = np.s_[my_ * 8 : my_ * 8 + 8,
-                                    mx_ * 8 : mx_ * 8 + 8]
-                        dl = (_m44_delta(i, k, m, by, bx)
-                              .repeat(4, 0).repeat(4, 1))[sly]
-                        dcb = (_m44_delta(i * 3 + 1, k, m, cby, cbx)
-                               .repeat(4, 0).repeat(4, 1))[slc]
-                        dcr = (_m44_delta(i * 5 + 2, k, m, cby, cbx)
-                               .repeat(4, 0).repeat(4, 1))[slc]
-                        yk[sly] = ys[base][sly] + dl
-                        cbk[slc] = cbs[base][slc] + dcb
-                        crk[slc] = crs[base][slc] + dcr
-                        specs.append(("16x16", [((0, 0), rf)]))
-                    ys.append(yk)
-                    cbs.append(cbk)
-                    crs.append(crk)
-                    specs_per_p.append(specs)
-                frames = [
-                    (y.astype(np.uint8), cb.astype(np.uint8),
-                     cr.astype(np.uint8))
-                    for y, cb, cr in zip(ys, cbs, crs)
-                ]
-                stream, recons = encode_h264_p_gop(
-                    frames, specs_per_p, qp=0, num_refs=3
-                )
-                for fa, fb in zip(recons, frames):
-                    for a, b in zip(fa, fb):
-                        if not np.array_equal(a, b):
-                            raise AssertionError(
-                                f"doc {i}: QP-0 long-GOP not exact")
-                ids.append(i)
-                blobs.append(stream)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        gy, gx = np.mgrid[0:8, 0:8]
+        y0 = (16 + (i * 13 + gy * 41 + gx * 59) % 224
+              ).repeat(4, 0).repeat(4, 1)
+        cgy, cgx = np.mgrid[0:4, 0:4]
+        cb0 = (16 + (i * 23 + cgy * 31 + cgx * 41) % 200
+               ).repeat(4, 0).repeat(4, 1)
+        cr0 = (16 + (i * 29 + cgy * 37 + cgx * 43) % 200
+               ).repeat(4, 0).repeat(4, 1)
+        ys = [y0]
+        cbs = [cb0]
+        crs = [cr0]
+        specs_per_p = []
+        by, bx = np.mgrid[0:8, 0:8]
+        cby, cbx = np.mgrid[0:4, 0:4]
+        for k in range(1, 5):
+            yk = np.zeros((32, 32), np.int64)
+            cbk = np.zeros((16, 16), np.int64)
+            crk = np.zeros((16, 16), np.int64)
+            specs = []
+            for m in range(4):
+                mx_, my_ = m % 2, m // 2
+                rf = _m44_ref(i, k, m)
+                base = len(ys) - 1 - rf
+                sly = np.s_[my_ * 16 : my_ * 16 + 16,
+                            mx_ * 16 : mx_ * 16 + 16]
+                slc = np.s_[my_ * 8 : my_ * 8 + 8,
+                            mx_ * 8 : mx_ * 8 + 8]
+                dl = (_m44_delta(i, k, m, by, bx)
+                      .repeat(4, 0).repeat(4, 1))[sly]
+                dcb = (_m44_delta(i * 3 + 1, k, m, cby, cbx)
+                       .repeat(4, 0).repeat(4, 1))[slc]
+                dcr = (_m44_delta(i * 5 + 2, k, m, cby, cbx)
+                       .repeat(4, 0).repeat(4, 1))[slc]
+                yk[sly] = ys[base][sly] + dl
+                cbk[slc] = cbs[base][slc] + dcb
+                crk[slc] = crs[base][slc] + dcr
+                specs.append(("16x16", [((0, 0), rf)]))
+            ys.append(yk)
+            cbs.append(cbk)
+            crs.append(crk)
+            specs_per_p.append(specs)
+        frames = [
+            (y.astype(np.uint8), cb.astype(np.uint8),
+             cr.astype(np.uint8))
+            for y, cb, cr in zip(ys, cbs, crs)
+        ]
+        stream, recons = encode_h264_p_gop(
+            frames, specs_per_p, qp=0, num_refs=3
+        )
+        for fa, fb in zip(recons, frames):
+            for a, b in zip(fa, fb):
+                if not np.array_equal(a, b):
+                    raise AssertionError(
+                        f"doc {i}: QP-0 long-GOP not exact")
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_longgop_features(
@@ -2194,32 +2135,17 @@ def h264_longgop_features(
 ):
     """Decode the 5-frame multi-ref sequences and emit per-frame
     luma sums plus the final frame's chroma sums."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     out_schema = (
         f"{id_col} long, n_frames int,"
         " sum_y_f1 long, sum_y_f2 long, sum_y_f3 long, sum_y_f4 long,"
         " sum_cb_f4 long, sum_cr_f4 long"
     )
 
-    def feat(batches) -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames = decode_h264_sequence(bytes(content))
-                rows.append(
-                    (int(i), len(frames),
-                     int(frames[1][0].sum()), int(frames[2][0].sum()),
-                     int(frames[3][0].sum()), int(frames[4][0].sum()),
-                     int(frames[4][1].sum()), int(frames[4][2].sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "sum_y_f1", "sum_y_f2",
-                         "sum_y_f3", "sum_y_f4", "sum_cb_f4",
-                         "sum_cr_f4"],
-            )
+    def feat(i, content):
+        frames = decode_h264_sequence(content)
+        yield (i, len(frames),
+               int(frames[1][0].sum()), int(frames[2][0].sum()),
+               int(frames[3][0].sum()), int(frames[4][0].sum()),
+               int(frames[4][1].sum()), int(frames[4][2].sum()))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -56,19 +56,18 @@ never silent): I_8x8 (High profile), CABAC entropy coding, inter
 raises NotImplementedError pointing at decoder='ffmpeg' in
 binaryops.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle —
 the same adapter split the reference applies at its NIfTI boundary
 (ssm_loop.py:40).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -82,6 +81,7 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _slice_header,
     _slice_nals,
     _sps_rbsp,
+    yuv_features,
 )
 
 # --- transforms and quantization (clause 8.5) --------------------------------
@@ -1677,35 +1677,28 @@ def synthesize_h264_intra_frames(
     out_schema = "media_id long, content binary"
     w, h = mb_cols * 16, mb_rows * 16
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                y = np.zeros((h, w), np.uint8)
-                cb = np.zeros((h // 2, w // 2), np.uint8)
-                cr = np.zeros((h // 2, w // 2), np.uint8)
-                for my in range(mb_rows):
-                    for mx in range(mb_cols):
-                        y[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
-                            i * 11 + my * 37 + mx * 29
-                        ) % 256
-                        cb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                            i * 7 + my * 31 + mx * 43
-                        ) % 256
-                        cr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                            i * 5 + my * 23 + mx * 47
-                        ) % 256
-                stream, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=0)
-                assert (ry == y).all() and (rcb == cb).all() and (
-                    rcr == cr
-                ).all(), "QP0 constant-MB path must be exact"
-                payloads.append(stream)
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        y = np.zeros((h, w), np.uint8)
+        cb = np.zeros((h // 2, w // 2), np.uint8)
+        cr = np.zeros((h // 2, w // 2), np.uint8)
+        for my in range(mb_rows):
+            for mx in range(mb_cols):
+                y[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
+                    i * 11 + my * 37 + mx * 29
+                ) % 256
+                cb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
+                    i * 7 + my * 31 + mx * 43
+                ) % 256
+                cr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
+                    i * 5 + my * 23 + mx * 47
+                ) % 256
+        stream, ry, rcb, rcr = encode_h264_i16x16(y, cb, cr, qp=0)
+        assert (ry == y).all() and (rcb == cb).all() and (
+            rcr == cr
+        ).all(), "QP0 constant-MB path must be exact"
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def synthesize_h264_i4x4_frames(
@@ -1722,37 +1715,30 @@ def synthesize_h264_i4x4_frames(
     at QP 0, so the oracle recomputes every decoded sample in SQL."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                y = np.zeros((16, 16), np.uint8)
-                cb = np.zeros((8, 8), np.uint8)
-                cr = np.zeros((8, 8), np.uint8)
-                for by in range(4):
-                    for bx in range(4):
-                        y[by * 4 : by * 4 + 4, bx * 4 : bx * 4 + 4] = (
-                            i * 13 + by * 41 + bx * 59
-                        ) % 256
-                for cy in range(2):
-                    for cx in range(2):
-                        cb[cy * 4 : cy * 4 + 4, cx * 4 : cx * 4 + 4] = (
-                            i * 17 + cy * 37 + cx * 53
-                        ) % 256
-                        cr[cy * 4 : cy * 4 + 4, cx * 4 : cx * 4 + 4] = (
-                            i * 19 + cy * 43 + cx * 61
-                        ) % 256
-                stream, ry, rcb, rcr = encode_h264_i4x4(y, cb, cr, qp=0)
-                assert (ry == y).all() and (rcb == cb).all() and (
-                    rcr == cr
-                ).all(), "QP0 constant-4x4 path must be exact"
-                payloads.append(stream)
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        y = np.zeros((16, 16), np.uint8)
+        cb = np.zeros((8, 8), np.uint8)
+        cr = np.zeros((8, 8), np.uint8)
+        for by in range(4):
+            for bx in range(4):
+                y[by * 4 : by * 4 + 4, bx * 4 : bx * 4 + 4] = (
+                    i * 13 + by * 41 + bx * 59
+                ) % 256
+        for cy in range(2):
+            for cx in range(2):
+                cb[cy * 4 : cy * 4 + 4, cx * 4 : cx * 4 + 4] = (
+                    i * 17 + cy * 37 + cx * 53
+                ) % 256
+                cr[cy * 4 : cy * 4 + 4, cx * 4 : cx * 4 + 4] = (
+                    i * 19 + cy * 43 + cx * 61
+                ) % 256
+        stream, ry, rcb, rcr = encode_h264_i4x4(y, cb, cr, qp=0)
+        assert (ry == y).all() and (rcb == cb).all() and (
+            rcr == cr
+        ).all(), "QP0 constant-4x4 path must be exact"
+        yield i, stream
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def h264_intra_frame_features(
@@ -1767,30 +1753,7 @@ def h264_intra_frame_features(
         "mean_y double, sum_y long, sum_cb long, sum_cr long"
     )
 
-    def feat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, my, sy, scb, scr = [], [], [], [], [], []
-            for payload in pdf[content_col]:
-                y, cb, cr = decode_h264_frame(payload)
-                ih, iw = y.shape
-                ws.append(iw)
-                hs.append(ih)
-                my.append(float(y.astype(np.float64).mean()))
-                sy.append(int(y.astype(np.int64).sum()))
-                scb.append(int(cb.astype(np.int64).sum()))
-                scr.append(int(cr.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_y": my,
-                    "sum_y": sy,
-                    "sum_cb": scb,
-                    "sum_cr": scr,
-                }
-            )
+    def feat(key, payload):
+        yield yuv_features(key, *decode_h264_frame(payload))
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

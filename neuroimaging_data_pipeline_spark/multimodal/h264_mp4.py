@@ -25,19 +25,18 @@ equivalent for the MP4/H.264 corpora that dominate real multimodal
 training sets (SURVEY §2 multimodal columns).
 
 Scale: mux/demux are pure per-document byte transforms executed
-inside mapInPandas over a narrow (id, content) projection — zero
+inside map_rows over a narrow (id, content) projection — zero
 shuffle, one task per video shard at 100 TB.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.h264 import _split_nals
 from neuroimaging_data_pipeline_spark.multimodal.mp4 import (
     _box,
@@ -309,22 +308,10 @@ def synthesize_h264_mp4_clips(
     gop = synthesize_h264_gop_frames(docs, id_col=id_col)
     out_schema = f"{id_col} long, content binary"
 
-    def mux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, annexb in zip(pdf[id_col], pdf["content"]):
-                ids.append(int(i))
-                blobs.append(
-                    mux_h264_mp4(bytes(annexb), int(i), 32, 32)
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def mux(i, annexb):
+        yield i, mux_h264_mp4(annexb, i, 32, 32)
 
-    return gop.mapInPandas(mux, out_schema)
+    return map_rows(gop.select(id_col, "content"), mux, out_schema)
 
 
 def h264_mp4_frame_features(
@@ -343,41 +330,29 @@ def h264_mp4_frame_features(
         " sum_cb_p2 long, sum_cr_p2 long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                frames, info = decode_h264_mp4(bytes(content))
-                if len(frames) != info["n_samples"]:
-                    raise ValueError(
-                        f"doc {i}: decoded {len(frames)} frames from "
-                        f"{info['n_samples']} MP4 samples"
-                    )
-                y_i = frames[0][0]
-                y_p1 = frames[1][0]
-                y_p2, cb_p2, cr_p2 = frames[2]
-                rows.append(
-                    (
-                        int(i),
-                        int(info["n_samples"]),
-                        int(info["profile"]),
-                        int(info["level"]),
-                        int(info["length_size"]),
-                        int(info["width"]),
-                        int(info["height"]),
-                        int(y_i.sum()),
-                        int(y_p1.sum()),
-                        int(y_p2.sum()),
-                        int(cb_p2.sum()),
-                        int(cr_p2.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_samples", "avc_profile",
-                         "avc_level", "nal_length_size", "width",
-                         "height", "sum_y_idr", "sum_y_p1", "sum_y_p2",
-                         "sum_cb_p2", "sum_cr_p2"],
+    def feat(i, content):
+        frames, info = decode_h264_mp4(content)
+        if len(frames) != info["n_samples"]:
+            raise ValueError(
+                f"doc {i}: decoded {len(frames)} frames from "
+                f"{info['n_samples']} MP4 samples"
             )
+        y_i = frames[0][0]
+        y_p1 = frames[1][0]
+        y_p2, cb_p2, cr_p2 = frames[2]
+        yield (
+            i,
+            int(info["n_samples"]),
+            int(info["profile"]),
+            int(info["level"]),
+            int(info["length_size"]),
+            int(info["width"]),
+            int(info["height"]),
+            int(y_i.sum()),
+            int(y_p1.sum()),
+            int(y_p2.sum()),
+            int(cb_p2.sum()),
+            int(cr_p2.sum()),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

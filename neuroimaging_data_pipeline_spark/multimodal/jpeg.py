@@ -62,20 +62,20 @@ DuckDB can recompute the decoded features from the pixel formula.
 Lossy behavior on arbitrary images is pinned separately in pytest
 with a measured error bound.
 
-Scale: same opaque-binary-column + Arrow ``mapInPandas`` boundary as
+Scale: same opaque-binary-column + Arrow ``map_rows`` boundary as
 the WAV/PPM/PNG codecs in ``binaryops.py`` — narrow over the scan,
 nothing shuffles.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -939,6 +939,25 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
+def malformed_as_valueerror(decode):
+    """Decorate a JPEG decoder so hostile marker segments raise
+    ValueError, the codecs' controlled failure: a short SOF/SOS/DRI, a
+    scan naming an undefined Huffman table, quantization table or
+    component id, or a DC prediction out of range would otherwise
+    escape as the IndexError/KeyError/struct.error/OverflowError of
+    the lookup that found it (kept as ``__cause__``)."""
+
+    @functools.wraps(decode)
+    def checked(payload):
+        try:
+            return decode(payload)
+        except (IndexError, KeyError, OverflowError, struct.error) as e:
+            raise ValueError(f"malformed JPEG: {type(e).__name__}: {e}") from e
+
+    return checked
+
+
+@malformed_as_valueerror
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Real baseline JPEG decode: marker walk, DQT/DHT from the
     stream, Huffman + per-component DC-prediction entropy decode with
@@ -1415,16 +1434,12 @@ def synthesize_jpeg_images(
     bxs = np.arange(blocks_x)[None, :]
     base = bys * 41 + bxs * 29
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                blocks = ((int(i) * 13 + base) % 256).astype(np.uint8)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(encode_jpeg_gray(img, restart_interval=2))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        blocks = ((i * 13 + base) % 256).astype(np.uint8)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        yield i, encode_jpeg_gray(img, restart_interval=2)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def synthesize_jpeg_color_images(
@@ -1444,17 +1459,12 @@ def synthesize_jpeg_color_images(
     bxs = np.arange(blocks_x)[None, :]
     base = bys * 43 + bxs * 31
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                blocks = ((int(i) * 17 + base) % 256).astype(np.uint8)
-                gray = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.stack([gray, gray, gray], axis=-1)
-                payloads.append(encode_jpeg_color(rgb))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        blocks = ((i * 17 + base) % 256).astype(np.uint8)
+        gray = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        yield i, encode_jpeg_color(np.stack([gray, gray, gray], axis=-1))
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def synthesize_jpeg_progressive_images(
@@ -1485,22 +1495,14 @@ def synthesize_jpeg_progressive_images(
     bxs = np.arange(blocks_x)[None, :]
     base = bys * 53 + bxs * 59
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                blocks = ((int(i) * 23 + base) % 256).astype(np.uint8)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(
-                    encode_jpeg_progressive(
-                        img,
-                        script=sa_script(1),
-                        restart_interval=int(i) % 3,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        blocks = ((i * 23 + base) % 256).astype(np.uint8)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        yield i, encode_jpeg_progressive(
+            img, script=sa_script(1), restart_interval=i % 3
+        )
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def synthesize_jpeg_420_images(
@@ -1522,17 +1524,13 @@ def synthesize_jpeg_420_images(
     mxs = np.arange(macro_x)[None, :]
     base = mys * 47 + mxs * 37
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                macros = ((int(i) * 19 + base) % 256).astype(np.uint8)
-                gray = np.kron(macros, np.ones((16, 16), dtype=np.uint8))
-                rgb = np.stack([gray, gray, gray], axis=-1)
-                payloads.append(encode_jpeg_color(rgb, subsampling="420"))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        macros = ((i * 19 + base) % 256).astype(np.uint8)
+        gray = np.kron(macros, np.ones((16, 16), dtype=np.uint8))
+        rgb = np.stack([gray, gray, gray], axis=-1)
+        yield i, encode_jpeg_color(rgb, subsampling="420")
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def jpeg_color_features(
@@ -1548,33 +1546,12 @@ def jpeg_color_features(
         "mean_r double, mean_g double, mean_b double, sum_px long"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mr, mg, mb, sp = [], [], [], [], [], []
-            for payload in pdf[content_col]:
-                img = decode_jpeg_color(payload)
-                ih, iw, _ = img.shape
-                ws.append(iw)
-                hs.append(ih)
-                flat = img.reshape(-1, 3).astype(np.float64)
-                means = flat.mean(axis=0)
-                mr.append(float(means[0]))
-                mg.append(float(means[1]))
-                mb.append(float(means[2]))
-                sp.append(int(flat.sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                    "sum_px": sp,
-                }
-            )
+    from .binaryops import rgb_features
 
-    return media.mapInPandas(feat_batches, out_schema)
+    def feat(mid, payload):
+        yield rgb_features(mid, decode_jpeg_color(payload))
+
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def jpeg_features(
@@ -1585,30 +1562,20 @@ def jpeg_features(
     """Decode baseline-JPEG binaries with the REAL stdlib-only codec
     and emit per-image features: (media_id, width, height, mean_gray,
     sum_px). sum_px makes the oracle sensitive to every decoded pixel.
-    Same narrow Arrow-batched mapInPandas boundary as png_features."""
+    Same narrow Arrow-batched map_rows boundary as png_features."""
     out_schema = (
         f"{id_col} long, width int, height int, mean_gray double, sum_px long"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mg, sp = [], [], [], []
-            for payload in pdf[content_col]:
-                img = decode_jpeg_gray(payload)
-                ih, iw = img.shape
-                ws.append(iw)
-                hs.append(ih)
-                flat = img.astype(np.float64)
-                mg.append(float(flat.mean()))
-                sp.append(int(flat.sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_gray": mg,
-                    "sum_px": sp,
-                }
-            )
+    def feat(mid, payload):
+        yield gray_features(mid, decode_jpeg_gray(payload))[:5]
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
+
+
+def gray_features(key, img: np.ndarray) -> tuple:
+    """(key, width, height, mean_gray, sum_px, max_px) of a 2-D image —
+    the feature row of every grayscale JPEG flavour."""
+    h, w = img.shape
+    flat = img.astype(np.float64)
+    return key, w, h, float(flat.mean()), int(flat.sum()), int(img.max())

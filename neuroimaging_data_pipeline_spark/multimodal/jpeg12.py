@@ -33,7 +33,7 @@ features straight from the block formula while the whole deeper
 entropy pipeline runs for real. Lossy behavior on arbitrary 12-bit
 content is pinned in pytest with a measured bound.
 
-Scale: identical opaque-binary + Arrow ``mapInPandas`` boundary as
+Scale: identical opaque-binary + Arrow ``map_rows`` boundary as
 every other codec — narrow plan over the scan, zero shuffle.
 """
 
@@ -41,11 +41,12 @@ from __future__ import annotations
 
 import heapq
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+
 
 from .bitio import BitWriter, canonical_codes
 from .jpeg import (
@@ -268,25 +269,19 @@ def synthesize_jpeg12_images(
     bxs = np.arange(blocks_x)[None, :]
     base = bys * 67 + bxs * 61
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import encode_jpeg_progressive, sa_script
+    from .jpeg import encode_jpeg_progressive, sa_script
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                blocks = ((int(i) * 29 + base) % 4096).astype(np.uint16)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
-                if int(i) % 2:
-                    payloads.append(
-                        encode_jpeg_progressive(
-                            img, script=sa_script(1), precision=12
-                        )
-                    )
-                else:
-                    payloads.append(encode_jpeg_gray12(img))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        blocks = ((i * 29 + base) % 4096).astype(np.uint16)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
+        if i % 2:
+            yield i, encode_jpeg_progressive(
+                img, script=sa_script(1), precision=12
+            )
+        else:
+            yield i, encode_jpeg_gray12(img)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def jpeg12_features(
@@ -297,34 +292,14 @@ def jpeg12_features(
     """Decode 12-bit JPEGs with the real codec (jpeg.py's generalized
     decoder) and emit per-image features; max_px proves the >8-bit
     dynamic range actually flowed through decode."""
-    from .jpeg import decode_jpeg_gray
+    from .jpeg import decode_jpeg_gray, gray_features
 
     out_schema = (
         f"{id_col} long, width int, height int, "
         "mean_gray double, sum_px long, max_px int"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mg, sp, mx = [], [], [], [], []
-            for payload in pdf[content_col]:
-                img = decode_jpeg_gray(payload)
-                ih, iw = img.shape
-                flat = img.astype(np.float64)
-                ws.append(iw)
-                hs.append(ih)
-                mg.append(float(flat.mean()))
-                sp.append(int(flat.sum()))
-                mx.append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_gray": mg,
-                    "sum_px": sp,
-                    "max_px": mx,
-                }
-            )
+    def feat(mid, payload):
+        yield gray_features(mid, decode_jpeg_gray(payload))
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -35,20 +35,21 @@ the larger. Everything a corpus pipeline observes (marker walk,
 stuffing, adaptive compression beating the Huffman coder on natural
 content — pinned in pytest) is real.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle —
 identical posture to every other codec in this package.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .jpeg import _C, _ZIGZAG, _pad8, _seg
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+
+
+from .jpeg import _C, _ZIGZAG, _pad8, _seg, gray_features
 from .jpeg12 import _quantize_blocks
 
 # --- QM-style probability estimation states --------------------------------
@@ -436,16 +437,12 @@ def synthesize_jpeg_arith_images(
     bxs = np.arange(blocks_x)[None, :]
     base = bys * 71 + bxs * 73
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                blocks = ((int(i) * 31 + base) % 4096).astype(np.uint16)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
-                payloads.append(encode_jpeg_arith(img, precision=12))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(i):
+        blocks = ((i * 31 + base) % 4096).astype(np.uint16)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
+        yield i, encode_jpeg_arith(img, precision=12)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def jpeg_arith_features(
@@ -461,27 +458,7 @@ def jpeg_arith_features(
         "mean_gray double, sum_px long, max_px int"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, mg, sp, mx = [], [], [], [], []
-            for payload in pdf[content_col]:
-                img = decode_jpeg_arith(payload)
-                ih, iw = img.shape
-                flat = img.astype(np.float64)
-                ws.append(iw)
-                hs.append(ih)
-                mg.append(float(flat.mean()))
-                sp.append(int(flat.sum()))
-                mx.append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "mean_gray": mg,
-                    "sum_px": sp,
-                    "max_px": mx,
-                }
-            )
+    def feat(mid, payload):
+        yield gray_features(mid, decode_jpeg_arith(payload))
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

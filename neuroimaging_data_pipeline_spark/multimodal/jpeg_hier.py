@@ -48,12 +48,11 @@ the engine-side decode path.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -72,6 +71,7 @@ from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
     _scan_bytes,
     _seg,
     _split_scan,
+    malformed_as_valueerror,
 )
 
 # Extended-range tables for differential frames: DC categories 0..15
@@ -220,6 +220,7 @@ def encode_jpeg_hierarchical(
     return bytes(out), recons
 
 
+@malformed_as_valueerror
 def decode_jpeg_hierarchical(payload: bytes) -> list:
     """Decode a hierarchical grayscale JPEG; returns the decoded
     plane of EVERY pyramid level in coding order (the last entry is
@@ -368,38 +369,27 @@ def synthesize_jpeg_hier_images(
     from the id formulas."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                c0 = 16 + (i * 29) % 224
-                c1 = 16 + (i * 57) % 224
-                by, bx = np.mgrid[0:4, 0:4]
-                t = (16 + (i * 13 + by * 37 + bx * 53) % 224).repeat(
-                    8, 0
-                ).repeat(8, 1)
-                levels = [
-                    np.full((8, 8), c0, np.uint8),
-                    np.full((16, 16), c1, np.uint8),
-                    t.astype(np.uint8),
-                ]
-                blob, recons = encode_jpeg_hierarchical(levels)
-                for lv, rec in zip(levels, recons):
-                    if not np.array_equal(lv, rec):
-                        raise AssertionError(
-                            f"doc {i}: hierarchical fixture not exact"
-                        )
-                ids.append(i)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        c0 = 16 + (i * 29) % 224
+        c1 = 16 + (i * 57) % 224
+        by, bx = np.mgrid[0:4, 0:4]
+        t = (16 + (i * 13 + by * 37 + bx * 53) % 224).repeat(
+            8, 0
+        ).repeat(8, 1)
+        levels = [
+            np.full((8, 8), c0, np.uint8),
+            np.full((16, 16), c1, np.uint8),
+            t.astype(np.uint8),
+        ]
+        blob, recons = encode_jpeg_hierarchical(levels)
+        for lv, rec in zip(levels, recons):
+            if not np.array_equal(lv, rec):
+                raise AssertionError(
+                    f"doc {i}: hierarchical fixture not exact"
+                )
+        yield i, blob
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def jpeg_hier_features(
@@ -414,29 +404,19 @@ def jpeg_hier_features(
         " base_val int, mid_val int, sum_y_final long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                levels = decode_jpeg_hierarchical(bytes(content))
-                base, mid, final = levels[0], levels[1], levels[-1]
-                if base.min() != base.max() or mid.min() != mid.max():
-                    raise AssertionError("fixture levels must be constant")
-                rows.append(
-                    (
-                        int(i),
-                        len(levels),
-                        int(final.shape[1]),
-                        int(final.shape[0]),
-                        int(base[0, 0]),
-                        int(mid[0, 0]),
-                        int(final.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_levels", "width", "height",
-                         "base_val", "mid_val", "sum_y_final"],
-            )
+    def feat(i, content):
+        levels = decode_jpeg_hierarchical(content)
+        base, mid, final = levels[0], levels[1], levels[-1]
+        if base.min() != base.max() or mid.min() != mid.max():
+            raise AssertionError("fixture levels must be constant")
+        yield (
+            i,
+            len(levels),
+            int(final.shape[1]),
+            int(final.shape[0]),
+            int(base[0, 0]),
+            int(mid[0, 0]),
+            int(final.sum()),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -25,15 +25,15 @@ side info, bit reservoir, scalefactors, Annex B Huffman, down to
 spec-exact frequency lines (m34). The remaining gates live THERE
 (ESC Huffman tables, synthesis filterbank) and are loud.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _BITRATE_KBPS = [
     None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320,
@@ -174,26 +174,19 @@ def synthesize_mp3s(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     toggling by frame parity, plus TIT2/TPE1/TRCK ID3 tags."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                specs = [
-                    (9 + (i + k) % 3, 0, k % 2)  # 128/160/192 kbps
-                    for k in range(4 + i % 5)
-                ]
-                tags = {
-                    "TIT2": f"doc {i}",
-                    "TPE1": "corpus",
-                    "TRCK": str(i % 100),
-                }
-                payloads.append(build_mp3(tags, specs))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        specs = [
+            (9 + (i + k) % 3, 0, k % 2)  # 128/160/192 kbps
+            for k in range(4 + i % 5)
+        ]
+        tags = {
+            "TIT2": f"doc {i}",
+            "TPE1": "corpus",
+            "TRCK": str(i % 100),
+        }
+        yield i, build_mp3(tags, specs)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mp3_meta_features(
@@ -207,28 +200,17 @@ def mp3_meta_features(
         "sum_kbps long"
     )
 
-    def feat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                m = parse_mp3(payload)
-                rows.append(
-                    {
-                        id_col: int(mid),
-                        "title": m["tags"]["TIT2"],
-                        "track": int(m["tags"]["TRCK"]),
-                        "n_frames": m["n_frames"],
-                        "audio_bytes": m["audio_bytes"],
-                        "sample_rate": m["sample_rate"],
-                        "duration_samples": m["duration_samples"],
-                        "sum_kbps": sum(m["bitrates"]),
-                    }
-                )
-            out = pd.DataFrame(rows)
-            for c in ("track", "n_frames", "sample_rate"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def feat(mid, payload):
+        m = parse_mp3(payload)
+        yield (
+            mid,
+            m["tags"]["TIT2"],
+            int(m["tags"]["TRCK"]),
+            m["n_frames"],
+            m["audio_bytes"],
+            m["sample_rate"],
+            m["duration_samples"],
+            sum(m["bitrates"]),
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

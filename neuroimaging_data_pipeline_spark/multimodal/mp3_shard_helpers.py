@@ -9,11 +9,11 @@ order-pinned per-shard features. Mirrors h264_gop_helpers (e13).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
     decode_mp3_l3,
 )
@@ -47,40 +47,30 @@ def decode_mp3_shard_features(shards: DataFrame) -> DataFrame:
         " wsum_total long, docs_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, blob in zip(pdf["shard_id"], pdf["tar"]):
-                parts = []
-                wtotal = 0
-                gr_total = 0
-                for name, data in parse_tar(bytes(blob)):
-                    doc_id = int(name.split(".")[0])
-                    out = decode_mp3_l3(bytes(data))
-                    if not out["reservoir_used"]:
-                        raise ValueError(
-                            f"doc {doc_id}: bit reservoir never "
-                            "exercised — fixture contract broken"
-                        )
-                    wsum = 0
-                    for k, g in enumerate(out["granules"]):
-                        for idx, v in enumerate(g["lines"]):
-                            if v:
-                                wsum += v * (idx + 1) * (k + 1)
-                    gr_total += out["n_granules"]
-                    wtotal += wsum
-                    parts.append(f"{doc_id}:{wsum}")
-                digest = hashlib.md5(
-                    "|".join(parts).encode()
-                ).hexdigest()
-                rows.append(
-                    (int(shard_id), len(parts), gr_total, wtotal,
-                     digest)
+    def feat(shard_id, blob):
+        parts = []
+        wtotal = 0
+        gr_total = 0
+        for name, data in parse_tar(blob):
+            doc_id = int(name.split(".")[0])
+            out = decode_mp3_l3(bytes(data))
+            if not out["reservoir_used"]:
+                raise ValueError(
+                    f"doc {doc_id}: bit reservoir never "
+                    "exercised — fixture contract broken"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "n_docs", "n_granules_total",
-                         "wsum_total", "docs_md5"],
-            )
+            wsum = 0
+            for k, g in enumerate(out["granules"]):
+                for idx, v in enumerate(g["lines"]):
+                    if v:
+                        wsum += v * (idx + 1) * (k + 1)
+            gr_total += out["n_granules"]
+            wtotal += wsum
+            parts.append(f"{doc_id}:{wsum}")
+        digest = hashlib.md5(
+            "|".join(parts).encode()
+        ).hexdigest()
+        yield (shard_id, len(parts), gr_total, wtotal,
+               digest)
 
-    return shards.mapInPandas(feat, out_schema)
+    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)

@@ -62,18 +62,17 @@ the polyphase Table B.3 window. A capability-gated
 ffmpeg cross-check belongs on machines that have ffmpeg (this
 container has none).
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle;
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle;
 at 100 TB one task per audio shard, linear per-clip CPU.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -1132,27 +1131,14 @@ def synthesize_mp3_l3_clips(
     formulas, bit-reservoir packing live."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                n_frames = 3 + i % 3
-                gs = [
-                    _fixture_granule(i, k) for k in range(2 * n_frames)
-                ]
-                blobs.append(
-                    encode_mp3_l3(gs, scfsi=0, tags={"TIT2": f"doc{i}"})
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        n_frames = 3 + i % 3
+        gs = [
+            _fixture_granule(i, k) for k in range(2 * n_frames)
+        ]
+        yield i, encode_mp3_l3(gs, scfsi=0, tags={"TIT2": f"doc{i}"})
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mp3_l3_features(
@@ -1170,37 +1156,26 @@ def mp3_l3_features(
         " weighted_sum bigint"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_mp3_l3(bytes(content))
-                sum_abs = n_nz = wsum = 0
-                for k, g in enumerate(d["granules"]):
-                    for idx, v in enumerate(g["lines"]):
-                        if v:
-                            sum_abs += abs(v)
-                            n_nz += 1
-                            wsum += v * (idx + 1) * (k + 1)
-                rows.append(
-                    (
-                        int(i),
-                        d["n_frames"],
-                        d["n_granules"],
-                        bool(d["reservoir_used"]),
-                        sum_abs,
-                        n_nz,
-                        wsum,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "n_granules",
-                         "reservoir_used", "sum_abs", "n_nonzero",
-                         "weighted_sum"],
-            )
+    def feat(i, content):
+        d = decode_mp3_l3(content)
+        sum_abs = n_nz = wsum = 0
+        for k, g in enumerate(d["granules"]):
+            for idx, v in enumerate(g["lines"]):
+                if v:
+                    sum_abs += abs(v)
+                    n_nz += 1
+                    wsum += v * (idx + 1) * (k + 1)
+        yield (
+            i,
+            d["n_frames"],
+            d["n_granules"],
+            bool(d["reservoir_used"]),
+            sum_abs,
+            n_nz,
+            wsum,
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1300,29 +1275,16 @@ def synthesize_mp3_intensity_clips(
     with per-window intensity bounds at band 3."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                gs = [
-                    _m41_long_left(i, 0), _m41_long_right(i, 0),
-                    _m41_long_left(i, 1), _m41_long_right(i, 1),
-                    _m41_short_left(i, 2), _m41_short_right(i, 2),
-                    _m41_short_left(i, 3), _m41_short_right(i, 3),
-                ]
-                blobs.append(
-                    encode_mp3_l3(gs, scfsi=0, nch=2, intensity=True)
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i):
+        gs = [
+            _m41_long_left(i, 0), _m41_long_right(i, 0),
+            _m41_long_left(i, 1), _m41_long_right(i, 1),
+            _m41_short_left(i, 2), _m41_short_right(i, 2),
+            _m41_short_left(i, 3), _m41_short_right(i, 3),
+        ]
+        yield i, encode_mp3_l3(gs, scfsi=0, nch=2, intensity=True)
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mp3_intensity_features(
@@ -1343,36 +1305,26 @@ def mp3_intensity_features(
         " sum_xl double, sum_xr double"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_mp3_l3(bytes(content))
-                sum_abs = n_nz = wsum = 0
-                sum_xl = sum_xr = 0.0
-                for k, g in enumerate(d["granules"]):
-                    if not g.get("intensity"):
-                        raise ValueError(
-                            f"doc {i} granule {k}: intensity flag "
-                            "missing — joint-stereo decode did not run"
-                        )
-                    for idx, v in enumerate(g["lines"]):
-                        if v:
-                            sum_abs += abs(v)
-                            n_nz += 1
-                            wsum += v * (idx + 1) * (k + 1)
-                    if k % 2 == 0:
-                        sum_xl += float(np.sum(g["xr"]))
-                    else:
-                        sum_xr += float(np.sum(g["xr"]))
-                rows.append(
-                    (int(i), d["n_granules"], sum_abs, n_nz, wsum,
-                     round(sum_xl, 3), round(sum_xr, 3))
+    def feat(i, content):
+        d = decode_mp3_l3(content)
+        sum_abs = n_nz = wsum = 0
+        sum_xl = sum_xr = 0.0
+        for k, g in enumerate(d["granules"]):
+            if not g.get("intensity"):
+                raise ValueError(
+                    f"doc {i} granule {k}: intensity flag "
+                    "missing — joint-stereo decode did not run"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_granules", "sum_abs", "n_nonzero",
-                         "weighted_sum", "sum_xl", "sum_xr"],
-            )
+            for idx, v in enumerate(g["lines"]):
+                if v:
+                    sum_abs += abs(v)
+                    n_nz += 1
+                    wsum += v * (idx + 1) * (k + 1)
+            if k % 2 == 0:
+                sum_xl += float(np.sum(g["xr"]))
+            else:
+                sum_xr += float(np.sum(g["xr"]))
+        yield (i, d["n_granules"], sum_abs, n_nz, wsum,
+               round(sum_xl, 3), round(sum_xr, 3))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
     _SFB_SHORT_44,
 )
@@ -210,8 +211,6 @@ def mp3_subband_features(media, id_col="doc_id", content_col="content"):
     sides (the engines sum the same doubles in different groupings —
     the w8/IVF exception class; divergence ~1e-10 vs the 5e-4
     boundary)."""
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         decode_mp3_l3,
     )
@@ -221,32 +220,22 @@ def mp3_subband_features(media, id_col="doc_id", content_col="content"):
         " weighted_s double"
     )
 
-    def feat(batches):
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = decode_mp3_l3(bytes(content))
-                st = HybridState()
-                sum_abs = 0.0
-                wsum = 0.0
-                sbw = np.arange(32) + 1.0
-                for gk, g in enumerate(d["granules"]):
-                    out = hybrid_granule(
-                        g["xr"], st, g["block_type"],
-                        bool(g.get("mixed")),
-                    )
-                    S = out.sum(axis=0)
-                    sum_abs += float(np.abs(S).sum())
-                    wsum += float((S * sbw).sum()) * (gk + 1)
-                rows.append(
-                    (int(i), len(d["granules"]),
-                     float(np.round(sum_abs, 3)),
-                     float(np.round(wsum, 3)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_granules", "sum_abs_s",
-                         "weighted_s"],
+    def feat(i, content):
+        d = decode_mp3_l3(content)
+        st = HybridState()
+        sum_abs = 0.0
+        wsum = 0.0
+        sbw = np.arange(32) + 1.0
+        for gk, g in enumerate(d["granules"]):
+            out = hybrid_granule(
+                g["xr"], st, g["block_type"],
+                bool(g.get("mixed")),
             )
+            S = out.sum(axis=0)
+            sum_abs += float(np.abs(S).sum())
+            wsum += float((S * sbw).sum()) * (gk + 1)
+        yield (i, len(d["granules"]),
+               float(np.round(sum_abs, 3)),
+               float(np.round(wsum, 3)))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -16,7 +16,7 @@ decodes scanner k-space either).
 
 Spark boundary: identical to the sibling codecs — media are opaque
 ``binary`` columns, encode/decode run inside Arrow-batched
-``mapInPandas``, plans stay narrow (no shuffle), and the fixture
+``map_rows``, plans stay narrow (no shuffle), and the fixture
 bytes derive from pure integer formulas so a DuckDB oracle can
 recompute every emitted feature without any codec.
 
@@ -35,8 +35,9 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 MOVIE_TIMESCALE = 1000
 
@@ -279,7 +280,6 @@ def _full_header(data: bytes, s: int) -> tuple[int, int]:
     return data[s], s + 4
 
 
-
 def _checked_count(data: bytes, p: int, count: int, itemsize: int,
                    what: str) -> None:
     """Hostile containers carry flipped entry counts: validate the
@@ -446,15 +446,13 @@ def synthesize_mp4_clips(
 ) -> DataFrame:
     """Deterministic video-container fixture: one real MP4 per
     document from ``_sample_plan``/``_sample_payload`` formulas.
-    (media_id, content binary). Narrow Arrow mapInPandas, no shuffle."""
+    (media_id, content binary). Narrow Arrow map_rows, no shuffle."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_mp4(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        yield i, encode_mp4(i)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mp4_meta_features(
@@ -473,38 +471,22 @@ def mp4_meta_features(
         "payload_sum long"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp4_meta(payload)
-                rows.append(
-                    (
-                        mid,
-                        m["n_tracks"],
-                        m["handler"],
-                        m["timescale"],
-                        m["duration"],
-                        m["n_samples"],
-                        m["total_sample_bytes"],
-                        m["payload_sum"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "n_tracks",
-                    "handler",
-                    "timescale",
-                    "duration",
-                    "n_samples",
-                    "total_sample_bytes",
-                    "payload_sum",
-                ],
-            )
+    def feat(mid, payload):
+        m = decode_mp4_meta(payload)
+        yield (
+            mid,
+            m["n_tracks"],
+            m["handler"],
+            m["timescale"],
+            m["duration"],
+            m["n_samples"],
+            m["total_sample_bytes"],
+            m["payload_sum"],
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )
 
 
 def mp4_sample_frames(
@@ -522,27 +504,19 @@ def mp4_sample_frames(
         f"{id_col} long, frame_idx int, frame_size int, frame_sum long"
     )
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                # frame extraction only needs the ranges; skip the
-                # full payload_sum byte pass (it would double the
-                # bytes touched per file on this hot path)
-                m = decode_mp4_meta(payload, verify_payload=False)
-                data = m["data"]
-                for i in range(0, m["n_samples"], every_n):
-                    off, size = m["sample_ranges"][i]
-                    frame = np.frombuffer(
-                        data[off : off + size], dtype=np.uint8
-                    )
-                    rows.append((mid, i, size, int(frame.sum())))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "frame_size", "frame_sum"],
+    def sample_frames(mid, payload):
+        m = decode_mp4_meta(payload, verify_payload=False)
+        data = m["data"]
+        for i in range(0, m["n_samples"], every_n):
+            off, size = m["sample_ranges"][i]
+            frame = np.frombuffer(
+                data[off : off + size], dtype=np.uint8
             )
+            yield (mid, i, size, int(frame.sum()))
 
-    return media.mapInPandas(frame_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), sample_frames, out_schema
+    )
 
 
 # ----------------------------------------------------------- MJPEG profile
@@ -581,15 +555,13 @@ def synthesize_mjpeg_clips(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(media_id, content binary) — one real MJPEG clip per document.
-    Narrow Arrow mapInPandas, no shuffle."""
+    Narrow Arrow map_rows, no shuffle."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_mjpeg(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        yield i, encode_mjpeg(i)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mjpeg_frame_stats(
@@ -611,31 +583,17 @@ def mjpeg_frame_stats(
         f"{id_col} long, frame_idx int, width int, height int, px_sum long"
     )
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
-            decode_jpeg_gray,
-        )
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
+        decode_jpeg_gray,
+    )
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp4_meta(payload, verify_payload=False)
-                data = m["data"]
-                for i in range(0, m["n_samples"], every_n):
-                    off, size = m["sample_ranges"][i]
-                    px = decode_jpeg_gray(bytes(data[off : off + size]))
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            px.shape[1],
-                            px.shape[0],
-                            int(px.astype(np.int64).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "width", "height", "px_sum"],
-            )
+    def sampled(mid, payload):
+        m = decode_mp4_meta(payload, verify_payload=False)
+        data = m["data"]
+        for i in range(0, m["n_samples"], every_n):
+            off, size = m["sample_ranges"][i]
+            px = decode_jpeg_gray(bytes(data[off : off + size]))
+            px_sum = int(px.astype(np.int64).sum())
+            yield mid, i, px.shape[1], px.shape[0], px_sum
 
-    return media.mapInPandas(frame_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), sampled, out_schema)

@@ -15,11 +15,11 @@ task per shard — at 100 TB one task per tar shard, linear CPU.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
     decode_h264_mp4,
 )
@@ -55,47 +55,37 @@ def decode_mp4_shard_features(shards: DataFrame) -> DataFrame:
         " sum_y_p2_total long, docs_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, blob in zip(pdf["shard_id"], pdf["tar"]):
-                parts = []
-                p2_total = 0
-                samples_total = 0
-                for name, data in parse_tar(bytes(blob)):
-                    doc_id = int(name.split(".")[0])
-                    frames, info = decode_h264_mp4(bytes(data))
-                    if (info["n_samples"] != len(frames)
-                            or info["profile"] != 66
-                            or info["length_size"] != 4):
-                        raise ValueError(
-                            f"doc {doc_id}: container metadata "
-                            "disagrees with the decoded stream"
-                        )
-                    samples_total += info["n_samples"]
-                    sums = (
-                        int(frames[0][0].sum()),
-                        int(frames[1][0].sum()),
-                        int(frames[2][0].sum()),
-                        int(frames[2][1].sum()),
-                        int(frames[2][2].sum()),
-                    )
-                    p2_total += sums[2]
-                    parts.append(
-                        f"{doc_id}:" + ":".join(str(v) for v in sums)
-                    )
-                rows.append(
-                    (int(shard_id), len(parts), samples_total,
-                     p2_total,
-                     hashlib.md5("|".join(parts).encode()).hexdigest())
+    def feat(shard_id, blob):
+        parts = []
+        p2_total = 0
+        samples_total = 0
+        for name, data in parse_tar(blob):
+            doc_id = int(name.split(".")[0])
+            frames, info = decode_h264_mp4(bytes(data))
+            if (info["n_samples"] != len(frames)
+                    or info["profile"] != 66
+                    or info["length_size"] != 4):
+                raise ValueError(
+                    f"doc {doc_id}: container metadata "
+                    "disagrees with the decoded stream"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "n_docs", "n_samples_total",
-                         "sum_y_p2_total", "docs_md5"],
+            samples_total += info["n_samples"]
+            sums = (
+                int(frames[0][0].sum()),
+                int(frames[1][0].sum()),
+                int(frames[2][0].sum()),
+                int(frames[2][1].sum()),
+                int(frames[2][2].sum()),
             )
+            p2_total += sums[2]
+            parts.append(
+                f"{doc_id}:" + ":".join(str(v) for v in sums)
+            )
+        yield (shard_id, len(parts), samples_total,
+               p2_total,
+               hashlib.md5("|".join(parts).encode()).hexdigest())
 
-    return shards.mapInPandas(feat, out_schema)
+    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)
 
 
 def _ffmpeg_gray_frames(annexb: bytes, w: int, h: int) -> list:
@@ -156,48 +146,36 @@ def decode_mp4_shard_features_xcheck(shards: DataFrame) -> DataFrame:
         " sum_y_frames_total long, frames_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def feat(shard_id, blob):
         xcheck = ffmpeg_available()
-        for pdf in batches:
-            rows = []
-            for shard_id, blob in zip(pdf["shard_id"], pdf["tar"]):
-                parts = []
-                y_total = 0
-                n_frames = 0
-                for name, data in parse_tar(bytes(blob)):
-                    doc_id = int(name.split(".")[0])
-                    annexb, _info = demux_h264_mp4(bytes(data))
-                    frames = decode_h264_sequence(annexb)
-                    fsums = [int(f[0].sum()) for f in frames]
-                    if xcheck:
-                        h, w = frames[0][0].shape
-                        gray = _ffmpeg_gray_frames(annexb, w, h)
-                        if len(gray) != len(frames):
-                            raise ValueError(
-                                f"doc {doc_id}: ffmpeg decoded "
-                                f"{len(gray)} frames, from-scratch "
-                                f"decoded {len(frames)}"
-                            )
-                        for k, (g, f) in enumerate(zip(gray, frames)):
-                            if not np.array_equal(g, f[0]):
-                                raise ValueError(
-                                    f"doc {doc_id} frame {k}: ffmpeg "
-                                    "luma disagrees with the "
-                                    "from-scratch reconstruction"
-                                )
-                    n_frames += len(frames)
-                    y_total += sum(fsums)
-                    parts.append(
-                        f"{doc_id}:" + ":".join(str(v) for v in fsums)
+        parts = []
+        y_total = 0
+        n_frames = 0
+        for name, data in parse_tar(blob):
+            doc_id = int(name.split(".")[0])
+            annexb, _info = demux_h264_mp4(bytes(data))
+            frames = decode_h264_sequence(annexb)
+            fsums = [int(f[0].sum()) for f in frames]
+            if xcheck:
+                h, w = frames[0][0].shape
+                gray = _ffmpeg_gray_frames(annexb, w, h)
+                if len(gray) != len(frames):
+                    raise ValueError(
+                        f"doc {doc_id}: ffmpeg decoded "
+                        f"{len(gray)} frames, from-scratch "
+                        f"decoded {len(frames)}"
                     )
-                rows.append(
-                    (int(shard_id), len(parts), n_frames, y_total,
-                     hashlib.md5("|".join(parts).encode()).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "n_docs", "n_frames_total",
-                         "sum_y_frames_total", "frames_md5"],
-            )
+                for k, (g, f) in enumerate(zip(gray, frames)):
+                    if not np.array_equal(g, f[0]):
+                        raise ValueError(
+                            f"doc {doc_id} frame {k}: ffmpeg "
+                            "luma disagrees with the "
+                            "from-scratch reconstruction"
+                        )
+            n_frames += len(frames)
+            y_total += sum(fsums)
+            parts.append(f"{doc_id}:" + ":".join(str(v) for v in fsums))
+        yield (shard_id, len(parts), n_frames, y_total,
+               hashlib.md5("|".join(parts).encode()).hexdigest())
 
-    return shards.mapInPandas(feat, out_schema)
+    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)

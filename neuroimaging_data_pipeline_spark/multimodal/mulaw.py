@@ -18,17 +18,17 @@ find + mantissa shift — verified bit-equal to the numpy path over
 the full 14-bit input range in pytest). Decoded values are FIXED
 POINTS: decode(encode(d)) == d, also pinned.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _BIAS = 33
 _CLIP = 8159  # max encodable magnitude (14-bit mu-law range)
@@ -118,17 +118,11 @@ def synthesize_mulaw_clips(
     out_schema = "media_id long, content binary"
     j = np.arange(_N_SAMPLES, dtype=np.int64)
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                x = (int(i) * 131 + j * 617) % 16319 - 8159
-                payloads.append(write_wav_mulaw(x))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        x = (i * 131 + j * 617) % 16319 - 8159
+        yield i, write_wav_mulaw(x)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def mulaw_clip_features(
@@ -144,27 +138,11 @@ def mulaw_clip_features(
         "sum_decoded long, sum_abs long, max_abs int"
     )
 
-    def feat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, rt, sd, sa, mx = [], [], [], [], []
-            for payload in pdf[content_col]:
-                d, rate = read_wav_mulaw(payload)
-                ns.append(len(d))
-                rt.append(rate)
-                sd.append(int(d.sum()))
-                sa.append(int(np.abs(d).sum()))
-                mx.append(int(np.abs(d).max()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "sample_rate": pd.Series(rt, dtype="int32"),
-                    "sum_decoded": pd.Series(sd, dtype="int64"),
-                    "sum_abs": pd.Series(sa, dtype="int64"),
-                    "max_abs": pd.Series(mx, dtype="int32"),
-                }
-            )
+    def feat(key, payload):
+        d, rate = read_wav_mulaw(payload)
+        a = np.abs(d)
+        yield key, len(d), rate, int(d.sum()), int(a.sum()), int(a.max())
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )

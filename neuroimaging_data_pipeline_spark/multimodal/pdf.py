@@ -36,7 +36,7 @@ NotImplementedError; glyph-level layout (font widths, CMaps,
 ToUnicode for composite fonts) is out of scope — the extractor reads
 the text operators, the same scope as a WET-style text dump.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle —
 the same adapter split as every codec here (reference draws it at
 NIfTI, ssm_loop.py:40).
 """
@@ -45,10 +45,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # --- writer -------------------------------------------------------------------
 
@@ -120,7 +120,6 @@ def write_pdf(pages: list[list[str]]) -> bytes:
         f"startxref\n{xref_at}\n%%EOF\n".encode()
     )
     return bytes(out)
-
 
 
 def write_pdf15(pages: list[list[str]]) -> bytes:
@@ -599,34 +598,22 @@ def synthesize_pdfs(
     the PNG Up predictor) through write_pdf15."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                text = "" if text is None else str(text)
-                n_pages = 1 + i % 3
-                per = -(-max(len(text), 1) // n_pages)
-                pages = []
-                for p in range(n_pages):
-                    chunk = text[p * per : (p + 1) * per]
-                    # split the page chunk into 1-3 show pieces
-                    k = 1 + (i + p) % 3
-                    step = -(-max(len(chunk), 1) // k)
-                    pages.append(
-                        [chunk[j * step : (j + 1) * step] for j in range(k)]
-                    )
-                payloads.append(
-                    write_pdf15(pages) if version == "1.5"
-                    else write_pdf(pages)
-                )
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i, text):
+        text = "" if text is None else str(text)
+        n_pages = 1 + i % 3
+        per = -(-max(len(text), 1) // n_pages)
+        pages = []
+        for p in range(n_pages):
+            chunk = text[p * per : (p + 1) * per]
+            # split the page chunk into 1-3 show pieces
+            k = 1 + (i + p) % 3
+            step = -(-max(len(chunk), 1) // k)
+            pages.append(
+                [chunk[j * step : (j + 1) * step] for j in range(k)]
+            )
+        yield i, write_pdf15(pages) if version == "1.5" else write_pdf(pages)
 
-    return docs.select(id_col, text_col).mapInPandas(
-        encode_batches, out_schema
-    )
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def pdf_text_features(
@@ -644,27 +631,14 @@ def pdf_text_features(
         "n_chars long, text_md5 string"
     )
 
-    def feat_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            np_, no_, nc_, md_ = [], [], [], []
-            for payload in pdf[content_col]:
-                info = parse_pdf(payload)
-                np_.append(info["n_pages"])
-                no_.append(info["n_objects"])
-                nc_.append(len(info["text"]))
-                md_.append(
-                    hashlib.md5(info["text"].encode("latin-1")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_pages": pd.Series(np_, dtype="int32"),
-                    "n_objects": pd.Series(no_, dtype="int32"),
-                    "n_chars": pd.Series(nc_, dtype="int64"),
-                    "text_md5": pd.Series(md_, dtype=object),
-                }
-            )
+    def feat(key, payload):
+        info = parse_pdf(payload)
+        text = info["text"]
+        yield (
+            key, info["n_pages"], info["n_objects"], len(text),
+            hashlib.md5(text.encode("latin-1")).hexdigest(),
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )

@@ -17,7 +17,7 @@ binary column and does the container work with a genuine USTAR codec:
   stdlib zlib, sniffed from the 0x1f8b magic.
 
 Scale shape: shards are rows; every decode is Arrow-batched
-``mapInPandas`` over a narrow (id, content) projection — embarrassingly
+``map_rows`` over a narrow (id, content) projection — embarrassingly
 parallel, zero shuffle, the same posture as the other media codecs.
 Reference boundary parity: the reference decodes container headers +
 payload itself (NIfTI, ssm_loop.py:40) and leaves scanner formats to
@@ -33,10 +33,10 @@ formula echo.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 
 # ---------------------------------------------------------------- writer
@@ -181,15 +181,13 @@ def encode_shard(doc_id: int) -> bytes:
 
 def synthesize_tar_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(media_id, content binary) — one real (possibly gzipped) USTAR
-    shard per document row. Narrow Arrow mapInPandas, no shuffle."""
+    shard per document row. Narrow Arrow map_rows, no shuffle."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_shard(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        yield i, encode_shard(i)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def tar_sample_features(
@@ -207,38 +205,21 @@ def tar_sample_features(
         "bin_sum long, archive_blocks int"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                payload = bytes(payload)
-                members = parse_tar(payload)
-                blocks = tar_block_count(payload)
-                for key, parts in group_samples(members):
-                    rows.append(
-                        (
-                            mid,
-                            key,
-                            len(parts),
-                            sum(len(b) for b in parts.values()),
-                            sum(parts["txt"]) if "txt" in parts else 0,
-                            parts["cls"][0] if "cls" in parts else -1,
-                            sum(parts["bin"]) if "bin" in parts else 0,
-                            blocks,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "sample_key",
-                    "n_members",
-                    "total_member_bytes",
-                    "txt_sum",
-                    "cls_val",
-                    "bin_sum",
-                    "archive_blocks",
-                ],
+    def feat(mid, payload):
+        members = parse_tar(payload)
+        blocks = tar_block_count(payload)
+        for key, parts in group_samples(members):
+            yield (
+                mid,
+                key,
+                len(parts),
+                sum(len(b) for b in parts.values()),
+                sum(parts["txt"]) if "txt" in parts else 0,
+                parts["cls"][0] if "cls" in parts else -1,
+                sum(parts["bin"]) if "bin" in parts else 0,
+                blocks,
             )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )

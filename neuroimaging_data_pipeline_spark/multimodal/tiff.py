@@ -34,17 +34,16 @@ pixel mean/sum from the pure integer pixel formula, so a bug in byte
 order, IFD layout, strip offsets, LZW widths or the predictor breaks
 the hash match.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -289,28 +288,19 @@ def synthesize_tiff_images(
     every two ids so both orders stay hot."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf[id_col]:
-                i = int(i)
-                px = bytes(
-                    (i * 13 + y * 31 + x * 7) % 256
-                    for y in range(_H)
-                    for x in range(_W)
-                )
-                blobs.append(
-                    write_tiff(
-                        px, _W, _H,
-                        compression=5 if i % 2 else 1,
-                        little_endian=i % 4 < 2,
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "content": pd.Series(blobs, dtype=object)})
+    def build(i):
+        px = bytes(
+            (i * 13 + y * 31 + x * 7) % 256
+            for y in range(_H)
+            for x in range(_W)
+        )
+        yield i, write_tiff(
+            px, _W, _H,
+            compression=5 if i % 2 else 1,
+            little_endian=i % 4 < 2,
+        )
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def tiff_features(
@@ -323,20 +313,10 @@ def tiff_features(
         " n_strips long, mean_px double, sum_px long"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                t = read_tiff(bytes(content))
-                px = t["pixels"]
-                rows.append(
-                    (int(i), t["width"], t["height"], t["compression"],
-                     t["n_strips"], sum(px) / len(px), sum(px))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "compression",
-                         "n_strips", "mean_px", "sum_px"],
-            )
+    def feat(i, content):
+        t = read_tiff(content)
+        px = t["pixels"]
+        yield (i, t["width"], t["height"], t["compression"],
+               t["n_strips"], sum(px) / len(px), sum(px))
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -129,8 +129,10 @@ def python_eval_count(plan: str) -> int:
     """Row-at-a-time Python operators in the plan (the slow path).
 
     Arrow-vectorized ops (``ArrowEvalPython``, ``FlatMapGroupsInPandas``,
-    ``MapInPandas``) are deliberate engine choices and not counted;
-    ``BatchEvalPython`` is the per-row pickling path we forbid.
+    ``MapInArrow`` — every ``functions.rowmap.map_rows`` codec and
+    source boundary — and the batch kernels' ``MapInPandas``) are
+    deliberate engine choices and not counted; ``BatchEvalPython`` is
+    the per-row pickling path we forbid.
     """
     return node_count(plan, "BatchEvalPython")
 

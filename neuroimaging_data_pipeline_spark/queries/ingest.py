@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.functions.stats import dec_avg, dec_sum
 
 _MOTION_COLS = ["motion_outlier00", "motion_outlier01", "motion_outlier02"]
@@ -613,7 +614,7 @@ def _write_remote_fixture() -> str:
 
 def s11_remote_fetch(spark, sf_dir):
     """S11: remote text fetch (notebook cell 2, ssm_loop.py:26) as a
-    DISTRIBUTED source: a URI table fanned out via mapInPandas, each
+    DISTRIBUTED source: a URI table fanned out via map_rows, each
     executor fetching its partition's URIs with stdlib urllib —
     errors-as-data, size-capped (sources/fetch.py). file:// URIs run
     the identical code path as http(s) hermetically; the oracle reads
@@ -684,15 +685,11 @@ def s12_parquet_meta(spark, sf_dir):
     (varints, zigzag, delta field ids, nested structs/lists) and
     emits per-row-group planner statistics. Row-group stats are the
     scan-pruning machinery at 100 TB; the parse is O(KB) per file and
-    embarrassingly parallel over a corpus (binaryFile + mapInPandas,
+    embarrassingly parallel over a corpus (binaryFile + map_rows,
     zero shuffle). The oracle reads the SAME fixture through DuckDB's
     own parquet_metadata() — two independent parquet implementations
     agreeing on one artifact (pytest adds pyarrow as a third across
     every testdata table)."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.sources.parquet_meta import (
         parse_footer,
     )
@@ -700,25 +697,14 @@ def s12_parquet_meta(spark, sf_dir):
     _write_pqmeta_fixture()
     files = spark.read.format("binaryFile").load(_PQMETA_PATH)
 
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                meta = parse_footer(bytes(content))
-                for gi, (nr, tbs, nc) in enumerate(meta["row_groups"]):
-                    rows.append((gi, nr, tbs, nc))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "row_group_id",
-                    "num_rows",
-                    "total_byte_size",
-                    "n_columns",
-                ],
-            )
+    def row_groups(content):
+        meta = parse_footer(content)
+        for gi, (nr, tbs, nc) in enumerate(meta["row_groups"]):
+            yield (gi, nr, tbs, nc)
 
-    return files.select("content").mapInPandas(
-        meta_batches,
+    return map_rows(
+        files.select("content"),
+        row_groups,
         "row_group_id int, num_rows long, total_byte_size long, n_columns int",
     )
 
@@ -739,7 +725,7 @@ def s13_avro_scan(spark, sf_dir):
     and container framing (metadata map, per-block sync markers,
     null AND deflate codecs — odd ids deflate, block size 4 forcing
     multi-block files) are parsed by the stdlib-only reader inside
-    Arrow mapInPandas; per-file aggregates over the recovered records
+    Arrow map_rows; per-file aggregates over the recovered records
     seal every layer against the formula-recomputing oracle."""
     from neuroimaging_data_pipeline_spark.sources.avro import (
         avro_features,
@@ -846,10 +832,6 @@ def s15_rowgroup_prune(spark, sf_dir):
     the SAME file through DuckDB's parquet_metadata() and recomputes
     the identical verdicts — two independent parquet implementations
     agreeing on the planning decision, not just the layout."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from neuroimaging_data_pipeline_spark.sources.parquet_meta import (
         prune_row_groups,
     )
@@ -857,29 +839,19 @@ def s15_rowgroup_prune(spark, sf_dir):
     _write_pqmeta_fixture()
     files = spark.read.format("binaryFile").load(_PQMETA_PATH)
 
-    def prune_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for r in prune_row_groups(bytes(content), "id", lo=1500):
-                    rows.append(
-                        (
-                            r["row_group"],
-                            r["min"],
-                            r["max"],
-                            r["num_values"],
-                            r["survives"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "row_group", "min_id", "max_id", "num_values", "survives",
-                ],
+    def prune(content):
+        for r in prune_row_groups(content, "id", lo=1500):
+            yield (
+                r["row_group"],
+                r["min"],
+                r["max"],
+                r["num_values"],
+                r["survives"],
             )
 
-    return files.select("content").mapInPandas(
-        prune_batches,
+    return map_rows(
+        files.select("content"),
+        prune,
         "row_group int, min_id long, max_id long, num_values long, "
         "survives int",
     )
@@ -1003,7 +975,7 @@ def s18_warc_ingest(spark, sf_dir):
     status/length/md5 straight from the documents table, so ANY
     framing or digest error anywhere breaks the hash match. One keyed
     shuffle for shard packing (what any distributed shard writer
-    needs), then narrow mapInPandas parse."""
+    needs), then narrow map_rows parse."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.warc import (
         synthesize_warc_shards,
@@ -1039,7 +1011,7 @@ def s19_mbox_ingest(spark, sf_dir):
     counts, the id-determined transfer encoding, and md5 of the
     decoded text/plain body straight from the documents table — a
     framing, quoting or decode bug anywhere breaks the hash match.
-    One keyed shuffle for shard packing, then narrow mapInPandas."""
+    One keyed shuffle for shard packing, then narrow map_rows."""
     from neuroimaging_data_pipeline_spark.sources.mbox import (
         mbox_messages,
         synthesize_mbox_shards,
@@ -1073,7 +1045,7 @@ def s20_avro_shards(spark, sf_dir):
     and decoded back BY THE EMBEDDED WRITER SCHEMA. The oracle
     recomputes the nullable label, lengths and text md5 from the
     documents table — any varint/union/block/codec bug breaks the
-    hash match. One keyed shuffle to pack, then narrow mapInPandas."""
+    hash match. One keyed shuffle to pack, then narrow map_rows."""
     from neuroimaging_data_pipeline_spark.sources.avro_ocf import (
         avro_documents,
         synthesize_avro_shards,
@@ -1103,7 +1075,7 @@ def s21_arrow_ipc(spark, sf_dir):
     workers; every row carries its shard's BATCH COUNT so the
     multi-batch framing is oracle-visible (ceil(shard_rows/16)),
     and the reader re-verifies the embedded schema. One keyed
-    shuffle to pack, then narrow mapInPandas."""
+    shuffle to pack, then narrow map_rows."""
     from neuroimaging_data_pipeline_spark.sources.arrow_ipc import (
         ipc_documents,
         synthesize_ipc_shards,
@@ -1138,7 +1110,7 @@ def s22_zip_shards(spark, sf_dir):
     ids stored, odd deflated, so both methods stay hot; pytest pins
     byte-level interop with the stdlib zipfile in BOTH directions.
     The oracle recomputes method, length and text md5 per document.
-    One keyed shuffle to pack, then narrow mapInPandas."""
+    One keyed shuffle to pack, then narrow map_rows."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.zipshard import (
         synthesize_zip_shards,
@@ -1174,7 +1146,7 @@ def s23_sqlite_shards(spark, sf_dir):
     recomputes length and text md5 per document (the per-shard page
     count is packing-dependent, so the b-tree fan-out is pinned in
     pytest instead, not here). One keyed shuffle to pack, then narrow
-    mapInPandas."""
+    map_rows."""
     from neuroimaging_data_pipeline_spark.sources.sqlitefile import (
         sqlite_documents,
         synthesize_sqlite_shards,
@@ -1205,7 +1177,7 @@ def s24_cbor_shards(spark, sf_dir):
     tag 1 wrapper so tagged decode stays hot on the query path; the
     record's own n field is cross-checked against the text. The
     oracle recomputes tag presence, length and text md5 per document.
-    One keyed shuffle to pack, then narrow mapInPandas."""
+    One keyed shuffle to pack, then narrow map_rows."""
     from neuroimaging_data_pipeline_spark.sources.cbor import (
         cbor_documents,
         synthesize_cbor_shards,
@@ -1237,7 +1209,7 @@ def s25_zstd_meta(spark, sf_dir):
     values). Per-doc header variants ride pure id formulas the oracle
     recomputes — checksum math included via checksum_ok. (Compressed
     blocks decode too since r8 — exercised end-to-end by
-    s25b_zstd_decode.) One narrow mapInPandas pass, zero shuffle."""
+    s25b_zstd_decode.) One narrow map_rows pass, zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.zstdmeta import (
         synthesize_zstd_docs,
@@ -1263,7 +1235,7 @@ def s25b_zstd_decode(spark, sf_dir):
     check — any table, bitstream, or sequence bug breaks the md5.
     Mixed streams: skippable frame (id%6==0) + libzstd compressed
     frame + a raw-block trailer frame whose XXH64 checksum is
-    re-verified. One narrow mapInPandas pass, zero shuffle; at 100 TB
+    re-verified. One narrow map_rows pass, zero shuffle; at 100 TB
     this is the `.jsonl.zst` shard-ingest path (one task per shard).
 
     Reference parity: preprocess_parallel.sh:15-193 shells out to
@@ -1338,7 +1310,7 @@ def s26_lz4_shards(spark, sf_dir):
     for id%3==0 keeps compressed blocks hot, forced-stored frames for
     id%7==0 keep the stored path hot, block checksums for even ids,
     content size omitted for id%5==0. Every checksum is re-verified
-    on decode (checksum_ok is oracle-visible). One narrow mapInPandas
+    on decode (checksum_ok is oracle-visible). One narrow map_rows
     pass, zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.lz4frame import (
         lz4_documents,
@@ -1379,7 +1351,7 @@ def s27_snappy_shards(spark, sf_dir):
     value pinned) re-verified per chunk. Per-doc variants ride id
     formulas: compressible tail (id%3==0), forced-uncompressed
     chunks (id%4==0), padding chunk (id%5==0). One narrow
-    mapInPandas pass, zero shuffle."""
+    map_rows pass, zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.snappy import (
         snappy_documents,
         synthesize_snappy_docs,
@@ -1410,7 +1382,6 @@ FROM v
 """
 
 
-
 def s28_tfrecord_shards(spark, sf_dir):
     """S28: TFRecord + tf.train.Example shards (sources/tfrecord.py)
     — THE classic ML training-shard format, with both the frame layer
@@ -1425,7 +1396,7 @@ def s28_tfrecord_shards(spark, sf_dir):
     recomputes every per-doc feature from the documents table — any
     framing, varint, zigzag-less negative, packing or checksum bug
     breaks the hash. One keyed shuffle to pack, then narrow
-    mapInPandas."""
+    map_rows."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.tfrecord import (
         synthesize_tfrecord_shards,
@@ -1459,7 +1430,7 @@ def s29_ogg_stream(spark, sf_dir):
     CRC-32 (poly 0x04C11DB7, init 0 — a third CRC flavor next to
     zlib's and Castagnoli's) re-verified per page. The oracle
     recomputes page/packet/span counts from the lacing arithmetic
-    and md5 of the payload packet. One narrow mapInPandas pass,
+    and md5 of the payload packet. One narrow map_rows pass,
     zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.ogg import (
         ogg_documents,
@@ -1505,7 +1476,7 @@ def s30_xz_shards(spark, sf_dir):
     padding, the per-block integrity check (NONE/CRC32/CRC64/SHA256
     cycling by id%4 — CRC64-XZ from scratch, published check value
     pinned), and the index/footer cross-checked against what the
-    blocks actually measured. One narrow mapInPandas pass, zero
+    blocks actually measured. One narrow map_rows pass, zero
     shuffle."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.xz import (
@@ -1624,7 +1595,7 @@ def s32_bzip2_shards(spark, sf_dir):
     walk), the outer RLE1 layer, bzip2's UNREFLECTED CRC-32 per block
     and per stream, multi-stream concatenation (id%5==0 carries a
     second stream, re-aligned to a byte boundary), and levels cycling
-    1/5/9. One narrow mapInPandas pass, zero shuffle; at 100 TB one
+    1/5/9. One narrow map_rows pass, zero shuffle; at 100 TB one
     task per .bz2 shard, linear per-doc CPU.
 
     Reference parity: preprocess_parallel.sh:15-193 decompresses
@@ -1677,7 +1648,7 @@ def s31_xz_filters(spark, sf_dir):
     addresses. The binary tail is verified bit-exactly in-engine
     against its id formula (binary cannot ride a SQL md5); text md5,
     lengths and the filter-chain label go to the oracle. One narrow
-    mapInPandas pass, zero shuffle."""
+    map_rows pass, zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.xz import (
         synthesize_xz_filtered_docs,

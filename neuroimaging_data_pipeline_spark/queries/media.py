@@ -35,7 +35,7 @@ def m8_mp4_meta(spark, sf_dir):
     free + moov with run-length stts, two-entry stsc, per-sample
     stsz, two-offset stco) is built from pure integer formulas,
     carried as an opaque binary column, then parsed by the real
-    box-walking decoder inside Arrow-batched mapInPandas.
+    box-walking decoder inside Arrow-batched map_rows.
     payload_sum re-reads every sample's bytes at the stsc/stsz/stco-
     resolved absolute offset, so ANY error across the whole sample-
     table chain (box framing, run-length expansion, chunk mapping,
@@ -100,7 +100,7 @@ def m8b_mp4_frames(spark, sf_dir):
     through the parsed stts/stsc/stsz/stco tables and its payload
     bytes are pulled straight out of mdat — one row per sampled
     frame. This is the distributed frame-sampling shape a 100 TB
-    video corpus needs (narrow scan -> mapInPandas, zero shuffle);
+    video corpus needs (narrow scan -> map_rows, zero shuffle);
     the codec decode of each extracted payload is the only part
     still gated on ffmpeg."""
     from neuroimaging_data_pipeline_spark.multimodal.mp4 import (
@@ -143,7 +143,7 @@ def m9_jpeg_420(spark, sf_dir):
     sampling (MCU = 4 Y blocks + Cb + Cr interleaved, the layout
     virtually every camera/web JPEG uses) is encoded stdlib-only and
     decoded by the generalized sampling-factor-aware parser inside
-    Arrow-batched mapInPandas. The fixture's constant 16x16
+    Arrow-batched map_rows. The fixture's constant 16x16
     macroblocks survive the subsampled pipeline bit-exactly (gray
     YCbCr + constant-plane chroma averaging + DC-only blocks +
     replication upsampling are each exact), so the oracle recomputes
@@ -252,7 +252,7 @@ def m11_jpeg_progressive(spark, sf_dir):
     (interleaved DC scan, then per-band AC scans with EOBn run
     symbols from a custom spec-valid Huffman table) is encoded
     stdlib-only and decoded by the multi-scan coefficient-
-    accumulating parser inside Arrow-batched mapInPandas. Spectral
+    accumulating parser inside Arrow-batched map_rows. Spectral
     selection is lossless relative to baseline, and the fixture's
     constant blocks are additionally DC-only, so the oracle
     recomputes every stat from the block formula; progressive ==
@@ -300,7 +300,7 @@ def m12_png_interlaced(spark, sf_dir):
     (seven independently-filtered sub-images in one DEFLATE stream,
     uneven pass dims from the 12x9 shape) is encoded stdlib-only and
     decoded by the pass-carving/scattering parser inside Arrow
-    mapInPandas. PNG is lossless, so the oracle recomputes every
+    map_rows. PNG is lossless, so the oracle recomputes every
     channel stat + the total-pixel checksum from the pixel formula —
     a bug in any pass's geometry, filtering or scatter breaks the
     hash match. This retires the non-interlaced-only PNG gate."""
@@ -445,7 +445,7 @@ def m13_tar_samples(spark, sf_dir):
     Per document, a genuine (odd ids: gzipped) USTAR shard holding one
     {key}.txt/{key}.cls[/{key}.bin] sample is built, carried as an
     opaque binary column, then decoded by the real block-walking
-    parser inside Arrow mapInPandas: every header checksum is
+    parser inside Arrow map_rows: every header checksum is
     re-verified, members are grouped into samples by the WebDataset
     key rule, and archive_blocks seals the 512-byte padding/trailer
     arithmetic — so ANY framing error anywhere breaks the hash match
@@ -510,7 +510,7 @@ def m14_jsonl_shards(spark, sf_dir):
     corpora actually ship in. Five documents per shard are serialized
     to JSON Lines JVM-side (to_json), gzip-compressed into genuine
     RFC 1952 members (stdlib, deterministic mtime=0), carried as an
-    opaque binary column, inflated back in Arrow mapInPandas, and
+    opaque binary column, inflated back in Arrow map_rows, and
     re-parsed ENTIRELY in JVM expressions (split + from_json inside
     array transforms — Python touches only the byte codec). Per-shard
     stats over the RECOVERED records seal the whole frame: any
@@ -632,7 +632,7 @@ def m16_mjpeg_frames(spark, sf_dir):
     honestly ffmpeg-gated in multimodal/binaryops.py). Constant
     8x8-block frames make the lossy path bit-exact, so the oracle
     recomputes pixel sums from the frame-value formula in pure SQL.
-    Narrow scan -> mapInPandas, zero shuffle, embarrassingly
+    Narrow scan -> map_rows, zero shuffle, embarrassingly
     parallel — the same split the reference applies at its NIfTI
     boundary (ssm_loop.py:40)."""
     from neuroimaging_data_pipeline_spark.multimodal.mp4 import (
@@ -679,7 +679,7 @@ def m17_gif_frames(spark, sf_dir):
     palette indices and mapped through the color table. LZW is
     lossless, so the oracle recomputes frame counts, delays, index
     sums and red-channel sums from the fixture formulas in pure SQL.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.gif import (
         gif_frame_stats,
         synthesize_gifs,
@@ -723,12 +723,12 @@ def m18_jpeg12_stats(spark, sf_dir):
     document a genuine SOF1 JPEG (12-bit samples, 16-bit DQT,
     OPTIMAL two-pass K.2/K.3 Huffman tables carried in DHT) is
     encoded stdlib-only and decoded by the same generalized marker-
-    walking parser inside Arrow-batched mapInPandas. Constant 8x8
+    walking parser inside Arrow-batched map_rows. Constant 8x8
     blocks at unit quant are bit-exact, so the oracle recomputes the
     decoded 12-bit stats from the block formula in pure SQL; max_px
     exceeding 255 on nearly every image proves the deep dynamic
     range flowed through decode rather than an 8-bit fallback.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.jpeg12 import (
         jpeg12_features,
         synthesize_jpeg12_images,
@@ -773,11 +773,11 @@ def m19_jpeg_arith(spark, sf_dir):
     DC/AC decision model over a QM-style estimation state machine;
     register discipline and state constants are declared
     reconstructions — see module docstring) and decoded back inside
-    Arrow-batched mapInPandas. Constant 8x8 blocks at unit quant are
+    Arrow-batched map_rows. Constant 8x8 blocks at unit quant are
     bit-exact, so the oracle recomputes the decoded 12-bit stats from
     the block formula; pytest separately pins that the adaptive coder
     compresses natural content tighter than the Huffman coder.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.jpeg_arith import (
         jpeg_arith_features,
         synthesize_jpeg_arith_images,
@@ -820,13 +820,13 @@ def m20_h264_ipcm(spark, sf_dir):
     byte stream (NAL start codes + emulation prevention, Exp-Golomb
     SPS/PPS with frame cropping, IDR slice header, I_PCM macroblock
     layer with 4:2:0 chroma) is written and parsed back field-for-
-    field inside Arrow-batched mapInPandas. I_PCM is bit-exact for
+    field inside Arrow-batched map_rows. I_PCM is bit-exact for
     ARBITRARY content, so the fixture uses per-pixel formulas (no
     constant-block workaround) and the oracle recomputes every
     decoded luma/chroma sample in pure SQL; where ffmpeg exists, a
     gated pytest asserts ffmpeg decodes the same bytes to identical
     samples. Predicted macroblocks remain the declared ffmpeg gate.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.h264 import (
         h264_frame_features,
         synthesize_h264_frames,
@@ -887,7 +887,7 @@ def m21_h264_intra(spark, sf_dir):
     chroma carries NONZERO per-MB residuals through the 2x2 chroma-DC
     Hadamard path (r10 fixture sweep; the path the r9 16x-shrink bug
     hid in behind constant-128 fixtures).
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
         h264_intra_frame_features,
         synthesize_h264_intra_frames,
@@ -939,7 +939,7 @@ def m22_pdf_text(spark, sf_dir):
     original string. The oracle checks md5(text) straight against the
     documents table plus the structural counts from the fixture
     formula, so a framing/xref/inflate/escape bug anywhere breaks the
-    hash match. Narrow scan -> mapInPandas, zero shuffle."""
+    hash match. Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.pdf import (
         pdf_text_features,
         synthesize_pdfs,
@@ -979,7 +979,7 @@ def m46_pdf_xrefstream(spark, sf_dir):
     type-2 entry resolution through the object-stream pair header —
     then the same Tj/TJ text reassembly, md5-checked against the
     source table. A wrong predictor, row width, pair offset or
-    object-stream slice breaks the hash. Narrow scan -> mapInPandas,
+    object-stream slice breaks the hash. Narrow scan -> map_rows,
     zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.pdf import (
         pdf_text_features,
@@ -1020,7 +1020,7 @@ def m23_mulaw_audio(spark, sf_dir):
     is pure integer segment/mantissa arithmetic, so the oracle
     recomputes every decoded sample in SQL with floor(log2())
     segment finds — a wrong bias, segment bound, complement or sign
-    anywhere breaks the hash match. Narrow scan -> mapInPandas,
+    anywhere breaks the hash match. Narrow scan -> map_rows,
     zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.mulaw import (
         mulaw_clip_features,
@@ -1082,7 +1082,7 @@ def m24_jpeg_exif(spark, sf_dir):
     out (the same bytes still decode to pixels, pinned in pytest).
     The oracle recomputes every field from the fixture formulas, so
     an endianness/inline-offset/IFD-chain bug breaks the hash match.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.exif import (
         exif_features,
         synthesize_exif_jpegs,
@@ -1132,7 +1132,7 @@ def m25_h264_i4x4(spark, sf_dir):
     decoding-order availability for top-right samples, substitution
     rule included); per-4x4-constant content is PROVEN exact at QP 0,
     so the oracle recomputes every decoded sample in pure SQL.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
         h264_intra_frame_features,
         synthesize_h264_i4x4_frames,
@@ -1193,7 +1193,7 @@ def m26_mp3_meta(spark, sf_dir):
     sample-exact durations and the bitrate sum — all recomputed by
     the oracle from the fixture formulas. Frame PAYLOAD decode stays
     honestly gated on ffmpeg, like H.264 inter frames.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.mp3 import (
         mp3_meta_features,
         synthesize_mp3s,
@@ -1244,7 +1244,7 @@ def m27_tiff_stats(spark, sf_dir):
     The oracle recomputes width/height/strip-count and the pixel
     mean/sum from the pure integer pixel formula, so a byte-order,
     IFD, strip-offset, LZW-width or predictor bug breaks the hash.
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.tiff import (
         synthesize_tiff_images,
         tiff_features,
@@ -1296,7 +1296,7 @@ def m28_flac_audio(spark, sf_dir):
     VERBATIM (hash noise). The oracle recomputes frame counts, totals
     and the PCM sample sum from the pure integer formulas (the sine
     table sums to zero per block, keeping the LPC frames closed-form).
-    Narrow scan -> mapInPandas, zero shuffle."""
+    Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.flac import (
         flac_features,
         synthesize_flac_clips,
@@ -1348,7 +1348,7 @@ def m29_gzip_inflate(spark, sf_dir):
     copies — must reproduce it bit-exactly, re-verifying the RFC 1952
     CRC32 (from-scratch table), ISIZE, and the optional FHCRC header
     checksum. Header features (FNAME/FCOMMENT/FEXTRA/FHCRC) ride id
-    formulas the oracle recomputes. One narrow mapInPandas pass,
+    formulas the oracle recomputes. One narrow map_rows pass,
     zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.inflate import (
         gzip_inflate_features,
@@ -1384,7 +1384,7 @@ def m30_flac_stereo(spark, sf_dir):
     mid-side low-bit parity trick exact on decode, and the
     STREAMINFO MD5 verified over the interleaved L,R PCM. The oracle
     recomputes frame counts and BOTH channel sums from the pure
-    integer texture formulas. Narrow scan -> mapInPandas, zero
+    integer texture formulas. Narrow scan -> map_rows, zero
     shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.flac import (
         flac_stereo_features,
@@ -1465,7 +1465,7 @@ def m32_flac_surround(spark, sf_dir):
     against STREAMINFO per frame. The oracle recomputes channel
     counts, frame counts, the all-channel sample sum and channel 0's
     sum from the pure integer texture formulas via a frame x sample x
-    channel UNNEST. Narrow scan -> mapInPandas, zero shuffle; at
+    channel UNNEST. Narrow scan -> map_rows, zero shuffle; at
     100 TB one task per audio shard, linear per-clip CPU."""
     from neuroimaging_data_pipeline_spark.multimodal.flac import (
         flac_surround_features,
@@ -1521,7 +1521,7 @@ def m33_h264_cabac(spark, sf_dir):
     proven-exact path — so the oracle recomputes every decoded
     sample from the id formulas. Prediction/transform are SHARED
     with the CAVLC codec (m21/m25); this query isolates the entropy
-    layer. Narrow scan -> mapInPandas, zero shuffle; at 100 TB one
+    layer. Narrow scan -> map_rows, zero shuffle; at 100 TB one
     task per video shard, linear per-frame CPU."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
         h264_cabac_frame_features,
@@ -1585,7 +1585,7 @@ def m34_mp3_samples(spark, sf_dir):
     frequency lines; requantization to float xr is pinned in pytest.
     The oracle recomputes the per-granule line formulas and asserts
     the reservoir fact. ESC-family tables (7..31) remain a loud,
-    NAMED gate. Narrow scan -> mapInPandas, zero shuffle; at 100 TB
+    NAMED gate. Narrow scan -> map_rows, zero shuffle; at 100 TB
     one task per audio shard, linear per-clip CPU."""
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         mp3_l3_features,
@@ -1646,7 +1646,7 @@ def m35_h264_inter(spark, sf_dir):
     motion shift, edge clamping and residual delta included — in
     pure SQL. mb_skip_run / P_Skip MV derivation are pinned in
     pytest (skip MVs depend on the median rule, deliberately kept
-    out of the fixture formulas). Narrow scan -> mapInPandas, zero
+    out of the fixture formulas). Narrow scan -> map_rows, zero
     shuffle; at 100 TB one task per video shard."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         h264_inter_frame_features,
@@ -1732,7 +1732,7 @@ def m36_h264_gop(spark, sf_dir):
     including the two-hop composed motion (P2 sampling P1 sampling
     the anchor) — in pure SQL. Sub-pel fractions, random planes and
     every QP are pinned by bit-exact round trips in pytest. Narrow
-    scan -> mapInPandas, zero shuffle; one task per video shard at
+    scan -> map_rows, zero shuffle; one task per video shard at
     100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         h264_gop_frame_features,
@@ -1885,7 +1885,7 @@ def m40_h264_mp4(spark, sf_dir):
     frames (the m36 formulas) in pure SQL, plus the container
     constants the demux must produce (sample count, baseline
     profile 66 / level 20 from the SPS bytes avcC copies, NAL length
-    size, stsd dimensions). Narrow scan -> mapInPandas, zero
+    size, stsd dimensions). Narrow scan -> map_rows, zero
     shuffle; one task per video shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
         h264_mp4_frame_features,
@@ -1933,7 +1933,7 @@ def m41_mp3_intensity(spark, sf_dir):
     exception class). Every shipped table is pinned as a complete
     prefix code in pytest; tables 11/13/15 and the ESC code tables
     16/24 remain loud gates (the linbits mechanism itself is
-    implemented and pinned). Narrow scan -> mapInPandas, zero
+    implemented and pinned). Narrow scan -> map_rows, zero
     shuffle; one task per audio shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         mp3_intensity_features,
@@ -2035,7 +2035,7 @@ def m37_h264_bslice(spark, sf_dir):
     pixel of all three frames in pure SQL — including the rounded
     bi-predictive average and the two-hop P composition — plus the
     display rank of the B frame. Full QP/mb_type coverage is pinned
-    by bit-exact round trips in pytest. Narrow scan -> mapInPandas,
+    by bit-exact round trips in pytest. Narrow scan -> map_rows,
     zero shuffle; one task per video shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
         h264_b_frame_features,
@@ -2273,7 +2273,7 @@ def m42_h264_deblock(spark, sf_dir):
     next internal bS-3 edge re-adjust q2 by clip3(+-tc0) — a real
     8.7 subtlety the SQL reproduces). p_equals_filtered_idr pins the
     in-loop semantics: the P frame must equal the deblocked anchor
-    bit-for-bit (bS 0 on every P edge). Narrow scan -> mapInPandas,
+    bit-for-bit (bS 0 on every P edge). Narrow scan -> map_rows,
     zero shuffle; one task per video shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
         h264_deblock_features,
@@ -2370,7 +2370,7 @@ def m44_h264_longgop(spark, sf_dir):
     chain of reference choices the oracle re-derives with four
     nested CASEs. A mis-decoded ue(v) ref_idx lands on the wrong
     base frame and breaks every downstream sum. Narrow scan ->
-    mapInPandas, zero shuffle."""
+    map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         h264_longgop_features,
         synthesize_h264_longgop_frames,
@@ -2499,7 +2499,7 @@ def m45_h264_bpyramid(spark, sf_dir):
     over its two reference frames (bi = (l0+l1+1) >> 1) the oracle
     re-derives; a mis-wired reference-B DPB entry shifts every sum.
     poc_seq_ok pins the decode-order/POC contract. Narrow scan ->
-    mapInPandas, zero shuffle."""
+    map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
         h264_bpyramid_features,
         synthesize_h264_bpyramid_frames,
@@ -2742,7 +2742,7 @@ def m43_h264_bdeblock(spark, sf_dir):
     past). The normal filter's p0/p1/q0/q1 updates land at known
     rows, pinned by position-weighted checksums the oracle
     recomputes in closed form — a mis-derived bS 0 shifts every
-    value. Narrow scan -> mapInPandas, zero shuffle; one task per
+    value. Narrow scan -> map_rows, zero shuffle; one task per
     video shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
         h264_bdeblock_features,
@@ -2830,7 +2830,7 @@ def m38_jpeg_hierarchical(spark, sf_dir):
     DC-only and the pyramid round-trips bit-exactly at unit
     quantization — the oracle recomputes each level's pixels from
     the id formulas. Interpolation arithmetic and lossy random
-    pyramids are pinned in pytest. Narrow scan -> mapInPandas, zero
+    pyramids are pinned in pytest. Narrow scan -> map_rows, zero
     shuffle; one task per image shard at 100 TB."""
     from neuroimaging_data_pipeline_spark.multimodal.jpeg_hier import (
         jpeg_hier_features,
@@ -2881,7 +2881,7 @@ def m39_mp3_subband(spark, sf_dir):
     class; observed divergence ~1e-10 vs the 5e-4 boundary).
     Short/mixed-block and MS-stereo paths are pinned by bit-exact
     encoder<->decoder round trips and TDAC perfect-reconstruction
-    tests in pytest. Narrow scan -> mapInPandas, zero shuffle."""
+    tests in pytest. Narrow scan -> map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         synthesize_mp3_l3_clips,
     )
@@ -3206,7 +3206,7 @@ def m31_lzma_alone(spark, sf_dir):
     non-default lc/lp/pb filters for id%5==0, and the decoder must
     reproduce them bit-exactly — the md5 oracle breaks on ANY
     divergence anywhere in the coder. Repetitive tails (id%3==0)
-    keep long matches and the rep cache hot. One narrow mapInPandas
+    keep long matches and the rep cache hot. One narrow map_rows
     pass, zero shuffle."""
     from neuroimaging_data_pipeline_spark.sources.lzma_alone import (
         lzma_documents,

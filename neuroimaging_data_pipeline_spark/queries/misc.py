@@ -470,7 +470,7 @@ def m2_wav_rms(spark, sf_dir):
     Per document, a genuine RIFF/PCM16 WAV clip is synthesized (32
     samples = md5(text) nibbles affine-mapped to int16, stdlib ``wave``
     encoder), carried as an opaque binary column, then decoded back by
-    the real stdlib decoder inside an Arrow-batched mapInPandas, which
+    the real stdlib decoder inside an Arrow-batched map_rows, which
     emits per-clip features. The oracle recomputes the features from
     the same deterministic sample definition in pure SQL — so a codec
     bug (header, endianness, width) breaks the hash match."""
@@ -496,7 +496,7 @@ def m3_ppm_stats(spark, sf_dir):
     Per document, a genuine PPM/P6 image (8x6 RGB, pixels from a pure
     integer formula) is encoded with the stdlib-only writer, carried
     as an opaque binary column, then decoded by the real parser inside
-    Arrow-batched mapInPandas, which emits per-image channel means.
+    Arrow-batched map_rows, which emits per-image channel means.
     The oracle recomputes the means from the same pixel formula in
     pure SQL — a codec bug (header, layout, channel order) breaks the
     hash match. With m2 (WAV), two modalities are now real end-to-end;
@@ -528,7 +528,7 @@ def m4_png_stats(spark, sf_dir):
     chunks, pixels from a pure integer formula) is encoded by the
     stdlib-only zlib writer, carried as an opaque binary column, then
     decoded by the real chunk-walking/inflating/un-filtering parser
-    inside Arrow-batched mapInPandas, which emits per-image channel
+    inside Arrow-batched map_rows, which emits per-image channel
     means plus a total-pixel checksum. The oracle recomputes all of
     it from the pixel formula in pure SQL — a codec bug anywhere
     (chunk framing, CRC, inflate, any of the five filters, channel
@@ -589,7 +589,7 @@ def m5_jpeg_stats(spark, sf_dir):
     DHT, byte-stuffed entropy-coded scan) is encoded by the
     stdlib-only writer, carried as an opaque binary column, then
     decoded by the real marker-walking/Huffman-decoding/dequantizing/
-    IDCT parser inside Arrow-batched mapInPandas, which emits
+    IDCT parser inside Arrow-batched map_rows, which emits
     per-image stats. The fixture's 8x8 blocks are constant, so the
     lossy pipeline is bit-exact (DC-only blocks) and the oracle
     recomputes everything from the block formula in pure SQL — a bug
@@ -636,7 +636,7 @@ def m7_jpeg_color(spark, sf_dir):
     Per document, a genuine 3-component JFIF (YCbCr 4:4:4, interleaved
     MCUs, per-component DC prediction, separate luma/chroma table
     slots) is encoded stdlib-only and decoded by the generalized
-    multi-component parser inside Arrow-batched mapInPandas. The
+    multi-component parser inside Arrow-batched map_rows. The
     fixture is gray-valued RGB from constant blocks, which survives
     the doubly-lossy color pipeline bit-exactly (YCbCr of gray is
     exact, DC-only blocks at unit quant) — so the oracle recomputes
@@ -687,7 +687,7 @@ def m6_gzip_text(spark, sf_dir):
     Per document, the text is compressed into a genuine RFC 1952 gzip
     member (stdlib, deterministic mtime=0), carried as an opaque
     binary column — the exact shape of a .txt.gz training shard —
-    then decompressed inside Arrow-batched mapInPandas. The oracle
+    then decompressed inside Arrow-batched map_rows. The oracle
     recomputes length and md5 of the ORIGINAL text, so any corruption
     through compress -> binary column -> Arrow -> decompress breaks
     the hash match."""
@@ -719,7 +719,7 @@ def s5_nifti_stats(spark, sf_dir):
     storage with scl_slope/scl_inter, voxels from a pure integer
     formula) is encoded by the stdlib-only writer, carried as an
     opaque binary column, then decoded by the real 348-byte-header
-    parser inside Arrow-batched mapInPandas, which emits per-volume
+    parser inside Arrow-batched map_rows, which emits per-volume
     stats. The oracle recomputes the stats from the same voxel formula
     in pure SQL — a codec bug (header offsets, Fortran order,
     datatype, slope/inter) breaks the hash match. Upgrades S5 from

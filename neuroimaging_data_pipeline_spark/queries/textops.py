@@ -2241,7 +2241,7 @@ def t_encoding_repair(spark, sf_dir):
     each with a per-case non-ASCII suffix), so the oracle recomputes
     charset, mojibake flag, non-ASCII count and the repaired md5 per
     document — a validator, probe-order or repair bug breaks the
-    hash. Narrow mapInPandas both ways, zero shuffle."""
+    hash. Narrow map_rows both ways, zero shuffle."""
     from neuroimaging_data_pipeline_spark.text.encoding import (
         encoding_repair,
         synthesize_encoded_docs,
@@ -2282,7 +2282,7 @@ def t_idn_hosts(spark, sf_dir):
     label counts, the exact ACE length and the md5 of the
     round-tripped unicode host — an off-by-one anywhere in the
     insertion-ordering state machine breaks the hash. Narrow
-    mapInPandas, zero shuffle."""
+    map_rows, zero shuffle."""
     from neuroimaging_data_pipeline_spark.text.idn import (
         idn_canonicalize,
         synthesize_idn_hosts,

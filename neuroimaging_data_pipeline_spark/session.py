@@ -10,7 +10,10 @@ Scale notes (100 TB design targets, tested on local[N]):
   deployment overrides via ``extra_conf``.
 - Arrow enabled: every pandas_udf / applyInPandas / mapInArrow
   boundary (mass-OLS, t-CDF) moves through Arrow batches, not pickled
-  rows.
+  rows. Per-row codec and source work goes through
+  ``functions.rowmap.map_rows`` (``mapInArrow``: Arrow columns straight
+  to Python values, no pandas frame either way); only batch-vectorised
+  kernels keep ``mapInPandas``.
 - Session timezone pinned to UTC so timestamp semantics are stable
   against the DuckDB oracle and across clusters.
 """

@@ -7,7 +7,7 @@ from-scratch sibling is sources/avro_ocf.py).
 Pipeline value: ML feature stores and dataloaders hand shards around
 as Arrow IPC streams; this source packs documents into multi-batch
 IPC streams (one keyed shuffle) and reads them back inside Arrow
-``mapInPandas`` workers — the bytes never leave the Arrow memory
+``map_rows`` workers — the bytes never leave the Arrow memory
 model, so the decode path is genuinely zero-copy per batch.
 
 Integrity: the reader re-verifies each stream's schema against the
@@ -18,12 +18,13 @@ pyarrow and the count cross-check catches silently short shards.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.ipc as pa_ipc
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _SCHEMA = pa.schema(
     [
@@ -104,23 +105,10 @@ def ipc_documents(
         "text_md5 string, n_batches int"
     )
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for content in pdf[content_col]:
-                table, n_batches = read_ipc_stream(content)
-                tdf = table.to_pandas()
-                tdf["text_md5"] = [
-                    hashlib.md5(t.encode()).hexdigest() for t in tdf["text"]
-                ]
-                tdf["n_batches"] = n_batches
-                frames.append(tdf.drop(columns=["text"]))
-            out = pd.concat(frames, ignore_index=True)
-            out["n_batches"] = out["n_batches"].astype("int32")
-            yield out[
-                ["doc_id", "lang", "n_chars", "text_md5", "n_batches"]
-            ]
+    def parse(content):
+        table, n_batches = read_ipc_stream(content)
+        for r in table.to_pylist():
+            md5 = hashlib.md5(r["text"].encode()).hexdigest()
+            yield r["doc_id"], r["lang"], r["n_chars"], md5, n_batches
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

@@ -13,7 +13,7 @@ shapes the fixture exercises; null codec (uncompressed) and deflate
 (stdlib zlib) both real.
 
 Same posture as the other format codecs: encode/decode inside
-Arrow-batched mapInPandas over opaque binary columns, zero shuffle.
+Arrow-batched map_rows over opaque binary columns, zero shuffle.
 Independent verification: the SQL oracle recomputes the fixture
 formulas; pytest round-trips writer->reader incl. multi-block files,
 both codecs, and frame-corruption errors.
@@ -24,10 +24,10 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 MAGIC = b"Obj\x01"
 
@@ -186,18 +186,11 @@ def synthesize_avro_files(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     framing for every file."""
     out_schema = "media_id long, content binary"
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                write_avro(
-                    _fixture_records(int(i)),
-                    codec="deflate" if int(i) % 2 else "null",
-                )
-                for i in pdf[id_col]
-            ]
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def build(i):
+        codec = "deflate" if i % 2 else "null"
+        yield i, write_avro(_fixture_records(i), codec=codec)
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def avro_features(
@@ -210,29 +203,16 @@ def avro_features(
         "n_tags int, sum_score double"
     )
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                recs = read_avro(bytes(payload))
-                rows.append(
-                    (
-                        mid,
-                        len(recs),
-                        sum(r[0] for r in recs),
-                        len({r[1] for r in recs}),
-                        float(sum(r[2] for r in recs)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "n_records",
-                    "sum_rec_id",
-                    "n_tags",
-                    "sum_score",
-                ],
-            )
+    def feat(mid, payload):
+        recs = read_avro(payload)
+        yield (
+            mid,
+            len(recs),
+            sum(r[0] for r in recs),
+            len({r[1] for r in recs}),
+            float(sum(r[2] for r in recs)),
+        )
 
-    return media.mapInPandas(feat_batches, out_schema)
+    return map_rows(
+        media.select(id_col, content_col), feat, out_schema
+    )

@@ -22,7 +22,7 @@ What is REAL here, both directions:
   (pinned in pytest).
 
 Scale: shard packing is one keyed shuffle; parsing is a narrow
-``mapInPandas`` over opaque shard blobs — at 100 TB the natural next
+``map_rows`` over opaque shard blobs — at 100 TB the natural next
 step is registering this as a Python DataSource like the TAR shards
 (sources/datasource.py), which this module's (bytes -> rows) core
 drops straight into.
@@ -35,10 +35,11 @@ import io
 import json
 import struct
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _MAGIC = b"Obj\x01"
 
@@ -307,25 +308,10 @@ def avro_documents(
 
     out_schema = "doc_id long, label string, n_chars long, text_md5 string"
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, labels, ncs, md5s = [], [], [], []
-            for content in pdf[content_col]:
-                _, rows = read_avro(content)
-                for r in rows:
-                    ids.append(r["doc_id"])
-                    labels.append(r["label"])
-                    ncs.append(r["n_chars"])
-                    md5s.append(_h.md5(r["text"].encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "label": pd.Series(labels, dtype=object),
-                    "n_chars": pd.Series(ncs, dtype="int64"),
-                    "text_md5": pd.Series(md5s, dtype=object),
-                }
-            )
+    def parse(content):
+        _, rows = read_avro(content)
+        for r in rows:
+            md5 = _h.md5(r["text"].encode()).hexdigest()
+            yield r["doc_id"], r["label"], r["n_chars"], md5
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

@@ -32,7 +32,7 @@ descriptions):
   repo next to zlib's, Castagnoli's and Ogg's), footer magic
   0x177245385090 + combined CRC cross-checked.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle —
 one task per ``.bz2`` shard at 100 TB; per-doc CPU is linear in the
 block size.
 """
@@ -40,12 +40,11 @@ block size.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     canonical_table,
@@ -286,43 +285,32 @@ def synthesize_bzip2_docs(
 
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                if i % 4 == 0:
-                    body += b"zzzz" * (20 + i % 13)
-                if len(body) > 99_000:
-                    raise ValueError(
-                        f"doc {i}: body of {len(body)} bytes would span"
-                        " level-1 blocks — the s32 oracle's n_blocks"
-                        " formula assumes one block per stream"
-                    )
-                if not body:
-                    # bz2.compress(b"") emits a ZERO-block stream,
-                    # silently diverging from the oracle's
-                    # one-block-per-stream formula — fail loudly like
-                    # the oversized guard above (ADVICE r8)
-                    raise ValueError(
-                        f"doc {i}: empty body would emit a zero-block"
-                        " stream — the s32 oracle assumes one block"
-                        " per stream"
-                    )
-                blob = bz2.compress(body, compresslevel=(1, 5, 9)[i % 3])
-                if i % 5 == 0:
-                    blob += bz2.compress(b"S%d" % i, compresslevel=9)
-                blobs.append(blob)
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        if i % 4 == 0:
+            body += b"zzzz" * (20 + i % 13)
+        if len(body) > 99_000:
+            raise ValueError(
+                f"doc {i}: body of {len(body)} bytes would span"
+                " level-1 blocks — the s32 oracle's n_blocks"
+                " formula assumes one block per stream"
             )
+        if not body:
+            # bz2.compress(b"") emits a ZERO-block stream,
+            # silently diverging from the oracle's
+            # one-block-per-stream formula — fail loudly like
+            # the oversized guard above (ADVICE r8)
+            raise ValueError(
+                f"doc {i}: empty body would emit a zero-block"
+                " stream — the s32 oracle assumes one block"
+                " per stream"
+            )
+        blob = bz2.compress(body, compresslevel=(1, 5, 9)[i % 3])
+        if i % 5 == 0:
+            blob += bz2.compress(b"S%d" % i, compresslevel=9)
+        yield i, blob
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def bzip2_documents(
@@ -335,24 +323,14 @@ def bzip2_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_bzip2(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["n_streams"],
-                        d["n_blocks"],
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_streams", "n_blocks", "content_len",
-                         "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_bzip2(content)
+        yield (
+            i,
+            d["n_streams"],
+            d["n_blocks"],
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -23,7 +23,7 @@ What is REAL here, both directions:
   conformance pin, not a self-roundtrip.
 
 Scale: shard packing is one keyed shuffle; parsing is a narrow
-``mapInPandas`` over opaque shard blobs, zero further shuffle.
+``map_rows`` over opaque shard blobs, zero further shuffle.
 """
 
 from __future__ import annotations
@@ -31,10 +31,11 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 
 class Tag:
@@ -337,34 +338,17 @@ def cbor_documents(
 ) -> DataFrame:
     out_schema = "doc_id long, tagged boolean, n_chars long, text_md5 string"
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tags, ncs, md5s = [], [], [], []
-            for content in pdf[content_col]:
-                for rec in decode(bytes(content)):
-                    rid = rec["id"]
-                    tagged = isinstance(rid, Tag)
-                    if tagged:
-                        if rid.number != 1:
-                            raise ValueError("unexpected tag number")
-                        rid = rid.value
-                    if rec["n"] != len(rec["text"]):
-                        raise ValueError("n/text mismatch in CBOR record")
-                    ids.append(int(rid))
-                    tags.append(tagged)
-                    ncs.append(len(rec["text"]))
-                    md5s.append(
-                        hashlib.md5(rec["text"].encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "tagged": pd.Series(tags, dtype=bool),
-                    "n_chars": pd.Series(ncs, dtype="int64"),
-                    "text_md5": pd.Series(md5s, dtype=object),
-                }
-            )
+    def parse(content):
+        for rec in decode(content):
+            rid = rec["id"]
+            tagged = isinstance(rid, Tag)
+            if tagged:
+                if rid.number != 1:
+                    raise ValueError("unexpected tag number")
+                rid = rid.value
+            if rec["n"] != len(rec["text"]):
+                raise ValueError("n/text mismatch in CBOR record")
+            md5 = hashlib.md5(rec["text"].encode()).hexdigest()
+            yield int(rid), tagged, len(rec["text"]), md5
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

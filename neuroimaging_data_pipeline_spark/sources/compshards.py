@@ -18,10 +18,11 @@ decode (one task per shard), exactly like the zstd twin.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 DOCS_PER_SHARD = 50
 
@@ -92,33 +93,17 @@ def bxz_shard_documents(
 
     out_schema = f"shard_id long, container string, {id_col} long, text string"
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            shard_ids, containers, ids, texts = [], [], [], []
-            for sid, container, content in zip(
-                pdf["shard_id"], pdf["container"], pdf["content"]
-            ):
-                if container == "bz2":
-                    d = parse_bzip2(bytes(content))
-                    if not d["crc_ok"]:
-                        raise ValueError(f"shard {sid}: bzip2 CRC failed")
-                    body = d["content"]
-                else:
-                    d = parse_xz(bytes(content))
-                    body = d["content"]
-                for line in body.decode().splitlines():
-                    rec = _json.loads(line)
-                    shard_ids.append(int(sid))
-                    containers.append(str(container))
-                    ids.append(int(rec["id"]))
-                    texts.append(rec["text"])
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(shard_ids, dtype="int64"),
-                    "container": pd.Series(containers, dtype=object),
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "text": pd.Series(texts, dtype=object),
-                }
-            )
+    def unpack(sid, container, content):
+        if container == "bz2":
+            d = parse_bzip2(content)
+            if not d["crc_ok"]:
+                raise ValueError(f"shard {sid}: bzip2 CRC failed")
+        else:
+            d = parse_xz(content)
+        for line in d["content"].decode().splitlines():
+            rec = _json.loads(line)
+            yield sid, container, int(rec["id"]), rec["text"]
 
-    return shards.mapInPandas(unpack, out_schema)
+    return map_rows(
+        shards.select("shard_id", "container", "content"), unpack, out_schema
+    )

@@ -2,7 +2,7 @@
 shards as a REAL ``spark.read.format(...)`` source.
 
 Everywhere else the repo ingests binary media via binaryFile +
-mapInPandas; this module plugs the same real TAR codec
+map_rows; this module plugs the same real TAR codec
 (multimodal/tar.py) into Spark's OFFICIAL Python extension point
 instead — ``pyspark.sql.datasource.DataSource`` — so shard ingest
 gets genuine source semantics: the format is registered by name, the

@@ -3,7 +3,7 @@
 Reference behavior: the notebook (cell 2) and ``ssm_loop.py:26`` pull
 small text resources (atlas label lookups) from URLs with pandas/
 urllib on one machine. Engine mapping: a URI *table* fanned out over
-executors via Arrow-batched ``mapInPandas`` — at cluster scale the
+executors via Arrow-batched ``map_rows`` — at cluster scale the
 fetch of thousands of per-subject sidecars runs where the partitions
 are, with per-row error capture instead of a driver-side loop that
 dies on the first 404.
@@ -17,10 +17,10 @@ Failures are DATA (status=-1 + error column), never exceptions: a
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 FETCH_SCHEMA = (
     "uri string, status int, n_bytes int, content string, error string"
@@ -41,49 +41,41 @@ def fetch_text(
     - ``max_bytes`` caps a single response so one pathological URI
       cannot OOM an executor; truncation is reported in ``error``
       while the truncated content is still returned.
-    - Narrow plan: one mapInPandas over the URI table's partitions —
+    - Narrow plan: one map_rows over the URI table's partitions —
       repartition the URI table upstream to size fetch parallelism.
     """
 
-    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import http.client
-        import urllib.error
-        import urllib.request
+    import http.client
+    import urllib.error
+    import urllib.request
 
-        for pdf in batches:
-            out = {k: [] for k in ("uri", "status", "n_bytes", "content", "error")}
-            for uri in pdf[uri_col]:
-                status, n_bytes, content, error = -1, 0, None, None
-                try:
-                    with urllib.request.urlopen(uri, timeout=timeout) as resp:
-                        raw = resp.read(max_bytes + 1)
-                        if len(raw) > max_bytes:
-                            raw = raw[:max_bytes]
-                            error = f"truncated at {max_bytes} bytes"
-                        # file:// responses carry no HTTP status
-                        status = getattr(resp, "status", None) or 200
-                        # bytes actually fetched, NOT the re-encoded
-                        # length of the decoded text (errors='replace'
-                        # maps undecodable bytes to U+FFFD, which
-                        # would inflate a re-encoded count)
-                        n_bytes = len(raw)
-                        content = raw.decode("utf-8", errors="replace")
-                except (
-                    urllib.error.URLError,
-                    # malformed status line / truncated chunked body —
-                    # HTTPException does NOT subclass OSError, and the
-                    # contract here is failures-as-data, never a task
-                    # abort
-                    http.client.HTTPException,
-                    ValueError,
-                    OSError,
-                ) as e:
-                    error = str(e)
-                out["uri"].append(uri)
-                out["status"].append(status)
-                out["n_bytes"].append(n_bytes)
-                out["content"].append(content)
-                out["error"].append(error)
-            yield pd.DataFrame(out)
+    def fetch(uri):
+        status, n_bytes, content, error = -1, 0, None, None
+        try:
+            with urllib.request.urlopen(uri, timeout=timeout) as resp:
+                raw = resp.read(max_bytes + 1)
+                if len(raw) > max_bytes:
+                    raw = raw[:max_bytes]
+                    error = f"truncated at {max_bytes} bytes"
+                # file:// responses carry no HTTP status
+                status = getattr(resp, "status", None) or 200
+                # bytes actually fetched, NOT the re-encoded
+                # length of the decoded text (errors='replace'
+                # maps undecodable bytes to U+FFFD, which
+                # would inflate a re-encoded count)
+                n_bytes = len(raw)
+                content = raw.decode("utf-8", errors="replace")
+        except (
+            urllib.error.URLError,
+            # malformed status line / truncated chunked body —
+            # HTTPException does NOT subclass OSError, and the
+            # contract here is failures-as-data, never a task
+            # abort
+            http.client.HTTPException,
+            ValueError,
+            OSError,
+        ) as e:
+            error = str(e)
+        yield uri, status, n_bytes, content, error
 
-    return uris.mapInPandas(fetch_batches, FETCH_SCHEMA)
+    return map_rows(uris.select(uri_col), fetch, FETCH_SCHEMA)

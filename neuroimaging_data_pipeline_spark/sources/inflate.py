@@ -27,7 +27,7 @@ What is REAL:
 - the gzip member grammar: magic, CM=8, FTEXT/FHCRC/FEXTRA/FNAME/
   FCOMMENT flags, latin-1 zero-terminated name/comment, XFL/OS.
 
-Scale: used inside Arrow ``mapInPandas`` batches like every codec
+Scale: used inside Arrow ``map_rows`` batches like every codec
 here — narrow, zero shuffle.
 """
 
@@ -35,10 +35,10 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # --- CRC-32 (reflected, poly 0xEDB88320) ---------------------------------------------
 
@@ -356,31 +356,18 @@ def synthesize_gzip_members(
     and block type hot on the query path."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                blobs.append(
-                    write_gzip_member(
-                        body,
-                        level=[0, 1, 6, 9][i % 4],
-                        fname=f"doc-{i}.txt" if i % 2 == 0 else None,
-                        fcomment=f"c{i}" if i % 3 == 0 else None,
-                        fextra=b"XX\x02\x00ab" if i % 5 == 0 else None,
-                        fhcrc=(i % 7 == 0),
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        yield i, write_gzip_member(
+            body,
+            level=[0, 1, 6, 9][i % 4],
+            fname=f"doc-{i}.txt" if i % 2 == 0 else None,
+            fcomment=f"c{i}" if i % 3 == 0 else None,
+            fextra=b"XX\x02\x00ab" if i % 5 == 0 else None,
+            fhcrc=(i % 7 == 0),
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def gzip_inflate_features(
@@ -394,28 +381,17 @@ def gzip_inflate_features(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_gzip_member(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["fname"] or "",
-                        d["fcomment"] is not None,
-                        d["fextra"] is not None,
-                        d["hcrc_checked"],
-                        d["crc_ok"],
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fname", "has_comment", "has_extra",
-                         "hcrc_checked", "crc_ok", "content_len",
-                         "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_gzip_member(content)
+        yield (
+            i,
+            d["fname"] or "",
+            d["fcomment"] is not None,
+            d["fextra"] is not None,
+            d["hcrc_checked"],
+            d["crc_ok"],
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -35,16 +35,16 @@ against the real `lz4` CLI present in this environment (levels,
 small blocks, block checksums, linked mode), plus the `lz4.frame`
 package interop pin where that package exists.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _MAGIC = 0x184D2204
 _MINMATCH = 4
@@ -385,32 +385,19 @@ def synthesize_lz4_docs(
     recomputes."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                if i % 3 == 0:
-                    body += b" lz4" * (8 + i % 5)
-                blobs.append(
-                    write_lz4_frame(
-                        body,
-                        block_checksum=(i % 2 == 0),
-                        content_size=(i % 5 != 0),
-                        content_checksum=True,
-                        force_stored=(i % 7 == 0),
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        if i % 3 == 0:
+            body += b" lz4" * (8 + i % 5)
+        yield i, write_lz4_frame(
+            body,
+            block_checksum=(i % 2 == 0),
+            content_size=(i % 5 != 0),
+            content_checksum=True,
+            force_stored=(i % 7 == 0),
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def lz4_documents(
@@ -424,27 +411,16 @@ def lz4_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_lz4_frame(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["n_blocks"],
-                        d["size_known"],
-                        d["has_block_checksum"],
-                        bool(d["checksum_ok"]),
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_blocks", "size_known",
-                         "has_block_checksum", "checksum_ok",
-                         "content_len", "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_lz4_frame(content)
+        yield (
+            i,
+            d["n_blocks"],
+            d["size_known"],
+            d["has_block_checksum"],
+            bool(d["checksum_ok"]),
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

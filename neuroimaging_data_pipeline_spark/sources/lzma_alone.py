@@ -36,10 +36,10 @@ coder breaks the hash match.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _TOP = 1 << 24
 _BIT_MODEL_TOTAL = 1 << 11
@@ -334,46 +334,33 @@ def synthesize_lzma_docs(
 
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                if i % 3 == 0:
-                    body += b" xz" * (20 + i % 9)
-                # dict_size pinned small: liblzma otherwise
-                # allocates the preset's FULL dictionary (64 MiB at
-                # preset 9) per compress() call — ~100x the work for
-                # KB documents, with zero effect on coverage (the
-                # decoder reads the header's dict size either way)
-                presets = [0, 1, 6, 9 | lzma.PRESET_EXTREME]
-                if i % 5 == 0:
-                    filters = [
-                        {"id": lzma.FILTER_LZMA1, "preset": 6,
-                         "lc": 0, "lp": 2, "pb": 1,
-                         "dict_size": 1 << 16}
-                    ]
-                else:
-                    filters = [
-                        {"id": lzma.FILTER_LZMA1,
-                         "preset": presets[i % 4],
-                         "dict_size": 1 << 16}
-                    ]
-                blobs.append(
-                    lzma.compress(
-                        body, format=lzma.FORMAT_ALONE, filters=filters
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        if i % 3 == 0:
+            body += b" xz" * (20 + i % 9)
+        # dict_size pinned small: liblzma otherwise
+        # allocates the preset's FULL dictionary (64 MiB at
+        # preset 9) per compress() call — ~100x the work for
+        # KB documents, with zero effect on coverage (the
+        # decoder reads the header's dict size either way)
+        presets = [0, 1, 6, 9 | lzma.PRESET_EXTREME]
+        if i % 5 == 0:
+            filters = [
+                {"id": lzma.FILTER_LZMA1, "preset": 6,
+                 "lc": 0, "lp": 2, "pb": 1,
+                 "dict_size": 1 << 16}
+            ]
+        else:
+            filters = [
+                {"id": lzma.FILTER_LZMA1,
+                 "preset": presets[i % 4],
+                 "dict_size": 1 << 16}
+            ]
+        yield i, lzma.compress(
+            body, format=lzma.FORMAT_ALONE, filters=filters
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def lzma_documents(
@@ -386,26 +373,16 @@ def lzma_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_lzma_alone(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["lc"],
-                        d["lp"],
-                        d["pb"],
-                        d["size_known"],
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "lc", "lp", "pb", "size_known",
-                         "content_len", "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_lzma_alone(content)
+        yield (
+            i,
+            d["lc"],
+            d["lp"],
+            d["pb"],
+            d["size_known"],
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

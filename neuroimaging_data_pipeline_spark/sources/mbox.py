@@ -19,7 +19,7 @@ What is REAL here:
   explicit Message-IDs — byte-stable shards.
 
 Scale: shard packing is one keyed shuffle (applyInPandas per shard);
-parsing is a narrow ``mapInPandas`` over opaque shard blobs, zero
+parsing is a narrow ``map_rows`` over opaque shard blobs, zero
 further shuffle — same shape as the WARC and TAR sources.
 """
 
@@ -27,11 +27,12 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
 from email import message_from_bytes
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _FROM_SEP = re.compile(rb"^From ", re.M)
 _QUOTED = re.compile(rb"^(>+)From ", re.M)
@@ -330,42 +331,30 @@ def mbox_messages(
         "plain_len long, plain_md5 string"
     )
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, np_, ctes, ln, md = [], [], [], [], []
-            for content in pdf[content_col]:
-                for raw in parse_mbox(content):
-                    info = extract_parts(raw)
-                    m = re.match(r"<doc-(\d+)@", info["message_id"])
-                    if not m:
-                        raise ValueError(
-                            f"unexpected Message-ID {info['message_id']!r}"
-                        )
-                    plain = [
-                        p for p in info["parts"]
-                        if p["content_type"] == "text/plain"
-                    ]
-                    if len(plain) != 1:
-                        raise ValueError("expected exactly one text/plain")
-                    body = plain[0]["body"].decode()
-                    # CTE canonicalizes the line ending; the corpus
-                    # text is single-line, so strip the trailing CRLF
-                    body = body.rstrip("\r\n")
-                    ids.append(int(m.group(1)))
-                    np_.append(len(info["parts"]))
-                    ctes.append(plain[0]["cte"])
-                    ln.append(len(body))
-                    md.append(hashlib.md5(body.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_parts": pd.Series(np_, dtype="int32"),
-                    "cte": pd.Series(ctes, dtype=object),
-                    "plain_len": pd.Series(ln, dtype="int64"),
-                    "plain_md5": pd.Series(md, dtype=object),
-                }
+    def parse(content):
+        for raw in parse_mbox(content):
+            info = extract_parts(raw)
+            m = re.match(r"<doc-(\d+)@", info["message_id"])
+            if not m:
+                raise ValueError(
+                    f"unexpected Message-ID {info['message_id']!r}"
+                )
+            plain = [
+                p for p in info["parts"]
+                if p["content_type"] == "text/plain"
+            ]
+            if len(plain) != 1:
+                raise ValueError("expected exactly one text/plain")
+            body = plain[0]["body"].decode()
+            # CTE canonicalizes the line ending; the corpus
+            # text is single-line, so strip the trailing CRLF
+            body = body.rstrip("\r\n")
+            yield (
+                int(m.group(1)),
+                len(info["parts"]),
+                plain[0]["cte"],
+                len(body),
+                hashlib.md5(body.encode()).hexdigest(),
             )
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+
 _MAGIC = b"NDPVOL1\0"
 
 # NIfTI-1 datatype codes (nifti1.h) -> numpy dtype chars.
@@ -268,23 +270,17 @@ def synthesize_nifti_volumes(
     ts = np.arange(nt)[None, None, None, :]
     base = xs * 7 + ys * 31 + zs * 3 + ts * 17
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                arr = ((int(did) * 13 + base) % 97) * 0.5 + 10.0
-                payloads.append(
-                    encode_nifti1(
-                        arr,
-                        dtype="i2",
-                        scl_slope=0.5,
-                        scl_inter=10.0,
-                        compress=bool(int(did) % 2),
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+    def encode(did):
+        arr = ((did * 13 + base) % 97) * 0.5 + 10.0
+        yield did, encode_nifti1(
+            arr,
+            dtype="i2",
+            scl_slope=0.5,
+            scl_inter=10.0,
+            compress=bool(did % 2),
+        )
 
-    return docs.select(id_col).mapInPandas(encode_batches, out_schema)
+    return map_rows(docs.select(id_col), encode, out_schema)
 
 
 def nifti_volume_stats(
@@ -294,7 +290,7 @@ def nifti_volume_stats(
 ) -> DataFrame:
     """Decode NIfTI-1 binary columns with the REAL stdlib codec and
     emit per-volume stats: (media_id, nx, ny, nz, nt, n_vox,
-    mean_value, max_value). Narrow Arrow-batched mapInPandas over the
+    mean_value, max_value). Narrow Arrow-batched map_rows over the
     scan — nothing shuffles; at 100 TB each file decodes where it
     lands, exactly like wav_features/ppm_features."""
     out_schema = (
@@ -302,23 +298,11 @@ def nifti_volume_stats(
         "n_vox long, mean_value double, max_value double"
     )
 
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("nx", "ny", "nz", "nt", "n_vox", "mean_value", "max_value")}
-            for payload in pdf[content_col]:
-                arr = decode_nifti1(bytes(payload))
-                nx, ny, nz, nt = arr.shape
-                rows["nx"].append(nx)
-                rows["ny"].append(ny)
-                rows["nz"].append(nz)
-                rows["nt"].append(nt)
-                rows["n_vox"].append(arr.size)
-                rows["mean_value"].append(float(arr.mean()))
-                rows["max_value"].append(float(arr.max()))
-            yield pd.DataFrame({id_col: pdf[id_col], **rows})
+    def stats(mid, payload):
+        arr = decode_nifti1(payload)
+        yield (mid, *arr.shape, arr.size, float(arr.mean()), float(arr.max()))
 
-    return media.mapInPandas(stat_batches, out_schema)
+    return map_rows(media.select(id_col, content_col), stats, out_schema)
 
 
 def n_tr_of(volumes_long: DataFrame) -> int:

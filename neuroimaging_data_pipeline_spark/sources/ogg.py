@@ -22,17 +22,17 @@ framing bugs actually corrupt corpora — is exact:
 - nominal-bitrate-style stream bookkeeping: one logical stream per
   doc (BOS on the first page, EOS on the last, constant serial).
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # --- Ogg CRC-32 (non-reflected, poly 0x04C11DB7, init 0, xorout 0) --------------------
 
@@ -220,40 +220,27 @@ def synthesize_ogg_docs(
     recomputes."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                # the S29 oracle's page/span SQL assumes the text
-                # packet never itself crosses a page boundary and the
-                # forced tail crosses exactly one; both silently break
-                # once header+text segments approach a full page, so
-                # oversized corpora must fail loudly here instead of
-                # diverging (ADVICE r7 #5)
-                if 2 + len(body) // 255 > _MAX_SEGS - 3:
-                    raise ValueError(
-                        f"doc {i}: body of {len(body)} bytes needs "
-                        f"{len(body) // 255 + 1} segments — too close "
-                        f"to a {_MAX_SEGS}-segment page for the S29 "
-                        "oracle's fixed lacing arithmetic"
-                    )
-                pkts = [b"NDPA" + str(i).encode(), body]
-                if i % 3 == 0:
-                    pkts.append(b"=" * (255 * (_MAX_SEGS + 2)))
-                blobs.append(
-                    write_ogg_stream(pkts, serial=(i * 2654435761) % 2**32)
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        # the S29 oracle's page/span SQL assumes the text
+        # packet never itself crosses a page boundary and the
+        # forced tail crosses exactly one; both silently break
+        # once header+text segments approach a full page, so
+        # oversized corpora must fail loudly here instead of
+        # diverging (ADVICE r7 #5)
+        if 2 + len(body) // 255 > _MAX_SEGS - 3:
+            raise ValueError(
+                f"doc {i}: body of {len(body)} bytes needs "
+                f"{len(body) // 255 + 1} segments — too close "
+                f"to a {_MAX_SEGS}-segment page for the S29 "
+                "oracle's fixed lacing arithmetic"
             )
+        pkts = [b"NDPA" + str(i).encode(), body]
+        if i % 3 == 0:
+            pkts.append(b"=" * (255 * (_MAX_SEGS + 2)))
+        yield i, write_ogg_stream(pkts, serial=(i * 2654435761) % 2**32)
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def ogg_documents(
@@ -266,28 +253,18 @@ def ogg_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_ogg_stream(bytes(content))
-                hdr, body = d["packets"][0], d["packets"][1]
-                if hdr != b"NDPA" + str(int(i)).encode():
-                    raise ValueError("header packet mismatch")
-                rows.append(
-                    (
-                        int(i),
-                        d["n_pages"],
-                        d["n_packets"],
-                        d["n_spanning"],
-                        len(body),
-                        hashlib.md5(body).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_pages", "n_packets", "n_spanning",
-                         "content_len", "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_ogg_stream(content)
+        hdr, body = d["packets"][0], d["packets"][1]
+        if hdr != b"NDPA" + str(i).encode():
+            raise ValueError("header packet mismatch")
+        yield (
+            i,
+            d["n_pages"],
+            d["n_packets"],
+            d["n_spanning"],
+            len(body),
+            hashlib.md5(body).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -13,7 +13,7 @@ Why it earns its place: row-group statistics ARE the scan-pruning
 machinery at 100 TB — a data platform that cannot inspect its own
 files' row-group layout cannot explain a slow scan. The footer is
 O(KB) regardless of file size, so the parse is metadata-scale while
-staying embarrassingly parallel over files (binaryFile + mapInPandas
+staying embarrassingly parallel over files (binaryFile + map_rows
 when run corpus-wide).
 
 Independent verification: the oracle reads the SAME file through

@@ -30,16 +30,16 @@ pyarrow's bundled real snappy (present in this environment) across
 textures; interop pins against `python-snappy`/`cramjam` additionally
 activate when those packages exist.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # --- CRC-32C (Castagnoli, reflected) -------------------------------------------------
 
@@ -298,30 +298,17 @@ def synthesize_snappy_docs(
     formulas the oracle recomputes."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                if i % 3 == 0:
-                    body += b" zip" * (8 + i % 5)
-                blobs.append(
-                    write_snappy_frame(
-                        body,
-                        force_uncompressed=(i % 4 == 0),
-                        pad=(6 + i % 4) if i % 5 == 0 else 0,
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        if i % 3 == 0:
+            body += b" zip" * (8 + i % 5)
+        yield i, write_snappy_frame(
+            body,
+            force_uncompressed=(i % 4 == 0),
+            pad=(6 + i % 4) if i % 5 == 0 else 0,
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def snappy_documents(
@@ -334,25 +321,15 @@ def snappy_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_snappy_frame(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["n_chunks"],
-                        d["n_stored"],
-                        d["n_padding"],
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_chunks", "n_stored", "n_padding",
-                         "content_len", "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_snappy_frame(content)
+        yield (
+            i,
+            d["n_chunks"],
+            d["n_stored"],
+            d["n_padding"],
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -33,7 +33,7 @@ What is REAL here, both directions:
   ``sqlite3`` and passing PRAGMA integrity_check.
 
 Scale: shard packing is one keyed shuffle; parsing is a narrow
-``mapInPandas`` over opaque shard blobs, zero further shuffle — the
+``map_rows`` over opaque shard blobs, zero further shuffle — the
 same posture as every other binary source here.
 """
 
@@ -45,6 +45,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _MAGIC = b"SQLite format 3\x00"
 # arbitrary-but-valid "written by" version stamp (3.45.0); readers
@@ -424,30 +426,14 @@ def sqlite_documents(
     table: str = "docs",
 ) -> DataFrame:
     """Decode SQLite shard blobs back to rows with the from-scratch
-    b-tree walk; narrow mapInPandas, no shuffle."""
+    b-tree walk; narrow map_rows, no shuffle."""
     out_schema = "doc_id long, n_chars long, text_md5 string, n_pages long"
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ncs, md5s, nps = [], [], [], []
-            for content in pdf[content_col]:
-                content = bytes(content)
-                n_pages = len(content) // _Db(content).page_size
-                for rowid, rec in read_sqlite_table(content, table):
-                    text = rec[1]
-                    ids.append(rowid)
-                    ncs.append(len(text))
-                    md5s.append(hashlib.md5(text.encode()).hexdigest())
-                    nps.append(n_pages)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_chars": pd.Series(ncs, dtype="int64"),
-                    "text_md5": pd.Series(md5s, dtype=object),
-                    "n_pages": pd.Series(nps, dtype="int64"),
-                }
-            )
+    def parse(content):
+        n_pages = len(content) // _Db(content).page_size
+        for rowid, rec in read_sqlite_table(content, table):
+            text = rec[1]
+            md5 = hashlib.md5(text.encode()).hexdigest()
+            yield rowid, len(text), md5, n_pages
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

@@ -29,7 +29,7 @@ from-scratch frame + proto layers are instead pinned by hand-built
 byte fixtures in pytest).
 
 Scale: one task per shard, opaque binary through Arrow
-``mapInPandas``, zero shuffle beyond the keyed pack.
+``map_rows``, zero shuffle beyond the keyed pack.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.sources.snappy import (
     _mask_crc,
     crc32c,
@@ -276,7 +277,7 @@ def synthesize_tfrecord_shards(
     lang (bytes), id + n_chars (int64, the id NEGATED for odd docs so
     the 10-byte negative varint form stays hot), score (float32 list,
     quarter-steps so f32 is exact cross-engine). One keyed shuffle to
-    pack, then narrow mapInPandas."""
+    pack, then narrow map_rows."""
     from pyspark.sql import functions as F
 
     out_schema = "shard_id long, content binary"
@@ -320,31 +321,17 @@ def tfrecord_documents(
         " text_md5 string"
     )
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, langs, ncs, scores, md5s = [], [], [], [], []
-            for content in pdf[content_col]:
-                for rec in read_tfrecords(bytes(content)):
-                    ex = decode_example(rec)
-                    raw_id = ex["id"][1][0]
-                    ids.append(-raw_id if raw_id < 0 else raw_id)
-                    langs.append(ex["lang"][1][0].decode())
-                    ncs.append(ex["n_chars"][1][0])
-                    # quarter/half-step float32s are exact in double
-                    scores.append(float(sum(ex["score"][1])))
-                    md5s.append(
-                        hashlib.md5(ex["text"][1][0]).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "lang": pd.Series(langs, dtype=object),
-                    "n_chars": pd.Series(ncs, dtype="int64"),
-                    "score_sum": pd.Series(scores, dtype="float64"),
-                    "text_md5": pd.Series(md5s, dtype=object),
-                }
+    def parse(content):
+        for rec in read_tfrecords(content):
+            ex = decode_example(rec)
+            raw_id = ex["id"][1][0]
+            yield (
+                -raw_id if raw_id < 0 else raw_id,
+                ex["lang"][1][0].decode(),
+                ex["n_chars"][1][0],
+                # quarter/half-step float32s are exact in double
+                float(sum(ex["score"][1])),
+                hashlib.md5(ex["text"][1][0]).hexdigest(),
             )
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

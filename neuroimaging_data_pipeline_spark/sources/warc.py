@@ -26,7 +26,7 @@ pipeline, same as the TAR WebDataset source (multimodal/tar.py).
 
 Scale: shard packing is a single keyed shuffle (applyInPandas per
 shard — the same grouping a distributed WARC writer needs); parsing
-is a narrow mapInPandas over opaque binary shards, embarrassingly
+is a narrow map_rows over opaque binary shards, embarrassingly
 parallel, zero further shuffle. At 100 TB the shards arrive as
 parquet binary columns or via the DataSource API (sources/
 datasource.py shows the registered-format half).
@@ -38,10 +38,11 @@ import base64
 import gzip
 import hashlib
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _CRLF = b"\r\n"
 _WARC_DATE = "2026-01-01T00:00:00Z"  # fixed: shards must be deterministic
@@ -235,37 +236,21 @@ def warc_records(
         "content_length long, body_md5 string, n_warcinfo int"
     )
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, stats, lens, md5s, nwis = [], [], [], [], [], []
-            for content in pdf[content_col]:
-                n_warcinfo = 0
-                first = len(ids)
-                for headers, payload in parse_warc(content):
-                    if headers["warc-type"] == "warcinfo":
-                        n_warcinfo += 1
-                        continue
-                    if headers["warc-type"] != "response":
-                        continue
-                    uri = headers["warc-target-uri"]
-                    status, _, body = parse_http_response(payload)
-                    ids.append(int(uri.rsplit("/", 1)[1]))
-                    types.append(headers["warc-type"])
-                    stats.append(status)
-                    lens.append(len(body))
-                    md5s.append(hashlib.md5(body).hexdigest())
-                nwis.extend([n_warcinfo] * (len(ids) - first))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "warc_type": pd.Series(types, dtype=object),
-                    "http_status": pd.Series(stats, dtype="int32"),
-                    "content_length": pd.Series(lens, dtype="int64"),
-                    "body_md5": pd.Series(md5s, dtype=object),
-                    "n_warcinfo": pd.Series(nwis, dtype="int32"),
-                }
-            )
+    def parse(content):
+        n_warcinfo = 0
+        rows = []
+        for headers, payload in parse_warc(content):
+            if headers["warc-type"] == "warcinfo":
+                n_warcinfo += 1
+                continue
+            if headers["warc-type"] != "response":
+                continue
+            uri = headers["warc-target-uri"]
+            status, _, body = parse_http_response(payload)
+            rows.append((
+                int(uri.rsplit("/", 1)[1]), headers["warc-type"], status,
+                len(body), hashlib.md5(body).hexdigest(),
+            ))
+        return [(*r, n_warcinfo) for r in rows]
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

@@ -33,17 +33,16 @@ again the REFERENCE WRITER, now through the full container:
 The VLI coding (7-bit little-endian groups, <= 9 bytes) is the same
 shape protobuf uses but with xz's termination rule.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle.
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.sources.inflate import crc32
 from neuroimaging_data_pipeline_spark.sources.lzma_alone import (
     Lzma1Decoder,
@@ -404,35 +403,22 @@ def synthesize_xz_docs(
     checks = [lzma.CHECK_NONE, lzma.CHECK_CRC32,
               lzma.CHECK_CRC64, lzma.CHECK_SHA256]
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                if i % 3 == 0:
-                    body += b" xz2" * (15 + i % 9)
-                # small dict_size: see sources/lzma_alone.py — the
-                # preset's full-dictionary alloc per call is ~100x
-                # the work for KB docs and changes nothing downstream
-                blobs.append(
-                    lzma.compress(
-                        body, format=lzma.FORMAT_XZ,
-                        check=checks[i % 4],
-                        filters=[{"id": lzma.FILTER_LZMA2,
-                                  "preset": [0, 1, 6, 9][i % 4],
-                                  "dict_size": 1 << 16}],
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        if i % 3 == 0:
+            body += b" xz2" * (15 + i % 9)
+        # small dict_size: see sources/lzma_alone.py — the
+        # preset's full-dictionary alloc per call is ~100x
+        # the work for KB docs and changes nothing downstream
+        yield i, lzma.compress(
+            body, format=lzma.FORMAT_XZ,
+            check=checks[i % 4],
+            filters=[{"id": lzma.FILTER_LZMA2,
+                      "preset": [0, 1, 6, 9][i % 4],
+                      "dict_size": 1 << 16}],
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def _fake_x86_tail(doc_id: int) -> bytes:
@@ -466,38 +452,25 @@ def synthesize_xz_filtered_docs(
 
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                body += _fake_x86_tail(i)
-                if i % 3 == 0:
-                    pre = [{"id": lzma.FILTER_DELTA, "dist": 1 + i % 8}]
-                elif i % 3 == 1:
-                    pre = [{"id": lzma.FILTER_X86}]
-                else:
-                    pre = [{"id": lzma.FILTER_DELTA, "dist": 1 + i % 4},
-                           {"id": lzma.FILTER_X86}]
-                blobs.append(
-                    lzma.compress(
-                        body, format=lzma.FORMAT_XZ,
-                        check=lzma.CHECK_CRC64,
-                        filters=pre + [{"id": lzma.FILTER_LZMA2,
-                                        "preset": 4,
-                                        "dict_size": 1 << 16}],
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        body += _fake_x86_tail(i)
+        if i % 3 == 0:
+            pre = [{"id": lzma.FILTER_DELTA, "dist": 1 + i % 8}]
+        elif i % 3 == 1:
+            pre = [{"id": lzma.FILTER_X86}]
+        else:
+            pre = [{"id": lzma.FILTER_DELTA, "dist": 1 + i % 4},
+                   {"id": lzma.FILTER_X86}]
+        yield i, lzma.compress(
+            body, format=lzma.FORMAT_XZ,
+            check=lzma.CHECK_CRC64,
+            filters=pre + [{"id": lzma.FILTER_LZMA2,
+                            "preset": 4,
+                            "dict_size": 1 << 16}],
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def xz_filtered_documents(
@@ -513,36 +486,25 @@ def xz_filtered_documents(
         " tail_len int, text_md5 string, tail_ok boolean"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                i = int(i)
-                d = parse_xz(bytes(content))
-                body = d["content"]
-                tail = _fake_x86_tail(i)
-                if body[len(body) - len(tail):] != tail:
-                    raise ValueError(
-                        f"doc {i}: defiltered tail differs from formula"
-                    )
-                text_part = body[: len(body) - len(tail)]
-                rows.append(
-                    (
-                        i,
-                        ("delta", "x86", "delta+x86")[i % 3],
-                        len(body),
-                        len(tail),
-                        hashlib.md5(text_part).hexdigest(),
-                        True,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "filters", "content_len", "tail_len",
-                         "text_md5", "tail_ok"],
+    def feat(i, content):
+        d = parse_xz(content)
+        body = d["content"]
+        tail = _fake_x86_tail(i)
+        if body[len(body) - len(tail):] != tail:
+            raise ValueError(
+                f"doc {i}: defiltered tail differs from formula"
             )
+        text_part = body[: len(body) - len(tail)]
+        yield (
+            i,
+            ("delta", "x86", "delta+x86")[i % 3],
+            len(body),
+            len(tail),
+            hashlib.md5(text_part).hexdigest(),
+            True,
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 def xz_documents(
@@ -555,24 +517,14 @@ def xz_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_xz(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["check"],
-                        d["n_blocks"],
-                        len(d["content"]),
-                        hashlib.md5(d["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "check", "n_blocks", "content_len",
-                         "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_xz(content)
+        yield (
+            i,
+            d["check"],
+            d["n_blocks"],
+            len(d["content"]),
+            hashlib.md5(d["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

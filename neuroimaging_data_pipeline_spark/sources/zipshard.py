@@ -21,7 +21,7 @@ What is REAL here, both directions:
   agree between the central entry and the local header it points at.
 
 Scale: shard packing is one keyed shuffle; parsing is a narrow
-``mapInPandas`` over opaque shard blobs, zero further shuffle.
+``map_rows`` over opaque shard blobs, zero further shuffle.
 """
 
 from __future__ import annotations
@@ -29,10 +29,11 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 _LOCAL = b"PK\x03\x04"
 _CENTRAL = b"PK\x01\x02"
@@ -167,28 +168,17 @@ def zip_documents(
 ) -> DataFrame:
     out_schema = "doc_id long, method string, n_chars long, text_md5 string"
 
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, methods, ncs, md5s = [], [], [], []
-            for content in pdf[content_col]:
-                for name, data, method in read_zip(content):
-                    ids.append(int(name.removesuffix(".txt")))
-                    methods.append("deflate" if method == 8 else "stored")
-                    # column is n_CHARS: decode before counting, so the
-                    # oracle's character-count column stays correct for
-                    # non-ASCII member text (len(bytes) only happened to
-                    # agree on the ASCII fixture corpus)
-                    ncs.append(len(data.decode()))
-                    md5s.append(hashlib.md5(data).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "method": pd.Series(methods, dtype=object),
-                    "n_chars": pd.Series(ncs, dtype="int64"),
-                    "text_md5": pd.Series(md5s, dtype=object),
-                }
+    def parse(content):
+        for name, data, method in read_zip(content):
+            yield (
+                int(name.removesuffix(".txt")),
+                "deflate" if method == 8 else "stored",
+                # column is n_CHARS: decode before counting, so the
+                # oracle's character-count column stays correct for
+                # non-ASCII member text (len(bytes) only happened to
+                # agree on the ASCII fixture corpus)
+                len(data.decode()),
+                hashlib.md5(data).hexdigest(),
             )
 
-    return shards.mapInPandas(parse_batches, out_schema)
+    return map_rows(shards.select(content_col), parse, out_schema)

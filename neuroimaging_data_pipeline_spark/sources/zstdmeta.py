@@ -31,18 +31,18 @@ What is REAL here:
   conformance-pinned against pyarrow's bundled libzstd and the zstd
   CLI across levels.
 
-Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
+Scale: opaque binary + Arrow ``map_rows``, narrow, zero shuffle —
 one task per shard file at 100 TB, the walk is O(#blocks) per frame.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.sources.zstdblock import (
     ZstdBlockState,
     decode_block,
@@ -403,33 +403,22 @@ def synthesize_zstd_docs(
     oracle recomputes."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                blob = b""
-                if i % 6 == 0:
-                    blob += write_skippable_frame(b"pad" * 2, nibble=i % 16)
-                blob += write_zstd_frame(
-                    body,
-                    rle_run=(16 + i % 7) if i % 3 == 0 else 0,
-                    single_segment=bool(i % 2),
-                    fcs_present=(i % 4 != 0),
-                    dict_id=(i % 200) + 1 if i % 5 == 0 else 0,
-                    checksum=(i % 4 != 3),
-                )
-                ids.append(i)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+    def build(i, text):
+        body = ("" if text is None else str(text)).encode()
+        blob = b""
+        if i % 6 == 0:
+            blob += write_skippable_frame(b"pad" * 2, nibble=i % 16)
+        blob += write_zstd_frame(
+            body,
+            rle_run=(16 + i % 7) if i % 3 == 0 else 0,
+            single_segment=bool(i % 2),
+            fcs_present=(i % 4 != 0),
+            dict_id=(i % 200) + 1 if i % 5 == 0 else 0,
+            checksum=(i % 4 != 3),
+        )
+        yield i, blob
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 _PAD_SENTENCE = "the quick brown fox jumps over the lazy dog. "
@@ -453,31 +442,20 @@ def synthesize_zstd_compressed_docs(
     id/text formula the oracle recomputes."""
     out_schema = f"{id_col} long, content binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(i, text):
         import pyarrow as pa
 
-        codecs = {lv: pa.Codec("zstd", compression_level=lv) for lv in _LEVELS}
-        for pdf in batches:
-            ids, blobs = [], []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                body = ("" if text is None else str(text)).encode()
-                body += (_PAD_SENTENCE * (20 + i % 30)).encode()
-                blob = b""
-                if i % 6 == 0:
-                    blob += write_skippable_frame(b"skip" * 3, nibble=i % 16)
-                blob += bytes(codecs[_LEVELS[i % 5]].compress(body))
-                blob += write_zstd_frame(b"T%d" % i, checksum=True)
-                ids.append(i)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "content": pd.Series(blobs, dtype=object),
-                }
-            )
+        body = ("" if text is None else str(text)).encode()
+        body += (_PAD_SENTENCE * (20 + i % 30)).encode()
+        blob = b""
+        if i % 6 == 0:
+            blob += write_skippable_frame(b"skip" * 3, nibble=i % 16)
+        codec = pa.Codec("zstd", compression_level=_LEVELS[i % 5])
+        blob += bytes(codec.compress(body))
+        blob += write_zstd_frame(b"T%d" % i, checksum=True)
+        yield i, blob
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def zstd_decoded_documents(
@@ -497,32 +475,21 @@ def zstd_decoded_documents(
         " content_len long, text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                i = int(i)
-                d = parse_zstd(bytes(content))
-                full = b"".join(f["content"] for f in d["frames"])
-                # the trailer frame was written with a checksum: the
-                # from-scratch XXH64 verdict goes to the OUTPUT so the
-                # oracle's literal TRUE verifies the checksum math ran
-                rows.append(
-                    (
-                        i,
-                        d["n_skippable"],
-                        d["frames"][-1]["checksum_ok"] is True,
-                        len(full),
-                        hashlib.md5(full).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_skippable", "trailer_checksum_ok",
-                         "content_len", "text_md5"],
-            )
+    def feat(i, content):
+        d = parse_zstd(content)
+        full = b"".join(f["content"] for f in d["frames"])
+        # the trailer frame was written with a checksum: the
+        # from-scratch XXH64 verdict goes to the OUTPUT so the
+        # oracle's literal TRUE verifies the checksum math ran
+        yield (
+            i,
+            d["n_skippable"],
+            d["frames"][-1]["checksum_ok"] is True,
+            len(full),
+            hashlib.md5(full).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)
 
 
 _DOCS_PER_ZSHARD = 50
@@ -582,26 +549,13 @@ def zstd_shard_documents(
 
     out_schema = f"shard_id long, {id_col} long, text string"
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            shard_ids, ids, texts = [], [], []
-            for sid, content in zip(pdf["shard_id"], pdf["content"]):
-                d = parse_zstd(bytes(content))
-                (f,) = d["frames"]
-                for line in f["content"].decode().splitlines():
-                    rec = _json.loads(line)
-                    shard_ids.append(int(sid))
-                    ids.append(int(rec["id"]))
-                    texts.append(rec["text"])
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(shard_ids, dtype="int64"),
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "text": pd.Series(texts, dtype=object),
-                }
-            )
+    def unpack(sid, content):
+        (f,) = parse_zstd(content)["frames"]
+        for line in f["content"].decode().splitlines():
+            rec = _json.loads(line)
+            yield sid, int(rec["id"]), rec["text"]
 
-    return shards.mapInPandas(unpack, out_schema)
+    return map_rows(shards.select("shard_id", "content"), unpack, out_schema)
 
 
 def zstd_meta_features(
@@ -616,34 +570,21 @@ def zstd_meta_features(
         " text_md5 string"
     )
 
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf[id_col], pdf[content_col]):
-                d = parse_zstd(bytes(content))
-                (f,) = d["frames"]  # one data frame per doc here
-                rows.append(
-                    (
-                        int(i),
-                        d["n_skippable"],
-                        f["single_segment"],
-                        f["size_known"],
-                        f["dict_id"],
-                        f["n_blocks"],
-                        f["n_rle"],
-                        len(f["content"]),
-                        f["has_checksum"],
-                        bool(f["checksum_ok"]),
-                        hashlib.md5(f["content"]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_skippable", "single_segment", "size_known",
-                    "dict_id", "n_blocks", "n_rle", "content_len",
-                    "has_checksum", "checksum_ok", "text_md5",
-                ],
-            )
+    def feat(i, content):
+        d = parse_zstd(content)
+        (f,) = d["frames"]  # one data frame per doc here
+        yield (
+            i,
+            d["n_skippable"],
+            f["single_segment"],
+            f["size_known"],
+            f["dict_id"],
+            f["n_blocks"],
+            f["n_rle"],
+            len(f["content"]),
+            f["has_checksum"],
+            bool(f["checksum_ok"]),
+            hashlib.md5(f["content"]).hexdigest(),
+        )
 
-    return media.mapInPandas(feat, out_schema)
+    return map_rows(media.select(id_col, content_col), feat, out_schema)

@@ -21,16 +21,16 @@ What is REAL here:
 - repair returns the canonical text, so md5s of repaired output are
   oracle-checkable against the original documents.
 
-Scale: narrow Arrow ``mapInPandas`` over byte columns, zero shuffle.
+Scale: narrow Arrow ``map_rows`` over byte columns, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 
 def utf8_valid(raw: bytes) -> bool:
@@ -129,19 +129,10 @@ def synthesize_encoded_docs(
 ) -> DataFrame:
     out_schema = f"{id_col} long, raw binary"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "raw": [
-                        encode_case(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
+    def build(i, text):
+        yield i, encode_case(i, text)
 
-    return docs.select(id_col, text_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col, text_col), build, out_schema)
 
 
 def encoding_repair(
@@ -161,23 +152,15 @@ def encoding_repair(
     if emit_text:
         out_schema += ", repaired string"
 
-    def repair(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, raw in zip(pdf[id_col], pdf[raw_col]):
-                charset, moji, text = detect_and_repair(bytes(raw))
-                row = (
-                    int(i),
-                    charset,
-                    moji,
-                    sum(1 for ch in text if ord(ch) > 0x7F),
-                    hashlib.md5(text.encode("utf-8")).hexdigest(),
-                )
-                rows.append(row + (text,) if emit_text else row)
-            cols = [id_col, "charset", "mojibake", "n_nonascii",
-                    "repaired_md5"]
-            if emit_text:
-                cols.append("repaired")
-            yield pd.DataFrame(rows, columns=cols)
+    def repair(i, raw):
+        charset, moji, text = detect_and_repair(raw)
+        row = (
+            i,
+            charset,
+            moji,
+            sum(1 for ch in text if ord(ch) > 0x7F),
+            hashlib.md5(text.encode("utf-8")).hexdigest(),
+        )
+        yield row + (text,) if emit_text else row
 
-    return raw_docs.mapInPandas(repair, out_schema)
+    return map_rows(raw_docs.select(id_col, raw_col), repair, out_schema)

@@ -20,16 +20,16 @@ What is REAL here, both directions:
   stance as the ZIP/SQLite stdlib interop.
 
 Scale: pure per-row string work, embarrassingly parallel; the Spark
-surface is a narrow ``mapInPandas``, zero shuffle.
+surface is a narrow ``map_rows``, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 # RFC 3492 section 5 parameter values
 _BASE, _TMIN, _TMAX = 36, 1, 26
@@ -178,20 +178,11 @@ def synthesize_idn_hosts(
     the decoration label picked by id % 4."""
     out_schema = f"{id_col} long, host string"
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hosts = []
-            for i in pdf[id_col]:
-                i = int(i)
-                d = DECOR[i % 4]
-                hosts.append(
-                    f"w{i}.{d}.example" if d else f"w{i}.example"
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), "host": hosts}
-            )
+    def build(i):
+        d = DECOR[i % 4]
+        yield i, f"w{i}.{d}.example" if d else f"w{i}.example"
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_rows(docs.select(id_col), build, out_schema)
 
 
 def idn_canonicalize(
@@ -207,25 +198,15 @@ def idn_canonicalize(
         " ascii_len long, host_md5 string"
     )
 
-    def canon(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, h in zip(pdf[id_col], pdf[host_col]):
-                ascii_form = host_to_ascii(h)
-                back = host_to_unicode(ascii_form)
-                rows.append(
-                    (
-                        int(i),
-                        _ACE in ascii_form,
-                        len(ascii_form.split(".")),
-                        len(ascii_form),
-                        hashlib.md5(back.encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "needs_idn", "n_labels", "ascii_len",
-                         "host_md5"],
-            )
+    def canon(i, h):
+        ascii_form = host_to_ascii(h)
+        back = host_to_unicode(ascii_form)
+        yield (
+            i,
+            _ACE in ascii_form,
+            len(ascii_form.split(".")),
+            len(ascii_form),
+            hashlib.md5(back.encode()).hexdigest(),
+        )
 
-    return hosts.mapInPandas(canon, out_schema)
+    return map_rows(hosts.select(id_col, host_col), canon, out_schema)

@@ -33,12 +33,11 @@ oracle-checked round-for-round like BPE.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.text.bpe import _norm_words
 
 MAX_PIECE_LEN = 4
@@ -164,22 +163,15 @@ def _segment_words(
         " n_tokens int, score long"
     )
 
-    def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for w, fq in zip(pdf["word"], pdf["freq"]):
-                r = viterbi_segment(str(w), ilp)
-                if r is None:
-                    raise ValueError(
-                        f"word {w!r} not coverable by the vocabulary"
-                    )
-                rows.append((str(w), int(fq), r[0], r[1], r[2]))
-            yield pd.DataFrame(
-                rows,
-                columns=["word", "freq", "pieces", "n_tokens", "score"],
+    def seg(w, fq):
+        r = viterbi_segment(str(w), ilp)
+        if r is None:
+            raise ValueError(
+                f"word {w!r} not coverable by the vocabulary"
             )
+        yield (str(w), int(fq), r[0], r[1], r[2])
 
-    return words.mapInPandas(seg, out_schema)
+    return map_rows(words.select("word", "freq"), seg, out_schema)
 
 
 def _run_em(words: DataFrame) -> DataFrame:

@@ -459,12 +459,20 @@ def test_ngram_df_cap_drops_boilerplate_shingles(spark):
         for r in ngram_jaccard_pairs(docs, df_cap=4, threshold=0.05).collect()
     }
     assert (2, 3) not in pos
-    # Without the cap, boilerplate makes everything look similar.
+    # A cap no shingle can exceed (one per document) keeps the
+    # boilerplate, which makes everything look similar.
     uncapped = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, df_cap=None, threshold=0.0).collect()
+        for r in ngram_jaccard_pairs(docs, df_cap=len(rows), threshold=0.0).collect()
     }
     assert uncapped[(2, 3)] > 0.2
+
+
+def test_ngram_df_cap_none_raises(spark):
+    from neuroimaging_data_pipeline_spark.dedup.ngram import ngram_jaccard_pairs
+
+    with pytest.raises(ValueError, match="df_cap"):
+        ngram_jaccard_pairs(spark.range(1), df_cap=None)
 
 
 def test_lsh_bucket_flood_guard(spark):

@@ -25,31 +25,16 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
 from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
     demux_h264_mp4,
 )
+from tests.eager_df import EagerDF
 
 
 def _mp4_clips(doc_ids):
     """Build the m40/e15/e16 fixture clips without a SparkSession by
-    driving the chained mapInPandas closures (GOP synth -> MP4 mux)
-    in registration order."""
+    running the chained builders (GOP synth -> MP4 mux) eagerly."""
     import neuroimaging_data_pipeline_spark.multimodal.h264_mp4 as hm
 
-    class _Stub:
-        def __init__(self):
-            self.fns = []
-
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, fn, schema):
-            self.fns.append(fn)
-            return self
-
-    stub = _Stub()
-    hm.synthesize_h264_mp4_clips(stub, id_col="doc_id")
-    pdf = pd.DataFrame({"doc_id": pd.Series(doc_ids, dtype="int64")})
-    for fn in stub.fns:
-        pdf = list(fn(iter([pdf])))[0]
-    return pdf
+    docs = EagerDF(pd.DataFrame({"doc_id": pd.Series(doc_ids, dtype="int64")}))
+    return hm.synthesize_h264_mp4_clips(docs, id_col="doc_id").pdf
 
 
 def test_e16_features_match_e15_decode_path():
@@ -75,12 +60,9 @@ def test_e16_xcheck_raises_on_divergence(monkeypatch):
         (f"{int(i):08d}.mp4", bytes(b))
         for i, b in zip(clips["doc_id"], clips["content"])
     ]
-    shard = pd.DataFrame({"shard_id": [0], "tar": [write_tar(members)]})
-
-    class _Stub:
-        def mapInPandas(self, fn, schema):
-            self.fn = fn
-            return self
+    shard = EagerDF(
+        pd.DataFrame({"shard_id": [0], "tar": [write_tar(members)]})
+    )
 
     # force the xcheck branch on, with a corrupted fake decoder
     monkeypatch.setattr(
@@ -95,20 +77,16 @@ def test_e16_xcheck_raises_on_divergence(monkeypatch):
         return out
 
     monkeypatch.setattr(msh, "_ffmpeg_gray_frames", bad_gray)
-    stub = _Stub()
-    msh.decode_mp4_shard_features_xcheck(stub)
     with pytest.raises(ValueError, match="disagrees"):
-        list(stub.fn(iter([shard])))
+        msh.decode_mp4_shard_features_xcheck(shard)
 
     # wrong frame COUNT is also loud
     monkeypatch.setattr(
         msh, "_ffmpeg_gray_frames",
         lambda annexb, w, h: bad_gray(annexb, w, h)[:2],
     )
-    stub2 = _Stub()
-    msh.decode_mp4_shard_features_xcheck(stub2)
     with pytest.raises(ValueError, match="frames"):
-        list(stub2.fn(iter([shard])))
+        msh.decode_mp4_shard_features_xcheck(shard)
 
 
 def test_e16_stdlib_features_are_environment_independent(monkeypatch):
@@ -122,17 +100,12 @@ def test_e16_stdlib_features_are_environment_independent(monkeypatch):
         (f"{int(i):08d}.mp4", bytes(b))
         for i, b in zip(clips["doc_id"], clips["content"])
     ]
-    shard = pd.DataFrame({"shard_id": [0], "tar": [write_tar(members)]})
-
-    class _Stub:
-        def mapInPandas(self, fn, schema):
-            self.fn = fn
-            return self
+    shard = EagerDF(
+        pd.DataFrame({"shard_id": [0], "tar": [write_tar(members)]})
+    )
 
     def run():
-        stub = _Stub()
-        msh.decode_mp4_shard_features_xcheck(stub)
-        return list(stub.fn(iter([shard])))[0]
+        return msh.decode_mp4_shard_features_xcheck(shard).pdf
 
     monkeypatch.setattr(
         "neuroimaging_data_pipeline_spark.multimodal.binaryops"

@@ -50,7 +50,7 @@ def test_fetch_text_file_scheme_and_errors(spark, tmp_path):
 
 
 def test_fetch_plan_is_narrow(spark, tmp_path):
-    """One mapInPandas over the URI table — no shuffle added by the
+    """One mapInArrow over the URI table — no shuffle added by the
     fetcher itself."""
     from neuroimaging_data_pipeline_spark.sources.fetch import fetch_text
 
@@ -64,7 +64,7 @@ def test_fetch_plan_is_narrow(spark, tmp_path):
         .toString()
     )
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 @pytest.mark.skip(reason="network-gated: http(s) runs the same urllib "

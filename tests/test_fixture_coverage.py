@@ -10,9 +10,9 @@ syntax path (luma residuals, chroma residuals, motion, multiple
 coefficient signs), so the next scale bug cannot hide behind a plane
 held constant.
 
-The assertions run on the REAL fixture builders (the same
-mapInPandas closures the driver queries use), executed directly on
-pandas batches — no SparkSession needed.
+The assertions run on the REAL fixture builders (the same row
+functions the driver queries use), executed eagerly on one in-memory
+batch through ``tests.eager_df.EagerDF`` — no SparkSession needed.
 """
 
 from __future__ import annotations
@@ -21,39 +21,20 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.eager_df import EagerDF
+
 DOC_IDS = [0, 1, 2, 7, 23, 101, 499]
 
 
 def _run_builder(synth_fn, ids=DOC_IDS, id_col="doc_id"):
-    """Execute a synthesize_* mapInPandas closure on a plain pandas
+    """Execute a synthesize_* fixture builder on one eager in-memory
     batch and return {doc_id: content_bytes}."""
-    captured = {}
-
-    class _FakeDF:
-        """Chains mapInPandas eagerly on pandas batches, capturing
-        the final (id, content) rows — supports multi-stage builders
-        like the MP4 mux (GOP stage -> mux stage)."""
-
-        def __init__(self, pdf):
-            self._pdf = pdf
-
-        def select(self, *_):
-            return self
-
-        def mapInPandas(self, fn, _schema):
-            outs = list(fn(iter([self._pdf])))
-            out = (pd.concat(outs, ignore_index=True) if outs
-                   else pd.DataFrame())
-            captured.clear()
-            out_id = [c for c in out.columns if c != "content"][0]
-            for i, c in zip(out[out_id], out["content"]):
-                captured[int(i)] = bytes(c)
-            return _FakeDF(out)
-
-    synth_fn(
-        _FakeDF(pd.DataFrame({id_col: pd.Series(ids, dtype="int64")})),
+    out = synth_fn(
+        EagerDF(pd.DataFrame({id_col: pd.Series(ids, dtype="int64")})),
         id_col=id_col,
-    )
+    ).pdf
+    out_id = [c for c in out.columns if c != "content"][0]
+    captured = {int(i): bytes(c) for i, c in zip(out[out_id], out["content"])}
     assert set(captured) == set(ids)
     return captured
 

@@ -242,9 +242,48 @@ def _hostile_bzip2() -> tuple[bytes, object]:
     return bz2.compress(body, 1) + bz2.compress(b"S9", 9), parse_bzip2
 
 
+def _hostile_jpeg_gray() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
+        decode_jpeg,
+        encode_jpeg_gray,
+    )
+
+    img = np.random.default_rng(7).integers(0, 256, (16, 24), np.uint8)
+    return encode_jpeg_gray(img, restart_interval=2), decode_jpeg
+
+
+def _hostile_jpeg_progressive_color() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
+        decode_jpeg,
+        encode_jpeg_progressive,
+        sa_script,
+    )
+
+    img = np.random.default_rng(8).integers(0, 256, (16, 16, 3), np.uint8)
+    good = encode_jpeg_progressive(img, script=sa_script(3),
+                                   subsampling="420", restart_interval=1)
+    return good, decode_jpeg
+
+
+def _hostile_jpeg_hier() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg_hier import (
+        decode_jpeg_hierarchical,
+        encode_jpeg_hierarchical,
+    )
+
+    r = np.random.default_rng(10)
+    small = r.integers(0, 256, (8, 8)).astype(np.uint8)
+    levels = [small, np.repeat(np.repeat(small, 2, 0), 2, 1)]
+    good, _ = encode_jpeg_hierarchical(levels)
+    return good, decode_jpeg_hierarchical
+
+
 @pytest.mark.parametrize(
-    "make", [_hostile_mp3, _hostile_flac, _hostile_lzw, _hostile_bzip2],
-    ids=["mp3", "flac", "tiff_lzw", "bzip2"],
+    "make",
+    [_hostile_mp3, _hostile_flac, _hostile_lzw, _hostile_bzip2,
+     _hostile_jpeg_gray, _hostile_jpeg_progressive_color, _hostile_jpeg_hier],
+    ids=["mp3", "flac", "tiff_lzw", "bzip2", "jpeg_gray",
+         "jpeg_progressive_color", "jpeg_hierarchical"],
 )
 def test_codec_every_prefix_and_bitflips_controlled(make):
     """Every proper prefix of a valid stream, and seeded 1-2 bit

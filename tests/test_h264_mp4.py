@@ -165,6 +165,7 @@ def test_e15_shard_pack_and_decode_features():
     import pandas as pd
 
     import neuroimaging_data_pipeline_spark.multimodal.mp4_shard_helpers as mh  # noqa: E501
+    from tests.eager_df import EagerDF
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
         decode_h264_mp4,
         synthesize_h264_mp4_clips,
@@ -174,25 +175,10 @@ def test_e15_shard_pack_and_decode_features():
     )
 
     ids = [0, 1, 2, 7]
-    captured = {}
-
-    class _FakeDF:
-        def __init__(self, pdf):
-            self._pdf = pdf
-
-        def select(self, *_):
-            return self
-
-        def mapInPandas(self, fn, _schema):
-            out = pd.concat(list(fn(iter([self._pdf]))),
-                            ignore_index=True)
-            for i, c in zip(out["doc_id"], out["content"]):
-                captured[int(i)] = bytes(c)
-            return _FakeDF(out)
-
-    synthesize_h264_mp4_clips(
-        _FakeDF(pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64")}))
-    )
+    out = synthesize_h264_mp4_clips(
+        EagerDF(pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64")}))
+    ).pdf
+    captured = {int(i): bytes(c) for i, c in zip(out["doc_id"], out["content"])}
     expect_parts = []
     p2_total = 0
     for i in ids:
@@ -210,18 +196,8 @@ def test_e15_shard_pack_and_decode_features():
         "doc_id": pd.Series(ids, dtype="int64"),
         "content": pd.Series([captured[i] for i in ids], dtype=object),
     })
-    shard = pack_mp4_shard(pdf)
-    feat_df = None
-
-    class _Fake2:
-        def mapInPandas(self, fn, _schema):
-            nonlocal feat_df
-            feat_df = pd.concat(list(fn(iter([shard]))),
-                                ignore_index=True)
-            return feat_df
-
-    mh.decode_mp4_shard_features(_Fake2())
-    row = feat_df.iloc[0]
+    shard = EagerDF(pack_mp4_shard(pdf))
+    row = mh.decode_mp4_shard_features(shard).pdf.iloc[0]
     assert row["n_docs"] == len(ids)
     assert row["n_samples_total"] == 3 * len(ids)
     assert row["sum_y_p2_total"] == p2_total
