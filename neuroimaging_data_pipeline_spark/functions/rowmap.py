@@ -37,11 +37,7 @@ _ARROW_TYPES = {
     "long": pa.int64(),
     "bigint": pa.int64(),
     "int": pa.int32(),
-    "integer": pa.int32(),
-    "short": pa.int16(),
-    "smallint": pa.int16(),
     "double": pa.float64(),
-    "float": pa.float32(),
     "string": pa.string(),
     "binary": pa.binary(),
     "boolean": pa.bool_(),
@@ -56,7 +52,10 @@ def _arrow_type(ddl: str) -> pa.DataType:
 
 
 def _arrow_schema(schema: str) -> pa.Schema:
-    """The Arrow schema of a flat DDL string (``"id long, xs array<double>"``)."""
+    """The Arrow schema of a flat DDL string (``"id long, xs array<double>"``).
+
+    Parsed here because pyspark's DDL parser needs a live JVM, which
+    the eager test stand-in (``tests/eager_df.py``) runs without."""
     return pa.schema(
         pa.field(name, _arrow_type(typ))
         for name, typ in (f.strip().split(None, 1) for f in schema.split(","))

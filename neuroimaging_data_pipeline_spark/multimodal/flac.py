@@ -712,6 +712,8 @@ def _emit_subframe(
     _put(bits, acc, n)
 
 
+
+
 # frame-header channel-assignment nibbles (RFC 9639 9.1.3)
 _CH_MONO = 0b0000
 _CH_STEREO = 0b0001       # independent L/R

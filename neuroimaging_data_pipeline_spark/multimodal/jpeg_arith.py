@@ -49,7 +49,14 @@ from pyspark.sql import DataFrame
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 
 
-from .jpeg import _C, _ZIGZAG, _pad8, _seg, gray_features
+from .jpeg import (
+    _C,
+    _ZIGZAG,
+    _pad8,
+    _seg,
+    gray_features,
+    malformed_as_valueerror,
+)
 from .jpeg12 import _quantize_blocks
 
 # --- QM-style probability estimation states --------------------------------
@@ -339,6 +346,7 @@ def encode_jpeg_arith(
     return bytes(out)
 
 
+@malformed_as_valueerror
 def decode_jpeg_arith(payload: bytes) -> np.ndarray:
     """Decode a grayscale SOF9 stream produced by this codec pair:
     marker walk (DQT both precisions, SOF9, DAC conditioning, SOS),

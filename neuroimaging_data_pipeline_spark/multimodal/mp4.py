@@ -280,6 +280,7 @@ def _full_header(data: bytes, s: int) -> tuple[int, int]:
     return data[s], s + 4
 
 
+
 def _checked_count(data: bytes, p: int, count: int, itemsize: int,
                    what: str) -> None:
     """Hostile containers carry flipped entry counts: validate the

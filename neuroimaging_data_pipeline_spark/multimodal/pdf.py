@@ -122,6 +122,7 @@ def write_pdf(pages: list[list[str]]) -> bytes:
     return bytes(out)
 
 
+
 def write_pdf15(pages: list[list[str]]) -> bytes:
     """PDF 1.5 twin of write_pdf: the same document expressed the
     way modern producers write it — non-stream objects (catalog,

@@ -1382,6 +1382,7 @@ FROM v
 """
 
 
+
 def s28_tfrecord_shards(spark, sf_dir):
     """S28: TFRecord + tf.train.Example shards (sources/tfrecord.py)
     — THE classic ML training-shard format, with both the frame layer

@@ -219,3 +219,19 @@ def test_m43_bdeblock_edges_genuinely_active():
     # the real builder runs its own closed-form assertions per doc
     blobs = _run_builder(synthesize_h264_bdeblock_clips, ids=[0, 1, 7, 23])
     assert all(len(b) > 100 for b in blobs.values())
+
+
+def test_m30_flac_stereo_batch_planned_clips_round_trip():
+    """The batch-planned stereo synthesizer (one planner pass over the
+    whole batch) still writes each document's own samples."""
+    from neuroimaging_data_pipeline_spark.multimodal.flac import (
+        _doc_stereo,
+        decode_flac,
+        synthesize_flac_stereo_clips,
+    )
+
+    for i, blob in _run_builder(synthesize_flac_stereo_clips).items():
+        d = decode_flac(blob)
+        left, right = _doc_stereo(i)
+        assert d["md5_ok"]
+        assert d["samples"][0::2] == left and d["samples"][1::2] == right

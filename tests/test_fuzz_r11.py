@@ -265,6 +265,16 @@ def _hostile_jpeg_progressive_color() -> tuple[bytes, object]:
     return good, decode_jpeg
 
 
+def _hostile_jpeg_arith() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.jpeg_arith import (
+        decode_jpeg_arith,
+        encode_jpeg_arith,
+    )
+
+    img = np.random.default_rng(11).integers(0, 4096, (16, 16), np.uint16)
+    return encode_jpeg_arith(img, precision=12), decode_jpeg_arith
+
+
 def _hostile_jpeg_hier() -> tuple[bytes, object]:
     from neuroimaging_data_pipeline_spark.multimodal.jpeg_hier import (
         decode_jpeg_hierarchical,
@@ -281,9 +291,10 @@ def _hostile_jpeg_hier() -> tuple[bytes, object]:
 @pytest.mark.parametrize(
     "make",
     [_hostile_mp3, _hostile_flac, _hostile_lzw, _hostile_bzip2,
-     _hostile_jpeg_gray, _hostile_jpeg_progressive_color, _hostile_jpeg_hier],
+     _hostile_jpeg_gray, _hostile_jpeg_progressive_color, _hostile_jpeg_arith,
+     _hostile_jpeg_hier],
     ids=["mp3", "flac", "tiff_lzw", "bzip2", "jpeg_gray",
-         "jpeg_progressive_color", "jpeg_hierarchical"],
+         "jpeg_progressive_color", "jpeg_arith", "jpeg_hierarchical"],
 )
 def test_codec_every_prefix_and_bitflips_controlled(make):
     """Every proper prefix of a valid stream, and seeded 1-2 bit
