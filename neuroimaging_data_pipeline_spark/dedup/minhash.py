@@ -48,8 +48,12 @@ def shingles(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
+    keep_cols: tuple = (),
 ) -> DataFrame:
-    """k-word shingles, distinct per doc: (id, shingle)."""
+    """k-word shingles, distinct per doc: (id, [keep_cols...],
+    shingle). ``keep_cols`` ride along unchanged, so a caller that
+    needs a per-doc column downstream (a block key) does not join the
+    shingles back to the documents."""
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     toks = F.split(norm, " ")
     n = F.size(toks)
@@ -58,7 +62,11 @@ def shingles(
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))
     )
     return (
-        docs.select(F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle"))
+        docs.select(
+            F.col(id_col),
+            *keep_cols,
+            F.explode(F.array_distinct(sh)).alias("shingle"),
+        )
         .filter(F.col("shingle") != "")
     )
 

@@ -47,9 +47,10 @@ def ngram_jaccard_pairs(
 
     if df_cap is None:
         raise ValueError("df_cap must be an int: uncapped lists are unbounded")
+    keep = () if block_col is None else (block_col,)
     sh = (
-        shingles(docs, id_col, text_col, k=k)
-        .select(id_col, F.xxhash64("shingle").alias("shingle"))
+        shingles(docs, id_col, text_col, k=k, keep_cols=keep)
+        .select(id_col, *keep, F.xxhash64("shingle").alias("shingle"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     hot = (
@@ -74,16 +75,11 @@ def ngram_jaccard_pairs(
     # one occurrence-scale exchange, no sorts, identical pair counts
     # (each shared shingle contributes exactly one (id_a, id_b) row
     # either way; ids are distinct per doc by shingles()'s contract).
-    if block_col is not None:
-        blocks = docs.select(id_col, block_col)
-        side = sh.join(blocks, id_col)
-        grouped = side.groupBy("shingle", block_col).agg(
-            F.sort_array(F.collect_list(id_col)).alias("_ids")
-        )
-    else:
-        grouped = sh.groupBy("shingle").agg(
-            F.sort_array(F.collect_list(id_col)).alias("_ids")
-        )
+    # The block key rides on the shingle rows from the one documents
+    # scan, so the grouping needs no join back to the documents.
+    grouped = sh.groupBy("shingle", *keep).agg(
+        F.sort_array(F.collect_list(id_col)).alias("_ids")
+    )
     pair_arr = F.flatten(
         F.transform(
             "_ids",

@@ -22,11 +22,11 @@ unsalted forms (pinned in tests/test_skew.py).
 
 Engine consumers: ``queries.relational.a4_count_distinct`` runs
 through ``salted_count_distinct`` (oracle-checked — the rewrite is
-exact). The one SortMergeJoin in the engine (d_ngram_jaccard's
-fact-fact shingle pair join) is deliberately NOT salted: its df-cap
-already bounds every join key at <= cap (64) rows per side — no hot
-key survives to salt — and 2-D salting a self-join would replicate
-both sides n_salt x for zero residual skew. ``replicated_broadcast_
+exact). d_ngram_jaccard is deliberately NOT salted: it has no
+shingle self-join to salt. Each shingle's posting list is grouped
+once and its id pairs are emitted in place, and the df-cap bounds
+every list at <= cap (64) ids, so no hot shingle key survives into a
+join or a pair aggregate. ``replicated_broadcast_
 join`` remains the prescribed shape for a skewed fact-dim join whose
 dim is too large for a plain broadcast-everywhere; every current
 engine dim is small enough that plain ``F.broadcast`` wins.

@@ -52,12 +52,14 @@ from __future__ import annotations
 
 import gzip
 import hashlib
+import zlib
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.multimodal.jpeg import malformed_as_valueerror
 
 
 MEDIA_SCHEMA = (
@@ -342,7 +344,6 @@ PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
     import struct
-    import zlib
 
     return (
         struct.pack(">I", len(data))
@@ -448,7 +449,6 @@ def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
     skipped per spec) in one DEFLATE stream — the progressive-render
     layout real web PNGs use. ``pixels`` is (H, W, 3) uint8."""
     import struct
-    import zlib
 
     h, w, _ = pixels.shape
     px = pixels.astype(np.uint8)
@@ -470,6 +470,7 @@ def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
     )
 
 
+@malformed_as_valueerror("PNG", zlib.error)
 def decode_png(payload: bytes) -> np.ndarray:
     """Real PNG decode, stdlib-only: signature + chunk walk with CRC
     verification, IHDR validation, multi-IDAT concatenation, zlib
@@ -486,7 +487,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     a C-level unfilter. Ancillary chunks (tEXt, pHYs, ...) are
     skipped after their CRC check, per spec."""
     import struct
-    import zlib
 
     data = bytes(payload)
     if data[:8] != PNG_SIG:

@@ -20,6 +20,7 @@ import struct
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.multimodal.jpeg import malformed_as_valueerror
 
 BMP_W, BMP_H = 10, 7
 
@@ -60,10 +61,12 @@ def encode_bmp(
     return header + dib + bytes(img)
 
 
+@malformed_as_valueerror("BMP")
 def decode_bmp(data: bytes) -> list[list[tuple[int, int, int]]]:
     """Returns pixels[y][x] = (r, g, b) with y=0 the TOP row,
-    whichever on-disk order the file uses. Raises on non-BMP, a
-    compressed stream, or a bit depth other than 24."""
+    whichever on-disk order the file uses. Raises ValueError on
+    non-BMP, a compressed stream, a bit depth other than 24, or a
+    header or pixel rows cut short."""
     if data[:2] != b"BM":
         raise ValueError("not a BMP: missing BM magic")
     (off,) = struct.unpack_from("<I", data, 10)
@@ -79,6 +82,10 @@ def decode_bmp(data: bytes) -> list[list[tuple[int, int, int]]]:
     top_down = h_signed < 0
     h = -h_signed if top_down else h_signed
     row_bytes = (w * 3 + 3) & ~3
+    # checked before the row loop: a hostile width or height would
+    # otherwise drive it for up to 2**31 rows
+    if w <= 0 or h <= 0 or off + h * row_bytes > len(data):
+        raise ValueError(f"BMP {w}x{h} pixel rows do not fit the payload")
     rows = []
     for i in range(h):
         base = off + i * row_bytes

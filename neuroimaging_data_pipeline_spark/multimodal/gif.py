@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.multimodal.jpeg import malformed_as_valueerror
 
 # ------------------------------------------------------------------ LZW
 
@@ -227,6 +228,7 @@ def _interlace_rows(h: int) -> list[int]:
     )
 
 
+@malformed_as_valueerror("GIF")
 def decode_gif(data: bytes) -> dict:
     """Parse header, global color table, extensions and every frame;
     returns {width, height, palette, frames: [(delay_cs, ndarray)]}.

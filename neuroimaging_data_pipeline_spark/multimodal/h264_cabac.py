@@ -70,7 +70,6 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _MF,
     _MODE_NEEDS,
     _ZBLK,
-    _ZIG,
     _ZIGA,
     _ZIGA1,
     _chroma_qp,

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 

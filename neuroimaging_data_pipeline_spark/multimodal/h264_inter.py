@@ -115,7 +115,6 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _MF,
     _MODE_NEEDS,
     _ZBLK,
-    _ZIG,
     _ZIGA,
     _ZIGA1,
     _chroma_qp,
@@ -134,7 +133,6 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _quant_dc4,
     _recon_chroma8,
     _recon_i16_planes,
-    _recon_mb16,
     decode_residual_block,
     encode_residual_block,
 )

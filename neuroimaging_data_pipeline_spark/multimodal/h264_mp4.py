@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import struct
 
-import numpy as np
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows

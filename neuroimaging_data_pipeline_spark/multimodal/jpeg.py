@@ -939,25 +939,33 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def malformed_as_valueerror(decode):
-    """Decorate a JPEG decoder so hostile marker segments raise
-    ValueError, the codecs' controlled failure: a short SOF/SOS/DRI, a
-    scan naming an undefined Huffman table, quantization table or
-    component id, or a DC prediction out of range would otherwise
-    escape as the IndexError/KeyError/struct.error/OverflowError of
-    the lookup that found it (kept as ``__cause__``)."""
+def malformed_as_valueerror(fmt: str, *extra: type[Exception]):
+    """Decorator factory: the decorated ``fmt`` decoder raises
+    ValueError, the codecs' controlled failure, where hostile bytes
+    would otherwise escape as the IndexError/KeyError/struct.error/
+    OverflowError of the lookup that found them (kept as
+    ``__cause__``). For JPEG that is a short SOF/SOS/DRI, a scan naming
+    an undefined Huffman table, quantization table or component id, or
+    a DC prediction out of range; ``extra`` adds a format's own errors
+    (``zlib.error`` for PNG's IDAT inflate)."""
+    caught = (IndexError, KeyError, OverflowError, struct.error, *extra)
 
-    @functools.wraps(decode)
-    def checked(payload):
-        try:
-            return decode(payload)
-        except (IndexError, KeyError, OverflowError, struct.error) as e:
-            raise ValueError(f"malformed JPEG: {type(e).__name__}: {e}") from e
+    def wrap(decode):
+        @functools.wraps(decode)
+        def checked(payload):
+            try:
+                return decode(payload)
+            except caught as e:
+                raise ValueError(
+                    f"malformed {fmt}: {type(e).__name__}: {e}"
+                ) from e
 
-    return checked
+        return checked
+
+    return wrap
 
 
-@malformed_as_valueerror
+@malformed_as_valueerror("JPEG")
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Real baseline JPEG decode: marker walk, DQT/DHT from the
     stream, Huffman + per-component DC-prediction entropy decode with

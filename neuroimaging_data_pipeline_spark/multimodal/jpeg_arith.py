@@ -346,7 +346,7 @@ def encode_jpeg_arith(
     return bytes(out)
 
 
-@malformed_as_valueerror
+@malformed_as_valueerror("JPEG")
 def decode_jpeg_arith(payload: bytes) -> np.ndarray:
     """Decode a grayscale SOF9 stream produced by this codec pair:
     marker walk (DQT both precisions, SOF9, DAC conditioning, SOS),

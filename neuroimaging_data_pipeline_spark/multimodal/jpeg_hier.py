@@ -220,7 +220,7 @@ def encode_jpeg_hierarchical(
     return bytes(out), recons
 
 
-@malformed_as_valueerror
+@malformed_as_valueerror("JPEG")
 def decode_jpeg_hierarchical(payload: bytes) -> list:
     """Decode a hierarchical grayscale JPEG; returns the decoded
     plane of EVERY pyramid level in coding order (the last entry is

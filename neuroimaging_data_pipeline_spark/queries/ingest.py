@@ -448,7 +448,6 @@ def sv_compaction(spark, sf_dir):
     from neuroimaging_data_pipeline_spark.sources.tables import read_table
     from neuroimaging_data_pipeline_spark.sources.versioned import (
         compact,
-        list_data_files,
         read_version,
         write_version,
     )

@@ -22,7 +22,6 @@ headers+voxels, never scanner k-space).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neuroimaging_data_pipeline_spark.sources.tables import read_table
@@ -2624,7 +2623,6 @@ def e15_mp4_shard_pipeline(spark, sf_dir):
     ONE pack shuffle (groupBy shard), a deliberate re-spread after
     it (the e13 AQE-coalesce lesson), then a single narrow
     decode+aggregate task per shard."""
-    import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
@@ -2683,7 +2681,6 @@ def e16_mp4_ffmpeg_pipeline(spark, sf_dir):
     ORDER-PINNED md5 over per-doc per-frame luma sums. Shape at
     100 TB: one pack shuffle, re-spread, one narrow decode task per
     shard — with the per-member decode handed to a native binary."""
-    import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
@@ -3035,7 +3032,6 @@ def e13_video_shard_pipeline(spark, sf_dir):
     100 TB: ONE pack shuffle (groupBy shard), then a single narrow
     decode+aggregate task per shard — tar members stream in-task,
     nothing widens."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from neuroimaging_data_pipeline_spark.multimodal.h264_gop_helpers import (  # noqa: E501
@@ -3136,7 +3132,6 @@ def e14_audio_shard_pipeline(spark, sf_dir):
     at 100 TB: ONE pack shuffle (groupBy shard), a deliberate
     re-spread after it (the e13 AQE-coalesce lesson), then a single
     narrow decode+aggregate task per shard."""
-    import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
     from neuroimaging_data_pipeline_spark.multimodal.mp3_shard_helpers import (  # noqa: E501

@@ -1222,16 +1222,20 @@ def t_kn_bigram(spark, sf_dir):
     IDENTICAL operation order (same IEEE doubles in, same bits out),
     and per-doc log sums use the decimal-exact discipline.
 
-    Scale: one bigram explode; the model-side joins (pair counts x
-    context stats) run at bigram-TYPE scale; ONE fact-to-model
-    equi-join at occurrence scale (AQE-skew-safe, same shape as
-    t_bigram_xent); T rides a broadcast single-row aggregate. r7 A/B
-    (interleaved same-session at sf0.1, 4 runs each): c(v) derived as
-    SUM(c_bg) from the type-scale pair table (chained) median 2.90 s
-    vs a parallel occurrence-scale w1 aggregate 3.12 s — KN must
-    chain through pair_c for N1+(v.) anyway, so unlike t_bigram_xent
-    (whose r6 A/B kept parallel aggregates) the chained form is
-    strictly less work here."""
+    Scale: one bigram explode, then the model is ONE linear chain over
+    the bigram-TYPE pair table: a count per bigram, then window counts
+    by w1 (c(v) as SUM(c_bg), N1+(v.)), by w2 (N1+(.w)) and over the
+    whole table (T). Every count is an exact integer, so P's doubles
+    equal those of the oracle's join-of-aggregates model bit for bit.
+    The pair table has a single consumer, so nothing is persisted and
+    the call leaves no cached block behind. Bound: the whole-table
+    window (T) moves the type table into one task, the same bound the
+    broadcast probe below already sets (the model must fit in one
+    JVM). The type table is never larger than the occurrence side;
+    scoring is ONE broadcast probe at occurrence scale plus the
+    per-doc aggregate."""
+    from pyspark.sql import Window
+
     from neuroimaging_data_pipeline_spark.functions.stats import dec_sum
 
     d = read_table(spark, sf_dir, "documents", min_partitions="cores")
@@ -1247,36 +1251,21 @@ def t_kn_bigram(spark, sf_dir):
         d.select("doc_id", F.explode(bigrams).alias("bg"))
         .filter(F.col("bg").contains(" "))
     )
-    pair_c = (
+    by_w1 = Window.partitionBy("w1")
+    one = F.lit(1)
+    model = (
         bg.groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("c_bg"))
+        .agg(F.count(one).alias("c_bg"))
         .withColumn("w1", F.split(F.col("bg"), " ")[0])
         .withColumn("w2", F.split(F.col("bg"), " ")[1])
-    )
-    # r14 (guide §1.2 "remove unnecessary passes"): pair_c feeds FOUR
-    # consumers (w1_stats, n1_bwd, types, the model join) and Catalyst
-    # does not share the subtree across join branches — the committed
-    # r13 plan re-scanned and re-exploded the corpus five times for
-    # one logical tokenize. Persisting the TYPE-scale pair table (931
-    # rows at sf0.1; always |types| <= |occurrences|) cuts the query
-    # to two corpus passes (model build + scoring probe), the same
-    # mid-plan-reuse discipline as dedup/minhash.py.
-    from pyspark import StorageLevel
-
-    pair_c = pair_c.persist(StorageLevel.MEMORY_AND_DISK)
-    # c(v) = sum_w c(vw) and N1+(v.) come from ONE type-scale
-    # aggregate over the pair table — no second occurrence-scale
-    # shuffle (unlike t_bigram_xent, whose A/B kept the parallel
-    # occurrence aggregates, the KN model must touch pair_c anyway)
-    w1_stats = pair_c.groupBy("w1").agg(
-        F.sum("c_bg").alias("c_w1"), F.count(F.lit(1)).alias("n1f")
-    )
-    n1_bwd = pair_c.groupBy("w2").agg(F.count(F.lit(1)).alias("n1b"))
-    types = pair_c.agg(F.count(F.lit(1)).alias("t_types"))
-    model = (
-        pair_c.join(w1_stats, "w1")
-        .join(n1_bwd, "w2")
-        .crossJoin(F.broadcast(types))
+        .select(
+            "bg",
+            "c_bg",
+            F.sum("c_bg").over(by_w1).alias("c_w1"),
+            F.count(one).over(by_w1).alias("n1f"),
+            F.count(one).over(Window.partitionBy("w2")).alias("n1b"),
+            F.count(one).over(Window.partitionBy()).alias("t_types"),
+        )
     )
     dd = F.lit(0.75)
     p_kn = (
@@ -1286,7 +1275,7 @@ def t_kn_bigram(spark, sf_dir):
         * (F.col("n1b").cast("double") / F.col("t_types").cast("double"))
     )
     # r14: force the TYPE-scale model to be the broadcast build side.
-    # Catalyst's estimate for the 3-join model chain is far above the
+    # Catalyst's estimate for the model chain can be far above the
     # post-explode bg estimate, so it was broadcasting the OCCURRENCE
     # side (BuildLeft, 265k rows / 931 distinct keys at sf0.1) — a
     # duplicate-chained HashedRelation whose build cost scales with

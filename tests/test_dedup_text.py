@@ -704,3 +704,56 @@ def test_kn_bigram_hand_computed_probability(spark):
         -(2 * math.log(p_ab) + math.log(p_ba)) / 3, abs=1e-6)
     assert out[1][0] == 1
     assert out[1][1] == pytest.approx(-math.log(p_ac), abs=1e-6)
+
+
+def _documents_table(spark, rows) -> str:
+    import os
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="documents_")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, source string"
+    ).write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
+    return tmp
+
+
+def test_kn_bigram_pins_nothing(spark):
+    """The KN model is one window chain over the pair table: after the
+    action no RDD stays persisted and the executed plan reads no
+    cached relation."""
+    from neuroimaging_data_pipeline_spark.queries.textops import t_kn_bigram
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    tmp = _documents_table(
+        spark, [(0, "a b a b c", "x"), (1, "a c b a", "y"), (2, "c a b", "x")]
+    )
+    out = t_kn_bigram(spark, tmp)
+    assert out.count() == 3
+    assert jsc.getPersistentRDDs().isEmpty()
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in executed, executed
+
+
+def test_ngram_jaccard_scans_documents_once(spark):
+    """The block key rides on the shingle rows, so d_ngram_jaccard
+    reads the documents table once (no join back for the source)."""
+    import re
+
+    from neuroimaging_data_pipeline_spark.plans.audit import explain_str
+    from neuroimaging_data_pipeline_spark.queries.textops import d_ngram_jaccard
+
+    tmp = _documents_table(
+        spark,
+        [(0, "a b c d e f", "x"), (1, "a b c d e g", "x"),
+         (2, "a b c d e f", "y")],
+    )
+    out = d_ngram_jaccard(spark, tmp)
+    plan = explain_str(out)
+    scans = re.findall(r"(?m)^Location: .*documents\.parquet", plan)
+    assert len(scans) == 1, plan
+    # pairs stay within a source: 0 and 2 are identical but in
+    # different blocks
+    assert {(r.id_a, r.id_b) for r in out.collect()} == {(0, 1)}

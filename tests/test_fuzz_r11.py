@@ -288,13 +288,51 @@ def _hostile_jpeg_hier() -> tuple[bytes, object]:
     return good, decode_jpeg_hierarchical
 
 
+def _hostile_png() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.binaryops import (
+        decode_png,
+        encode_png,
+    )
+
+    img = np.random.default_rng(12).integers(0, 256, (10, 8, 3), np.uint8)
+    return encode_png(img, interlace=True), decode_png
+
+
+def _hostile_gif() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.gif import (
+        decode_gif,
+        encode_gif,
+        gif_palette,
+    )
+
+    r = np.random.default_rng(13)
+    frames = [r.integers(0, 8, (12, 16)).astype(np.uint8) for _ in range(2)]
+    lct = [(255 - a, 255 - b, 255 - c) for a, b, c in gif_palette()]
+    good = encode_gif(frames, gif_palette(), [5, 10],
+                      local_palettes=[None, lct], interlaced=True)
+    return good, decode_gif
+
+
+def _hostile_bmp() -> tuple[bytes, object]:
+    from neuroimaging_data_pipeline_spark.multimodal.bmp import (
+        decode_bmp,
+        encode_bmp,
+    )
+
+    r = np.random.default_rng(14)
+    px = [[tuple(int(v) for v in r.integers(0, 256, 3)) for _ in range(5)]
+          for _ in range(3)]
+    return encode_bmp(px), decode_bmp
+
+
 @pytest.mark.parametrize(
     "make",
     [_hostile_mp3, _hostile_flac, _hostile_lzw, _hostile_bzip2,
      _hostile_jpeg_gray, _hostile_jpeg_progressive_color, _hostile_jpeg_arith,
-     _hostile_jpeg_hier],
+     _hostile_jpeg_hier, _hostile_png, _hostile_gif, _hostile_bmp],
     ids=["mp3", "flac", "tiff_lzw", "bzip2", "jpeg_gray",
-         "jpeg_progressive_color", "jpeg_arith", "jpeg_hierarchical"],
+         "jpeg_progressive_color", "jpeg_arith", "jpeg_hierarchical",
+         "png", "gif", "bmp"],
 )
 def test_codec_every_prefix_and_bitflips_controlled(make):
     """Every proper prefix of a valid stream, and seeded 1-2 bit

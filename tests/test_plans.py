@@ -98,10 +98,9 @@ def test_no_row_python_or_sortmerge_anywhere(spark, queries):
     side that isn't the fact table fits the broadcast threshold, so a
     SortMergeJoin appearing means a broadcast hint regressed.
 
-    Exception: d_ngram_jaccard's shingle-pair join is fact-to-fact
-    (both sides scale with the corpus) — SortMergeJoin is the right
-    strategy there at 100 TB and is allowed."""
-    # d_ngram_jaccard: df-capped shingle self-join, declared.
+    Exceptions, each declared below: fact-to-fact joins whose sides
+    both scale with the corpus, where SortMergeJoin is the right
+    strategy at 100 TB."""
     # g_pagerank3: the iterative edge<->rank join — after the edge
     # list's localCheckpoint the static plan loses build-side stats,
     # and at corpus scale the rank vector (one row per document) is
@@ -130,7 +129,6 @@ def test_no_row_python_or_sortmerge_anywhere(spark, queries):
     # sides scale with the corpus; co-partitioned on vec_id is the
     # scale shape). The query-batch probe side IS broadcast.
     smj_ok = {
-        "d_ngram_jaccard",
         "g_pagerank3",
         "d_semdedup",
         "e5_shard_pipeline",
