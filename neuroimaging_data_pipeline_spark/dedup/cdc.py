@@ -37,6 +37,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_batches
+
 #: window width (chars) and divisor: boundary where H(window) % D == 0
 CDC_W = 16
 CDC_D = 64  # expected chunk length ~ D chars
@@ -212,7 +214,7 @@ def cdc_chunks(
     window starting at i is ≡ 0 (mod D); the final chunk always ends
     at the document end. Empty docs yield no chunks.
 
-    The boundary scan runs in Arrow-batched mapInPandas with the
+    The boundary scan runs in Arrow-batched ``map_batches`` with the
     module-level vectorized-md5 kernel (one numpy pass over all
     window positions of a document; see module docstring). Values are
     bit-identical to per-char hashlib md5 — pinned in pytest — so the
@@ -221,7 +223,6 @@ def cdc_chunks(
 
     import pandas as pd
 
-    d = docs.select(F.col(id_col), _norm(F.col(text_col)).alias("s"))
     out_schema = (
         f"{id_col} long, chunk_idx int, chunk_len long, chunk_md5 string"
     )
@@ -249,7 +250,12 @@ def cdc_chunks(
                 columns=[id_col, "chunk_idx", "chunk_len", "chunk_md5"],
             )
 
-    return d.mapInPandas(chunk_batches, out_schema)
+    return map_batches(
+        docs,
+        chunk_batches,
+        out_schema,
+        cols=(F.col(id_col), _norm(F.col(text_col)).alias("s")),
+    )
 
 
 def cdc_dedup_stats(
@@ -261,7 +267,7 @@ def cdc_dedup_stats(
 
     Corpus frequency comes from a window count over chunk_md5, not a
     join against a self-derived aggregate: the self-join form makes
-    the chunking mapInPandas subtree appear TWICE in the plan, and
+    the chunking ``map_batches`` subtree appear TWICE in the plan, and
     Spark recomputes it both times — doubling the (dominant) md5 scan
     cost. One chunking pass, one hash-partition shuffle on the
     compact chunk_md5 key, then the per-doc aggregate."""

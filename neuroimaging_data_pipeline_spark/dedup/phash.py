@@ -141,7 +141,7 @@ def synthesize_phash_images(
         # the PNG writer is 8-bit RGB: replicate gray into 3 planes
         yield i, encode_png(np.repeat(_doc_image(i)[:, :, None], 3, axis=2))
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def phash_codes(
@@ -157,7 +157,7 @@ def phash_codes(
     def feat(i, content):
         yield i, phash64(decode_png(content)[:, :, 0])
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def phash_near_dup_pairs(

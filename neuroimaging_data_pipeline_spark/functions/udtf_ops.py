@@ -3,7 +3,7 @@ table-generating extension point).
 
 The reference's table-generating patterns (interval -> TR rows at
 ssm_loop.py:43; 4-D volume -> long rows at ssm_loop.py:69) are served
-by the range join (J2) and the mapInPandas volume source (S5) on the
+by the range join (J2) and the ``map_batches`` volume source (S5) on the
 hot paths. The UDTF here is the *extensibility* surface for shapes
 neither covers: arbitrary per-row expansion with Python logic, run
 executor-side via ``F.udtf`` / lateral join.

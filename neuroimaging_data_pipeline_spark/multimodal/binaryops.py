@@ -152,7 +152,7 @@ def decode_features(
         yield mid, modality, decode_one(payload, feature_dim).tolist()
 
     return map_rows(
-        media.select("media_id", "modality", "content"), decode, out_schema
+        media, decode, out_schema, cols=("media_id", "modality", "content")
     )
 
 
@@ -203,7 +203,7 @@ def synthesize_wav_clips(
         )
         yield i, encode_wav_pcm16(samples, sample_rate)
 
-    return map_rows(docs.select(id_col, text_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col, text_col))
 
 
 def wav_features(
@@ -225,7 +225,7 @@ def wav_features(
         rms = float(np.sqrt(np.mean(x * x))) if len(x) else 0.0
         yield mid, sr, len(samples), rms
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def wav_frame_features(
@@ -262,7 +262,7 @@ def wav_frame_features(
                 int(np.sum(nonneg[1:] != nonneg[:-1])),
             )
 
-    return map_rows(media.select(id_col, content_col), frames, out_schema)
+    return map_rows(media, frames, out_schema, cols=(id_col, content_col))
 
 
 def encode_ppm(pixels: np.ndarray) -> bytes:
@@ -316,7 +316,7 @@ def synthesize_ppm_images(
     def encode(i):
         yield i, encode_ppm(((i * 7 + base) % 256).astype(np.uint8))
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def ppm_features(
@@ -336,7 +336,7 @@ def ppm_features(
     def feat(mid, payload):
         yield rgb_features(mid, decode_ppm(payload))[:6]
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -562,7 +562,7 @@ def synthesize_png_images(
     def encode(i):
         yield i, encode_png(((i * 11 + base) % 256).astype(np.uint8))
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def synthesize_png_interlaced(
@@ -586,7 +586,7 @@ def synthesize_png_interlaced(
         px = ((i * 29 + base) % 256).astype(np.uint8)
         yield i, encode_png(px, interlace=True)
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def png_features(
@@ -607,7 +607,7 @@ def png_features(
     def feat(mid, payload):
         yield rgb_features(mid, decode_png(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def _gzip_text(key, text):
@@ -627,7 +627,7 @@ def synthesize_gzip_docs(
     opaque binary column. (media_id, content binary)."""
     out_schema = "media_id long, content binary"
 
-    return map_rows(docs.select(id_col, text_col), _gzip_text, out_schema)
+    return map_rows(docs, _gzip_text, out_schema, cols=(id_col, text_col))
 
 
 def gzip_text_features(
@@ -648,7 +648,7 @@ def gzip_text_features(
         text = gzip.decompress(payload).decode("utf-8")
         yield mid, len(text), hashlib.md5(text.encode("utf-8")).hexdigest()
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def synthesize_jsonl_shards(
@@ -662,7 +662,7 @@ def synthesize_jsonl_shards(
     RFC 1952 member per shard. (media_id, content binary)."""
     out_schema = "media_id long, content binary"
 
-    return map_rows(lines.select(shard_col, line_col), _gzip_text, out_schema)
+    return map_rows(lines, _gzip_text, out_schema, cols=(shard_col, line_col))
 
 
 def gunzip_text(
@@ -680,7 +680,7 @@ def gunzip_text(
     def inflate(mid, payload):
         yield mid, gzip.decompress(payload).decode("utf-8")
 
-    return map_rows(media.select(id_col, content_col), inflate, out_schema)
+    return map_rows(media, inflate, out_schema, cols=(id_col, content_col))
 
 
 def resize_plan(

@@ -122,7 +122,7 @@ def synthesize_bmp_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
         yield i, encode_bmp(px, top_down=bool(i % 2))
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def bmp_features(
@@ -153,6 +153,4 @@ def bmp_features(
             sums[2] / n,
         )
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -243,7 +243,7 @@ def synthesize_exif_jpegs(
         )
         yield i, insert_exif(encode_jpeg_gray(img), app1)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def exif_features(
@@ -272,4 +272,4 @@ def exif_features(
             f[TAG_PIXEL_Y],
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -63,7 +63,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_batches, map_rows
 from neuroimaging_data_pipeline_spark.multimodal.bitio import (
     BitReader,
     BitWriter,
@@ -1287,10 +1287,9 @@ def synthesize_flac_stereo_clips(
                     )
                 )
                 ids.append(i)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "content": pd.Series(blobs, dtype=object)})
+            yield pd.DataFrame({id_col: ids, "content": blobs})
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_batches(docs, build, out_schema, cols=(id_col,))
 
 
 def flac_stereo_features(
@@ -1316,7 +1315,7 @@ def flac_stereo_features(
             d["md5_ok"],
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def _doc_multichannel(doc_id: int) -> list[list[int]]:
@@ -1377,10 +1376,9 @@ def synthesize_flac_surround_clips(
                 )
                 at += len(chans)
                 ids.append(i)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "content": pd.Series(blobs, dtype=object)})
+            yield pd.DataFrame({id_col: ids, "content": blobs})
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_batches(docs, build, out_schema, cols=(id_col,))
 
 
 def flac_surround_features(
@@ -1407,7 +1405,7 @@ def flac_surround_features(
             d["md5_ok"],
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def synthesize_flac_clips(
@@ -1432,10 +1430,9 @@ def synthesize_flac_clips(
                     )
                 )
                 ids.append(i)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "content": pd.Series(blobs, dtype=object)})
+            yield pd.DataFrame({id_col: ids, "content": blobs})
 
-    return docs.select(id_col).mapInPandas(build, out_schema)
+    return map_batches(docs, build, out_schema, cols=(id_col,))
 
 
 def flac_features(
@@ -1460,4 +1457,4 @@ def flac_features(
             d["md5_ok"],
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -345,7 +345,7 @@ def synthesize_gifs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def enc(i):
         yield i, encode_gif_fixture(i)
 
-    return map_rows(docs.select(id_col), enc, out_schema)
+    return map_rows(docs, enc, out_schema, cols=(id_col,))
 
 
 def gif_frame_stats(
@@ -378,4 +378,4 @@ def gif_frame_stats(
                 int(pal_r[px].sum()),
             )
 
-    return map_rows(media.select(id_col, content_col), dec, out_schema)
+    return map_rows(media, dec, out_schema, cols=(id_col, content_col))

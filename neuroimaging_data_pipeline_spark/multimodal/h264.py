@@ -676,7 +676,7 @@ def synthesize_h264_frames(
         cr = ((i * 5 + rr * 7 + cc * 3) % 256).astype(np.uint8)
         yield i, encode_h264_ipcm(y, cb, cr)
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def h264_frame_features(
@@ -693,7 +693,7 @@ def h264_frame_features(
     def feat(key, payload):
         yield yuv_features(key, *decode_h264_ipcm(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def yuv_features(key, y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> tuple:

@@ -1516,7 +1516,7 @@ def synthesize_h264_b_frames(
             )
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_b_frame_features(
@@ -1551,7 +1551,7 @@ def h264_b_frame_features(
             int(cr_b.sum()),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 # ---------------------------------------------------------------------------
@@ -1665,7 +1665,7 @@ def synthesize_h264_bpyramid_frames(docs, id_col: str = "doc_id"):
                         f"doc {i}: QP-0 pyramid not exact")
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_bpyramid_features(
@@ -1688,4 +1688,4 @@ def h264_bpyramid_features(
                int(frames[4][0].sum()), int(frames[4][1].sum()),
                int(frames[4][2].sum()))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -1294,7 +1294,7 @@ def synthesize_h264_cabac_frames(
             )
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_cabac_frame_features(
@@ -1312,4 +1312,4 @@ def h264_cabac_frame_features(
     def feat(i, content):
         yield yuv_features(i, *decode_h264_cabac(content))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

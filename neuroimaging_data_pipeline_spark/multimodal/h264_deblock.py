@@ -647,7 +647,7 @@ def synthesize_h264_deblock_clips(docs, id_col: str = "doc_id"):
                 )
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_deblock_features(
@@ -678,7 +678,7 @@ def h264_deblock_features(
                int(y.shape[0]), int(y.sum()), int(cb.sum()),
                int(cr.sum()), bool(same))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 # ---------------------------------------------------------------------------
@@ -826,7 +826,7 @@ def synthesize_h264_bdeblock_clips(docs, id_col: str = "doc_id"):
                 f"doc {i}: B luma closed form mismatch")
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_bdeblock_features(
@@ -864,4 +864,4 @@ def h264_bdeblock_features(
                int((cw @ crb.astype(np.int64)).sum()),
                bool(same))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -63,4 +63,4 @@ def decode_shard_features(
         ).hexdigest()
         yield (shard_id, len(parts), total, digest)
 
-    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)
+    return map_rows(shards, feat, out_schema, cols=("shard_id", "tar"))

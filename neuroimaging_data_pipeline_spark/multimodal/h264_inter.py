@@ -1779,7 +1779,7 @@ def synthesize_h264_inter_frames(
             )
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_inter_frame_features(
@@ -1809,7 +1809,7 @@ def h264_inter_frame_features(
             int(cr_p.sum()),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 def synthesize_h264_gop_frames(
     docs: DataFrame,
@@ -1994,7 +1994,7 @@ def synthesize_h264_gop_frames(
             )
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_gop_frame_features(
@@ -2027,7 +2027,7 @@ def h264_gop_frame_features(
             int(cr_p2.sum()),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 # ---------------------------------------------------------------------------
@@ -2123,7 +2123,7 @@ def synthesize_h264_longgop_frames(docs, id_col: str = "doc_id"):
                         f"doc {i}: QP-0 long-GOP not exact")
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_longgop_features(
@@ -2146,4 +2146,4 @@ def h264_longgop_features(
                int(frames[3][0].sum()), int(frames[4][0].sum()),
                int(frames[4][1].sum()), int(frames[4][2].sum()))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -1698,7 +1698,7 @@ def synthesize_h264_intra_frames(
         ).all(), "QP0 constant-MB path must be exact"
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def synthesize_h264_i4x4_frames(
@@ -1738,7 +1738,7 @@ def synthesize_h264_i4x4_frames(
         ).all(), "QP0 constant-4x4 path must be exact"
         yield i, stream
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def h264_intra_frame_features(
@@ -1756,4 +1756,4 @@ def h264_intra_frame_features(
     def feat(key, payload):
         yield yuv_features(key, *decode_h264_frame(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

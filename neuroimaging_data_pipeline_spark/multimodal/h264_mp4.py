@@ -310,7 +310,7 @@ def synthesize_h264_mp4_clips(
     def mux(i, annexb):
         yield i, mux_h264_mp4(annexb, i, 32, 32)
 
-    return map_rows(gop.select(id_col, "content"), mux, out_schema)
+    return map_rows(gop, mux, out_schema, cols=(id_col, "content"))
 
 
 def h264_mp4_frame_features(
@@ -354,4 +354,4 @@ def h264_mp4_frame_features(
             int(cr_p2.sum()),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -1447,7 +1447,7 @@ def synthesize_jpeg_images(
         img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
         yield i, encode_jpeg_gray(img, restart_interval=2)
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def synthesize_jpeg_color_images(
@@ -1472,7 +1472,7 @@ def synthesize_jpeg_color_images(
         gray = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
         yield i, encode_jpeg_color(np.stack([gray, gray, gray], axis=-1))
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def synthesize_jpeg_progressive_images(
@@ -1510,7 +1510,7 @@ def synthesize_jpeg_progressive_images(
             img, script=sa_script(1), restart_interval=i % 3
         )
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def synthesize_jpeg_420_images(
@@ -1538,7 +1538,7 @@ def synthesize_jpeg_420_images(
         rgb = np.stack([gray, gray, gray], axis=-1)
         yield i, encode_jpeg_color(rgb, subsampling="420")
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def jpeg_color_features(
@@ -1559,7 +1559,7 @@ def jpeg_color_features(
     def feat(mid, payload):
         yield rgb_features(mid, decode_jpeg_color(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def jpeg_features(
@@ -1578,7 +1578,7 @@ def jpeg_features(
     def feat(mid, payload):
         yield gray_features(mid, decode_jpeg_gray(payload))[:5]
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def gray_features(key, img: np.ndarray) -> tuple:

@@ -281,7 +281,7 @@ def synthesize_jpeg12_images(
         else:
             yield i, encode_jpeg_gray12(img)
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def jpeg12_features(
@@ -302,4 +302,4 @@ def jpeg12_features(
     def feat(mid, payload):
         yield gray_features(mid, decode_jpeg_gray(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -450,7 +450,7 @@ def synthesize_jpeg_arith_images(
         img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
         yield i, encode_jpeg_arith(img, precision=12)
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def jpeg_arith_features(
@@ -469,4 +469,4 @@ def jpeg_arith_features(
     def feat(mid, payload):
         yield gray_features(mid, decode_jpeg_arith(payload))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -389,7 +389,7 @@ def synthesize_jpeg_hier_images(
                 )
         yield i, blob
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def jpeg_hier_features(
@@ -419,4 +419,4 @@ def jpeg_hier_features(
             int(final.sum()),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -186,7 +186,7 @@ def synthesize_mp3s(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         }
         yield i, build_mp3(tags, specs)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mp3_meta_features(
@@ -213,4 +213,4 @@ def mp3_meta_features(
             sum(m["bitrates"]),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -73,4 +73,4 @@ def decode_mp3_shard_features(shards: DataFrame) -> DataFrame:
         yield (shard_id, len(parts), gr_total, wtotal,
                digest)
 
-    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)
+    return map_rows(shards, feat, out_schema, cols=("shard_id", "tar"))

@@ -1138,7 +1138,7 @@ def synthesize_mp3_l3_clips(
         ]
         yield i, encode_mp3_l3(gs, scfsi=0, tags={"TIT2": f"doc{i}"})
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mp3_l3_features(
@@ -1175,7 +1175,7 @@ def mp3_l3_features(
             wsum,
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 # ---------------------------------------------------------------------------
@@ -1284,7 +1284,7 @@ def synthesize_mp3_intensity_clips(
         ]
         yield i, encode_mp3_l3(gs, scfsi=0, nch=2, intensity=True)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mp3_intensity_features(
@@ -1327,4 +1327,4 @@ def mp3_intensity_features(
         yield (i, d["n_granules"], sum_abs, n_nz, wsum,
                round(sum_xl, 3), round(sum_xr, 3))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

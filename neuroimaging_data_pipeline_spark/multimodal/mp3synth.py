@@ -238,4 +238,4 @@ def mp3_subband_features(media, id_col="doc_id", content_col="content"):
                float(np.round(sum_abs, 3)),
                float(np.round(wsum, 3)))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -453,7 +453,7 @@ def synthesize_mp4_clips(
     def build(i):
         yield i, encode_mp4(i)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mp4_meta_features(
@@ -485,9 +485,7 @@ def mp4_meta_features(
             m["payload_sum"],
         )
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def mp4_sample_frames(
@@ -516,7 +514,7 @@ def mp4_sample_frames(
             yield (mid, i, size, int(frame.sum()))
 
     return map_rows(
-        media.select(id_col, content_col), sample_frames, out_schema
+        media, sample_frames, out_schema, cols=(id_col, content_col)
     )
 
 
@@ -562,7 +560,7 @@ def synthesize_mjpeg_clips(
     def build(i):
         yield i, encode_mjpeg(i)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mjpeg_frame_stats(
@@ -597,4 +595,4 @@ def mjpeg_frame_stats(
             px_sum = int(px.astype(np.int64).sum())
             yield mid, i, px.shape[1], px.shape[0], px_sum
 
-    return map_rows(media.select(id_col, content_col), sampled, out_schema)
+    return map_rows(media, sampled, out_schema, cols=(id_col, content_col))

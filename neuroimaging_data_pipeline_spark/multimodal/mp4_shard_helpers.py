@@ -85,7 +85,7 @@ def decode_mp4_shard_features(shards: DataFrame) -> DataFrame:
                p2_total,
                hashlib.md5("|".join(parts).encode()).hexdigest())
 
-    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)
+    return map_rows(shards, feat, out_schema, cols=("shard_id", "tar"))
 
 
 def _ffmpeg_gray_frames(annexb: bytes, w: int, h: int) -> list:
@@ -178,4 +178,4 @@ def decode_mp4_shard_features_xcheck(shards: DataFrame) -> DataFrame:
         yield (shard_id, len(parts), n_frames, y_total,
                hashlib.md5("|".join(parts).encode()).hexdigest())
 
-    return map_rows(shards.select("shard_id", "tar"), feat, out_schema)
+    return map_rows(shards, feat, out_schema, cols=("shard_id", "tar"))

@@ -122,7 +122,7 @@ def synthesize_mulaw_clips(
         x = (i * 131 + j * 617) % 16319 - 8159
         yield i, write_wav_mulaw(x)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def mulaw_clip_features(
@@ -143,6 +143,4 @@ def mulaw_clip_features(
         a = np.abs(d)
         yield key, len(d), rate, int(d.sum()), int(a.sum()), int(a.max())
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

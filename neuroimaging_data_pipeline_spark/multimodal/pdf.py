@@ -614,7 +614,7 @@ def synthesize_pdfs(
             )
         yield i, write_pdf15(pages) if version == "1.5" else write_pdf(pages)
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def pdf_text_features(
@@ -640,6 +640,4 @@ def pdf_text_features(
             hashlib.md5(text.encode("latin-1")).hexdigest(),
         )
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -187,7 +187,7 @@ def synthesize_tar_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def build(i):
         yield i, encode_shard(i)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def tar_sample_features(
@@ -220,6 +220,4 @@ def tar_sample_features(
                 blocks,
             )
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -300,7 +300,7 @@ def synthesize_tiff_images(
             little_endian=i % 4 < 2,
         )
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def tiff_features(
@@ -319,4 +319,4 @@ def tiff_features(
         yield (i, t["width"], t["height"], t["compression"],
                t["n_strips"], sum(px) / len(px), sum(px))
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import drop_zip_importers
+
 
 def _t_sf(tval: np.ndarray, df: float) -> np.ndarray:
     """Two-sided p-value helper: Student-t survival function.
@@ -203,6 +205,7 @@ def mass_ols(
         )
 
         def fit_cogrouped(vals: pa.Table, dsn: pa.Table) -> pa.Table:
+            drop_zip_importers()
             if vals.num_rows == 0:
                 # design key with no values in this block: nothing to fit
                 return empty
@@ -246,6 +249,7 @@ def mass_ols(
     bc_xmap = values.sparkSession.sparkContext.broadcast(Xmap)
 
     def fit(batches):
+        drop_zip_importers()
         for batch in batches:
             for kt, rows in _split_by_key(batch, key_cols):
                 if kt not in bc_xmap.value:

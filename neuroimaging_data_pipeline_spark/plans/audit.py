@@ -128,11 +128,12 @@ def read_schemas(plan: str) -> list[str]:
 def python_eval_count(plan: str) -> int:
     """Row-at-a-time Python operators in the plan (the slow path).
 
-    Arrow-vectorized ops (``ArrowEvalPython``, ``FlatMapGroupsInPandas``,
-    ``MapInArrow`` — every ``functions.rowmap.map_rows`` codec and
-    source boundary — and the batch kernels' ``MapInPandas``) are
+    Arrow-vectorized ops (``ArrowEvalPython``, ``FlatMapGroupsInPandas``
+    and ``MapInArrow`` — every ``functions.rowmap`` codec, source and
+    batch-kernel boundary, a fused chain of maps being one node) are
     deliberate engine choices and not counted; ``BatchEvalPython`` is
-    the per-row pickling path we forbid.
+    the per-row pickling path we forbid. Chained maps that did not
+    fuse are gated in ``tests/test_plans.py``.
     """
     return node_count(plan, "BatchEvalPython")
 

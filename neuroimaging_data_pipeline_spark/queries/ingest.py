@@ -702,9 +702,10 @@ def s12_parquet_meta(spark, sf_dir):
             yield (gi, nr, tbs, nc)
 
     return map_rows(
-        files.select("content"),
+        files,
         row_groups,
         "row_group_id int, num_rows long, total_byte_size long, n_columns int",
+        cols=("content",),
     )
 
 
@@ -849,10 +850,11 @@ def s15_rowgroup_prune(spark, sf_dir):
             )
 
     return map_rows(
-        files.select("content"),
+        files,
         prune,
         "row_group int, min_id long, max_id long, num_values long, "
         "survives int",
+        cols=("content",),
     )
 
 

@@ -12,8 +12,11 @@ Scale notes (100 TB design targets, tested on local[N]):
   boundary (mass-OLS, t-CDF) moves through Arrow batches, not pickled
   rows. Per-row codec and source work goes through
   ``functions.rowmap.map_rows`` (``mapInArrow``: Arrow columns straight
-  to Python values, no pandas frame either way); only batch-vectorised
-  kernels keep ``mapInPandas``.
+  to Python values, no pandas frame either way), and the
+  batch-vectorised kernels through ``map_batches`` on the same
+  ``mapInArrow``. A map over another map's output fuses into one
+  ``mapInArrow``, so a synthesize → decode stage crosses into Python
+  once per task; no ``mapInPandas`` is left in the engine.
 - Session timezone pinned to UTC so timestamp semantics are stable
   against the DuckDB oracle and across clusters.
 """

@@ -111,4 +111,4 @@ def ipc_documents(
             md5 = hashlib.md5(r["text"].encode()).hexdigest()
             yield r["doc_id"], r["lang"], r["n_chars"], md5, n_batches
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

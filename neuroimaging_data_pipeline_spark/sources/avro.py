@@ -190,7 +190,7 @@ def synthesize_avro_files(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         codec = "deflate" if i % 2 else "null"
         yield i, write_avro(_fixture_records(i), codec=codec)
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def avro_features(
@@ -213,6 +213,4 @@ def avro_features(
             float(sum(r[2] for r in recs)),
         )
 
-    return map_rows(
-        media.select(id_col, content_col), feat, out_schema
-    )
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

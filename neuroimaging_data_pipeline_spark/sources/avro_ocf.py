@@ -314,4 +314,4 @@ def avro_documents(
             md5 = _h.md5(r["text"].encode()).hexdigest()
             yield r["doc_id"], r["label"], r["n_chars"], md5
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -310,7 +310,7 @@ def synthesize_bzip2_docs(
             blob += bz2.compress(b"S%d" % i, compresslevel=9)
         yield i, blob
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def bzip2_documents(
@@ -333,4 +333,4 @@ def bzip2_documents(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

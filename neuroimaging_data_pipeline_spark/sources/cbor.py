@@ -351,4 +351,4 @@ def cbor_documents(
             md5 = hashlib.md5(rec["text"].encode()).hexdigest()
             yield int(rid), tagged, len(rec["text"]), md5
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -105,5 +105,5 @@ def bxz_shard_documents(
             yield sid, container, int(rec["id"]), rec["text"]
 
     return map_rows(
-        shards.select("shard_id", "container", "content"), unpack, out_schema
+        shards, unpack, out_schema, cols=("shard_id", "container", "content")
     )

@@ -78,4 +78,4 @@ def fetch_text(
             error = str(e)
         yield uri, status, n_bytes, content, error
 
-    return map_rows(uris.select(uri_col), fetch, FETCH_SCHEMA)
+    return map_rows(uris, fetch, FETCH_SCHEMA, cols=(uri_col,))

@@ -367,7 +367,7 @@ def synthesize_gzip_members(
             fhcrc=(i % 7 == 0),
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def gzip_inflate_features(
@@ -394,4 +394,4 @@ def gzip_inflate_features(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

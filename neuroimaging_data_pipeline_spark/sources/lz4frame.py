@@ -397,7 +397,7 @@ def synthesize_lz4_docs(
             force_stored=(i % 7 == 0),
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def lz4_documents(
@@ -423,4 +423,4 @@ def lz4_documents(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

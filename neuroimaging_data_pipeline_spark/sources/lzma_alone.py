@@ -360,7 +360,7 @@ def synthesize_lzma_docs(
             body, format=lzma.FORMAT_ALONE, filters=filters
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def lzma_documents(
@@ -385,4 +385,4 @@ def lzma_documents(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

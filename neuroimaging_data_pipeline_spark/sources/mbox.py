@@ -357,4 +357,4 @@ def mbox_messages(
                 hashlib.md5(body.encode()).hexdigest(),
             )
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -5,7 +5,7 @@ Reference: ``nib.load(path)`` / ``Brain_Data(img, mask=...)``
 (ssm_loop.py:40,60,69) pulls a whole (x,y,z,t) array into RAM and
 flattens to (t x voxel). The engine's equivalent is a *source*: a
 ``binaryFile`` scan of volume files, each decoded inside an
-Arrow-batched ``mapInPandas`` and exploded to long rows
+Arrow-batched ``map_batches`` and exploded to long rows
 ``(path, t, voxel_id, x, y, z, value)`` — from there every downstream
 op (mask semi-join, smoothing, mass OLS) is relational.
 
@@ -41,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_batches, map_rows
 
 _MAGIC = b"NDPVOL1\0"
 
@@ -242,8 +242,8 @@ def load_volume_long(
                         }
                     )
 
-    return binfiles.select("path", "content").mapInPandas(
-        explode_volumes, VOLUME_LONG_SCHEMA
+    return map_batches(
+        binfiles, explode_volumes, VOLUME_LONG_SCHEMA, cols=("path", "content")
     )
 
 
@@ -280,7 +280,7 @@ def synthesize_nifti_volumes(
             compress=bool(did % 2),
         )
 
-    return map_rows(docs.select(id_col), encode, out_schema)
+    return map_rows(docs, encode, out_schema, cols=(id_col,))
 
 
 def nifti_volume_stats(
@@ -302,7 +302,7 @@ def nifti_volume_stats(
         arr = decode_nifti1(payload)
         yield (mid, *arr.shape, arr.size, float(arr.mean()), float(arr.max()))
 
-    return map_rows(media.select(id_col, content_col), stats, out_schema)
+    return map_rows(media, stats, out_schema, cols=(id_col, content_col))
 
 
 def n_tr_of(volumes_long: DataFrame) -> int:

@@ -240,7 +240,7 @@ def synthesize_ogg_docs(
             pkts.append(b"=" * (255 * (_MAX_SEGS + 2)))
         yield i, write_ogg_stream(pkts, serial=(i * 2654435761) % 2**32)
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def ogg_documents(
@@ -267,4 +267,4 @@ def ogg_documents(
             hashlib.md5(body).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

@@ -308,7 +308,7 @@ def synthesize_snappy_docs(
             pad=(6 + i % 4) if i % 5 == 0 else 0,
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def snappy_documents(
@@ -332,4 +332,4 @@ def snappy_documents(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

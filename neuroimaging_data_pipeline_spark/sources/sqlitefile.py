@@ -436,4 +436,4 @@ def sqlite_documents(
             md5 = hashlib.md5(text.encode()).hexdigest()
             yield rowid, len(text), md5, n_pages
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -334,4 +334,4 @@ def tfrecord_documents(
                 hashlib.md5(ex["text"][1][0]).hexdigest(),
             )
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -253,4 +253,4 @@ def warc_records(
             ))
         return [(*r, n_warcinfo) for r in rows]
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

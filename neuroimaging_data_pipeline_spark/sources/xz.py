@@ -418,7 +418,7 @@ def synthesize_xz_docs(
                       "dict_size": 1 << 16}],
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def _fake_x86_tail(doc_id: int) -> bytes:
@@ -470,7 +470,7 @@ def synthesize_xz_filtered_docs(
                             "dict_size": 1 << 16}],
         )
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def xz_filtered_documents(
@@ -504,7 +504,7 @@ def xz_filtered_documents(
             True,
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 def xz_documents(
@@ -527,4 +527,4 @@ def xz_documents(
             hashlib.md5(d["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

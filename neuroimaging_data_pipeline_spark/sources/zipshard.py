@@ -181,4 +181,4 @@ def zip_documents(
                 hashlib.md5(data).hexdigest(),
             )
 
-    return map_rows(shards.select(content_col), parse, out_schema)
+    return map_rows(shards, parse, out_schema, cols=(content_col,))

@@ -418,7 +418,7 @@ def synthesize_zstd_docs(
         )
         yield i, blob
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 _PAD_SENTENCE = "the quick brown fox jumps over the lazy dog. "
@@ -455,7 +455,7 @@ def synthesize_zstd_compressed_docs(
         blob += write_zstd_frame(b"T%d" % i, checksum=True)
         yield i, blob
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def zstd_decoded_documents(
@@ -489,7 +489,7 @@ def zstd_decoded_documents(
             hashlib.md5(full).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))
 
 
 _DOCS_PER_ZSHARD = 50
@@ -555,7 +555,7 @@ def zstd_shard_documents(
             rec = _json.loads(line)
             yield sid, int(rec["id"]), rec["text"]
 
-    return map_rows(shards.select("shard_id", "content"), unpack, out_schema)
+    return map_rows(shards, unpack, out_schema, cols=("shard_id", "content"))
 
 
 def zstd_meta_features(
@@ -587,4 +587,4 @@ def zstd_meta_features(
             hashlib.md5(f["content"]).hexdigest(),
         )
 
-    return map_rows(media.select(id_col, content_col), feat, out_schema)
+    return map_rows(media, feat, out_schema, cols=(id_col, content_col))

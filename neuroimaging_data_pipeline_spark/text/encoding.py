@@ -132,7 +132,7 @@ def synthesize_encoded_docs(
     def build(i, text):
         yield i, encode_case(i, text)
 
-    return map_rows(docs.select(id_col, text_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col, text_col))
 
 
 def encoding_repair(
@@ -163,4 +163,4 @@ def encoding_repair(
         )
         yield row + (text,) if emit_text else row
 
-    return map_rows(raw_docs.select(id_col, raw_col), repair, out_schema)
+    return map_rows(raw_docs, repair, out_schema, cols=(id_col, raw_col))

@@ -182,7 +182,7 @@ def synthesize_idn_hosts(
         d = DECOR[i % 4]
         yield i, f"w{i}.{d}.example" if d else f"w{i}.example"
 
-    return map_rows(docs.select(id_col), build, out_schema)
+    return map_rows(docs, build, out_schema, cols=(id_col,))
 
 
 def idn_canonicalize(
@@ -209,4 +209,4 @@ def idn_canonicalize(
             hashlib.md5(back.encode()).hexdigest(),
         )
 
-    return map_rows(hosts.select(id_col, host_col), canon, out_schema)
+    return map_rows(hosts, canon, out_schema, cols=(id_col, host_col))

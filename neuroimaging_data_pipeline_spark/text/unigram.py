@@ -171,7 +171,7 @@ def _segment_words(
             )
         yield (str(w), int(fq), r[0], r[1], r[2])
 
-    return map_rows(words.select("word", "freq"), seg, out_schema)
+    return map_rows(words, seg, out_schema, cols=("word", "freq"))
 
 
 def _run_em(words: DataFrame) -> DataFrame:

@@ -1,10 +1,9 @@
 """An eager stand-in for the few DataFrame methods the fixture builders
 call, so their Python bodies run on one in-memory batch without a
-SparkSession: ``select`` by column name, ``mapInArrow`` (fed one
-``pa.RecordBatch``; the ``functions.rowmap.map_rows`` boundary) and
-``mapInPandas`` (the batch kernels such as the FLAC synthesizers).
-Each call returns a new ``EagerDF`` over the output; ``.pdf`` holds it
-as pandas."""
+SparkSession: ``select`` by column name and ``mapInArrow`` fed one
+``pa.RecordBatch`` (the ``functions.rowmap`` boundary, which both
+``map_rows`` and ``map_batches`` run on). Each call returns a new
+``EagerDF`` over the output; ``.pdf`` holds it as pandas."""
 
 from __future__ import annotations
 
@@ -24,10 +23,4 @@ class EagerDF:
         outs = list(fn(iter([batch])))
         return EagerDF(
             pa.Table.from_batches(outs).to_pandas() if outs else pd.DataFrame()
-        )
-
-    def mapInPandas(self, fn, _schema) -> EagerDF:
-        outs = list(fn(iter([self.pdf])))
-        return EagerDF(
-            pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
         )

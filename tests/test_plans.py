@@ -28,6 +28,28 @@ def queries():
     return entrymod.queries()
 
 
+@pytest.fixture(scope="module")
+def built(spark, queries):
+    """Every registered query's DataFrame at sf0.001, built once."""
+    return {name: fn(spark, SF_DIR) for name, fn in queries.items()}
+
+
+def _chained_maps(node, out: list[str]) -> list[str]:
+    """``MapInArrow`` nodes whose input, through Projects only, is
+    another Python map: two crossings where one would do. A JVM plan
+    walk over the pre-AQE physical plan (``queryExecution.sparkPlan``)."""
+    if node.nodeName() == "MapInArrow":
+        child = node.child()
+        while child.nodeName() == "Project":
+            child = child.child()
+        if child.nodeName() in ("MapInArrow", "MapInPandas"):
+            out.append(child.nodeName())
+    kids = node.children().iterator()
+    while kids.hasNext():
+        _chained_maps(kids.next(), out)
+    return out
+
+
 def test_projection_filter_pushdown(spark, queries):
     """P1: predicate and projection must reach the parquet scan."""
     assert_plan(
@@ -92,7 +114,7 @@ def test_mass_ols_is_arrow_not_row_python(spark, queries):
     assert python_eval_count(plan) == 0, plan
 
 
-def test_no_row_python_or_sortmerge_anywhere(spark, queries):
+def test_no_row_python_or_sortmerge_anywhere(built):
     """Global gate: across every registered query, (a) no row-at-a-time
     Python eval; (b) no SortMergeJoin — at the driver SFs every join
     side that isn't the fact table fits the broadcast threshold, so a
@@ -164,8 +186,8 @@ def test_no_row_python_or_sortmerge_anywhere(spark, queries):
         "e10_release_pipeline",
     }
     offenders: dict[str, list[str]] = {}
-    for name, fn in queries.items():
-        plan = explain_str(fn(spark, SF_DIR))
+    for name, df in built.items():
+        plan = explain_str(df)
         probs = []
         if python_eval_count(plan):
             probs.append("BatchEvalPython")
@@ -173,4 +195,19 @@ def test_no_row_python_or_sortmerge_anywhere(spark, queries):
             probs.append("SortMergeJoin")
         if probs:
             offenders[name] = probs
+    assert not offenders, offenders
+
+
+def test_no_chained_python_maps_anywhere(built):
+    """Global gate: a Python map over another Python map, with only a
+    Project between them, is one ``functions.rowmap`` chain that did
+    not fuse, and each task pays the Python crossing twice. Build such
+    stages with ``map_rows``/``map_batches`` and pass ``cols`` instead
+    of a ``select``. A map over a grouped map (``FlatMapGroupsInPandas``)
+    stays allowed: the grouped map needs its shuffle."""
+    offenders = {}
+    for name, df in built.items():
+        pairs = _chained_maps(df._jdf.queryExecution().sparkPlan(), [])
+        if pairs:
+            offenders[name] = pairs
     assert not offenders, offenders

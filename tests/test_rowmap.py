@@ -1,20 +1,29 @@
-"""functions/rowmap.map_rows against the pandas boundary it replaced.
+"""functions/rowmap against the boundaries it replaced.
 
-Each case runs the same per-row function twice: through ``map_rows``
-and through a reference ``mapInPandas`` generator built the old way
-(one list per column, one ``pd.DataFrame`` per batch). The collected
-rows must be equal for every column type the engine's row maps emit,
-including NaN/None doubles and nulls in integer columns.
+Each ``map_rows`` case runs the same per-row function twice: through
+``map_rows`` and through a reference ``mapInPandas`` generator built
+the old way (one list per column, one ``pd.DataFrame`` per batch). The
+collected rows must be equal for every column type the engine's row
+maps emit, including NaN/None doubles and nulls in integer columns.
+
+The chain cases compare a fused chain of maps with the same maps run
+as separate ``mapInArrow`` nodes (``_unfused`` puts a ``select("*")``
+between them, which breaks the chain), and the importer case checks
+``drop_zip_importers`` in a fresh interpreter.
 """
 
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_batches, map_rows
 from neuroimaging_data_pipeline_spark.plans import audit
 from tests.eager_df import EagerDF
 
@@ -150,3 +159,203 @@ def test_plan_is_one_map_in_arrow(spark):
     assert audit.node_count(plan, "MapInArrow") == 1
     assert "MapInPandas" not in plan
     assert audit.exchange_count(plan) == 0
+
+
+# ---------------------------------------------------------------- chains
+
+
+def _map_in_arrow_count(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return audit.node_count(plan, "MapInArrow")
+
+
+def _unfused(df):
+    """A new DataFrame over ``df``'s output: not a recorded map output,
+    so a map over it runs as its own ``mapInArrow``."""
+    return df.select("*")
+
+
+def _synth(k):
+    yield k, bytes([k % 256]) * (k % 5), k / 3.0
+
+
+SYNTH = "k long, payload binary, x double"
+
+
+def _feat(k, payload):
+    yield k, len(payload), str(k)
+
+
+FEAT = "k long, n int, tag string"
+
+
+def _times_ten(k, n):
+    yield k, n * 10
+
+
+def test_fused_row_to_row_matches_separate_maps(spark):
+    src = spark.range(23).repartition(3)
+    mid = map_rows(src, _synth, SYNTH)
+    fused = map_rows(mid, _feat, FEAT, cols=("k", "payload"))
+    plain = map_rows(_unfused(mid), _feat, FEAT, cols=("k", "payload"))
+    assert _map_in_arrow_count(fused) == 1
+    assert _map_in_arrow_count(plain) == 2
+    assert sorted(fused.collect()) == sorted(plain.collect())
+    assert fused.count() == 23
+
+
+def test_fused_batch_to_row_matches_separate_maps(spark):
+    def explode(batches):
+        for pdf in batches:
+            ks = pdf["id"].repeat(2).to_numpy()
+            yield pd.DataFrame(
+                {"k": ks, "payload": [bytes([int(i) % 7]) * 3 for i in ks]}
+            )
+
+    src = spark.range(11)
+    mid = map_batches(src, explode, "k long, payload binary", cols=("id",))
+    fused = map_rows(mid, _feat, FEAT)
+    plain = map_rows(_unfused(mid), _feat, FEAT)
+    assert _map_in_arrow_count(fused) == 1
+    got = sorted(fused.collect())
+    assert got == sorted(plain.collect())
+    assert len(got) == 22 and got[0] == (0, 3, "0")
+
+
+def test_three_stage_chain_is_one_map(spark):
+    src = spark.range(9)
+    s1 = map_rows(src, _synth, SYNTH)
+    s2 = map_rows(s1, _feat, FEAT, cols=("k", "payload"))
+    s3 = map_rows(s2, _times_ten, "k long, m long", cols=("k", "n"))
+    p1 = _unfused(map_rows(src, _synth, SYNTH))
+    p2 = _unfused(map_rows(p1, _feat, FEAT, cols=("k", "payload")))
+    p3 = map_rows(p2, _times_ten, "k long, m long", cols=("k", "n"))
+    assert _map_in_arrow_count(s3) == 1
+    assert _map_in_arrow_count(p3) == 3
+    assert sorted(s3.collect()) == sorted(p3.collect())
+
+
+def test_nan_in_intermediate_arrives_as_none(spark):
+    mid = map_rows(
+        spark.range(3), lambda k: [(k, float("nan") if k == 1 else k * 0.5)],
+        "k long, x double",
+    )
+
+    def seen(k, x):
+        yield k, x is None, x
+
+    fused = map_rows(mid, seen, "k long, is_null boolean, x double")
+    plain = map_rows(_unfused(mid), seen, "k long, is_null boolean, x double")
+    assert _map_in_arrow_count(fused) == 1
+    got = sorted(fused.collect())
+    assert got == sorted(plain.collect())
+    assert [tuple(r) for r in got] == [
+        (0, False, 0.0), (1, True, None), (2, False, 1.0)
+    ]
+
+
+def test_intermediate_also_consumed_directly(spark):
+    mid = map_rows(spark.range(6), _synth, SYNTH)
+    fused = map_rows(mid, _feat, FEAT, cols=("k", "payload"))
+    direct = sorted(mid.collect())
+    assert [r.k for r in direct] == list(range(6))
+    assert direct[4].payload == b"\x04" * 4
+    assert sorted(fused.collect()) == sorted(
+        map_rows(_unfused(mid), _feat, FEAT, cols=("k", "payload")).collect()
+    )
+    # the intermediate itself is still its own single map
+    assert _map_in_arrow_count(mid) == 1
+
+
+def test_what_breaks_a_chain(spark):
+    mid = map_rows(spark.range(4), _synth, SYNTH)
+    # a Column expression in cols, a filter, a cached intermediate
+    expr = map_rows(mid, lambda k: [(k,)], "k long", cols=(mid.k + 1,))
+    filt = map_rows(mid.filter("k > 0"), lambda k, p, x: [(k,)], "k long")
+    assert _map_in_arrow_count(expr) == 2
+    assert _map_in_arrow_count(filt) == 2
+    cached = map_rows(spark.range(4), _synth, SYNTH).cache()
+    try:
+        over = map_rows(cached, lambda k, p, x: [(k,)], "k long")
+        plan = over._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+        assert sorted(r.k for r in over.collect()) == [0, 1, 2, 3]
+    finally:
+        cached.unpersist()
+
+
+def test_upstream_exception_keeps_type_and_note(spark):
+    def bad(k):
+        if k == 3:
+            raise ValueError("bad synth")
+        yield k, b"", 0.0
+
+    mid = map_rows(spark.range(5), bad, SYNTH)
+    fused = map_rows(mid, _feat, FEAT, cols=("k", "payload"))
+    assert _map_in_arrow_count(fused) == 1
+    with pytest.raises(Exception) as ei:
+        fused.collect()
+    msg = str(ei.value)
+    assert "ValueError: bad synth" in msg
+    assert "map_rows: row key 3" in msg
+
+    # eagerly: the original exception object, one note, from stage one
+    src = EagerDF(pd.DataFrame({"k": [1, 3]}))
+    with pytest.raises(ValueError, match="bad synth") as ei:
+        map_rows(map_rows(src, bad, SYNTH), _feat, FEAT, cols=("k", "payload"))
+    assert ei.value.__notes__ == ["map_rows: row key 3"]
+
+
+# ------------------------------------------------------------- importers
+
+_IMPORTER_PROBE = """
+import importlib, sys, zipfile, zipimport
+
+from neuroimaging_data_pipeline_spark.functions.rowmap import drop_zip_importers
+
+path = sys.argv[1]
+with zipfile.ZipFile(path, "w") as z:
+    z.writestr("zpkg/__init__.py", "")
+    z.writestr("zpkg/a.py", "A = 1")
+    z.writestr("zpkg/b.py", "B = 2")
+sys.path.insert(0, path)
+
+def zip_entries():
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+import zpkg.a
+assert zip_entries(), "the import should have cached a zipimporter"
+
+reads = []
+real = zipimport._read_directory
+zipimport._read_directory = lambda archive: reads.append(archive) or real(archive)
+importlib.invalidate_caches()
+control = len(reads)
+
+drop_zip_importers()
+assert zip_entries() == [], zip_entries()
+import zpkg.b
+assert zpkg.b.B == 2
+drop_zip_importers()
+reads.clear()
+importlib.invalidate_caches()
+print(control, len(reads), zip_entries())
+"""
+
+
+def test_drop_zip_importers_stops_per_task_rereads(tmp_path):
+    root = str(Path(__file__).resolve().parents[1])
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )}
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORTER_PROBE, str(tmp_path / "z.zip")],
+        capture_output=True, text=True, check=True, env=env,
+    ).stdout.split(maxsplit=2)
+    control, after, left = int(out[0]), int(out[1]), out[2].strip()
+    if sys.version_info < (3, 13):
+        # the re-read this guards against happens without the helper
+        assert control > 0
+    assert after == 0
+    assert left == "[]"
