@@ -1,4 +1,5 @@
-"""One Arrow boundary for Python work: ``map_rows`` and ``map_batches``.
+"""One Arrow boundary for Python work: ``map_rows``, ``map_batches``
+and ``pack_shards``.
 
 Every codec, container parser and fixture builder in the engine is a
 per-row Python function over a narrow scan (decode one payload, emit
@@ -11,10 +12,15 @@ declared schema. ``map_batches`` is the same boundary for the
 batch-vectorised kernels (the FLAC planners, CDC cut search, the NIfTI
 per-TR explode): ``fn`` maps an iterator of pandas frames to an
 iterator of pandas frames, and each output frame's columns are read by
-schema name.
+schema name. ``pack_shards`` is the same boundary for the shard writers
+(WARC, mbox, Avro, IPC, ZIP, SQLite, CBOR, TFRecord, JSONL and tar
+shards): one keyed shuffle on ``cols[0] // per_shard``, then
+``fn(shard_id, rows)`` once per shard on ``applyInArrow``, with the
+shard's rows as tuples of ``cols`` sorted ascending by ``cols[0]``.
 
-Both take ``cols``, the input columns to select (names, or Column
-expressions); without it every column of ``df`` is passed.
+``map_rows`` and ``map_batches`` take ``cols``, the input columns to
+select (names, or Column expressions); without it every column of
+``df`` is passed. ``pack_shards`` needs ``cols`` as names.
 
 ``fn`` returns an iterable of output tuples in **schema order**: a 1:1
 map yields one tuple, a flat map (audio frames, IPC documents) yields
@@ -25,7 +31,8 @@ Conversion keeps the pandas-serializer semantics the engine's value
 hashes were pinned under: ``from_pandas=True`` turns a NaN double into
 null. When ``fn`` raises, the exception keeps its type (hostile-bytes
 callers rely on ``ValueError``/``NotImplementedError``) and gains a
-note naming the row's key, its first column.
+note naming the row's key, its first column (for ``pack_shards``, the
+shard id).
 
 Chained maps fuse. Synthesize → decode and parse → features are two
 maps back to back; run as two ``mapInArrow`` nodes, each task pays the
@@ -51,9 +58,10 @@ call lazy. ``drop_zip_importers`` removes those importers from
 ``sys.path_importer_cache`` before the next task starts; the next
 import from such a path rebuilds its importer from
 ``zipimport._zip_directory_cache`` without reading the archive. The
-batch functions of ``map_rows``, ``map_batches`` and the mass-OLS
-kernels (``operators/ols.py``) call it first; the grouped
-``applyInPandas`` maps do not yet.
+batch functions of ``map_rows``, ``map_batches``, ``pack_shards``, the
+mass-OLS kernels (``operators/ols.py``) and the grouped cosine kernels
+(``similarity/cosine.py``) call it first; only the streaming
+``applyInPandasWithState`` operators do not.
 """
 
 from __future__ import annotations
@@ -67,6 +75,7 @@ from typing import Any
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 _ARROW_TYPES = {
     "long": pa.int64(),
@@ -147,6 +156,17 @@ def _map_arrow(
     return result
 
 
+def _batch(rows: list[tuple[Any, ...]], out: pa.Schema) -> pa.RecordBatch:
+    """Non-empty output tuples, in schema order, as one Arrow batch."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(col, type=f.type, from_pandas=True)
+            for col, f in zip(zip(*rows, strict=True), out, strict=True)
+        ],
+        schema=out,
+    )
+
+
 def map_rows(
     df: DataFrame,
     fn: Callable[..., Iterable[tuple[Any, ...]]],
@@ -169,13 +189,7 @@ def map_rows(
                     e.add_note(f"map_rows: row key {row[0]!r:.80}")
                     raise
             if rows:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(col, type=f.type, from_pandas=True)
-                        for col, f in zip(zip(*rows, strict=True), out, strict=True)
-                    ],
-                    schema=out,
-                )
+                yield _batch(rows, out)
 
     return _map_arrow(df, run, schema, out, cols)
 
@@ -204,3 +218,33 @@ def map_batches(
                 )
 
     return _map_arrow(df, run, schema, out, cols)
+
+
+def pack_shards(
+    df: DataFrame,
+    fn: Callable[[int, list[tuple[Any, ...]]], Iterable[tuple[Any, ...]]],
+    schema: str,
+    per_shard: int,
+    cols: Sequence[str],
+) -> DataFrame:
+    """``fn(shard_id, rows)`` once per shard of ``per_shard`` keys:
+    shard ``k`` holds the rows whose ``cols[0] / per_shard`` truncates
+    to ``k``, as tuples of ``cols`` sorted ascending by ``cols[0]``;
+    its tuples become rows of ``schema``. See the module docstring."""
+    out = _arrow_schema(schema)
+    names = list(cols)
+
+    def run(key: tuple[pa.Scalar, ...], table: pa.Table) -> pa.Table:
+        drop_zip_importers()
+        shard_id = key[0].as_py()
+        table = table.select(names).sort_by(names[0])
+        rows = list(zip(*(c.to_pylist() for c in table.columns)))
+        try:
+            got = list(fn(shard_id, rows))
+        except Exception as e:
+            e.add_note(f"pack_shards: shard {shard_id}")
+            raise
+        return pa.Table.from_batches([_batch(got, out)]) if got else out.empty_table()
+
+    shard = (F.col(names[0]) / per_shard).cast("long").alias("_shard")
+    return df.select(*names, shard).groupBy("_shard").applyInArrow(run, schema)

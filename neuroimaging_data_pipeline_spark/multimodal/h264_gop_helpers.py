@@ -1,41 +1,24 @@
-"""Shard-level helpers for the e13 composed video pipeline: pack
-per-document H.264 GOP blobs into USTAR tar shards (the WebDataset
-shape) and reverse the whole stack — tar walk, NAL parse, CAVLC
-decode, motion compensation — into order-pinned per-shard features.
+"""Shard-level helpers for the e13 composed video pipeline: reverse
+the whole stack of a USTAR tar shard of per-document H.264 GOP blobs
+(the WebDataset shape) — tar walk, NAL parse, CAVLC decode, motion
+compensation — into order-pinned per-shard features.
 
-Kept in a dedicated module so both the query layer and tests can
-drive the pack/decode pair directly.
+The pack half is ``multimodal/tar.py`` ``tar_shards(media, "h264")``,
+shared with the e14/e15/e16 pipelines. Kept in a dedicated module so
+both the query layer and tests can drive the decode half directly.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     decode_h264_sequence,
 )
-from neuroimaging_data_pipeline_spark.multimodal.tar import (
-    parse_tar,
-    write_tar,
-)
-
-
-def pack_gop_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas packer: one USTAR tar per shard, members named
-    ``{doc_id:08d}.h264`` in ascending doc order (deterministic
-    member order is what makes the downstream md5 order-pinned)."""
-    pdf = pdf.sort_values("doc_id")
-    members = [
-        (f"{int(i):08d}.h264", bytes(b))
-        for i, b in zip(pdf["doc_id"], pdf["content"])
-    ]
-    shard = int(pdf["shard_id"].iloc[0])
-    return pd.DataFrame({"shard_id": [shard],
-                         "tar": [write_tar(members)]})
+from neuroimaging_data_pipeline_spark.multimodal.tar import parse_tar
 
 
 def decode_shard_features(

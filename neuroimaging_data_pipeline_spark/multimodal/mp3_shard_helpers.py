@@ -1,40 +1,24 @@
-"""Shard-level helpers for the e14 composed AUDIO pipeline: pack
-per-document MP3 Layer III streams into USTAR tar shards (the
-WebDataset shape an audio training corpus uses) and reverse the whole
-stack — tar walk, frame-header hop, bit-reservoir reassembly,
-side-info / scalefactor / Huffman decode, requantization — into
-order-pinned per-shard features. Mirrors h264_gop_helpers (e13).
+"""Shard-level helpers for the e14 composed AUDIO pipeline: reverse
+the whole stack of a USTAR tar shard of per-document MP3 Layer III
+streams (the WebDataset shape an audio training corpus uses) — tar
+walk, frame-header hop, bit-reservoir reassembly, side-info /
+scalefactor / Huffman decode, requantization — into order-pinned
+per-shard features. Mirrors h264_gop_helpers (e13).
+
+The pack half is ``multimodal/tar.py`` ``tar_shards(media, "mp3")``.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
     decode_mp3_l3,
 )
-from neuroimaging_data_pipeline_spark.multimodal.tar import (
-    parse_tar,
-    write_tar,
-)
-
-
-def pack_mp3_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas packer: one USTAR tar per shard, members named
-    ``{doc_id:08d}.mp3`` in ascending doc order (deterministic member
-    order makes the downstream md5 order-pinned)."""
-    pdf = pdf.sort_values("doc_id")
-    members = [
-        (f"{int(i):08d}.mp3", bytes(b))
-        for i, b in zip(pdf["doc_id"], pdf["content"])
-    ]
-    shard = int(pdf["shard_id"].iloc[0])
-    return pd.DataFrame({"shard_id": [shard],
-                         "tar": [write_tar(members)]})
+from neuroimaging_data_pipeline_spark.multimodal.tar import parse_tar
 
 
 def decode_mp3_shard_features(shards: DataFrame) -> DataFrame:

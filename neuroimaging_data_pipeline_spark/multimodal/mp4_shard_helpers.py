@@ -1,12 +1,13 @@
 """Shard-level helpers for the e15 composed CONTAINER-FIRST video
-pipeline: pack per-document MP4 clips (avc1 + avcC + length-prefixed
-samples, the m40 fixture) into USTAR tar shards and reverse the whole
-stack — tar member walk, MP4 box parse, avcC parameter-set extraction,
-length-prefix re-framing, CAVLC H.264 decode over the DPB — into
-order-pinned per-shard features. Completes the e13 (raw Annex-B GOP
-shards) / e14 (MP3 shards) family with the container-first path real
-corpora use (WebDataset .tar of .mp4 members).
+pipeline: reverse the whole stack of a USTAR tar shard of
+per-document MP4 clips (avc1 + avcC + length-prefixed samples, the
+m40 fixture) — tar member walk, MP4 box parse, avcC parameter-set
+extraction, length-prefix re-framing, CAVLC H.264 decode over the
+DPB — into order-pinned per-shard features. Completes the e13 (raw
+Annex-B GOP shards) / e14 (MP3 shards) family with the container-first
+path real corpora use (WebDataset .tar of .mp4 members).
 
+The pack half is ``multimodal/tar.py`` ``tar_shards(media, "mp4")``.
 Scale shape (same as e13/e14): ONE pack shuffle (groupBy shard), a
 deliberate re-spread after it, then a single narrow decode+aggregate
 task per shard — at 100 TB one task per tar shard, linear CPU.
@@ -16,31 +17,13 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
 from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
     decode_h264_mp4,
 )
-from neuroimaging_data_pipeline_spark.multimodal.tar import (
-    parse_tar,
-    write_tar,
-)
-
-
-def pack_mp4_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas packer: one USTAR tar per shard, members named
-    ``{doc_id:08d}.mp4`` in ascending doc order (deterministic member
-    order makes the downstream md5 order-pinned)."""
-    pdf = pdf.sort_values("doc_id")
-    members = [
-        (f"{int(i):08d}.mp4", bytes(b))
-        for i, b in zip(pdf["doc_id"], pdf["content"])
-    ]
-    shard = int(pdf["shard_id"].iloc[0])
-    return pd.DataFrame({"shard_id": [shard],
-                         "tar": [write_tar(members)]})
+from neuroimaging_data_pipeline_spark.multimodal.tar import parse_tar
 
 
 def decode_mp4_shard_features(shards: DataFrame) -> DataFrame:

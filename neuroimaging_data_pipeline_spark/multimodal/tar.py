@@ -36,7 +36,7 @@ import zlib
 
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 
 # ---------------------------------------------------------------- writer
@@ -188,6 +188,21 @@ def synthesize_tar_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         yield i, encode_shard(i)
 
     return map_rows(docs, build, out_schema, cols=(id_col,))
+
+
+def tar_shards(media: DataFrame, ext: str) -> DataFrame:
+    """(shard_id, tar binary) — per-document (doc_id, content) blobs
+    packed 25 to a USTAR shard (shard = doc_id // 25, one keyed
+    shuffle), members named ``{doc_id:08d}.{ext}`` in ascending doc
+    order (deterministic member order is what makes the downstream
+    per-shard md5 order-pinned)."""
+
+    def pack(shard_id, docs):
+        yield shard_id, write_tar([(f"{i:08d}.{ext}", b) for i, b in docs])
+
+    return pack_shards(
+        media, pack, "shard_id long, tar binary", 25, cols=("doc_id", "content")
+    )
 
 
 def tar_sample_features(

@@ -128,12 +128,15 @@ def read_schemas(plan: str) -> list[str]:
 def python_eval_count(plan: str) -> int:
     """Row-at-a-time Python operators in the plan (the slow path).
 
-    Arrow-vectorized ops (``ArrowEvalPython``, ``FlatMapGroupsInPandas``
-    and ``MapInArrow`` — every ``functions.rowmap`` codec, source and
-    batch-kernel boundary, a fused chain of maps being one node) are
-    deliberate engine choices and not counted; ``BatchEvalPython`` is
-    the per-row pickling path we forbid. Chained maps that did not
-    fuse are gated in ``tests/test_plans.py``.
+    Arrow-vectorized ops are deliberate engine choices and not
+    counted: ``ArrowEvalPython``; ``MapInArrow`` (every
+    ``functions.rowmap`` codec, source and batch-kernel boundary, a
+    fused chain of maps being one node); ``FlatMapGroupsInArrow`` (the
+    ``rowmap.pack_shards`` shard writers); ``FlatMapGroupsInPandas``
+    (the grouped cosine kernels). ``BatchEvalPython`` is the per-row
+    pickling path we forbid. Chained maps that did not fuse, and
+    grouped pandas maps outside the cosine kernels, are gated in
+    ``tests/test_plans.py``.
     """
     return node_count(plan, "BatchEvalPython")
 

@@ -2623,25 +2623,17 @@ def e15_mp4_shard_pipeline(spark, sf_dir):
     ONE pack shuffle (groupBy shard), a deliberate re-spread after
     it (the e13 AQE-coalesce lesson), then a single narrow
     decode+aggregate task per shard."""
-    from pyspark.sql import functions as F
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
         synthesize_h264_mp4_clips,
     )
     from neuroimaging_data_pipeline_spark.multimodal.mp4_shard_helpers import (  # noqa: E501
         decode_mp4_shard_features,
-        pack_mp4_shard,
     )
+    from neuroimaging_data_pipeline_spark.multimodal.tar import tar_shards
 
     d = read_table(spark, sf_dir, "documents", min_partitions="cores")
     media = synthesize_h264_mp4_clips(d, id_col="doc_id")
-    shards = (
-        media.withColumn(
-            "shard_id", (F.col("doc_id") / 25).cast("long")
-        )
-        .groupBy("shard_id")
-        .applyInPandas(pack_mp4_shard, "shard_id long, tar binary")
-    )
+    shards = tar_shards(media, "mp4")
     ncores = spark.sparkContext.defaultParallelism
     return decode_mp4_shard_features(shards.repartition(ncores))
 
@@ -2681,25 +2673,17 @@ def e16_mp4_ffmpeg_pipeline(spark, sf_dir):
     ORDER-PINNED md5 over per-doc per-frame luma sums. Shape at
     100 TB: one pack shuffle, re-spread, one narrow decode task per
     shard — with the per-member decode handed to a native binary."""
-    from pyspark.sql import functions as F
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
         synthesize_h264_mp4_clips,
     )
     from neuroimaging_data_pipeline_spark.multimodal.mp4_shard_helpers import (  # noqa: E501
         decode_mp4_shard_features_xcheck,
-        pack_mp4_shard,
     )
+    from neuroimaging_data_pipeline_spark.multimodal.tar import tar_shards
 
     d = read_table(spark, sf_dir, "documents", min_partitions="cores")
     media = synthesize_h264_mp4_clips(d, id_col="doc_id")
-    shards = (
-        media.withColumn(
-            "shard_id", (F.col("doc_id") / 25).cast("long")
-        )
-        .groupBy("shard_id")
-        .applyInPandas(pack_mp4_shard, "shard_id long, tar binary")
-    )
+    shards = tar_shards(media, "mp4")
     ncores = spark.sparkContext.defaultParallelism
     return decode_mp4_shard_features_xcheck(shards.repartition(ncores))
 
@@ -3032,25 +3016,17 @@ def e13_video_shard_pipeline(spark, sf_dir):
     100 TB: ONE pack shuffle (groupBy shard), then a single narrow
     decode+aggregate task per shard — tar members stream in-task,
     nothing widens."""
-    from pyspark.sql import functions as F
-
     from neuroimaging_data_pipeline_spark.multimodal.h264_gop_helpers import (  # noqa: E501
         decode_shard_features,
-        pack_gop_shard,
     )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         synthesize_h264_gop_frames,
     )
+    from neuroimaging_data_pipeline_spark.multimodal.tar import tar_shards
 
     d = read_table(spark, sf_dir, "documents", min_partitions="cores")
     media = synthesize_h264_gop_frames(d, id_col="doc_id")
-    shards = (
-        media.withColumn(
-            "shard_id", (F.col("doc_id") / 25).cast("long")
-        )
-        .groupBy("shard_id")
-        .applyInPandas(pack_gop_shard, "shard_id long, tar binary")
-    )
+    shards = tar_shards(media, "h264")
     # AQE coalesces the tiny pack shuffle (~KBs) to 1-2 partitions,
     # which would serialize the EXPENSIVE per-shard Python decode —
     # the classic post-shuffle-CPU blind spot. Re-spread the shards
@@ -3132,25 +3108,17 @@ def e14_audio_shard_pipeline(spark, sf_dir):
     at 100 TB: ONE pack shuffle (groupBy shard), a deliberate
     re-spread after it (the e13 AQE-coalesce lesson), then a single
     narrow decode+aggregate task per shard."""
-    from pyspark.sql import functions as F
-
     from neuroimaging_data_pipeline_spark.multimodal.mp3_shard_helpers import (  # noqa: E501
         decode_mp3_shard_features,
-        pack_mp3_shard,
     )
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         synthesize_mp3_l3_clips,
     )
+    from neuroimaging_data_pipeline_spark.multimodal.tar import tar_shards
 
     d = read_table(spark, sf_dir, "documents", min_partitions="cores")
     media = synthesize_mp3_l3_clips(d, id_col="doc_id")
-    shards = (
-        media.withColumn(
-            "shard_id", (F.col("doc_id") / 25).cast("long")
-        )
-        .groupBy("shard_id")
-        .applyInPandas(pack_mp3_shard, "shard_id long, tar binary")
-    )
+    shards = tar_shards(media, "mp3")
     ncores = spark.sparkContext.defaultParallelism
     return decode_mp3_shard_features(shards.repartition(ncores))
 

@@ -19,6 +19,8 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuroimaging_data_pipeline_spark.functions.rowmap import drop_zip_importers
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -468,6 +470,7 @@ def knn_graph(
     u = qside.unionByName(cside)
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         qm = pdf[pdf["role"] == "q"]
         cm = pdf[pdf["role"] == "c"]
         if qm.empty or cm.empty:
@@ -561,6 +564,7 @@ def bucketed_neardup_pairs(
     bucket_field = emb.schema[bucket_col]
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         A = np.array(pdf[vec_col].tolist(), dtype=np.float64)
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids)

@@ -19,12 +19,11 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.ipc as pa_ipc
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _SCHEMA = pa.schema(
     [
@@ -60,37 +59,27 @@ def read_ipc_stream(buf: bytes) -> tuple[pa.Table, int]:
 
 # --- Spark surface ---------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_ipc_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
-    out_schema = "shard_id long, content binary"
+    """Pack documents into Arrow IPC stream shards of DOCS_PER_SHARD
+    ids, one ``_SCHEMA`` table each."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         table = pa.Table.from_arrays(
-            [
-                pa.array(pdf[id_col].astype("int64")),
-                pa.array(pdf["lang"], pa.string()),
-                pa.array(pdf["n_chars"].astype("int64")),
-                pa.array(pdf["text"], pa.string()),
-            ],
+            [pa.array(col, f.type) for col, f in zip(zip(*docs), _SCHEMA)],
             schema=_SCHEMA,
         )
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "content": [write_ipc_stream(table)]}
-        )
+        yield shard_id, write_ipc_stream(table)
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, "lang", "n_chars", "text",
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, "lang", "n_chars", "text"),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def ipc_documents(

@@ -36,10 +36,9 @@ import json
 import struct
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _MAGIC = b"Obj\x01"
 
@@ -260,42 +259,36 @@ def read_avro(buf: bytes) -> tuple[dict, list[dict]]:
 
 # --- Spark surface ---------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_avro_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
-    """Pack documents into Avro OCF shards: label is the nullable
-    union (null when id % 5 == 0, else lang); even shards codec
-    null, odd shards deflate."""
-    out_schema = "shard_id long, content binary"
+    """Pack documents into Avro OCF shards of DOCS_PER_SHARD ids:
+    label is the nullable union (null when id % 5 == 0, else lang);
+    even shards codec null, odd shards deflate."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         rows = [
             {
-                "doc_id": int(r[id_col]),
-                "label": None if int(r[id_col]) % 5 == 0 else r["lang"],
-                "n_chars": int(r["n_chars"]),
-                "text": "" if r["text"] is None else str(r["text"]),
+                "doc_id": i,
+                "label": None if i % 5 == 0 else lang,
+                "n_chars": n_chars,
+                "text": "" if text is None else text,
             }
-            for _, r in pdf.iterrows()
+            for i, lang, n_chars, text in docs
         ]
-        content = write_avro(
+        yield shard_id, write_avro(
             rows, codec="deflate" if shard_id % 2 else "null",
             sync=hashlib.md5(f"shard{shard_id}".encode()).digest(),
         )
-        return pd.DataFrame({"shard_id": [shard_id], "content": [content]})
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, "lang", "n_chars", "text",
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, "lang", "n_chars", "text"),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def avro_documents(

@@ -32,10 +32,9 @@ import hashlib
 import math
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 
 class Tag:
@@ -294,42 +293,32 @@ def decode(buf: bytes):
 
 # --- Spark surface ---------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_cbor_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
-    """Pack documents into CBOR shards: one definite array of per-doc
-    maps {"id", "text", "n"}, with a tag 1 (epoch seconds) wrapper on
-    the id every 3rd doc so tags stay hot on the query path."""
-    out_schema = "shard_id long, content binary"
+    """Pack documents into CBOR shards of DOCS_PER_SHARD ids: one
+    definite array of per-doc maps {"id", "text", "n"}, with a tag 1
+    (epoch seconds) wrapper on the id every 3rd doc so tags stay hot
+    on the query path."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         items = []
-        for i, t in zip(pdf[id_col], pdf[text_col]):
-            i = int(i)
-            txt = "" if t is None else str(t)
-            rec = {
-                "id": Tag(1, i) if i % 3 == 0 else i,
-                "text": txt,
-                "n": len(txt),
-            }
-            items.append(rec)
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "content": [encode(items)]}
-        )
+        for i, t in docs:
+            txt = "" if t is None else t
+            items.append(
+                {"id": Tag(1, i) if i % 3 == 0 else i, "text": txt, "n": len(txt)}
+            )
+        yield shard_id, encode(items)
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def cbor_documents(

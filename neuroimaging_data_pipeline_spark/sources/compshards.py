@@ -19,10 +19,9 @@ decode (one task per shard), exactly like the zstd twin.
 from __future__ import annotations
 
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 DOCS_PER_SHARD = 50
 
@@ -39,19 +38,10 @@ def synthesize_jsonl_bxz_shards(
     import json as _json
     import lzma as _lzma
 
-    from pyspark.sql import functions as F
-
-    out_schema = "shard_id long, container string, content binary"
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard = int(pdf["_shard"].iloc[0])
+    def pack(shard, docs):
         lines = [
-            _json.dumps(
-                {"id": int(i), "text": "" if t is None else str(t)},
-                sort_keys=True,
-            )
-            for i, t in zip(pdf[id_col], pdf[text_col])
+            _json.dumps({"id": i, "text": "" if t is None else t}, sort_keys=True)
+            for i, t in docs
         ]
         body = ("\n".join(lines) + "\n").encode()
         if shard % 2 == 0:
@@ -63,19 +53,12 @@ def synthesize_jsonl_bxz_shards(
                 preset=(0, 6, 9)[(shard // 2) % 3],
             )
             container = "xz"
-        return pd.DataFrame(
-            {
-                "shard_id": [shard],
-                "container": [container],
-                "content": [blob],
-            }
-        )
+        yield shard, container, blob
 
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / DOCS_PER_SHARD).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, pack, "shard_id long, container string, content binary",
+        DOCS_PER_SHARD, cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(pack, out_schema)
 
 
 def bxz_shard_documents(

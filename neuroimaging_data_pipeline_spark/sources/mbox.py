@@ -18,9 +18,9 @@ What is REAL here:
 - deterministic generation: explicit MIME boundaries, fixed dates,
   explicit Message-IDs — byte-stable shards.
 
-Scale: shard packing is one keyed shuffle (applyInPandas per shard);
-parsing is a narrow ``map_rows`` over opaque shard blobs, zero
-further shuffle — same shape as the WARC and TAR sources.
+Scale: shard packing is one keyed shuffle (``pack_shards``, one Arrow
+group per shard); parsing is a narrow ``map_rows`` over opaque shard
+blobs, zero further shuffle — same shape as the WARC and TAR sources.
 """
 
 from __future__ import annotations
@@ -29,10 +29,9 @@ import hashlib
 import re
 from email import message_from_bytes
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _FROM_SEP = re.compile(rb"^From ", re.M)
 _QUOTED = re.compile(rb"^(>+)From ", re.M)
@@ -288,35 +287,25 @@ def extract_parts(raw: bytes) -> dict:
 
 # --- Spark surface -------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_mbox_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
     """Pack documents into deterministic mboxrd shards (shard k holds
-    ids with id // docs_per_shard == k, ascending)."""
-    out_schema = "shard_id long, content binary"
+    ids with id // DOCS_PER_SHARD == k, ascending)."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
-        msgs = [
-            build_message(int(i), "" if t is None else str(t))
-            for i, t in zip(pdf[id_col], pdf[text_col])
-        ]
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "content": [write_mbox(msgs)]}
-        )
+    def build(shard_id, docs):
+        msgs = [build_message(i, "" if t is None else t) for i, t in docs]
+        yield shard_id, write_mbox(msgs)
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def mbox_messages(

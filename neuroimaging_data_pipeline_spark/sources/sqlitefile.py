@@ -43,10 +43,9 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _MAGIC = b"SQLite format 3\x00"
 # arbitrary-but-valid "written by" version stamp (3.45.0); readers
@@ -389,35 +388,26 @@ def write_sqlite(
 
 # --- Spark surface ---------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_sqlite_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
-    """Pack documents into single-table SQLite shards (table ``docs``,
-    doc_id as the rowid-alias primary key) using the from-scratch
-    writer. One keyed shuffle."""
-    out_schema = "shard_id long, content binary"
+    """Pack documents into single-table SQLite shards of
+    DOCS_PER_SHARD ids (table ``docs``, doc_id as the rowid-alias
+    primary key) using the from-scratch writer. One keyed shuffle."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
-        rows = [
-            (int(i), ["" if t is None else str(t)])
-            for i, t in zip(pdf[id_col], pdf[text_col])
-        ]
-        blob = write_sqlite("docs", ["doc_id", "text"], rows)
-        return pd.DataFrame({"shard_id": [shard_id], "content": [blob]})
+    def build(shard_id, docs):
+        rows = [(i, ["" if t is None else t]) for i, t in docs]
+        yield shard_id, write_sqlite("docs", ["doc_id", "text"], rows)
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def sqlite_documents(

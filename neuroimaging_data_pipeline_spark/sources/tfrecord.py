@@ -38,10 +38,9 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 from neuroimaging_data_pipeline_spark.sources.snappy import (
     _mask_crc,
     crc32c,
@@ -278,38 +277,29 @@ def synthesize_tfrecord_shards(
     the 10-byte negative varint form stays hot), score (float32 list,
     quarter-steps so f32 is exact cross-engine). One keyed shuffle to
     pack, then narrow map_rows."""
-    from pyspark.sql import functions as F
 
-    out_schema = "shard_id long, content binary"
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         payloads = []
-        for i, text, lang in zip(pdf[id_col], pdf[text_col], pdf["lang"]):
-            i = int(i)
-            body = ("" if text is None else str(text)).encode()
+        for i, text, lang in docs:
+            text = "" if text is None else text
             payloads.append(
                 encode_example(
                     {
-                        "text": body,
+                        "text": text.encode(),
                         "lang": str(lang).encode(),
                         "id": [i if i % 2 == 0 else -i],
-                        "n_chars": [len("" if text is None else str(text))],
+                        "n_chars": [len(text)],
                         "score": [float((i % 100) / 4.0),
                                   float((i % 7) / 2.0)],
                     }
                 )
             )
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "content": [write_tfrecords(payloads)]}
-        )
+        yield shard_id, write_tfrecords(payloads)
 
-    keyed = docs.select(
-        id_col, text_col, "lang",
-        (F.col(id_col) / _DOCS_PER_SHARD).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", _DOCS_PER_SHARD,
+        cols=(id_col, text_col, "lang"),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def tfrecord_documents(

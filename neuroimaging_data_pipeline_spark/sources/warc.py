@@ -24,11 +24,11 @@ No reference analog (the reference ingests TSV/NIfTI,
 ssm_loop.py:41); this is engine-addition scope for the LLM-corpus
 pipeline, same as the TAR WebDataset source (multimodal/tar.py).
 
-Scale: shard packing is a single keyed shuffle (applyInPandas per
-shard — the same grouping a distributed WARC writer needs); parsing
-is a narrow map_rows over opaque binary shards, embarrassingly
-parallel, zero further shuffle. At 100 TB the shards arrive as
-parquet binary columns or via the DataSource API (sources/
+Scale: shard packing is a single keyed shuffle (``pack_shards``, one
+Arrow group per shard — the same grouping a distributed WARC writer
+needs); parsing is a narrow map_rows over opaque binary shards,
+embarrassingly parallel, zero further shuffle. At 100 TB the shards
+arrive as parquet binary columns or via the DataSource API (sources/
 datasource.py shows the registered-format half).
 """
 
@@ -39,10 +39,9 @@ import gzip
 import hashlib
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _CRLF = b"\r\n"
 _WARC_DATE = "2026-01-01T00:00:00Z"  # fixed: shards must be deterministic
@@ -169,25 +168,23 @@ def parse_http_response(payload: bytes) -> tuple[int, dict[str, str], bytes]:
 
 # --- Spark surface -----------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_warc_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
     """Pack documents into deterministic WARC shards (one keyed
     shuffle — the grouping any distributed shard writer needs): shard
-    k holds docs with id // docs_per_shard == k, a warcinfo record
+    k holds docs with id // DOCS_PER_SHARD == k, a warcinfo record
     first, one HTTP response record per doc at
     http://corpus.example/doc/{id}. Odd shards use the Common Crawl
     gzip-per-record layout, even shards plain concatenation, so both
     parse paths stay hot."""
-    out_schema = "shard_id long, content binary"
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         records: list[tuple[str, dict[str, str], bytes]] = [
             (
                 "warcinfo",
@@ -195,28 +192,24 @@ def synthesize_warc_shards(
                 b"software: neuroimaging-data-pipeline-spark warc writer\r\n",
             )
         ]
-        for i, text in zip(pdf[id_col], pdf[text_col]):
-            body = ("" if text is None else str(text)).encode()
+        for i, text in docs:
+            body = ("" if text is None else text).encode()
             records.append(
                 (
                     "response",
                     {
-                        "WARC-Record-ID": f"<urn:doc:{int(i)}>",
-                        "WARC-Target-URI": f"http://corpus.example/doc/{int(i)}",
+                        "WARC-Record-ID": f"<urn:doc:{i}>",
+                        "WARC-Target-URI": f"http://corpus.example/doc/{i}",
                     },
                     http_response(body),
                 )
             )
-        content = write_warc(records, gzip_per_record=bool(shard_id % 2))
-        return pd.DataFrame({"shard_id": [shard_id], "content": [content]})
+        yield shard_id, write_warc(records, gzip_per_record=bool(shard_id % 2))
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, text_col, (F.col(id_col) / docs_per_shard).cast("long")
-        .alias("_shard")
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def warc_records(

@@ -30,10 +30,9 @@ import hashlib
 import struct
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 
 _LOCAL = b"PK\x03\x04"
 _CENTRAL = b"PK\x01\x02"
@@ -127,39 +126,28 @@ def read_zip(buf: bytes) -> list[tuple[str, bytes, int]]:
 
 # --- Spark surface ---------------------------------------------------------------
 
+DOCS_PER_SHARD = 64
+
 
 def synthesize_zip_shards(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    docs_per_shard: int = 64,
 ) -> DataFrame:
-    """Pack documents into ZIP shards ({id}.txt members; even ids
-    stored, odd ids deflated)."""
-    out_schema = "shard_id long, content binary"
+    """Pack documents into ZIP shards of DOCS_PER_SHARD ids ({id}.txt
+    members; even ids stored, odd ids deflated)."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        shard_id = int(pdf["_shard"].iloc[0])
+    def build(shard_id, docs):
         members = [
-            (
-                f"{int(i)}.txt",
-                ("" if t is None else str(t)).encode(),
-                8 if int(i) % 2 else 0,
-            )
-            for i, t in zip(pdf[id_col], pdf[text_col])
+            (f"{i}.txt", ("" if t is None else t).encode(), 8 if i % 2 else 0)
+            for i, t in docs
         ]
-        return pd.DataFrame(
-            {"shard_id": [shard_id], "content": [write_zip(members)]}
-        )
+        yield shard_id, write_zip(members)
 
-    from pyspark.sql import functions as F
-
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / docs_per_shard).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, build, "shard_id long, content binary", DOCS_PER_SHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(build, out_schema)
 
 
 def zip_documents(

@@ -39,10 +39,9 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import map_rows, pack_shards
 from neuroimaging_data_pipeline_spark.sources.zstdblock import (
     ZstdBlockState,
     decode_block,
@@ -511,31 +510,19 @@ def synthesize_jsonl_zst_shards(
 
     import pyarrow as pa
 
-    from pyspark.sql import functions as F
-
-    out_schema = "shard_id long, content binary"
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        shard = int(pdf["_shard"].iloc[0])
+    def pack(shard, docs):
         lines = [
-            _json.dumps(
-                {"id": int(i), "text": "" if t is None else str(t)},
-                sort_keys=True,
-            )
-            for i, t in zip(pdf[id_col], pdf[text_col])
+            _json.dumps({"id": i, "text": "" if t is None else t}, sort_keys=True)
+            for i, t in docs
         ]
         body = ("\n".join(lines) + "\n").encode()
         codec = pa.Codec("zstd", compression_level=(1, 3, 6, 9)[shard % 4])
-        return pd.DataFrame(
-            {"shard_id": [shard], "content": [bytes(codec.compress(body))]}
-        )
+        yield shard, bytes(codec.compress(body))
 
-    keyed = docs.select(
-        id_col, text_col,
-        (F.col(id_col) / _DOCS_PER_ZSHARD).cast("long").alias("_shard"),
+    return pack_shards(
+        docs, pack, "shard_id long, content binary", _DOCS_PER_ZSHARD,
+        cols=(id_col, text_col),
     )
-    return keyed.groupBy("_shard").applyInPandas(pack, out_schema)
 
 
 def zstd_shard_documents(

@@ -5,19 +5,10 @@ moments (Welford) carried across micro-batches; each arriving value is
 z-scored against the state BEFORE it updates the state, so a spike is
 judged only against history, never against itself.
 
-Two interchangeable implementations of the same semantics:
+Every operator here runs on ``applyInPandasWithState`` (the stable
+GroupState API), which needs no dependency beyond pyspark's own.
 
-- ``transformWithStateInPandas`` (Spark 4 StatefulProcessor API —
-  typed state handles, timers, multi-state). Its Python worker needs
-  ``google.protobuf``; environments without it (this container) fall
-  back automatically.
-- ``applyInPandasWithState`` (the stable GroupState API) — no extra
-  dependencies.
-
-Scale: state = three doubles per key, shuffle-partitioned by key;
-the transformWithState path wants the RocksDB state store provider
-(``spark.sql.streaming.stateStore.providerClass``) so state spills to
-local disk.
+Scale: state = three doubles per key, shuffle-partitioned by key.
 """
 
 from __future__ import annotations
@@ -27,16 +18,6 @@ from pyspark.sql import DataFrame
 SPIKE_OUTPUT_SCHEMA = (
     "user_id long, event_id long, value double, z double, is_spike int"
 )
-
-
-def tws_available() -> bool:
-    """transformWithState's Python worker imports protobuf at runtime."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _judge_and_update(pdf, id_col, value_col, key_val, key, n, mean, m2,
@@ -70,26 +51,12 @@ def streaming_spike_flags(
     id_col: str = "event_id",
     cutoff: float = 3.0,
     min_history: int = 5,
-    api: str = "auto",
 ) -> DataFrame:
     """Flag per-key value spikes against running history.
 
     Emits (key, id, value, z, is_spike) per input row; ``z`` is null
-    until ``min_history`` prior values exist for the key. ``api`` is
-    ``"tws"``, ``"applyInPandas"``, or ``"auto"`` (tws when available).
+    until ``min_history`` prior values exist for the key.
     """
-    if api == "auto":
-        api = "tws" if tws_available() else "applyInPandas"
-    if api == "tws":
-        return _spike_flags_tws(
-            stream, key, value_col, id_col, cutoff, min_history
-        )
-    return _spike_flags_gs(
-        stream, key, value_col, id_col, cutoff, min_history
-    )
-
-
-def _spike_flags_gs(stream, key, value_col, id_col, cutoff, min_history):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -119,47 +86,6 @@ def _spike_flags_gs(stream, key, value_col, id_col, cutoff, min_history):
     )
 
 
-def _spike_flags_tws(stream, key, value_col, id_col, cutoff, min_history):
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SpikeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._moments = handle.getValueState(
-                "moments", "n long, mean double, m2 double"
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            if self._moments.exists():
-                n, mean, m2 = self._moments.get()
-            else:
-                n, mean, m2 = 0, 0.0, 0.0
-            collected = []
-            for pdf in rows:
-                out, n, mean, m2 = _judge_and_update(
-                    pdf, id_col, value_col, key_tuple[0], key, n, mean, m2,
-                    cutoff, min_history,
-                )
-                collected.extend(out)
-            self._moments.update((n, mean, m2))
-            yield pd.DataFrame(
-                collected, columns=[key, id_col, value_col, "z", "is_spike"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=SpikeProcessor(),
-        outputStructType=SPIKE_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )
-
-
 def _assign_sessions(pdf, id_col, ts_col, key_val, last_tus, sidx,
                      gap_us):
     """Shared kernel: gap-threshold session assignment over ONE
@@ -186,7 +112,6 @@ def streaming_sessionize(
     ts_col: str = "tus",
     id_col: str = "event_id",
     gap_us: int = 30 * 60 * 1_000_000,
-    api: str = "auto",
 ) -> DataFrame:
     """Per-EVENT session-ID assignment as a live stateful stream —
     the streaming twin of ``queries/eventsops.py w10_sessionize``:
@@ -198,20 +123,7 @@ def streaming_sessionize(
 
     Input needs a ``tus`` epoch-microseconds long column (the footer-
     probed ingest provides event time; callers convert with
-    unix_micros). Same dual-API capability gate as the spike
-    detector: transformWithStateInPandas when protobuf is available,
-    applyInPandasWithState otherwise. State: two longs per key."""
-    if api == "auto":
-        api = "tws" if tws_available() else "applyInPandas"
-    schema = (
-        f"{key} long, {id_col} long, {ts_col} long, session_idx long"
-    )
-    if api == "tws":
-        return _sessionize_tws(stream, key, ts_col, id_col, gap_us, schema)
-    return _sessionize_gs(stream, key, ts_col, id_col, gap_us, schema)
-
-
-def _sessionize_gs(stream, key, ts_col, id_col, gap_us, schema):
+    unix_micros). State: two longs per key."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -235,53 +147,15 @@ def _sessionize_gs(stream, key, ts_col, id_col, gap_us, schema):
             rows, columns=[key, id_col, ts_col, "session_idx"]
         )
 
+    schema = (
+        f"{key} long, {id_col} long, {ts_col} long, session_idx long"
+    )
     return stream.groupBy(key).applyInPandasWithState(
         fn,
         outputStructType=schema,
         stateStructType="last_tus long, sidx long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _sessionize_tws(stream, key, ts_col, id_col, gap_us, schema):
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "sess", "last_tus long, sidx long"
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            if self._st.exists():
-                last_tus, sidx = self._st.get()
-            else:
-                last_tus, sidx = None, 0
-            chunks = [pdf for pdf in rows]  # concat before sorting
-            if not chunks:
-                return
-            batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            collected, last_tus, sidx = _assign_sessions(
-                batch, id_col, ts_col, key_tuple[0], last_tus, sidx, gap_us
-            )
-            self._st.update((last_tus, sidx))
-            yield pd.DataFrame(
-                collected, columns=[key, id_col, ts_col, "session_idx"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=schema,
-        outputMode="append",
-        timeMode="None",
     )
 
 

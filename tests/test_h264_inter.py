@@ -380,18 +380,16 @@ def test_gop_ffmpeg_cross_pin(tmp_path):
         np.testing.assert_array_equal(fcr, rec[2])
 
 
-def test_e13_shard_pack_decode_and_corruption():
+def test_e13_shard_pack_decode_and_corruption(spark):
     """Pack GOP blobs into a ustar shard, decode back, and verify a
     single flipped byte anywhere in a member breaks the decode or
     changes the digest (the e13 pipeline's verification property)."""
     import hashlib
 
-    import pandas as pd
-
-    from neuroimaging_data_pipeline_spark.multimodal.h264_gop_helpers import (  # noqa: E501
-        pack_gop_shard,
+    from neuroimaging_data_pipeline_spark.multimodal.tar import (
+        parse_tar,
+        tar_shards,
     )
-    from neuroimaging_data_pipeline_spark.multimodal.tar import parse_tar
 
     # build three tiny GOP blobs via the encoder directly
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
@@ -408,11 +406,11 @@ def test_e13_shard_pack_decode_and_corruption():
             [[("16x16", [(0, 0)])]], qp=0,
         )
         blobs.append(stream)
-    pdf = pd.DataFrame(
-        {"shard_id": [0, 0, 0], "doc_id": [2, 0, 1],
-         "content": [blobs[2], blobs[0], blobs[1]]}
+    media = spark.createDataFrame(
+        [(2, blobs[2]), (0, blobs[0]), (1, blobs[1])],
+        "doc_id long, content binary",
     )
-    out = pack_gop_shard(pdf)
+    out = tar_shards(media, "h264").toPandas()
     tar = bytes(out["tar"].iloc[0])
     members = parse_tar(tar)
     assert [m[0] for m in members] == [

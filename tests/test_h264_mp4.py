@@ -154,9 +154,9 @@ def test_ffprobe_cross_pin():
     assert nb in ("3", "N/A")
 
 
-def test_e15_shard_pack_and_decode_features():
-    """e15 helpers end-to-end on plain pandas (no Spark): pack
-    m40-style MP4s into a USTAR shard, decode through the full
+def test_e15_shard_pack_and_decode_features(spark):
+    """e15 helpers end-to-end: pack m40-style MP4s into a USTAR shard
+    with ``tar_shards``, decode (eagerly) through the full
     tar -> box -> avcC -> CAVLC stack, and pin the shard layer
     (member order, metadata verification, md5 composition) against
     independent per-document decodes."""
@@ -170,9 +170,7 @@ def test_e15_shard_pack_and_decode_features():
         decode_h264_mp4,
         synthesize_h264_mp4_clips,
     )
-    from neuroimaging_data_pipeline_spark.multimodal.mp4_shard_helpers import (  # noqa: E501
-        pack_mp4_shard,
-    )
+    from neuroimaging_data_pipeline_spark.multimodal.tar import tar_shards
 
     ids = [0, 1, 2, 7]
     out = synthesize_h264_mp4_clips(
@@ -191,12 +189,10 @@ def test_e15_shard_pack_and_decode_features():
         )
         p2_total += sums[2]
         expect_parts.append(f"{i}:" + ":".join(str(v) for v in sums))
-    pdf = pd.DataFrame({
-        "shard_id": pd.Series([0] * len(ids), dtype="int64"),
-        "doc_id": pd.Series(ids, dtype="int64"),
-        "content": pd.Series([captured[i] for i in ids], dtype=object),
-    })
-    shard = EagerDF(pack_mp4_shard(pdf))
+    media = spark.createDataFrame(
+        [(i, captured[i]) for i in ids], "doc_id long, content binary"
+    )
+    shard = EagerDF(tar_shards(media, "mp4").toPandas())
     row = mh.decode_mp4_shard_features(shard).pdf.iloc[0]
     assert row["n_docs"] == len(ids)
     assert row["n_samples_total"] == 3 * len(ids)

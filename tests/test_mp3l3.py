@@ -550,20 +550,18 @@ def test_intensity_stereo_short_blocks():
     np.testing.assert_allclose(d7["granules"][0]["xr"], xl)
 
 
-def test_e14_shard_pack_decode_pair():
-    """mp3_shard_helpers: tar pack -> full Layer III decode round
-    trip with order-pinned member naming (the e14 pipeline unit)."""
+def test_e14_shard_pack_decode_pair(spark):
+    """tar_shards pack -> full Layer III decode round trip with
+    order-pinned member naming (the e14 pipeline unit)."""
     import hashlib
 
-    import pandas as pd
-
-    from neuroimaging_data_pipeline_spark.multimodal.mp3_shard_helpers import (  # noqa: E501
-        pack_mp3_shard,
-    )
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
         _fixture_granule, encode_mp3_l3,
     )
-    from neuroimaging_data_pipeline_spark.multimodal.tar import parse_tar
+    from neuroimaging_data_pipeline_spark.multimodal.tar import (
+        parse_tar,
+        tar_shards,
+    )
 
     docs = [3, 1, 7]  # deliberately unsorted
     blobs = {
@@ -571,12 +569,10 @@ def test_e14_shard_pack_decode_pair():
                           for k in range(2 * (3 + d % 3))])
         for d in docs
     }
-    pdf = pd.DataFrame({
-        "shard_id": [0] * 3,
-        "doc_id": docs,
-        "content": [blobs[d] for d in docs],
-    })
-    out = pack_mp3_shard(pdf)
+    media = spark.createDataFrame(
+        [(d, blobs[d]) for d in docs], "doc_id long, content binary"
+    )
+    out = tar_shards(media, "mp3").toPandas()
     members = list(parse_tar(bytes(out["tar"].iloc[0])))
     assert [m[0] for m in members] == [
         "00000001.mp3", "00000003.mp3", "00000007.mp3"

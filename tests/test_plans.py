@@ -203,11 +203,43 @@ def test_no_chained_python_maps_anywhere(built):
     Project between them, is one ``functions.rowmap`` chain that did
     not fuse, and each task pays the Python crossing twice. Build such
     stages with ``map_rows``/``map_batches`` and pass ``cols`` instead
-    of a ``select``. A map over a grouped map (``FlatMapGroupsInPandas``)
+    of a ``select``. A map over a grouped map (``FlatMapGroupsInArrow``)
     stays allowed: the grouped map needs its shuffle."""
     offenders = {}
     for name, df in built.items():
         pairs = _chained_maps(df._jdf.queryExecution().sparkPlan(), [])
         if pairs:
             offenders[name] = pairs
+    assert not offenders, offenders
+
+
+def _node_names(node, out: set[str]) -> set[str]:
+    """Every node name in a JVM physical plan tree."""
+    out.add(node.nodeName())
+    kids = node.children().iterator()
+    while kids.hasNext():
+        _node_names(kids.next(), out)
+    return out
+
+
+def test_no_grouped_pandas_maps_outside_cosine(built):
+    """Global gate: a grouped Python map goes through
+    ``rowmap.pack_shards`` (``FlatMapGroupsInArrow``), not a
+    hand-rolled ``groupBy(...).applyInPandas`` packer. Only the
+    queries backed by the grouped GEMM kernels of
+    ``similarity/cosine.py`` keep ``FlatMapGroupsInPandas``."""
+    cosine = {
+        "d_embedding_neardup",
+        "d_semdedup",
+        "g_triangles",
+        "g_triangles_cap",
+        "s_knn_graph",
+    }
+    offenders = sorted(
+        name
+        for name, df in built.items()
+        if name not in cosine
+        and "FlatMapGroupsInPandas"
+        in _node_names(df._jdf.queryExecution().sparkPlan(), set())
+    )
     assert not offenders, offenders

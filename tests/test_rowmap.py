@@ -10,10 +10,17 @@ The chain cases compare a fused chain of maps with the same maps run
 as separate ``mapInArrow`` nodes (``_unfused`` puts a ``select("*")``
 between them, which breaks the chain), and the importer case checks
 ``drop_zip_importers`` in a fresh interpreter.
+
+The ``pack_shards`` cases run one shard writer twice: through
+``pack_shards`` and through a reference ``applyInPandas`` packer
+written the way the shard sources used to be (a ``_shard`` column,
+``sort_values``, one-row ``pd.DataFrame``). The shard bytes must be
+equal.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import subprocess
@@ -23,7 +30,11 @@ from pathlib import Path
 import pandas as pd
 import pytest
 
-from neuroimaging_data_pipeline_spark.functions.rowmap import map_batches, map_rows
+from neuroimaging_data_pipeline_spark.functions.rowmap import (
+    map_batches,
+    map_rows,
+    pack_shards,
+)
 from neuroimaging_data_pipeline_spark.plans import audit
 from tests.eager_df import EagerDF
 
@@ -304,6 +315,97 @@ def test_upstream_exception_keeps_type_and_note(spark):
     with pytest.raises(ValueError, match="bad synth") as ei:
         map_rows(map_rows(src, bad, SYNTH), _feat, FEAT, cols=("k", "payload"))
     assert ei.value.__notes__ == ["map_rows: row key 3"]
+
+
+# ---------------------------------------------------------------- shards
+
+SHARD = "shard_id long, content binary"
+
+
+def _write_shard(shard_id, docs):
+    """A shard writer whose bytes show member order and null text."""
+    yield shard_id, json.dumps([shard_id, [list(d) for d in docs]]).encode()
+
+
+def _reference_pack(df, per_shard):
+    """The pre-``pack_shards`` packer, as the shard sources wrote it."""
+    from pyspark.sql import functions as F
+
+    def build(pdf):
+        pdf = pdf.sort_values("doc_id")
+        shard_id = int(pdf["_shard"].iloc[0])
+        docs = [
+            (int(i), None if t is None else str(t))
+            for i, t in zip(pdf["doc_id"], pdf["text"])
+        ]
+        ((_, content),) = _write_shard(shard_id, docs)
+        return pd.DataFrame({"shard_id": [shard_id], "content": [content]})
+
+    keyed = df.select(
+        "doc_id", "text", (F.col("doc_id") / per_shard).cast("long").alias("_shard")
+    )
+    return keyed.groupBy("_shard").applyInPandas(build, SHARD)
+
+
+def _docs(spark):
+    """Ids 0..29 in descending order, text null on every 4th id, split
+    over two single-partition halves (odd ids, even ids), so every
+    shard's rows come from both input partitions."""
+    rows = [(i, None if i % 4 == 0 else f"doc {i}") for i in range(29, -1, -1)]
+    halves = [r for r in rows if r[0] % 2] + [r for r in rows if not r[0] % 2]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(halves, 2), "doc_id long, text string"
+    )
+
+
+def _shards(df):
+    return {r.shard_id: bytes(r.content) for r in df.collect()}
+
+
+def test_pack_shards_matches_applyinpandas_packer(spark):
+    docs = _docs(spark)
+    assert docs.rdd.getNumPartitions() == 2
+    got = _shards(pack_shards(docs, _write_shard, SHARD, 8, ("doc_id", "text")))
+    want = _shards(_reference_pack(docs, 8))
+    assert sorted(got) == [0, 1, 2, 3]
+    assert got == want
+    for shard_id, content in got.items():
+        k, members = json.loads(content)
+        ids = [i for i, _ in members]
+        assert k == shard_id
+        assert ids == sorted(ids) == list(range(8 * k, min(8 * k + 8, 30)))
+        assert {i % 2 for i in ids} == {0, 1}  # both input partitions
+        assert all((t is None) == (i % 4 == 0) for i, t in members)
+
+
+def test_pack_shards_yields_any_number_of_rows(spark):
+    def fn(shard_id, docs):
+        for i, _ in docs[: shard_id]:
+            yield i, b""
+
+    got = pack_shards(_docs(spark), fn, "doc_id long, content binary", 8,
+                      ("doc_id", "text"))
+    assert sorted(r.doc_id for r in got.collect()) == [8, 16, 17, 24, 25, 26]
+
+
+def test_pack_shards_exception_keeps_type_and_names_shard(spark):
+    def fn(shard_id, docs):
+        if shard_id == 2:
+            raise NotImplementedError("unsupported shard")
+        yield from _write_shard(shard_id, docs)
+
+    with pytest.raises(Exception) as ei:
+        pack_shards(_docs(spark), fn, SHARD, 8, ("doc_id", "text")).collect()
+    msg = str(ei.value)
+    assert "NotImplementedError: unsupported shard" in msg
+    assert "pack_shards: shard 2" in msg
+
+
+def test_pack_shards_plan_is_grouped_arrow(spark):
+    df = pack_shards(_docs(spark), _write_shard, SHARD, 8, ("doc_id", "text"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert audit.node_count(plan, "FlatMapGroupsInArrow") == 1
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 # ------------------------------------------------------------- importers

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from neuroimaging_data_pipeline_spark.queries.eventsops import w10_sessionize
 from neuroimaging_data_pipeline_spark.streaming.stateful import (
     streaming_sessionize,
-    tws_available,
 )
 
 ROWS = [
@@ -53,23 +52,23 @@ def session_fixture(spark, tmp_path):
     return str(sf), str(landing)
 
 
-def _run_stream(spark, landing, api):
+def _run_stream(spark, landing):
     stream = (
         spark.readStream.schema("event_id long, user_id long, tus long")
         .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
         .parquet(landing)
     )
     q = (
-        streaming_sessionize(stream, api=api)
+        streaming_sessionize(stream)
         .writeStream.format("memory")
-        .queryName(f"sess_{api}")
+        .queryName("sessionized")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
     return (
-        spark.table(f"sess_{api}")
+        spark.table("sessionized")
         .toPandas()
         .sort_values("event_id")
         .reset_index(drop=True)
@@ -78,7 +77,7 @@ def _run_stream(spark, landing, api):
 
 def test_streaming_sessionize_matches_batch(spark, session_fixture):
     sf, landing = session_fixture
-    got = _run_stream(spark, landing, "applyInPandas")
+    got = _run_stream(spark, landing)
     want = (
         w10_sessionize(spark, sf)
         .toPandas()
@@ -92,17 +91,3 @@ def test_streaming_sessionize_matches_batch(spark, session_fixture):
     assert by_id[4] == by_id[3] + 1  # 75min gap: new session
     assert by_id[6] == by_id[5]  # user 2 spans shards in one session
 
-
-@pytest.mark.skipif(
-    not tws_available(), reason="transformWithState needs protobuf"
-)
-def test_streaming_sessionize_tws(spark, session_fixture):
-    sf, landing = session_fixture
-    got = _run_stream(spark, landing, "tws")
-    want = (
-        w10_sessionize(spark, sf)
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    assert list(got["session_idx"]) == list(want["session_idx"])

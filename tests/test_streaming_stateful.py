@@ -1,5 +1,5 @@
-"""transformWithState streaming spike detector: state carries across
-micro-batches; spikes judged against prior history only."""
+"""applyInPandasWithState streaming spike detector: state carries
+across micro-batches; spikes judged against prior history only."""
 
 from __future__ import annotations
 
@@ -46,10 +46,8 @@ def event_stream_dir(tmp_path, spark):
 
 
 def test_judge_and_update_kernel_exact():
-    """Drive the shared per-batch kernel directly (no Spark, no
-    protobuf): this is the math BOTH the transformWithState and the
-    applyInPandasWithState paths execute, so the TWS branch's kernel
-    is covered even where its protobuf dependency is absent.
+    """Drive the per-batch kernel of the applyInPandasWithState
+    operator directly (no Spark).
 
     Pins: (a) warm-up rows emit z=None/spike=0; (b) after min_history,
     z equals the z-score against PRIOR history only (never including
@@ -100,31 +98,18 @@ def test_judge_and_update_kernel_exact():
 
 
 def test_streaming_spikes_flag_only_the_outlier(spark, event_stream_dir):
-    """Runs the transformWithState path when its protobuf dependency is
-    present, else the applyInPandasWithState path — same semantics."""
     from neuroimaging_data_pipeline_spark.streaming.stateful import (
         streaming_spike_flags,
-        tws_available,
     )
 
-    if tws_available():
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, event_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(event_stream_dir)
-        )
-        out = _run(
-            spark, streaming_spike_flags(stream, min_history=10), "t_spikes"
-        ).toPandas()
-    finally:
-        if tws_available():
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    stream = (
+        spark.readStream.schema("user_id long, event_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(event_stream_dir)
+    )
+    out = _run(
+        spark, streaming_spike_flags(stream, min_history=10), "t_spikes"
+    ).toPandas()
     assert len(out) == 100
     flagged = out[out.is_spike == 1]
     assert list(flagged["event_id"]) == [40]
